@@ -1,4 +1,4 @@
-"""Streaming sub-document boilerplate gate (round 5, SURVEY.md §2.11).
+"""Streaming sub-document boilerplate gate (SURVEY.md §2.11).
 
 The streaming twin of ``passage_dedup_scrub``: batch answers "which
 passages repeat across this corpus"; an ingest pipeline needs the
@@ -38,20 +38,25 @@ Per micro-batch:
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+import shutil
+from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import passage_df
 from ..operators.sketch import bloom_build, bloom_might_contain
-from .audit import audit_layout
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir)
 
 
 @dataclass
-class PassageBoilerplateGate:
+class PassageBoilerplateGate(EpochSink):
     """foreachBatch boilerplate scorer against an accumulated
     passage-digest Bloom filter."""
+
+    METRICS_PREFIX = "boilerplate_gate"
 
     spark: SparkSession
     state_dir: str
@@ -62,16 +67,8 @@ class PassageBoilerplateGate:
     n_bits: int = 1 << 14
     k: int = 5
     threshold: float = 0.5
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism (the
-    # gate audits EVERY scored doc per epoch — never one task);
-    # fixture tests pass 1 (streaming/audit.py). The Bloom STATE
-    # writes below keep coalesce(1): bounded word lists, and the
-    # load_state reader unions per-epoch single files.
-    audit_partitions: int | None = None
-    docs_seen: int = 0
-    docs_flagged: int = 0
-    queries: list = field(default_factory=list)
+    docs_seen = EpochCounter()
+    docs_flagged = EpochCounter()
 
     @property
     def audit_path(self) -> str:
@@ -88,10 +85,7 @@ class PassageBoilerplateGate:
         schema garbage) propagates: silently degrading a corrupt
         state dir to an empty Bloom filter would score every passage
         unseen — SCALING.md's bad-input policy is corrupt parquet
-        fails loud (ADVICE r5 + review catch r6)."""
-        import os
-
-        from pyspark.errors import AnalysisException
+        fails loud."""
 
         def _has_data_files(root: str) -> bool:
             for cur, dirs, files in os.walk(root):
@@ -119,7 +113,7 @@ class PassageBoilerplateGate:
         parts = parts.filter(F.col("epoch") != F.lit(int(epoch_id)))
         return parts.groupBy("word").agg(F.bit_or("mask").alias("mask"))
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
         p = passage_df(batch, self.text_col, self.id_col,
                        self.width).persist()
         state = self._state_before(epoch_id)
@@ -137,26 +131,15 @@ class PassageBoilerplateGate:
             (F.col("n_seen") / F.col("n_passages")
              >= self.threshold).alias("flagged"))
 
-        # audit + state under this epoch's partition — both idempotent
-        epoch_dir = os.path.join(self.audit_path, f"epoch={int(epoch_id)}")
-        audit_layout(scored, self.audit_partitions)\
-            .write.mode("overwrite").parquet(epoch_dir)
+        # audit + state under this epoch's partition — both idempotent.
+        # The Bloom partial keeps one file: ≤ n_bits/64 rows.
+        counts = write_epoch_dir(scored, self.audit_path, epoch_id,
+                                 docs_seen=F.count("*"),
+                                 docs_flagged=F.count_if(F.col("flagged")))
         partial = bloom_build(p, "digest", self.n_bits, self.k)
-        state_dir = os.path.join(self.state_dir, f"epoch={int(epoch_id)}")
-        partial.coalesce(1).write.mode("overwrite").parquet(state_dir)
-
-        self.docs_seen += scored.count()
-        self.docs_flagged += scored.filter("flagged").count()
+        write_epoch_dir(partial.coalesce(1), self.state_dir, epoch_id)
         p.unpersist()
-
-    def attach(self, doc_stream: DataFrame, checkpoint_dir: str):
-        q = (doc_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+        return counts
 
     def compact_state(self) -> int:
         """Fold all epoch partials into one partition (run while the
@@ -173,18 +156,11 @@ class PassageBoilerplateGate:
         folded = (parts.groupBy("word").agg(F.bit_or("mask").alias("mask"))
                   .localCheckpoint())  # break lineage: we overwrite below
         n = folded.count()
-        import shutil
         shutil.rmtree(self.state_dir)
-        folded.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, "epoch=-1"))
+        write_epoch_dir(folded.coalesce(1), self.state_dir, -1)
         return n
 
     def scores(self) -> DataFrame:
         """The audit table: (doc_id, n_passages, n_seen, seen_ratio,
         flagged) for every scored document."""
-        df = self.spark.read.parquet(self.audit_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def metrics(self) -> dict:
-        return {"boilerplate_gate_docs_seen": self.docs_seen,
-                "boilerplate_gate_docs_flagged": self.docs_flagged}
+        return read_epoch_dirs(self.spark, self.audit_path)

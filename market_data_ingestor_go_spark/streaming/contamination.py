@@ -1,4 +1,4 @@
-"""Streaming train/test contamination gate (round 5, SURVEY.md §2.11).
+"""Streaming train/test contamination gate (SURVEY.md §2.11).
 
 The batch operator ``operators/dedup.py::cross_corpus_near_dup`` is
 the eval-integrity check every LLM pipeline runs BEFORE training; this
@@ -20,26 +20,26 @@ Design (scale posture first):
   mode=overwrite per epoch — the same idempotent-replay contract as
   the ingest history sink (streaming/pipeline.py), so a crashed epoch
   re-flags instead of duplicating flags.
-- Counters (docs checked / flagged / epochs) are plain Python state on
+- Counters (docs checked / flagged / epochs) are kept per epoch on
   the gate, exported via ``metrics()`` for the /metrics endpoint
   exactly like ``IngestPipeline.metrics``.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .audit import audit_layout
 from ..operators.dedup import (banded_signatures, minhash_signatures,
                                shingle_df)
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir)
 
 
 @dataclass
-class ContaminationGate:
+class ContaminationGate(EpochSink):
     """foreachBatch gate: flag stream documents near-duplicating a
     broadcast held-out corpus.
 
@@ -47,6 +47,8 @@ class ContaminationGate:
     epoch-partitioned parquet table of hits
     (doc_id, heldout_id, jacc, epoch=<id>).
     """
+
+    METRICS_PREFIX = "contamination"
 
     heldout: DataFrame
     flags_path: str
@@ -56,14 +58,9 @@ class ContaminationGate:
     threshold: float = 0.6
     num_perms: int = 128
     num_bands: int = 32
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism;
-    # fixture tests pass 1 (streaming/audit.py)
-    audit_partitions: int | None = None
-    docs_checked: int = 0
-    docs_flagged: int = 0
-    epochs: int = 0
-    queries: list = field(default_factory=list)
+    docs_checked = EpochCounter()
+    docs_flagged = EpochCounter()
+    epochs = EpochCounter()
 
     def __post_init__(self) -> None:
         rows_per_band = self.num_perms // self.num_bands
@@ -72,13 +69,11 @@ class ContaminationGate:
         # (an eval set is tiny next to the stream; at 100 TB of stream
         # these stay the broadcast side of every join)
         sh = shingle_df(self.heldout, self.text_col, self.id_col, self.n)
-        self._held_sh = sh.select(F.col("id").alias("h_id"),
-                                  F.col("sh").alias("sh_b")).persist()
-        self._held_banded = (
+        self._held_sh, self._held_banded = self._pin(
+            sh.select(F.col("id").alias("h_id"), F.col("sh").alias("sh_b")),
             banded_signatures(minhash_signatures(sh, self.num_perms),
                               self.num_bands, rows_per_band)
-            .select(F.col("id").alias("h_id"), "band", "bh").persist())
-        self._held_banded.count()  # materialize before the stream starts
+            .select(F.col("id").alias("h_id"), "band", "bh"))
 
     def check_batch(self, batch_docs: DataFrame) -> DataFrame:
         """Batch-side MinHash → banded equi-join against the broadcast
@@ -103,45 +98,16 @@ class ContaminationGate:
                     (inter.cast("double") / union.cast("double")).alias("jacc"))
             .filter(F.col("jacc") >= F.lit(self.threshold)))
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
         batch = batch.persist()
         try:
-            hits = self.check_batch(batch).persist()
-            n_hits = hits.count()
-            epoch_dir = os.path.join(self.flags_path, f"epoch={int(epoch_id)}")
-            audit_layout(hits, self.audit_partitions)\
-                .write.mode("overwrite").parquet(epoch_dir)
-            self.docs_checked += batch.count()
-            self.docs_flagged += n_hits
-            self.epochs += 1
-            hits.unpersist()
+            n_hits = write_epoch_dir(self.check_batch(batch),
+                                     self.flags_path, epoch_id,
+                                     n=F.count("*"))["n"]
+            return {"docs_checked": batch.count(), "docs_flagged": n_hits}
         finally:
             batch.unpersist()
 
-    def attach(self, doc_stream: DataFrame, checkpoint_dir: str):
-        """Run the gate over a streaming document source."""
-        q = (doc_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
-
     def flags(self, spark) -> DataFrame:
         """The accumulated contamination table (epoch column dropped)."""
-        df = spark.read.parquet(self.flags_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def metrics(self) -> dict:
-        """Gauges for the /metrics endpoint (register via
-        ``registry.gauge_sources.append(gate.metrics)``)."""
-        return {"contamination_docs_checked": self.docs_checked,
-                "contamination_docs_flagged": self.docs_flagged,
-                "contamination_epochs": self.epochs}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            q.stop()
-        self._held_sh.unpersist()
-        self._held_banded.unpersist()
+        return read_epoch_dirs(spark, self.flags_path)

@@ -1,4 +1,4 @@
-"""Streaming near-dup dedup gate (round 5, SURVEY.md §2.11).
+"""Streaming near-dup dedup gate (SURVEY.md §2.11).
 
 Batch dedup (``operators/dedup.py``) answers "which documents in this
 corpus duplicate each other"; a training-data INGEST pipeline needs
@@ -31,30 +31,29 @@ At 100 TB the state tables ARE the dedup index real pipelines keep
 accepted docs and every join is an equi-join with the batch side
 broadcast.
 
-Replay contract: state + audit writes are epoch-idempotent (dynamic
-partition overwrite), and the vs-corpus check excludes the current
-epoch's own partitions so a crash-replay never self-rejects. The
-in-memory counters (docs_seen/accepted/rejected) are observability
-gauges and DO double-count a replayed epoch — the tables are the
-source of truth.
+Replay contract: state + audit writes are epoch-idempotent
+(streaming/epoch_sink.py), and the vs-corpus check excludes the
+current epoch's own partitions so a crash-replay never self-rejects.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .audit import audit_layout
 from ..operators.dedup import (banded_signatures, minhash_signatures,
                                ngram_jaccard_pairs, shingle_df)
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir, write_epoch_table)
 
 
 @dataclass
-class StreamingDedupGate:
+class StreamingDedupGate(EpochSink):
     """foreachBatch near-dup dedup against an accumulated corpus."""
+
+    METRICS_PREFIX = "dedup_gate"
 
     spark: SparkSession
     base_table: str
@@ -66,14 +65,9 @@ class StreamingDedupGate:
     num_perms: int = 128
     num_bands: int = 32
     n_buckets: int = 16
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism;
-    # fixture tests pass 1 (streaming/audit.py)
-    audit_partitions: int | None = None
-    docs_seen: int = 0
-    docs_accepted: int = 0
-    docs_rejected: int = 0
-    queries: list = field(default_factory=list)
+    docs_seen = EpochCounter()
+    docs_accepted = EpochCounter()
+    docs_rejected = EpochCounter()
 
     @property
     def sig_table(self) -> str:
@@ -87,28 +81,6 @@ class StreamingDedupGate:
     def dups_path(self) -> str:
         return self.dups_dir or f"{self.base_table}_dups"
 
-    def _write_state(self, sig: DataFrame, sh: DataFrame,
-                     epoch_id: int) -> None:
-        # foreachBatch executes under a CLONED session (isolated conf
-        # snapshotted at stream start) — set dynamic overwrite on the
-        # session the write will actually run under, or the insert
-        # silently overwrites the WHOLE table instead of this epoch's
-        # partition.
-        sig.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        sig = sig.withColumn("epoch", F.lit(int(epoch_id)))
-        sh = sh.withColumn("epoch", F.lit(int(epoch_id)))
-        if not self.spark.catalog.tableExists(self.sig_table):
-            (sig.write.mode("overwrite").partitionBy("epoch")
-             .bucketBy(self.n_buckets, "bh").sortBy("bh")
-             .saveAsTable(self.sig_table))
-            (sh.write.mode("overwrite").partitionBy("epoch")
-             .bucketBy(self.n_buckets, "id")
-             .saveAsTable(self.sh_table))
-        else:
-            sig.write.insertInto(self.sig_table, overwrite=True)
-            sh.write.insertInto(self.sh_table, overwrite=True)
-
     def _verify(self, cand: DataFrame, sh_a: DataFrame,
                 sh_b: DataFrame) -> DataFrame:
         """Exact-Jaccard verification of (a_id, b_id) candidates."""
@@ -120,9 +92,9 @@ class StreamingDedupGate:
                         .alias("jacc"))
                 .filter(F.col("jacc") >= F.lit(self.threshold)))
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
         rows_per_band = self.num_perms // self.num_bands
-        self.docs_seen += batch.count()
+        n_seen = batch.count()
 
         # batch-internal dedup: exact pair graph on the (small) batch,
         # keep each group's min id. Exact all-pairs is right here —
@@ -148,8 +120,8 @@ class StreamingDedupGate:
             # exclude THIS epoch's partitions from the state read: a
             # crash-replay would otherwise check the batch against the
             # state its own failed attempt wrote and reject every doc
-            # as a duplicate of itself (found by the replay test) —
-            # partition pruning makes the exclusion a metadata filter.
+            # as a duplicate of itself — partition pruning makes the
+            # exclusion a metadata filter.
             not_self = F.col("epoch") != F.lit(int(epoch_id))
             idx_sig = self.spark.table(self.sig_table).filter(not_self)
             cand = (F.broadcast(bands_a.withColumnRenamed("id", "a_id"))
@@ -181,50 +153,32 @@ class StreamingDedupGate:
         accepted_ids = accepted.select(self.id_col).localCheckpoint()
         n_accepted = accepted_ids.count()
 
-        # audit trail: internal + vs-corpus rejections, epoch-idempotent
+        # audit trail: internal + vs-corpus rejections
         dups = internal_dups if corpus_dups is None else \
             internal_dups.unionByName(corpus_dups)
-        epoch_dir = os.path.join(self.dups_path, f"epoch={int(epoch_id)}")
-        audit_layout(dups, self.audit_partitions)\
-            .write.mode("overwrite").parquet(epoch_dir)
-        self.docs_rejected += dups.count()
-        self.docs_accepted += n_accepted
+        n_rejected = write_epoch_dir(dups, self.dups_path, epoch_id,
+                                     n=F.count("*"))["n"]
 
         # persist accepted docs' state under this epoch's partition
         # (bands_a already computed for the keepers — filter, don't
         # re-sign)
         ids = accepted_ids.withColumnRenamed(self.id_col, "id")
-        self._write_state(bands_a.join(ids, "id"), sa.join(ids, "id"),
-                          epoch_id)
+        write_epoch_table(bands_a.join(ids, "id"), self.sig_table,
+                          epoch_id, (self.n_buckets, "bh"))
+        write_epoch_table(sa.join(ids, "id"), self.sh_table, epoch_id,
+                          (self.n_buckets, "id"))
         for df in (keepers, sa):
             df.unpersist()
         if corpus_dups is not None:
             corpus_dups.unpersist()
-
-    def attach(self, doc_stream: DataFrame, checkpoint_dir: str):
-        q = (doc_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+        return {"docs_seen": n_seen, "docs_accepted": n_accepted,
+                "docs_rejected": n_rejected}
 
     def duplicates(self) -> DataFrame:
         """The audit table of rejected docs: (doc_id, dup_of, jacc)."""
-        df = self.spark.read.parquet(self.dups_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
+        return read_epoch_dirs(self.spark, self.dups_path)
 
     def accepted_ids(self) -> DataFrame:
         """Ids of every accepted (deduplicated) document so far."""
         return self.spark.table(self.sh_table).select(
             F.col("id").alias(self.id_col))
-
-    def metrics(self) -> dict:
-        return {"dedup_gate_docs_seen": self.docs_seen,
-                "dedup_gate_docs_accepted": self.docs_accepted,
-                "dedup_gate_docs_rejected": self.docs_rejected}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            q.stop()

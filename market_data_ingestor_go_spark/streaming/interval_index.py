@@ -1,13 +1,12 @@
-"""Streaming interval-overlap maintainer (round 13).
+"""Streaming interval-overlap maintainer.
 
 Batch interval × interval overlap
 (``operators/timeseries.py::interval_overlap_join`` — the r12 grid-cell
 equi-join) answers "which pairs of these intervals intersect"; an
 INGEST pipeline needs the online form: "which already-seen intervals
-does this arriving one overlap" — decided per micro-batch, the way the
-perceptual gates completed streaming coverage for the hash joins (the
-r12 verdict's #7). This is a JOIN maintainer, not a filter: every
-interval is accepted into the index; overlap PAIRS are the product.
+does this arriving one overlap" — decided per micro-batch. This is a
+JOIN maintainer, not a filter: every interval is accepted into the
+index; overlap PAIRS are the product.
 
 State: ``<base>_cells`` — (id, s, e, cell, epoch): the grid-cell
 postings of every seen interval (one row per ``bucket``-width cell the
@@ -30,8 +29,8 @@ an interval set, ``matches()`` equals the BATCH self-join over the
 full set (id_a < id_b) — each overlap pair is emitted exactly once,
 when its later-arriving member arrives.
 
-Replay contract: state + match writes are epoch-idempotent (dynamic
-partition overwrite), and the vs-corpus probe excludes the current
+Replay contract: state + match writes are epoch-idempotent
+(streaming/epoch_sink.py), and the vs-corpus probe excludes the current
 epoch's own partitions so a crash-replay never re-pairs a batch
 against its own failed attempt — the dedup-gate contract verbatim.
 
@@ -42,22 +41,24 @@ broadcast, and cell postings prune exactly as in the batch operator.
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .audit import audit_layout
 from ..operators.timeseries import interval_overlap_join
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir, write_epoch_table)
 
 
 @dataclass
-class IntervalOverlapMaintainer:
+class IntervalOverlapMaintainer(EpochSink):
     """foreachBatch interval-overlap maintenance against an
     accumulated grid-cell posting index. Input batches carry
     (``id_col``, ``start_col``, ``end_col``) CLOSED integer
     intervals; ids must be globally unique (pair identity)."""
+
+    METRICS_PREFIX = "interval_index"
 
     spark: SparkSession
     base_table: str
@@ -67,14 +68,8 @@ class IntervalOverlapMaintainer:
     end_col: str = "e"
     bucket: int = 32
     n_buckets: int = 16
-    trigger_seconds: int = 2
-    audit_partitions: int | None = None
-    # metrics keyed by epoch_id so a crash-replay OVERWRITES its
-    # epoch's counts instead of double-incrementing — metrics stay
-    # consistent with the epoch-idempotent state/match writes
-    _seen_by_epoch: dict = field(default_factory=dict)
-    _pairs_by_epoch: dict = field(default_factory=dict)
-    queries: list = field(default_factory=list)
+    intervals_seen = EpochCounter()
+    pairs_emitted = EpochCounter()
 
     def __post_init__(self):
         if self.bucket < 1:
@@ -102,20 +97,9 @@ class IntervalOverlapMaintainer:
                                  F.expr(f"e div {self.bucket}")))
             .alias("cell"))
 
-    def _write_state(self, rows: DataFrame, epoch_id: int) -> None:
-        rows.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        rows = rows.withColumn("epoch", F.lit(int(epoch_id)))
-        if not self.spark.catalog.tableExists(self.cells_table):
-            (rows.write.mode("overwrite").partitionBy("epoch")
-             .bucketBy(self.n_buckets, "cell").sortBy("cell")
-             .saveAsTable(self.cells_table))
-        else:
-            rows.write.insertInto(self.cells_table, overwrite=True)
-
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
         rows = self._rows(batch).localCheckpoint(eager=True)
-        self._seen_by_epoch[int(epoch_id)] = rows.count()
+        n_seen = rows.count()
 
         # 1) batch-internal pairs: the shared keyed grid-cell join,
         # oriented id_a < id_b so each unordered pair appears once
@@ -155,48 +139,17 @@ class IntervalOverlapMaintainer:
 
         pairs = internal if corpus is None \
             else internal.unionByName(corpus)
-        # pin the pair set once so the metric count and the write see
-        # the SAME rows (no recompute divergence, no parquet re-read)
-        pairs = pairs.localCheckpoint(eager=True)
-        epoch_dir = os.path.join(self.matches_path,
-                                 f"epoch={int(epoch_id)}")
-        audit_layout(pairs, self.audit_partitions) \
-            .write.mode("overwrite").parquet(epoch_dir)
-        self._pairs_by_epoch[int(epoch_id)] = pairs.count()
-
-        self._write_state(self._cell_rows(rows), epoch_id)
-
-    def attach(self, interval_stream: DataFrame, checkpoint_dir: str):
-        q = (interval_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+        n_pairs = write_epoch_dir(pairs, self.matches_path, epoch_id,
+                                  n=F.count("*"))["n"]
+        write_epoch_table(self._cell_rows(rows), self.cells_table,
+                          epoch_id, (self.n_buckets, "cell"))
+        return {"intervals_seen": n_seen, "pairs_emitted": n_pairs}
 
     def matches(self) -> DataFrame:
         """All emitted overlap pairs: (id_a, id_b, overlap),
         id_a < id_b, each exactly once across the stream's life."""
-        df = self.spark.read.parquet(self.matches_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
+        return read_epoch_dirs(self.spark, self.matches_path)
 
     def indexed_ids(self) -> DataFrame:
         return (self.spark.table(self.cells_table)
                 .select("id").distinct())
-
-    @property
-    def intervals_seen(self) -> int:
-        return sum(self._seen_by_epoch.values())
-
-    @property
-    def pairs_emitted(self) -> int:
-        return sum(self._pairs_by_epoch.values())
-
-    def metrics(self) -> dict:
-        return {"interval_index_intervals_seen": self.intervals_seen,
-                "interval_index_pairs_emitted": self.pairs_emitted}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            q.stop()

@@ -1,4 +1,4 @@
-"""Streaming LM-quality gate (late round 6, SURVEY.md §2.11).
+"""Streaming LM-quality gate (SURVEY.md §2.11).
 
 The streaming twin of ``doc_lm_quality``/``lm_quality_bands``: batch
 answers "how does every corpus document score against the reference
@@ -34,21 +34,23 @@ Design (scale posture first):
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.lm_quality import score_with_model, train_bigram_lm
-from .audit import audit_layout
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir)
 
 
 @dataclass
-class LMQualityGate:
+class LMQualityGate(EpochSink):
     """foreachBatch quality scorer against a fixed reference bigram
     LM. ``reference`` must expose (id_col, text_col); ``audit_path``
     is the epoch-partitioned parquet table of scores."""
+
+    METRICS_PREFIX = "lm_gate"
 
     reference: DataFrame
     audit_path: str
@@ -59,31 +61,17 @@ class LMQualityGate:
     train_pct: int = 100     # the reference corpus IS the train split
     lo_bits: float = 0.0
     hi_bits: float = 64.0
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism (the
-    # gate audits EVERY scored doc per epoch — never one task);
-    # fixture tests pass 1 (streaming/audit.py)
-    audit_partitions: int | None = None
-    docs_scored: int = 0
-    docs_flagged: int = 0
-    epochs: int = 0
-    queries: list = field(default_factory=list)
+    docs_scored = EpochCounter()
+    docs_flagged = EpochCounter()
+    epochs = EpochCounter()
 
     def __post_init__(self) -> None:
-        vocab, bgc, ctx = train_bigram_lm(
+        # model tables are bounded (module doc); the vocab / bigram /
+        # context aggregations are separate plan branches, so each is
+        # materialized on its own before the stream starts
+        self._vocab, self._bgc, self._ctx = self._pin(*train_bigram_lm(
             self.reference, self.text_col, self.id_col,
-            self.vocab_size, self.min_count, self.train_pct)
-        # model tables are bounded (module doc) — persist so every
-        # micro-batch replans against materialized sides, and
-        # materialize EACH branch before the stream starts (vocab /
-        # bigram / context aggregations are separate plan branches:
-        # counting only one would leave the reference-corpus bigram
-        # shuffle to the first trigger — review catch)
-        self._vocab = vocab.persist()
-        self._bgc = bgc.persist()
-        self._ctx = ctx.persist()
-        for t in (self._vocab, self._bgc, self._ctx):
-            t.count()
+            self.vocab_size, self.min_count, self.train_pct))
 
     def score_batch(self, batch_docs: DataFrame) -> DataFrame:
         """(id, n_tokens, n_bigrams, n_oov, sum_bg, sum_ctx,
@@ -99,46 +87,12 @@ class LMQualityGate:
             F.when(F.col("n_bigrams") == 0, F.lit(True))
              .otherwise(~in_band))
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        out = self.score_batch(batch)
-        epoch_dir = os.path.join(self.audit_path, f"epoch={int(epoch_id)}")
-        audit_layout(out, self.audit_partitions)\
-            .write.mode("overwrite").parquet(epoch_dir)
-        # counters are observability only — the audit table is the
-        # source of truth (replay double-counts here, like the other
-        # gates; documented trade). One read-back job for both counts.
-        r = (self.spark_read_epoch(epoch_dir)
-             .agg(F.count("*").alias("n"),
-                  F.sum(F.col("flagged").cast("int")).alias("nf")).first())
-        self.docs_scored += r["n"]
-        self.docs_flagged += int(r["nf"] or 0)
-        self.epochs += 1
-
-    def spark_read_epoch(self, epoch_dir: str) -> DataFrame:
-        return self.reference.sparkSession.read.parquet(epoch_dir)
-
-    def attach(self, doc_stream: DataFrame, checkpoint_dir: str):
-        q = (doc_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        return write_epoch_dir(
+            self.score_batch(batch), self.audit_path, epoch_id,
+            docs_scored=F.count("*"),
+            docs_flagged=F.count_if(F.col("flagged")))
 
     def scores(self) -> DataFrame:
         """The audit table across all epochs."""
-        df = self.reference.sparkSession.read.parquet(self.audit_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def metrics(self) -> dict:
-        return {"lm_gate_docs_scored": self.docs_scored,
-                "lm_gate_docs_flagged": self.docs_flagged,
-                "lm_gate_epochs": self.epochs}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            if q.isActive:
-                q.stop()
-        for t in (self._vocab, self._bgc, self._ctx):
-            t.unpersist()
+        return read_epoch_dirs(self.reference.sparkSession, self.audit_path)

@@ -1,4 +1,4 @@
-"""Streaming n-gram novelty gate (round 10, SURVEY.md §2.11).
+"""Streaming n-gram novelty gate (SURVEY.md §2.11).
 
 The streaming twin of ``doc_ngram_novelty``: batch answers "how novel
 is every corpus document against the reference/eval n-gram set"; an
@@ -35,21 +35,23 @@ Design (scale posture first):
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.lm_quality import novelty_against, reference_shingles
-from .audit import audit_layout
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir)
 
 
 @dataclass
-class NoveltyGate:
+class NoveltyGate(EpochSink):
     """foreachBatch novelty scorer against a fixed reference n-gram
     set. ``reference`` must expose (id_col, text_col); ``audit_path``
     is the epoch-partitioned parquet table of scores."""
+
+    METRICS_PREFIX = "novelty_gate"
 
     reference: DataFrame
     audit_path: str
@@ -57,23 +59,13 @@ class NoveltyGate:
     text_col: str = "text"
     id_col: str = "doc_id"
     lo_novelty: float = 0.5
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism (the
-    # gate audits EVERY scored doc per epoch — never one task);
-    # fixture tests pass 1 (streaming/audit.py)
-    audit_partitions: int | None = None
-    docs_scored: int = 0
-    docs_flagged: int = 0
-    epochs: int = 0
-    queries: list = field(default_factory=list)
+    docs_scored = EpochCounter()
+    docs_flagged = EpochCounter()
+    epochs = EpochCounter()
 
     def __post_init__(self) -> None:
-        # bounded (module doc) — persist and materialize BEFORE the
-        # stream starts so the reference shingle aggregate never runs
-        # inside a trigger (the lm_gate lesson)
-        self._ref_sh = reference_shingles(
-            self.reference, self.n, self.text_col).persist()
-        self._ref_sh.count()
+        self._ref_sh = self._pin(reference_shingles(
+            self.reference, self.n, self.text_col))
 
     def score_batch(self, batch_docs: DataFrame) -> DataFrame:
         """(doc_id, n_shingles, n_seen, novelty, flagged) — identical
@@ -89,42 +81,12 @@ class NoveltyGate:
                             .otherwise(F.col("novelty")
                                        < F.lit(self.lo_novelty))))
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        out = self.score_batch(batch)
-        epoch_dir = os.path.join(self.audit_path, f"epoch={int(epoch_id)}")
-        audit_layout(out, self.audit_partitions)\
-            .write.mode("overwrite").parquet(epoch_dir)
-        # counters are observability only — the audit table is the
-        # source of truth (replay double-counts here, like the other
-        # gates; documented trade). One read-back job for both counts.
-        r = (self.reference.sparkSession.read.parquet(epoch_dir)
-             .agg(F.count("*").alias("n"),
-                  F.sum(F.col("flagged").cast("int")).alias("nf")).first())
-        self.docs_scored += r["n"]
-        self.docs_flagged += int(r["nf"] or 0)
-        self.epochs += 1
-
-    def attach(self, doc_stream: DataFrame, checkpoint_dir: str):
-        q = (doc_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        return write_epoch_dir(
+            self.score_batch(batch), self.audit_path, epoch_id,
+            docs_scored=F.count("*"),
+            docs_flagged=F.count_if(F.col("flagged")))
 
     def scores(self) -> DataFrame:
         """The audit table across all epochs."""
-        df = self.reference.sparkSession.read.parquet(self.audit_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def metrics(self) -> dict:
-        return {"novelty_gate_docs_scored": self.docs_scored,
-                "novelty_gate_docs_flagged": self.docs_flagged,
-                "novelty_gate_epochs": self.epochs}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            if q.isActive:
-                q.stop()
-        self._ref_sh.unpersist()
+        return read_epoch_dirs(self.reference.sparkSession, self.audit_path)

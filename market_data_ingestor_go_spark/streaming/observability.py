@@ -102,10 +102,3 @@ class MetricsListener(StreamingQueryListener):
     def onQueryTerminated(self, event):  # pragma: no cover - trivial
         pass
 
-
-def batch_observed_metrics(df: DataFrame) -> dict:
-    """Batch-mode helper: run the plan and return its observed metrics
-    (Spark exposes them on the query execution after an action)."""
-    observed = df.observe("batch", F.count(F.lit(1)).alias("rows"))
-    n = observed.count()
-    return {"rows": n}

@@ -1,4 +1,4 @@
-"""Streaming perceptual near-dup gate for media blobs (round 12).
+"""Streaming perceptual near-dup gate for media blobs.
 
 Batch perceptual dedup (``operators/multimodal.py::image_neardup_pairs``
 / ``audio_neardup_pairs``) answers "which of these images/clips are
@@ -6,7 +6,7 @@ re-encoded/resized/regained copies of each other"; a training-data
 INGEST pipeline needs the online form: "is this arriving image (or
 audio clip) a perceptual duplicate of anything already accepted" —
 decided per micro-batch, before the blob lands in a shard. The
-StreamingDedupGate shape (text MinHash, round 5) carries over with the
+StreamingDedupGate shape (text MinHash) carries over with the
 64-bit fingerprint machinery swapped in:
 
 - ``<table>_fp`` : (id, fp, blk, bv, epoch) — the pigeonhole block
@@ -41,15 +41,16 @@ join is an equi-join with the batch side broadcast.
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .audit import audit_layout
+from ..operators.dedup import hamming_pairs
 from ..operators.multimodal import (audio_afp, image_dhash,
                                     video_frame_signatures)
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir, write_epoch_table)
 
 _SIGNERS = {
     "image": (image_dhash, "img_id", "dhash"),
@@ -58,11 +59,36 @@ _SIGNERS = {
 
 
 @dataclass
-class PerceptualGate:
+class _FingerprintGate(EpochSink):
+    """State and audit naming shared by the perceptual gates:
+    ``<base_table>_fp`` holds accepted fingerprints, the audit of
+    rejections defaults to ``<base_table>_dups``."""
+
+    @property
+    def fp_table(self) -> str:
+        return f"{self.base_table}_fp"
+
+    @property
+    def dups_path(self) -> str:
+        return self.dups_dir or f"{self.base_table}_dups"
+
+    def duplicates(self) -> DataFrame:
+        """Audit table of rejected items: (id, dup_of, <distance>)."""
+        return read_epoch_dirs(self.spark, self.dups_path)
+
+    def accepted_ids(self) -> DataFrame:
+        """Ids of every accepted (fingerprinted) item so far."""
+        return self.spark.table(self.fp_table).select("id").distinct()
+
+
+@dataclass
+class PerceptualGate(_FingerprintGate):
     """foreachBatch perceptual dedup against an accumulated
     fingerprint index. ``modality`` picks the signature kernel:
     'image' (dHash over decoded luma) or 'audio' (spectral-band
     fingerprint over decoded PCM)."""
+
+    METRICS_PREFIX = "perceptual_gate"
 
     spark: SparkSession
     base_table: str
@@ -73,12 +99,9 @@ class PerceptualGate:
     max_hamming: int = 2
     num_blocks: int = 4
     n_buckets: int = 16
-    trigger_seconds: int = 2
-    audit_partitions: int | None = None
-    blobs_seen: int = 0
-    blobs_accepted: int = 0
-    blobs_rejected: int = 0
-    queries: list = field(default_factory=list)
+    blobs_seen = EpochCounter()
+    blobs_accepted = EpochCounter()
+    blobs_rejected = EpochCounter()
 
     def __post_init__(self):
         if self.modality not in _SIGNERS:
@@ -90,14 +113,6 @@ class PerceptualGate:
         if self.max_hamming > self.num_blocks - 1:
             raise ValueError("pigeonhole completeness needs "
                              "max_hamming <= num_blocks-1")
-
-    @property
-    def fp_table(self) -> str:
-        return f"{self.base_table}_fp"
-
-    @property
-    def dups_path(self) -> str:
-        return self.dups_dir or f"{self.base_table}_dups"
 
     def _signatures(self, batch: DataFrame) -> DataFrame:
         """(id, fp) for every decodable blob in the batch."""
@@ -119,28 +134,15 @@ class PerceptualGate:
         return (sig.select("id", "fp", F.explode(blocks).alias("b"))
                 .select("id", "fp", "b.blk", "b.bv"))
 
-    def _write_state(self, rows: DataFrame, epoch_id: int) -> None:
-        rows.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        rows = rows.withColumn("epoch", F.lit(int(epoch_id)))
-        if not self.spark.catalog.tableExists(self.fp_table):
-            (rows.write.mode("overwrite").partitionBy("epoch")
-             .bucketBy(self.n_buckets, "bv").sortBy("bv")
-             .saveAsTable(self.fp_table))
-        else:
-            rows.write.insertInto(self.fp_table, overwrite=True)
-
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        self.blobs_seen += batch.count()
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        n_seen = batch.count()
         sig = self._signatures(batch).persist()
         decodable = sig.filter(F.col("fp").isNotNull())
         undecodable = sig.filter(F.col("fp").isNull())
 
-        # 1) batch-internal dedup: the SHARED pigeonhole machinery
-        # (operators/dedup.py::hamming_pairs — the factoring this
-        # round introduced exists precisely so this logic has ONE
-        # copy), rejecting the larger id of each pair (min-id keeper)
-        from ..operators.dedup import hamming_pairs
+        # 1) batch-internal dedup: the shared pigeonhole machinery
+        # (operators/dedup.py::hamming_pairs), rejecting the larger id
+        # of each pair (min-id keeper)
         pairs = hamming_pairs(decodable, "id", "fp",
                               self.max_hamming, self.num_blocks)
         internal = (pairs
@@ -182,56 +184,28 @@ class PerceptualGate:
             accepted = keepers
 
         # lineage of `accepted` READS the fp table (the anti probe);
-        # truncate before the insert that overwrites it (gate lesson)
+        # truncate before the insert that overwrites it
         accepted_rows = self._block_rows(accepted).localCheckpoint()
 
         dups = internal if corpus is None else internal.unionByName(corpus)
-        epoch_dir = os.path.join(self.dups_path, f"epoch={int(epoch_id)}")
-        audit_layout(dups, self.audit_partitions) \
-            .write.mode("overwrite").parquet(epoch_dir)
-        n_rejected = dups.count()
-        self.blobs_rejected += n_rejected
+        n_rejected = write_epoch_dir(dups, self.dups_path, epoch_id,
+                                     n=F.count("*"))["n"]
         # undecodable blobs are accepted-but-unindexed (honest NULL)
-        self.blobs_accepted += (accepted_rows.count() // self.num_blocks
-                                + undecodable.count())
+        n_accepted = (accepted_rows.count() // self.num_blocks
+                      + undecodable.count())
 
-        self._write_state(accepted_rows, epoch_id)
+        write_epoch_table(accepted_rows, self.fp_table, epoch_id,
+                          (self.n_buckets, "bv"))
         sig.unpersist()
         internal.unpersist()
         if corpus is not None:
             corpus.unpersist()
-
-    def attach(self, blob_stream: DataFrame, checkpoint_dir: str):
-        q = (blob_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
-
-    def duplicates(self) -> DataFrame:
-        """Audit table of rejected blobs: (id, dup_of, hamming)."""
-        df = self.spark.read.parquet(self.dups_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def accepted_ids(self) -> DataFrame:
-        """Ids of every accepted (fingerprinted) blob so far."""
-        return (self.spark.table(self.fp_table)
-                .select("id").distinct())
-
-    def metrics(self) -> dict:
-        return {"perceptual_gate_blobs_seen": self.blobs_seen,
-                "perceptual_gate_blobs_accepted": self.blobs_accepted,
-                "perceptual_gate_blobs_rejected": self.blobs_rejected}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            q.stop()
+        return {"blobs_seen": n_seen, "blobs_accepted": n_accepted,
+                "blobs_rejected": n_rejected}
 
 
 @dataclass
-class VideoGate:
+class VideoGate(_FingerprintGate):
     """foreachBatch perceptual dedup for CLIPS: a clip is a SET of
     frame dHashes, so duplicate identity is "≥ ``min_shared`` frames
     hash identically against one accepted clip" — the posting-count
@@ -250,6 +224,8 @@ class VideoGate:
     accepted-but-unindexed (the honest-NULL posture in fan-out form).
     """
 
+    METRICS_PREFIX = "video_gate"
+
     spark: SparkSession
     base_table: str
     dups_dir: str | None = None
@@ -258,38 +234,16 @@ class VideoGate:
     every_nth: int = 1
     min_shared: int = 3
     n_buckets: int = 16
-    trigger_seconds: int = 2
-    audit_partitions: int | None = None
-    clips_seen: int = 0
-    clips_accepted: int = 0
-    clips_rejected: int = 0
-    queries: list = field(default_factory=list)
+    clips_seen = EpochCounter()
+    clips_accepted = EpochCounter()
+    clips_rejected = EpochCounter()
 
     def __post_init__(self):
         if self.min_shared < 1:
             raise ValueError("min_shared must be >= 1")
 
-    @property
-    def fp_table(self) -> str:
-        return f"{self.base_table}_fp"
-
-    @property
-    def dups_path(self) -> str:
-        return self.dups_dir or f"{self.base_table}_dups"
-
-    def _write_state(self, rows: DataFrame, epoch_id: int) -> None:
-        rows.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        rows = rows.withColumn("epoch", F.lit(int(epoch_id)))
-        if not self.spark.catalog.tableExists(self.fp_table):
-            (rows.write.mode("overwrite").partitionBy("epoch")
-             .bucketBy(self.n_buckets, "fp").sortBy("fp")
-             .saveAsTable(self.fp_table))
-        else:
-            rows.write.insertInto(self.fp_table, overwrite=True)
-
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        self.clips_seen += batch.count()
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        n_seen = batch.count()
         sig = (video_frame_signatures(batch, self.binary_col,
                                       self.id_col, self.every_nth)
                .select(F.col("vid_id").alias("id"),
@@ -342,39 +296,14 @@ class VideoGate:
         accepted_rows = accepted.localCheckpoint(eager=True)
 
         dups = internal if corpus is None else internal.unionByName(corpus)
-        epoch_dir = os.path.join(self.dups_path, f"epoch={int(epoch_id)}")
-        audit_layout(dups, self.audit_partitions) \
-            .write.mode("overwrite").parquet(epoch_dir)
-        n_rejected = dups.count()
-        self.clips_rejected += n_rejected
-        self.clips_accepted += all_ids.count() - n_rejected
+        n_rejected = write_epoch_dir(dups, self.dups_path, epoch_id,
+                                     n=F.count("*"))["n"]
+        n_accepted = all_ids.count() - n_rejected
 
-        self._write_state(accepted_rows, epoch_id)
+        write_epoch_table(accepted_rows, self.fp_table, epoch_id,
+                          (self.n_buckets, "fp"))
         internal.unpersist()
         if corpus is not None:
             corpus.unpersist()
-
-    def attach(self, clip_stream: DataFrame, checkpoint_dir: str):
-        q = (clip_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
-
-    def duplicates(self) -> DataFrame:
-        df = self.spark.read.parquet(self.dups_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def accepted_ids(self) -> DataFrame:
-        return self.spark.table(self.fp_table).select("id").distinct()
-
-    def metrics(self) -> dict:
-        return {"video_gate_clips_seen": self.clips_seen,
-                "video_gate_clips_accepted": self.clips_accepted,
-                "video_gate_clips_rejected": self.clips_rejected}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            q.stop()
+        return {"clips_seen": n_seen, "clips_accepted": n_accepted,
+                "clips_rejected": n_rejected}

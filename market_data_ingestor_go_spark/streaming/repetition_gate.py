@@ -1,4 +1,4 @@
-"""Streaming repetition-quality gate (round 11, SURVEY.md §2.11).
+"""Streaming repetition-quality gate (SURVEY.md §2.11).
 
 The streaming twin of ``doc_repetition_signals``: batch answers "how
 repetitive is every corpus document"; an ingest pipeline needs the
@@ -31,14 +31,14 @@ Design (scale posture first):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.lm_quality import repetition_signals
-from .audit import audit_layout
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir)
 
 GOPHER_THRESHOLDS = {
     "dup_line_frac": 0.30,
@@ -50,9 +50,11 @@ GOPHER_THRESHOLDS = {
 
 
 @dataclass
-class RepetitionGate:
+class RepetitionGate(EpochSink):
     """foreachBatch Gopher-repetition scorer. ``audit_path`` is the
     epoch-partitioned parquet table of per-doc signals + flag."""
+
+    METRICS_PREFIX = "repetition_gate"
 
     audit_path: str
     text_col: str = "text"
@@ -61,15 +63,9 @@ class RepetitionGate:
     dup_ns: tuple = (5,)
     thresholds: dict = field(
         default_factory=lambda: dict(GOPHER_THRESHOLDS))
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism (the
-    # gate audits EVERY scored doc per epoch — never one task);
-    # fixture tests pass 1 (streaming/audit.py)
-    audit_partitions: int | None = None
-    docs_scored: int = 0
-    docs_flagged: int = 0
-    epochs: int = 0
-    queries: list = field(default_factory=list)
+    docs_scored = EpochCounter()
+    docs_flagged = EpochCounter()
+    epochs = EpochCounter()
 
     def __post_init__(self) -> None:
         if not self.thresholds:
@@ -98,41 +94,12 @@ class RepetitionGate:
             flag = flag | o
         return scored.withColumn("flagged", flag)
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        out = self.score_batch(batch)
-        epoch_dir = os.path.join(self.audit_path, f"epoch={int(epoch_id)}")
-        audit_layout(out, self.audit_partitions)\
-            .write.mode("overwrite").parquet(epoch_dir)
-        # counters are observability only — the audit table is the
-        # source of truth (replay double-counts here, like the other
-        # gates; documented trade). One read-back job for both counts.
-        r = (batch.sparkSession.read.parquet(epoch_dir)
-             .agg(F.count("*").alias("n"),
-                  F.sum(F.col("flagged").cast("int")).alias("nf")).first())
-        self.docs_scored += r["n"]
-        self.docs_flagged += int(r["nf"] or 0)
-        self.epochs += 1
-
-    def attach(self, doc_stream: DataFrame, checkpoint_dir: str):
-        q = (doc_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        return write_epoch_dir(
+            self.score_batch(batch), self.audit_path, epoch_id,
+            docs_scored=F.count("*"),
+            docs_flagged=F.count_if(F.col("flagged")))
 
     def scores(self, spark) -> DataFrame:
         """The audit table across all epochs."""
-        df = spark.read.parquet(self.audit_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def metrics(self) -> dict:
-        return {"repetition_gate_docs_scored": self.docs_scored,
-                "repetition_gate_docs_flagged": self.docs_flagged,
-                "repetition_gate_epochs": self.epochs}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            if q.isActive:
-                q.stop()
+        return read_epoch_dirs(spark, self.audit_path)

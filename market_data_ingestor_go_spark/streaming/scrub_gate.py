@@ -1,4 +1,4 @@
-"""Streaming span-scrub gate (round 11, SURVEY.md §2.11).
+"""Streaming span-scrub gate (SURVEY.md §2.11).
 
 The streaming twin of ``eval_leak_scrub``: batch rewrites every
 corpus document with its eval-leaked spans removed; an ingest
@@ -30,54 +30,44 @@ Design (scale posture first):
   mode=overwrite per epoch — the idempotent-replay contract shared
   by every sink in this package (a crashed epoch re-scrubs
   identically: the reference is static and the span algebra is
-  deterministic). File layout follows the r11 ``audit_partitions``
-  knob (streaming/audit.py): the gate rewrites EVERY doc per epoch,
-  so the default keeps the batch's parallelism.
+  deterministic). The write keeps the batch's parallelism: the gate
+  rewrites EVERY doc per epoch.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import reference_windows, scrub_leaked_spans
-from .audit import audit_layout
+from .epoch_sink import (EpochCounter, EpochSink, read_epoch_dirs,
+                         write_epoch_dir)
 
 
 @dataclass
-class ScrubGate:
+class ScrubGate(EpochSink):
     """foreachBatch span-scrubber against a fixed reference window
     set. ``reference`` must expose (id_col, text_col); ``audit_path``
     is the epoch-partitioned parquet table of scrub-output rows
     (clean + scrubbed + dropped — the full accounting)."""
+
+    METRICS_PREFIX = "scrub_gate"
 
     reference: DataFrame
     audit_path: str
     w: int = 8
     text_col: str = "text"
     id_col: str = "doc_id"
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism (the
-    # gate rewrites EVERY doc per epoch — never one task);
-    # fixture tests pass 1 (streaming/audit.py)
-    audit_partitions: int | None = None
-    docs_seen: int = 0
-    docs_scrubbed: int = 0
-    docs_dropped: int = 0
-    epochs: int = 0
-    queries: list = field(default_factory=list)
+    docs_seen = EpochCounter()
+    docs_scrubbed = EpochCounter()
+    docs_dropped = EpochCounter()
+    epochs = EpochCounter()
 
     def __post_init__(self) -> None:
-        # bounded (module doc) — persist and materialize BEFORE the
-        # stream starts so the reference window aggregate never runs
-        # inside a trigger (the novelty/lm-gate lesson)
-        self._ref_wins = reference_windows(
-            self.reference, self.w, self.text_col,
-            self.id_col).persist()
-        self._ref_wins.count()
+        self._ref_wins = self._pin(reference_windows(
+            self.reference, self.w, self.text_col, self.id_col))
 
     def scrub_batch(self, batch_docs: DataFrame) -> DataFrame:
         """(doc_id, status, n_spans, tokens_removed, n_tokens_kept,
@@ -88,48 +78,15 @@ class ScrubGate:
                                   id_col=self.id_col,
                                   ref_windows=self._ref_wins)
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        out = self.scrub_batch(batch)
-        epoch_dir = os.path.join(self.audit_path, f"epoch={int(epoch_id)}")
-        audit_layout(out, self.audit_partitions) \
-            .write.mode("overwrite").parquet(epoch_dir)
-        # counters are observability only — the audit table is the
-        # source of truth (replay double-counts here, like the other
-        # gates; documented trade). One read-back job for all counts.
-        r = (self.reference.sparkSession.read.parquet(epoch_dir)
-             .agg(F.count("*").alias("n"),
-                  F.sum((F.col("status") == "scrubbed").cast("int"))
-                  .alias("ns"),
-                  F.sum((F.col("status") == "dropped").cast("int"))
-                  .alias("nd")).first())
-        self.docs_seen += r["n"]
-        self.docs_scrubbed += int(r["ns"] or 0)
-        self.docs_dropped += int(r["nd"] or 0)
-        self.epochs += 1
-
-    def attach(self, doc_stream: DataFrame, checkpoint_dir: str):
-        q = (doc_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        status = F.col("status")
+        return write_epoch_dir(
+            self.scrub_batch(batch), self.audit_path, epoch_id,
+            docs_seen=F.count("*"),
+            docs_scrubbed=F.count_if(status == "scrubbed"),
+            docs_dropped=F.count_if(status == "dropped"))
 
     def scrubbed(self) -> DataFrame:
         """The audit table across all epochs (every doc seen; the
         surviving corpus is ``text IS NOT NULL``)."""
-        df = self.reference.sparkSession.read.parquet(self.audit_path)
-        return df.drop("epoch") if "epoch" in df.columns else df
-
-    def metrics(self) -> dict:
-        return {"scrub_gate_docs_seen": self.docs_seen,
-                "scrub_gate_docs_scrubbed": self.docs_scrubbed,
-                "scrub_gate_docs_dropped": self.docs_dropped,
-                "scrub_gate_epochs": self.epochs}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            if q.isActive:
-                q.stop()
-        self._ref_wins.unpersist()
+        return read_epoch_dirs(self.reference.sparkSession, self.audit_path)

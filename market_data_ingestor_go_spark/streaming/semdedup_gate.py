@@ -1,4 +1,4 @@
-"""Streaming semantic (embedding-space) dedup gate (late round 6).
+"""Streaming semantic (embedding-space) dedup gate.
 
 The vector twin of ``streaming/dedup_gate.py``: batch SemDeDup
 (``operators/similarity.py::semdedup``) answers "which vectors in
@@ -37,29 +37,30 @@ only {a} in batch. Sequential greedy is what an ingest pipeline
 means by dedup (never reject against a doc you refused to keep);
 the batch rule is the conservative offline sweep.
 
-Replay contract: state + audit writes are epoch-idempotent (dynamic
-partition overwrite) and the vs-corpus probe EXCLUDES the current
+Replay contract: state + audit writes are epoch-idempotent
+(streaming/epoch_sink.py) and the vs-corpus probe EXCLUDES the current
 epoch's own partition, so a crash-replay never rejects a batch
-against its own failed write. Counters are observability gauges
-(replay double-counts; tables are the source of truth).
+against its own failed write.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
-
-from .audit import audit_layout
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import assign_cells, dot
+from .epoch_sink import (EpochCounter, EpochSink, fold_epochs,
+                         read_epoch_dirs, write_epoch_dir,
+                         write_epoch_table)
 
 
 @dataclass
-class StreamingSemanticDedupGate:
+class StreamingSemanticDedupGate(EpochSink):
     """foreachBatch semantic dedup against an accumulated corpus."""
+
+    METRICS_PREFIX = "semdedup_gate"
 
     spark: SparkSession
     centroids: DataFrame
@@ -70,14 +71,9 @@ class StreamingSemanticDedupGate:
     threshold: float = 0.4
     n_probes: int = 2
     n_cell_buckets: int = 8
-    trigger_seconds: int = 2
-    # audit file layout: None = the batch's own parallelism;
-    # fixture tests pass 1 (streaming/audit.py)
-    audit_partitions: int | None = None
-    vecs_seen: int = 0
-    vecs_accepted: int = 0
-    vecs_rejected: int = 0
-    queries: list = field(default_factory=list)
+    vecs_seen = EpochCounter()
+    vecs_accepted = EpochCounter()
+    vecs_rejected = EpochCounter()
 
     def __post_init__(self) -> None:
         # the centroid artifact is model-sized: collect once so every
@@ -104,8 +100,7 @@ class StreamingSemanticDedupGate:
     def _probe_cells(self, assigned: DataFrame) -> DataFrame:
         """(q_id, qv, qsd, cell) probe rows — one per probed cell.
         With n_probes=1 ``assign_cells`` emits no ``cells`` array, so
-        the single primary cell is the probe (review catch: the
-        unconditional explode crashed every n_probes=1 batch)."""
+        the single primary cell is the probe."""
         cell = (F.explode("cells") if self.n_probes > 1
                 else F.col("cell"))
         return assigned.select(F.col("n_id").alias("q_id"),
@@ -113,13 +108,11 @@ class StreamingSemanticDedupGate:
                                F.col("nsd").alias("qsd"),
                                cell.alias("cell"))
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
         session = batch.sparkSession
         cents = self._cents(session)
 
-        # cells + self-dots assigned ONCE for the whole batch (the
-        # earlier shape assigned twice: inside semdedup and again for
-        # the survivors — review catch)
+        # cells + self-dots assigned ONCE for the whole batch
         assigned = (assign_cells(batch, cents, self.id_col,
                                  self.vec_col, n_probes=self.n_probes)
                     .withColumn("nsd", dot(F.col("nv"), F.col("nv")))
@@ -131,9 +124,9 @@ class StreamingSemanticDedupGate:
         # 1. batch-internal pairs — EXACTLY batch semdedup's rule
         # (both sides probe their top-p cells; drop x iff any
         # smaller-id vector shares one), but keeping the blocking
-        # neighbor so internal rejects are AUDITABLE (review catch:
-        # the text twin audits both kinds). A pair sharing two cells
-        # appears twice pre-agg; max/max_by absorb the duplicate.
+        # neighbor so internal rejects are AUDITABLE. A pair sharing
+        # two cells appears twice pre-agg; max/max_by absorb the
+        # duplicate.
         probe = self._probe_cells(assigned)
         nside = probe.select(F.col("q_id").alias("n_id"),
                              F.col("qv").alias("nv"),
@@ -152,8 +145,7 @@ class StreamingSemanticDedupGate:
 
         # 2. vs-corpus probe: batch side broadcast, state bucketed;
         # persisted — it feeds the anti join AND the audit write
-        # (review catch: recomputing probes the corpus-sized state
-        # twice)
+        # (recomputing would probe the corpus-sized state twice)
         state = self._state_before(session, epoch_id)
         if state is not None:
             hits = (self._probe_cells(surv).hint("broadcast")
@@ -176,33 +168,20 @@ class StreamingSemanticDedupGate:
         # 3. idempotent writes: state under epoch partition (bucketed
         # by cell); audit written UNCONDITIONALLY — possibly empty —
         # so rejections() works from epoch 0 like the text twin
-        # (review catch: PATH_NOT_FOUND until the first reject)
-        out = (accepted.select("n_id", "nv", "nsd", F.col("cell"))
-               .withColumn("epoch", F.lit(int(epoch_id))))
-        session.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        if not session.catalog.tableExists(self.state_table):
-            (out.write.mode("overwrite").partitionBy("epoch")
-             .bucketBy(self.n_cell_buckets, "cell").sortBy("cell")
-             .saveAsTable(self.state_table))
-        else:
-            out.write.insertInto(self.state_table, overwrite=True)
-
-        audit_dir = os.path.join(self.dups_dir, f"epoch={int(epoch_id)}")
-        audit_layout(
-            rejected.select(F.col("q_id").alias("new_id"), "dup_of",
-                            "cos"),
-            self.audit_partitions).write.mode("overwrite")\
-            .parquet(audit_dir)
+        write_epoch_table(accepted.select("n_id", "nv", "nsd", "cell"),
+                          self.state_table, epoch_id,
+                          (self.n_cell_buckets, "cell"))
+        write_epoch_dir(rejected.select(F.col("q_id").alias("new_id"),
+                                        "dup_of", "cos"),
+                        self.dups_dir, epoch_id)
 
         n_batch = batch.count()
         n_acc = accepted.count()
-        self.vecs_seen += n_batch
-        self.vecs_accepted += n_acc
-        self.vecs_rejected += n_batch - n_acc
         for df in (assigned, internal, surv) + (
                 (hits,) if hits is not None else ()):
             df.unpersist()
+        return {"vecs_seen": n_batch, "vecs_accepted": n_acc,
+                "vecs_rejected": n_batch - n_acc}
 
     def bootstrap(self, corpus: DataFrame) -> None:
         """Seed the accepted state from an existing batch corpus
@@ -216,8 +195,7 @@ class StreamingSemanticDedupGate:
         ``compact_state`` folds the whole accepted corpus — on a
         compacted gate a late bootstrap would dedup against nothing
         (epoch -1 is excluded from its own probe) and then OVERWRITE
-        the entire compacted corpus (review catch: silent data
-        loss)."""
+        the entire compacted corpus (silent data loss)."""
         if self.spark.catalog.tableExists(self.state_table):
             raise ValueError(
                 f"{self.state_table} already has accepted state — "
@@ -227,53 +205,17 @@ class StreamingSemanticDedupGate:
                 "gate instead.")
         self._gate_batch(corpus, epoch_id=-1)
 
-    def attach(self, embedding_stream: DataFrame, checkpoint_dir: str):
-        q = (embedding_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
-
     def accepted(self) -> DataFrame:
         return self.spark.table(self.state_table).select(
             F.col("n_id").alias(self.id_col), "cell", "epoch")
 
     def rejections(self) -> DataFrame:
-        df = self.spark.read.parquet(self.dups_dir)
-        return df.drop("epoch") if "epoch" in df.columns else df
+        return read_epoch_dirs(self.spark, self.dups_dir)
 
     def compact_state(self) -> int:
         """Fold all epoch partitions into epoch -1 (run while the
-        stream is stopped with its checkpoint committed — the
-        package-wide compaction contract, mirrors
-        _EpochPartitionedIndex.compact): a long-running gate
-        accumulates one partition per trigger, which degrades
-        listing/planning long before data size matters. Staged copy
-        so a full table exists at every instant of the swap; the
-        cell bucketing is preserved. Returns the folded row count."""
-        staging = f"{self.state_table}__staging"
-        live = self.spark.table(self.state_table)
-        n = live.count()
-
-        def _write(df: DataFrame, dest: str) -> None:
-            (df.write.mode("overwrite").partitionBy("epoch")
-             .bucketBy(self.n_cell_buckets, "cell").sortBy("cell")
-             .saveAsTable(dest))
-
-        _write(live.drop("epoch").withColumn("epoch", F.lit(-1)),
-               staging)
-        _write(self.spark.table(staging), self.state_table)
-        self.spark.sql(f"DROP TABLE {staging}")
-        return n
-
-    def metrics(self) -> dict:
-        return {"semdedup_gate_vecs_seen": self.vecs_seen,
-                "semdedup_gate_vecs_accepted": self.vecs_accepted,
-                "semdedup_gate_vecs_rejected": self.vecs_rejected}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            if q.isActive:
-                q.stop()
+        stream is stopped with its checkpoint committed), keeping the
+        cell bucketing — ``epoch_sink.fold_epochs``. Returns the
+        folded row count."""
+        return fold_epochs(self.spark, self.state_table,
+                           (self.n_cell_buckets, "cell"))

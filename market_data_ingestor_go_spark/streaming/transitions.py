@@ -1,4 +1,4 @@
-"""Streaming Markov transition maintainer (round 12).
+"""Streaming Markov transition maintainer.
 
 Batch ``operators/timeseries.py::event_transitions`` needs a per-user
 lag over the WHOLE event history — a shape no bounded streaming
@@ -40,23 +40,27 @@ users; count deltas), so an UNCOMPACTED stream's last-table holds
 O(epochs × touched-users) rows and ``_prior_last`` re-aggregates all
 of them — call ``compact(upto_epoch)`` periodically (any epoch the
 checkpoint has committed) to fold history into one partition; after
-compaction the readback is |users| + |types|² + rows-since-compaction
-(r12 review catch: the un-compacted growth was undocumented).
+compaction the readback is |users| + |types|² + rows-since-compaction.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.timeseries import transition_probs
+from .epoch_sink import (EpochCounter, EpochSink, save_epoch_table,
+                         write_epoch_table)
+
 
 @dataclass
-class TransitionMaintainer:
+class TransitionMaintainer(EpochSink):
     """foreachBatch maintainer of Markov transition counts."""
+
+    METRICS_PREFIX = "transition_maintainer"
 
     spark: SparkSession
     base_table: str
@@ -64,10 +68,8 @@ class TransitionMaintainer:
     ts_ms_col: str = "ts_ms"
     type_col: str = "event_type"
     id_col: str = "event_id"
-    trigger_seconds: int = 2
-    events_seen: int = 0
-    transitions_counted: int = 0
-    queries: list = field(default_factory=list)
+    events_seen = EpochCounter()
+    transitions_counted = EpochCounter(metric="transitions")
 
     @property
     def last_table(self) -> str:
@@ -76,16 +78,6 @@ class TransitionMaintainer:
     @property
     def cnt_table(self) -> str:
         return f"{self.base_table}_cnt"
-
-    def _write(self, df: DataFrame, table: str, epoch_id: int) -> None:
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        df = df.withColumn("epoch", F.lit(int(epoch_id)))
-        if not self.spark.catalog.tableExists(table):
-            (df.write.mode("overwrite").partitionBy("epoch")
-             .saveAsTable(table))
-        else:
-            df.write.insertInto(table, overwrite=True)
 
     def _prior_last(self, epoch_id: int) -> DataFrame | None:
         """Each user's last event across epochs BEFORE ``epoch_id`` —
@@ -102,14 +94,14 @@ class TransitionMaintainer:
                         F.col("m.event_id").alias("event_id"),
                         F.col("m.event_type").alias("event_type")))
 
-    def _gate_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
         b = batch.select(
             F.col(self.user_col).alias("u"),
             F.col(self.ts_ms_col).alias("ts_ms"),
             F.col(self.id_col).alias("event_id"),
             F.col(self.type_col).alias("event_type"),
             F.lit(True).alias("is_new")).localCheckpoint(eager=True)
-        self.events_seen += b.count()
+        n_events = b.count()
 
         prior = self._prior_last(epoch_id)
         if prior is not None:
@@ -141,13 +133,14 @@ class TransitionMaintainer:
                             F.col("m.event_type").alias("event_type")))
 
         # lineage of both outputs reads the state tables; truncate
-        # before inserts that overwrite them (the gate lesson)
+        # before inserts that overwrite them
         delta = delta.localCheckpoint(eager=True)
         new_last = new_last.localCheckpoint(eager=True)
-        self.transitions_counted += int(
-            delta.agg(F.coalesce(F.sum("n"), F.lit(0))).collect()[0][0])
-        self._write(delta, self.cnt_table, epoch_id)
-        self._write(new_last, self.last_table, epoch_id)
+        n_transitions = delta.agg(F.sum("n")).collect()[0][0]
+        write_epoch_table(delta, self.cnt_table, epoch_id)
+        write_epoch_table(new_last, self.last_table, epoch_id)
+        return {"events_seen": n_events,
+                "transitions_counted": n_transitions}
 
     def compact(self, upto_epoch: int) -> None:
         """Fold every state partition with epoch ≤ ``upto_epoch``
@@ -182,35 +175,14 @@ class TransitionMaintainer:
             folded = (fold(cur.filter(F.col("epoch") <= F.lit(upto)))
                       .withColumn("epoch", F.lit(upto)))
             newer = cur.filter(F.col("epoch") > F.lit(upto))
-            merged = folded.unionByName(newer) \
-                .localCheckpoint(eager=True)
-            (merged.write.mode("overwrite").partitionBy("epoch")
-             .saveAsTable(table))
-
-    def attach(self, event_stream: DataFrame, checkpoint_dir: str):
-        q = (event_stream.writeStream
-             .foreachBatch(self._gate_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+            save_epoch_table(folded.unionByName(newer)
+                             .localCheckpoint(eager=True), table)
 
     def transitions(self) -> DataFrame:
         """The transition-matrix readout over the summed deltas —
         identical columns and arithmetic to batch event_transitions
         (the shared ``transition_probs`` finisher)."""
-        from ..operators.timeseries import transition_probs
         counts = (self.spark.table(self.cnt_table)
                   .groupBy("prev_type", "event_type")
                   .agg(F.sum("n").alias("n_transitions")))
         return transition_probs(counts)
-
-    def metrics(self) -> dict:
-        return {"transition_maintainer_events_seen": self.events_seen,
-                "transition_maintainer_transitions":
-                    self.transitions_counted}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            q.stop()

@@ -1,4 +1,4 @@
-"""Streaming maintenance of materialized vector indexes (r5/r6).
+"""Streaming maintenance of materialized vector and postings indexes.
 
 ``operators/similarity.py::build_hyperplane_index`` materializes the
 hyperplane-LSH index as a bucketed table — the 100 TB deployment
@@ -8,14 +8,13 @@ deterministic model artifact (hyperplanes / trained PQ codebooks) and
 landed into the index table, so probes see new vectors within one
 trigger and never recompute corpus-side state.
 
-Exactly-once layout (shared by both maintainers via
-``_EpochPartitionedIndex``): the managed table is PARTITIONED by
-epoch. Epoch partitions give the same idempotent-replay contract as
-the ingest history sink (a replayed epoch dynamically overwrites ITS
-OWN partition — verified: replaying an epoch leaves the row count
-unchanged). The hyperplane index additionally BUCKETS by the LSH
-bucket id so the probe path keeps its pruned, shuffle-free scan shape
-within every partition.
+Exactly-once layout (shared by every maintainer via
+``_EpochPartitionedIndex`` and streaming/epoch_sink.py): the managed
+table is PARTITIONED by epoch, and a replayed epoch dynamically
+overwrites ITS OWN partition (tested: replaying an epoch leaves the
+row count unchanged). The hyperplane index additionally BUCKETS by the
+LSH bucket id so the probe path keeps its pruned, shuffle-free scan
+shape within every partition.
 
 Scale posture: per-batch work is the batch's transform only (narrow
 projection, no shuffle beyond the batch's write — never the existing
@@ -34,108 +33,54 @@ from pyspark.sql import functions as F
 from ..operators.similarity import (_hyperplanes, as_double, dot,
                                     hyperplane_ann_from_index,
                                     hyperplane_signature)
+from .epoch_sink import (EpochCounter, EpochSink, fold_epochs,
+                         write_epoch_table)
 
 
 @dataclass
-class _EpochPartitionedIndex:
-    """Shared foreachBatch maintainer scaffolding: the epoch-
-    partitioned exactly-once write contract, stream attachment,
-    bootstrap, compaction and counters live HERE once — subclasses
-    supply ``_transform`` (batch → index rows, no epoch column) and
-    may override ``_write`` (e.g. to bucket). One copy so a fix to
-    the write contract can never drift between maintainers
-    (review catch r6)."""
+class _EpochPartitionedIndex(EpochSink):
+    """An index table maintained from a stream: subclasses supply
+    ``_transform`` (batch → index rows, no epoch column) and may
+    bucket the table (``_bucketing``)."""
 
     spark: SparkSession
     table: str
-    trigger_seconds: int = 2
-    rows_indexed: int = 0
-    epochs: int = 0
-    queries: list = field(default_factory=list)
+    rows_indexed = EpochCounter()
+    epochs = EpochCounter()
 
-    # ---- subclass hooks -------------------------------------------
     def _transform(self, batch: DataFrame) -> DataFrame:
         raise NotImplementedError
 
-    def _write(self, df: DataFrame, dest: str) -> None:
-        df.write.mode("overwrite").partitionBy("epoch").saveAsTable(dest)
+    def _bucketing(self) -> tuple[int, str] | None:
+        return None
 
-    def _metrics_prefix(self) -> str:
-        raise NotImplementedError
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        write_epoch_table(self._transform(batch), self.table, epoch_id,
+                          self._bucketing())
+        return {"rows_indexed": batch.count()}
 
-    # ---- shared contract ------------------------------------------
+    # ``_gate_batch`` under the name the index tests replay epochs by
     def _index_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        out = self._transform(batch).withColumn(
-            "epoch", F.lit(int(epoch_id)))
-        # dynamic partition overwrite → replaying a crashed epoch
-        # rewrites only its own partition (idempotent). Set on the
-        # session the write runs under: foreachBatch executes in a
-        # CLONED session whose conf was snapshotted at stream start,
-        # so setting only self.spark after that point would leave the
-        # clone in static mode and wipe the table on every insert.
-        out.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        if not self.spark.catalog.tableExists(self.table):
-            self._write(out, self.table)
-        else:
-            # positional insert: column order matches creation schema
-            out.write.insertInto(self.table, overwrite=True)
-        self.rows_indexed += batch.count()
-        self.epochs += 1
-
-    def attach(self, embedding_stream: DataFrame, checkpoint_dir: str):
-        """Maintain the index from a streaming embedding source."""
-        q = (embedding_stream.writeStream
-             .foreachBatch(self._index_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(processingTime=f"{self.trigger_seconds} seconds")
-             .start())
-        self.queries.append(q)
-        return q
+        self._gate_batch(batch, epoch_id)
 
     def bootstrap(self, corpus: DataFrame) -> None:
-        """Seed the index from an existing batch corpus (epoch -1),
-        before attaching the stream."""
-        self._index_batch(corpus, epoch_id=-1)
-        self.epochs -= 1  # bootstrap is not a stream epoch
+        """Seed the index from an existing batch corpus (epoch -1,
+        which is not a stream epoch), before attaching the stream."""
+        self._gate_batch(corpus, epoch_id=-1)
 
     def compact(self) -> int:
-        """Fold all epoch partitions into epoch -1 (mirrors
-        compact_history): a long-running stream accumulates one
-        partition per trigger, which degrades listing/planning long
-        before it degrades data. Run only while the stream is stopped
-        with its checkpoint fully committed — compaction folds epochs
-        together, so a pending replay would resurrect its partition
-        and duplicate rows. Returns the compacted row count.
-
-        Staged copy: the folded index lands in ``<table>__staging``
-        first, the live table is rebuilt from it, then staging drops —
-        a full copy exists at every instant of the swap (managed-table
-        RENAME is not used: the catalog keeps the old location and
-        reads empty after it — observed on this build).
-        """
-        staging = f"{self.table}__staging"
-        live = self.spark.table(self.table)
-        n = live.count()
-        self._write(live.drop("epoch").withColumn("epoch", F.lit(-1)),
-                    staging)
-        self._write(self.spark.table(staging), self.table)
-        self.spark.sql(f"DROP TABLE {staging}")
-        return n
-
-    def metrics(self) -> dict:
-        p = self._metrics_prefix()
-        return {f"{p}_rows_indexed": self.rows_indexed,
-                f"{p}_epochs": self.epochs}
-
-    def stop(self) -> None:
-        for q in self.queries:
-            q.stop()
+        """Fold all epoch partitions into epoch -1
+        (``epoch_sink.fold_epochs``; run only while the stream is
+        stopped with its checkpoint committed). Returns the compacted
+        row count."""
+        return fold_epochs(self.spark, self.table, self._bucketing())
 
 
 @dataclass
 class StreamingVectorIndex(_EpochPartitionedIndex):
     """foreachBatch maintainer of a bucketed hyperplane-LSH index."""
+
+    METRICS_PREFIX = "vector_index"
 
     dim: int = 64
     n_planes: int = 6
@@ -151,13 +96,8 @@ class StreamingVectorIndex(_EpochPartitionedIndex):
                 .withColumn("bucket",
                             hyperplane_signature(F.col("nv"), planes)))
 
-    def _write(self, df: DataFrame, dest: str) -> None:
-        (df.write.mode("overwrite").partitionBy("epoch")
-         .bucketBy(self.n_buckets, "bucket").sortBy("bucket")
-         .saveAsTable(dest))
-
-    def _metrics_prefix(self) -> str:
-        return "vector_index"
+    def _bucketing(self) -> tuple[int, str]:
+        return (self.n_buckets, "bucket")
 
     def probe(self, query_vectors: DataFrame, k: int = 5,
               multiprobe: int = 1) -> DataFrame:
@@ -172,7 +112,7 @@ class StreamingVectorIndex(_EpochPartitionedIndex):
 
 @dataclass
 class StreamingPQIndex(_EpochPartitionedIndex):
-    """foreachBatch maintainer of the PQ CODES table (r6) — the
+    """foreachBatch maintainer of the PQ CODES table — the
     encode-on-ingest half of the production PQ deployment (train
     offline → encode each arriving batch with the broadcast codebook
     → serve with ADC + rerank over the stored codes, zero encode at
@@ -187,6 +127,8 @@ class StreamingPQIndex(_EpochPartitionedIndex):
     row-identical to ``pq_ann`` over everything indexed so far
     (tested)."""
 
+    METRICS_PREFIX = "pq_index"
+
     codebook_rows: list = field(default_factory=list)
     id_col: str = "vec_id"
     vec_col: str = "embedding"
@@ -200,9 +142,6 @@ class StreamingPQIndex(_EpochPartitionedIndex):
         return pq_encode(batch, self._codebooks(), self.id_col,
                          self.vec_col)
 
-    def _metrics_prefix(self) -> str:
-        return "pq_index"
-
     def probe(self, query_vectors: DataFrame, k: int = 5,
               shortlist: int = 4) -> DataFrame:
         from ..operators.similarity import pq_ann_from_index
@@ -214,7 +153,7 @@ class StreamingPQIndex(_EpochPartitionedIndex):
 
 @dataclass
 class StreamingPostingsIndex(_EpochPartitionedIndex):
-    """foreachBatch maintainer of the BM25 inverted index (r9) — the
+    """foreachBatch maintainer of the BM25 inverted index — the
     tokenize-on-ingest half of the retrieval deployment: each
     arriving document batch lands as (doc_id, dl, term, tf) posting
     rows (operators/retrieval.py::doc_postings — the same transform
@@ -238,10 +177,10 @@ class StreamingPostingsIndex(_EpochPartitionedIndex):
     Per-batch work is the batch's explode + partial-agg only; the
     existing index never rewrites.
 
-    STATS SIDECAR (r10; r11 adds max_dl): each epoch write also lands
-    ONE (epoch, n_docs, tot, max_dl) row in ``<table>_stats`` — same
+    STATS SIDECAR: each epoch write also lands ONE
+    (epoch, n_docs, tot, max_dl) row in ``<table>_stats`` — same
     epoch partitioning, same dynamic-overwrite replay idempotence,
-    landed by the same ``_index_batch`` call so it can never lag the
+    landed by the same ``_process`` call so it can never lag the
     postings. ``probe`` sums the sidecar (n_docs/tot summed, max_dl
     maxed) instead of running ``bm25_from_index``'s full-index
     distinct — corpus stats at METADATA cost (one row per epoch),
@@ -250,8 +189,9 @@ class StreamingPostingsIndex(_EpochPartitionedIndex):
     index-derived stats across appended epochs is tested. A
     pre-sidecar index (or one whose sidecar table is missing) falls
     back to stats=None — the full-index distinct — instead of
-    failing (r11, ADVICE). Epoch partitions give the same
-    idempotent-replay contract as the other maintainers."""
+    failing."""
+
+    METRICS_PREFIX = "postings_index"
 
     text_col: str = "text"
     id_col: str = "doc_id"
@@ -264,8 +204,8 @@ class StreamingPostingsIndex(_EpochPartitionedIndex):
         from ..operators.retrieval import doc_postings
         return doc_postings(batch, self.text_col, self.id_col)
 
-    def _index_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        super()._index_batch(batch, epoch_id)
+    def _process(self, batch: DataFrame, epoch_id: int) -> dict:
+        counts = super()._process(batch, epoch_id)
         # one sidecar row per epoch, derived from THIS epoch's
         # postings partition (not the raw batch) so the sidecar and
         # the postings can never disagree on NULL-text / tokenization
@@ -275,33 +215,16 @@ class StreamingPostingsIndex(_EpochPartitionedIndex):
                .select("doc_id", "dl").distinct()
                .agg(F.count("*").alias("n_docs"),
                     F.coalesce(F.sum("dl"), F.lit(0)).alias("tot"),
-                    F.coalesce(F.max("dl"), F.lit(0)).alias("max_dl"))
-               .withColumn("epoch", F.lit(int(epoch_id))))
-        row.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        if not self.spark.catalog.tableExists(self.stats_table):
-            row.write.mode("overwrite").partitionBy("epoch") \
-                .saveAsTable(self.stats_table)
-        else:
-            row.write.insertInto(self.stats_table, overwrite=True)
+                    F.coalesce(F.max("dl"), F.lit(0)).alias("max_dl")))
+        write_epoch_table(row, self.stats_table, epoch_id)
+        return counts
 
     def compact(self) -> int:
         n = super().compact()
-        # fold the sidecar the same way: all rows re-land under epoch
-        # -1 (the SUM — the only readout — is partition-invariant)
-        staging = f"{self.stats_table}__staging"
-        live = self.spark.table(self.stats_table)
-        (live.drop("epoch").withColumn("epoch", F.lit(-1))
-         .write.mode("overwrite").partitionBy("epoch")
-         .saveAsTable(staging))
-        (self.spark.table(staging)
-         .write.mode("overwrite").partitionBy("epoch")
-         .saveAsTable(self.stats_table))
-        self.spark.sql(f"DROP TABLE {staging}")
+        # fold the sidecar the same way (the SUM — the only readout —
+        # is partition-invariant)
+        fold_epochs(self.spark, self.stats_table)
         return n
-
-    def _metrics_prefix(self) -> str:
-        return "postings_index"
 
     def probe(self, query_terms: list, k: int = 10) -> DataFrame:
         from ..operators.retrieval import bm25_from_index
@@ -310,11 +233,11 @@ class StreamingPostingsIndex(_EpochPartitionedIndex):
             side = self.spark.table(self.stats_table)
             aggs = [F.sum("n_docs").alias("n_docs"),
                     F.sum("tot").alias("tot")]
-            if "max_dl" in side.columns:  # r10 sidecars predate it
+            if "max_dl" in side.columns:  # older sidecars lack it
                 aggs.append(F.max("max_dl").alias("max_dl"))
             stats = side.agg(*aggs)
         # stats=None (sidecar-less index, e.g. registered externally
-        # or created pre-r10): bm25_from_index's full-index distinct —
+        # or created without one): bm25_from_index's full-index distinct —
         # the previously-working derived-stats path, not an error
         return bm25_from_index(
             self.spark.table(self.table).drop("epoch"), query_terms,

@@ -1310,7 +1310,9 @@ def test_streaming_dedup_gate_replay_idempotent(spark, tmp_path):
         n_sig = spark.table("ddg_replay_sig").count()
         n_sh = spark.table("ddg_replay_sh").count()
         assert n_sh == 2
+        metrics = gate.metrics()
         gate._gate_batch(docs, epoch_id=0)  # crash-replay, same epoch
+        assert gate.metrics() == metrics  # counters replaced, not added
         assert spark.table("ddg_replay_sig").count() == n_sig
         assert spark.table("ddg_replay_sh").count() == n_sh
         # audit table for the replayed epoch is also overwritten,
@@ -2391,13 +2393,11 @@ def test_streaming_postings_index_maintenance(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS s_postings_idx_stats")
 
 
-def test_gate_audit_partitions_knob(spark, tmp_path):
-    """r11 (verdict #4): the gates' per-epoch audit writes no longer
-    funnel through one task. With the default audit_partitions=None a
-    multi-partition batch lands MULTIPLE part files per epoch, epoch
-    replay still overwrites into identical rows (>1-file idempotence),
-    and audit_partitions=1 restores the single-file fixture layout —
-    same rows either way."""
+def test_gate_audit_multi_file_replay(spark, tmp_path):
+    """The gates' per-epoch audit writes keep the batch's parallelism:
+    a multi-partition batch lands MULTIPLE part files per epoch, and
+    epoch replay still overwrites into identical rows (>1-file
+    idempotence)."""
     import glob as _glob
 
     from market_data_ingestor_go_spark.sources.tables import load_table
@@ -2419,16 +2419,7 @@ def test_gate_audit_partitions_knob(spark, tmp_path):
     gate._gate_batch(batch, 0)  # crash-replay of the same epoch
     after = sorted(map(tuple, gate.scores().collect()))
     assert before == after
-
-    single = NoveltyGate(reference=ref,
-                         audit_path=str(tmp_path / "naudit1"),
-                         audit_partitions=1)
-    single._gate_batch(batch, 0)
-    parts1 = _glob.glob(str(tmp_path / "naudit1" / "epoch=0" / "part-*"))
-    assert len(parts1) == 1, parts1
-    assert sorted(map(tuple, single.scores().collect())) == before
     gate.stop()
-    single.stop()
 
 
 def test_postings_probe_falls_back_without_sidecar(spark):
@@ -2588,8 +2579,7 @@ def test_streaming_repetition_gate(spark, tmp_path):
     with _pytest.raises(ValueError, match="at least one"):
         RepetitionGate(audit_path="x", thresholds={})
 
-    gate = RepetitionGate(audit_path=str(tmp_path / "raudit"),
-                          audit_partitions=1)
+    gate = RepetitionGate(audit_path=str(tmp_path / "raudit"))
     stream = (spark.readStream.schema("doc_id BIGINT, text STRING")
               .option("maxFilesPerTrigger", 1).json(src))
     q = gate.attach(stream, str(tmp_path / "rckpt"))
@@ -2795,8 +2785,7 @@ def test_perceptual_gate_dedups_across_batches(spark, tmp_path):
         [(i, imgs[i]) for i in ids], ["img_id", "content"])
 
     gate = PerceptualGate(spark, "pg_state", modality="image",
-                          dups_dir=str(tmp_path / "dups"),
-                          audit_partitions=1)
+                          dups_dir=str(tmp_path / "dups"))
     try:
         gate._gate_batch(mk(["15:orig", "1:orig"]), epoch_id=0)
         accepted = {r["id"] for r in gate.accepted_ids().collect()}
@@ -2854,8 +2843,7 @@ def test_perceptual_gate_audio_modality(spark, tmp_path):
 
     gate = PerceptualGate(spark, "pga_state", modality="audio",
                           dups_dir=str(tmp_path / "dups"),
-                          id_col="audio_id", max_hamming=3,
-                          audit_partitions=1)
+                          id_col="audio_id", max_hamming=3)
     try:
         gate._gate_batch(mk(["15:orig", "1:orig"]), epoch_id=0)
         gate._gate_batch(mk(["15:vol", "15:b24"]), epoch_id=1)
@@ -2980,8 +2968,7 @@ def test_video_gate_dedups_across_batches(spark, tmp_path):
     mk = lambda ids: spark.createDataFrame(
         [(i, vids[i]) for i in ids], ["vid_id", "content"])
 
-    gate = VideoGate(spark, "vg_state", dups_dir=str(tmp_path / "dups"),
-                     audit_partitions=1)
+    gate = VideoGate(spark, "vg_state", dups_dir=str(tmp_path / "dups"))
     try:
         gate._gate_batch(mk(["15:orig", "1:orig"]), epoch_id=0)
         b2 = mk(["15:re", "15:sub2"]).union(
@@ -3088,7 +3075,7 @@ def test_interval_overlap_maintainer_prefix_complete_and_replay(
         [intervals[i] for i in idx], ["id", "s", "e"])
     m = IntervalOverlapMaintainer(spark, "iom_state",
                                   matches_dir=str(tmp_path / "m"),
-                                  bucket=16, audit_partitions=1)
+                                  bucket=16)
     try:
         m._gate_batch(mk([0, 1, 2]), epoch_id=0)  # i1 i2 i3
         m._gate_batch(mk([3, 4]), epoch_id=1)     # i4 i5
@@ -3185,7 +3172,7 @@ def test_interval_overlap_maintainer_live_stream(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).json(src))
     m = IntervalOverlapMaintainer(spark, "iom_live",
                                   matches_dir=str(tmp_path / "lm"),
-                                  bucket=16, audit_partitions=1)
+                                  bucket=16)
     q = m.attach(stream, str(tmp_path / "ck"))
     try:
         q.processAllAvailable()
@@ -4234,3 +4221,160 @@ def test_streaming_daily_revenue_three_readouts(spark, tmp_path):
                           .collect()))
         assert got == want and len(got) == 1, qname
     spark.sql("DROP TABLE IF EXISTS dr_state")
+
+
+def _epoch_sink_case(name, spark, tmp_path, tag):
+    """(sink, batch, managed tables) for one class built on
+    streaming/epoch_sink.py, with a small deterministic batch."""
+    from market_data_ingestor_go_spark.sources.tables import load_table
+
+    def docs():
+        return load_table(spark, "/root/testdata/sf0.001", "documents") \
+            .select("doc_id", "text")
+
+    def doc_batch():
+        return spark.createDataFrame(
+            [(r["doc_id"], r["text"]) for r in
+             docs().filter("doc_id % 20 != 0").limit(4).collect()]
+            + [(900001, "buy now buy now buy now buy now buy now")],
+            "doc_id BIGINT, text STRING")
+
+    def blobs(make, id_col):
+        src = spark.createDataFrame(
+            [(15, "the quick brown fox jumps over the lazy dog"),
+             (1, "an entirely different document body")],
+            ["doc_id", "text"])
+        rows = [(r[id_col], bytes(r["content"])) for r in
+                make(src).collect()]
+        return spark.createDataFrame(rows, [id_col, "content"])
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.99, 0.05, 0.0, 0.0]),
+         (3, [0.0, 0.0, 1.0, 0.0])],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    base = f"rs_{name}_{tag}"
+    out = str(tmp_path / "out")
+    if name == "dedup":
+        from market_data_ingestor_go_spark.streaming.dedup_gate import (
+            StreamingDedupGate)
+        return (StreamingDedupGate(spark, base, dups_dir=out),
+                doc_batch(), [f"{base}_sig", f"{base}_sh"])
+    if name == "lm":
+        from market_data_ingestor_go_spark.streaming.lm_gate import (
+            LMQualityGate)
+        return (LMQualityGate(reference=docs().filter("doc_id % 20 = 0"),
+                              audit_path=out), doc_batch(), [])
+    if name == "novelty":
+        from market_data_ingestor_go_spark.streaming.novelty_gate import (
+            NoveltyGate)
+        return (NoveltyGate(reference=docs().filter("doc_id % 20 = 0"),
+                            audit_path=out), doc_batch(), [])
+    if name == "repetition":
+        from market_data_ingestor_go_spark.streaming.repetition_gate import (
+            RepetitionGate)
+        return RepetitionGate(audit_path=out), doc_batch(), []
+    if name == "scrub":
+        from market_data_ingestor_go_spark.streaming.scrub_gate import (
+            ScrubGate)
+        return (ScrubGate(reference=docs().filter("doc_id % 20 = 0"),
+                          audit_path=out), doc_batch(), [])
+    if name == "boilerplate":
+        from market_data_ingestor_go_spark.streaming.boilerplate_gate import (
+            PassageBoilerplateGate)
+        return (PassageBoilerplateGate(spark, state_dir=out),
+                doc_batch(), [])
+    if name == "contamination":
+        from market_data_ingestor_go_spark.streaming.contamination import (
+            ContaminationGate)
+        return (ContaminationGate(docs().filter("doc_id % 20 = 0"),
+                                  flags_path=out), doc_batch(), [])
+    if name == "perceptual":
+        from market_data_ingestor_go_spark.operators.multimodal import (
+            synthetic_doc_images)
+        from market_data_ingestor_go_spark.streaming.perceptual_gate import (
+            PerceptualGate)
+        return (PerceptualGate(spark, base, dups_dir=out),
+                blobs(synthetic_doc_images, "img_id"), [f"{base}_fp"])
+    if name == "video":
+        from market_data_ingestor_go_spark.operators.multimodal import (
+            synthetic_doc_videos)
+        from market_data_ingestor_go_spark.streaming.perceptual_gate import (
+            VideoGate)
+        return (VideoGate(spark, base, dups_dir=out),
+                blobs(synthetic_doc_videos, "vid_id"), [f"{base}_fp"])
+    if name == "semdedup":
+        from market_data_ingestor_go_spark.streaming.semdedup_gate import (
+            StreamingSemanticDedupGate)
+        cents = spark.createDataFrame(
+            [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0, 0.0])],
+            "vec_id INT, embedding ARRAY<DOUBLE>")
+        return (StreamingSemanticDedupGate(spark, cents, base, out,
+                                           threshold=0.9),
+                vecs, [f"{base}_vec"])
+    if name == "interval":
+        from market_data_ingestor_go_spark.streaming.interval_index import (
+            IntervalOverlapMaintainer)
+        batch = spark.createDataFrame(
+            [("i1", 0, 10), ("i2", 5, 20), ("i3", 40, 50)],
+            "id STRING, s BIGINT, e BIGINT")
+        return (IntervalOverlapMaintainer(spark, base, matches_dir=out,
+                                          bucket=16),
+                batch, [f"{base}_cells"])
+    if name == "transitions":
+        from market_data_ingestor_go_spark.streaming.transitions import (
+            TransitionMaintainer)
+        batch = spark.createDataFrame(
+            [(1, 10, 1, "view"), (1, 20, 2, "cart"), (2, 15, 3, "view"),
+             (2, 30, 4, "view")],
+            "user_id BIGINT, ts_ms BIGINT, event_id BIGINT, "
+            "event_type STRING")
+        return (TransitionMaintainer(spark, base), batch,
+                [f"{base}_last", f"{base}_cnt"])
+    if name == "vector_index":
+        from market_data_ingestor_go_spark.streaming.vector_index import (
+            StreamingVectorIndex)
+        return StreamingVectorIndex(spark, base, dim=4), vecs, [base]
+    if name == "pq_index":
+        from market_data_ingestor_go_spark.streaming.vector_index import (
+            StreamingPQIndex)
+        books = [(s, c, [float(c), float(c)]) for s in (0, 1)
+                 for c in (0, 1)]
+        return (StreamingPQIndex(spark, base, codebook_rows=books),
+                vecs, [base])
+    assert name == "postings_index"
+    from market_data_ingestor_go_spark.streaming.vector_index import (
+        StreamingPostingsIndex)
+    return (StreamingPostingsIndex(spark, base), doc_batch(),
+            [base, f"{base}_stats"])
+
+
+@pytest.mark.parametrize("name", [
+    "dedup", "lm", "novelty", "repetition", "scrub", "boilerplate",
+    "contamination", "perceptual", "video", "semdedup", "interval",
+    "transitions", "vector_index", "pq_index", "postings_index"])
+def test_epoch_sink_replay_counters_and_stop(spark, tmp_path, name):
+    """Every gate, maintainer and index shares one epoch-sink contract:
+    replaying an epoch REPLACES its counts (metrics() after the
+    replay equal metrics() after the first attempt), and stop() ends
+    every query the sink attached."""
+    tag = abs(hash(str(tmp_path))) % 10**8
+    sink, batch, tables = _epoch_sink_case(name, spark, tmp_path, tag)
+    try:
+        sink._gate_batch(batch, 0)
+        first = sink.metrics()
+        assert any(first.values()), first
+        sink._gate_batch(batch, 0)  # crash-replay of the same epoch
+        assert sink.metrics() == first
+
+        src = tmp_path / "src"
+        src.mkdir()
+        stream = spark.readStream.schema(batch.schema).parquet(str(src))
+        q = sink.attach(stream, str(tmp_path / "ckpt"))
+        sink.stop()
+        active = {a.id for a in spark.streams.active}
+        assert not q.isActive
+        assert not {s.id for s in sink.queries} & active
+    finally:
+        sink.stop()
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
