@@ -90,11 +90,16 @@ def atomic_swap(spark: SparkSession, staging: str, live: str) -> None:
     fs.delete(hback, True)
 
 
-def read_with_backup(spark: SparkSession, path: str):
+def read_with_backup(spark: SparkSession, path: str, schema=None):
     """Read a swap-managed parquet table, falling back to the ``.old``
     backup if a crash mid-swap left the live path missing. Returns
-    None when neither exists (first write)."""
+    None when neither exists (first write).
+
+    ``schema`` (a StructType) pins the read schema: without it Spark
+    runs a footer-reading job to infer one on every call, which a
+    writer that already knows its table's schema need not pay."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     for candidate in (path, path + ".old"):
         if path_exists(spark, candidate):
-            return spark.read.parquet(candidate)
+            return reader.parquet(candidate)
     return None

@@ -19,6 +19,14 @@ Semantics upgrades over the reference (documented, SURVEY.md §2.9):
 - the latest-state view is timestamp-max last-write-wins, not
   arrival-order (cache_service.go:45-52 overwrites blindly).
 
+The reference flushes K1 then K2 one after the other, with no atomicity
+across the two stores. Here each sink is idempotent per epoch on its
+own (history overwrites its epoch directory; the latest merge is a
+timestamp-max swapped in whole), and neither reads the other's
+output, so the two run concurrently on the persisted micro-batch: an
+epoch's latency is the slower sink, not the sum. A failure in either
+fails the epoch after both have stopped, and the replay rewrites both.
+
 Scale posture: the only stateful piece is latest-per-key over ~O(500)
 symbol keys — trivial state. History append is partition-parallel
 parquet. At 100 TB/day the knobs are source admission
@@ -29,9 +37,12 @@ changes.
 
 from __future__ import annotations
 
+import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,6 +51,8 @@ from ..functions.market import MARKET_DATA_SCHEMA, validate
 from ..operators.enrich import enrich_exchange
 from ..operators.latest import latest_per_key
 from ..sources import fs
+
+log = logging.getLogger(__name__)
 
 DEFAULT_TTL_MILLIS = 24 * 3600 * 1000  # REDIS_TTL default 24h, config.go:37
 
@@ -122,10 +135,18 @@ class IngestPipeline:
       via an atomic rename swap with a ``.old`` backup
       (sources/fs.py) — a crash mid-swap never loses the table.
 
-    The two writes share one micro-batch (one scan). ``base_dir`` owns
-    the checkpoint AND both sinks as one unit: deleting the checkpoint
-    but keeping the sinks (or vice versa) breaks the epoch/replay
-    contract, exactly as it would for any exactly-once sink.
+    The two writes share one persisted micro-batch (one scan) and run
+    concurrently on two threads. That is safe because each sink is
+    idempotent per epoch by itself and there is no cross-sink
+    atomicity to keep (the reference has none either): a replay after
+    one sink failed rewrites the sink that landed with the same
+    result. ``_write_batch`` waits for both before it raises the first
+    error, so no job of a failed epoch outlives it.
+
+    ``base_dir`` owns the checkpoint AND both sinks as one unit:
+    deleting the checkpoint but keeping the sinks (or vice versa)
+    breaks the epoch/replay contract, exactly as it would for any
+    exactly-once sink.
     """
 
     spark: SparkSession
@@ -183,58 +204,86 @@ class IngestPipeline:
         batch = batch.filter(F.col("timestamp") != 0)  # P2 sink guard
         batch.persist()
         try:
-            spark = batch.sparkSession
-            # K1: history append, idempotent per epoch — replaying a
-            # crashed epoch overwrites its own partition directory
-            # instead of duplicating rows.
-            epoch_dir = os.path.join(self.history_path, f"epoch={int(epoch_id)}")
-            if self.partition_by_date:
-                (batch.withColumn(
-                    "ds", F.to_date(F.timestamp_millis(F.col("timestamp"))))
-                 .write.mode("overwrite").partitionBy("ds").parquet(epoch_dir))
-            else:
-                batch.write.mode("overwrite").parquet(epoch_dir)
-            if self.pg_history is not None:
-                from ..sources.connectors import pg_wire_append
-                try:
-                    pg_wire_append(batch, *self.pg_history)
-                except Exception:
-                    self.pg_failures += 1  # retry-exhausted → drop
-            # K2/A1: merge latest-per-key into the state table. Only a
-            # missing table (first epoch, or crash mid-swap → backup)
-            # is tolerated; real IO errors propagate and fail the
-            # epoch rather than silently dropping old keys.
-            new_latest = latest_per_key(batch, "name", "timestamp")
-            if self.redis_latest is not None:
-                # best-effort like the reference's cache write (a
-                # processor.go retry exhausting is LOGGED AND DROPPED,
-                # at-most-once) — a down cache must not fail the epoch
-                # and take the exactly-once parquet sinks with it
-                from ..sources.connectors import redis_wire_latest_sink
-                try:
-                    redis_wire_latest_sink(
-                        new_latest, self.redis_latest[0],
-                        self.redis_latest[1], ttl_millis=self.ttl_millis)
-                except Exception:
-                    self.redis_failures += 1
-            old = fs.read_with_backup(spark, self.latest_path)
-            merged = new_latest if old is None else latest_per_key(
-                old.select(*new_latest.columns).unionByName(new_latest),
-                "name", "timestamp")
-            # TTL eviction ≈ Redis EX (cache_service.go:45-52)
-            horizon = F.unix_millis(F.current_timestamp()) - F.lit(self.ttl_millis)
-            merged = merged.filter(F.col("timestamp") >= horizon)
-            # micro-batches are sequential → one reusable staging dir
-            if self.state_partitions <= 1:
-                merged = merged.coalesce(1)  # ~500-key reference shape
-            else:
-                merged = merged.repartition(self.state_partitions,
-                                            F.col("name"))
-            staging = self.latest_path + ".staging"
-            merged.write.mode("overwrite").parquet(staging)
-            fs.atomic_swap(spark, staging, self.latest_path)
+            # K1 and K2 are independent and each idempotent per epoch,
+            # so they run side by side on the one persisted batch. The
+            # wrapper copies this thread's job group and tags (the
+            # query's) into each worker, so stop() still cancels them.
+            inherit = inheritable_thread_target(batch.sparkSession)
+            with ThreadPoolExecutor(2, thread_name_prefix="ingest-sink") as pool:
+                futures = [
+                    pool.submit(inherit(self._write_history), batch, epoch_id),
+                    pool.submit(inherit(self._write_latest), batch)]
+            # both have finished: raise the first error, log a second
+            errors = [e for e in (f.exception() for f in futures)
+                      if e is not None]
+            for e in errors[1:]:
+                log.error("epoch %d: second sink also failed", epoch_id,
+                          exc_info=e)
+            if errors:
+                raise errors[0]
         finally:
             batch.unpersist()
+
+    def _write_history(self, batch: DataFrame, epoch_id: int) -> None:
+        """K1: history append, idempotent per epoch — replaying a
+        crashed epoch overwrites its own partition directory instead of
+        duplicating rows."""
+        epoch_dir = os.path.join(self.history_path, f"epoch={int(epoch_id)}")
+        if self.partition_by_date:
+            (batch.withColumn(
+                "ds", F.to_date(F.timestamp_millis(F.col("timestamp"))))
+             .write.mode("overwrite").partitionBy("ds").parquet(epoch_dir))
+        else:
+            batch.write.mode("overwrite").parquet(epoch_dir)
+        if self.pg_history is not None:
+            from ..sources.connectors import pg_wire_append
+            try:
+                pg_wire_append(batch, *self.pg_history)
+            except Exception:
+                self.pg_failures += 1  # retry-exhausted → drop
+                log.warning("PG history mirror dropped epoch %d", epoch_id,
+                            exc_info=True)
+
+    def _write_latest(self, batch: DataFrame) -> None:
+        """K2/A1: merge latest-per-key into the state table and swap it
+        in. Only a missing table (first epoch, or crash mid-swap →
+        backup) is tolerated; real IO errors propagate and fail the
+        epoch rather than silently dropping old keys."""
+        if self.redis_latest is not None:
+            # best-effort like the reference's cache write (a
+            # processor.go retry exhausting is LOGGED AND DROPPED,
+            # at-most-once) — a down cache must not fail the epoch
+            # and take the exactly-once parquet sinks with it
+            from ..sources.connectors import redis_wire_latest_sink
+            new_latest = latest_per_key(batch, "name", "timestamp")
+            try:
+                redis_wire_latest_sink(
+                    new_latest, self.redis_latest[0],
+                    self.redis_latest[1], ttl_millis=self.ttl_millis)
+            except Exception:
+                self.redis_failures += 1
+                log.warning("Redis latest mirror dropped a batch",
+                            exc_info=True)
+        # the state table has the batch's columns: pinning the schema
+        # skips the footer-inference job; one aggregate over old ∪ new
+        # keeps the map-side partial aggregate on both inputs
+        old = fs.read_with_backup(batch.sparkSession, self.latest_path,
+                                  schema=batch.schema)
+        merged = latest_per_key(
+            batch if old is None else old.unionByName(batch),
+            "name", "timestamp")
+        # TTL eviction ≈ Redis EX (cache_service.go:45-52)
+        horizon = F.unix_millis(F.current_timestamp()) - F.lit(self.ttl_millis)
+        merged = merged.filter(F.col("timestamp") >= horizon)
+        # micro-batches are sequential → one reusable staging dir
+        if self.state_partitions <= 1:
+            merged = merged.coalesce(1)  # ~500-key reference shape
+        else:
+            merged = merged.repartition(self.state_partitions,
+                                        F.col("name"))
+        staging = self.latest_path + ".staging"
+        merged.write.mode("overwrite").parquet(staging)
+        fs.atomic_swap(batch.sparkSession, staging, self.latest_path)
 
     def start(self, frames: DataFrame):
         enriched = build_ingest_stream(frames, self.symbols_dim)

@@ -181,6 +181,10 @@ def test_publisher_ticker_loop(spark, tmp_path):
                 msgs.append(json.loads(client.recv(timeout=2.0)))
             except TimeoutError:
                 continue
+        # tick() bumps its counters after its send loop, so the client
+        # can hold a tick's frame before that tick is counted
+        while (pub.ticks < 2 or pub.records_sent < 2) and time.time() < deadline:
+            time.sleep(0.05)
         assert len(msgs) >= 2  # at least two tick deliveries
         assert all(m["symbol"] == "AAPL" for m in msgs)
         assert pub.ticks >= 2 and pub.records_sent >= 2

@@ -964,7 +964,8 @@ def test_ws_recv_deadline_survives_trickle():
     assert time.monotonic() - t0 < 1.5  # deadline held, not per-read reset
 
 
-def test_redis_mirror_failure_is_best_effort(spark, symbols_dim, tmp_path):
+def test_redis_mirror_failure_is_best_effort(spark, symbols_dim, tmp_path,
+                                            caplog):
     """A dead cache must not fail the epoch: parquet sinks land, the
     drop is counted (processor.go retry-exhausted drops are logged and
     ignored too)."""
@@ -978,6 +979,8 @@ def test_redis_mirror_failure_is_best_effort(spark, symbols_dim, tmp_path):
         build_ingest_stream)
     pipe._write_batch(build_ingest_stream(batch, symbols_dim), 0)
     assert pipe.redis_failures == 1
+    assert [r.exc_info is not None for r in caplog.records
+            if "Redis latest mirror" in r.getMessage()] == [True]
     assert pipe.latest_snapshot().count() == 1  # parquet sink unaffected
 
 
