@@ -43,13 +43,3 @@ def latest_per_key(df: DataFrame, key_cols: list[str] | str,
         .select(*key_cols, "_latest.*")
     )
 
-
-def evict_expired(df: DataFrame, ts_col: str, now_millis_col,
-                  ttl_millis: int) -> DataFrame:
-    """TTL eviction over the latest-state table (Redis ``EX ttl``,
-    cache_service.go:45-52; default 24 h per config.go:37,51-59).
-
-    ``now_millis_col`` is a Column (e.g. ``unix_millis(current_timestamp())``
-    or a literal for deterministic tests).
-    """
-    return df.filter(F.col(ts_col) >= (now_millis_col - F.lit(ttl_millis)))

@@ -15,8 +15,12 @@ Three tiers:
 - ivf_ann                        : IVF-style — assign vectors to the
   nearest of k sampled centroids (broadcast), search within the cell.
 
-No Python in the hot path: dot products are ``aggregate(zip_with(...))``
-column expressions evaluated in the JVM.
+Each operator has one product path. Pair verification, cell
+assignment, PQ encoding, semdedup scoring and the covariance sums run
+as fold-order-preserving numpy kernels (mapInPandas/mapInArrow),
+bit-identical to the ``aggregate(zip_with(...))`` column expressions;
+the column-expression references those equalities are pinned against
+live in tests/test_operators.py.
 """
 
 from __future__ import annotations
@@ -354,10 +358,12 @@ def verify_pairs_cos_arrow(joined: DataFrame,
     dot is the exact left fold ((0.0+x₁y₁)+x₂y₂)+… the engine's
     ``dot`` computes; the denominator is sqrt(qsd·nsd) in the same
     association (IEEE sqrt/÷ are correctly rounded, numpy == JVM) —
-    pinned by test_lsh_verify_kernel_equals_expr. The threshold
-    filter compares the SAME doubles, so the emitted pair set is
-    identical too (the cosine_pairs_blocked / pq_encode kernel
-    convention)."""
+    pinned against ``cosine_pairs`` by
+    test_lsh_verify_kernel_equals_expr. The threshold filter compares
+    the SAME doubles, so the emitted pair set is identical too (the
+    cosine_pairs_blocked / pq_encode kernel convention). The
+    vectors-move-once blocked verify (pairs shuffled as metadata) was
+    measured slower at fixture scale and is not kept (SCALING.md r15)."""
     import numpy as np
     import pandas as pd
 
@@ -385,100 +391,11 @@ def verify_pairs_cos_arrow(joined: DataFrame,
                  .mapInPandas(score, schema)
 
 
-def verify_pairs_cos_blocked(cand: DataFrame, base: DataFrame,
-                             threshold: float,
-                             n_blocks: int = 8) -> DataFrame:
-    """Blocked exact-cosine verification of a candidate pair list —
-    the guide-§8 shape: decide with SMALL rows, move the heavy rows
-    ONCE. Joining vectors onto every candidate ships
-    2·dim·8 bytes·|pairs| into the verify stage (measured 1.6 GB at
-    1.5M candidates ×64 dims — the verify cost is the transfer, not
-    the cosine). Here the pair list shuffles as (a_id, b_id) METADATA
-    grouped by (block(a), block(b)), each side's vectors replicate
-    once per partner block (the n·B all-pairs replication bound that
-    ``cosine_pairs_blocked`` already uses), and one applyInPandas
-    task per block pair indexes vectors by id and scores its pairs —
-    vectors cross the shuffle ~B times total instead of once per
-    candidate.
-
-    Bit-identity: same fold-order-preserving kernel as
-    ``verify_pairs_cos_arrow`` (sequential accumulation across
-    dimensions, sqrt(sa·sb) association, identical threshold
-    compare) — pinned by test_lsh_verify_kernel_equals_expr.
-
-    ``cand``: (a_id, b_id) distinct pairs; ``base``: (id, v, sd)
-    with self-dots precomputed (pinned by the caller)."""
-    import numpy as np
-    import pandas as pd
-
-    thr = float(threshold)
-    nb = int(n_blocks)
-    id_t = base.schema["id"].dataType.simpleString()
-    schema = f"a_id {id_t}, b_id {id_t}, cos DOUBLE"
-    blk = lambda c: F.pmod(F.xxhash64(F.col(c)), F.lit(nb))  # noqa: E731
-    rep = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
-    nullv = F.lit(None).cast("array<double>")
-    nulld = F.lit(None).cast("double")
-    null_id = F.lit(None).cast(id_t)
-    a_rows = (base.withColumn("gb", rep)
-              .select((blk("id") * nb + F.col("gb")).alias("g"),
-                      F.lit(0).alias("kind"),
-                      F.col("id").alias("ida"), null_id.alias("idb"),
-                      "v", "sd"))
-    b_rows = (base.withColumn("ga", rep)
-              .select((F.col("ga") * nb + blk("id")).alias("g"),
-                      F.lit(1).alias("kind"),
-                      F.col("id").alias("ida"), null_id.alias("idb"),
-                      "v", "sd"))
-    p_rows = cand.select(
-        (blk("a_id") * nb + blk("b_id")).alias("g"),
-        F.lit(2).alias("kind"),
-        F.col("a_id").alias("ida"), F.col("b_id").alias("idb"),
-        nullv.alias("v"), nulld.alias("sd"))
-    rep_all = a_rows.unionByName(b_rows).unionByName(p_rows)
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"a_id": pd.Series([], dtype=object),
-                              "b_id": pd.Series([], dtype=object),
-                              "cos": pd.Series([], dtype="float64")})
-        p = pdf[pdf["kind"] == 2]
-        if not len(p):
-            return empty
-        a = pdf[pdf["kind"] == 0]
-        b = pdf[pdf["kind"] == 1]
-        ia = pd.Index(a["ida"])
-        ib = pd.Index(b["ida"])
-        pa = ia.get_indexer(p["ida"])
-        pb = ib.get_indexer(p["idb"])
-        # fail loud (r16 ADVICE): get_indexer returns -1 for an id with
-        # no replicated vector in this block — negative-index wraparound
-        # would silently score against the LAST vector instead
-        if (pa < 0).any() or (pb < 0).any():
-            missing = (set(p["ida"][pa < 0]) | set(p["idb"][pb < 0]))
-            raise ValueError(
-                "verify_pairs_cos_blocked: candidate ids without a "
-                f"replicated vector in their block: {sorted(missing)[:10]}")
-        X = np.stack(a["v"].to_numpy())[pa]
-        Y = np.stack(b["v"].to_numpy())[pb]
-        acc = np.zeros(len(p))
-        for i in range(X.shape[1]):
-            acc = acc + X[:, i] * Y[:, i]
-        cos = acc / np.sqrt(a["sd"].to_numpy()[pa]
-                            * b["sd"].to_numpy()[pb])
-        m = cos >= thr
-        return pd.DataFrame({"a_id": p["ida"][m].to_numpy(),
-                             "b_id": p["idb"][m].to_numpy(),
-                             "cos": cos[m]})
-
-    return rep_all.groupBy("g").applyInPandas(score, schema)
-
-
 def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
                      vec_col: str = "embedding", threshold: float = 0.4,
                      dim: int = 64, n_bands: int = 4,
                      planes_per_band: int = 4,
-                     multiprobe: int = 1,
-                     engine: str = "kernel") -> DataFrame:
+                     multiprobe: int = 1) -> DataFrame:
     """Scalable near-dup pairs: banded hyperplane-LSH candidates
     verified with exact cosine ≥ threshold.
 
@@ -500,12 +417,11 @@ def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     while buckets thin out exponentially with planes_per_band.
     Candidate generation stays an equi-join on (band, bucket) either
     way — never a cross product.
+
+    Verification is the pair-list Arrow kernel
+    (``verify_pairs_cos_arrow``): the per-pair vector attach is a
+    broadcast join, so only the JVM→Python transfer remains.
     """
-    if engine not in ("kernel", "blocked", "expr"):
-        # validate BEFORE any work (r16 ADVICE): a typo'd engine name
-        # must not silently fall through to the slow expr path
-        raise ValueError(f"unknown LSH verify engine {engine!r}; "
-                         "expected 'kernel', 'blocked' or 'expr'")
     bandplanes = _banded_hyperplanes(dim, n_bands, planes_per_band)
     base = df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
     base = base.withColumn("sd", dot(F.col("v"), F.col("v")))
@@ -541,30 +457,8 @@ def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
                      F.col("sd").alias("qsd"))
     vb = base.select(F.col("id").alias("b_id"), F.col("v").alias("nv"),
                      F.col("sd").alias("nsd"))
-    # verification engines (r15 optimization): "kernel" (default)
-    # replaces the interpreted HOF cosine with the pair-list Arrow
-    # kernel — measured fastest locally because the per-pair vector
-    # attach is a BROADCAST join (no shuffle) and only the
-    # JVM->Python transfer remains; "blocked" is the 100 TB shape
-    # (guide §8: pairs shuffle as metadata, vectors cross ~B times
-    # instead of once per candidate — wins when the vector side no
-    # longer broadcasts), measured SLOWER at fixture scale (5.8 s vs
-    # 3.5 s: its real exchange of pair rows costs more than the
-    # transfer it saves); "expr" keeps the Column-expression path as
-    # the in-repo equality oracle (the pq_encode convention). All
-    # three emit bit-identical pairs and cosines.
-    if engine == "blocked":
-        return verify_pairs_cos_blocked(
-            cand, base.select(F.col("id"), F.col("v"), F.col("sd")),
-            threshold)
     joined = cand.join(va, "a_id").join(vb, "b_id")
-    if engine == "kernel":
-        return verify_pairs_cos_arrow(joined, threshold)
-    return (
-        joined
-        .select("a_id", "b_id", _PAIR_COS().alias("cos"))
-        .filter(F.col("cos") >= F.lit(threshold))
-    )
+    return verify_pairs_cos_arrow(joined, threshold)
 
 
 def ivf_ann(df: DataFrame, queries: DataFrame, k: int = 5, n_cells: int = 16,
@@ -715,8 +609,9 @@ def hyperplane_ann_from_index(spark, table: str, queries: DataFrame,
 
 def _pq_lloyd_driver(vectors: list[list[float]], m: int, k: int,
                      n_iters: int) -> dict[int, list[list[float]]]:
-    """Driver-side per-subspace Lloyd, bit-identical to the
-    distributed train_pq_codebooks path: distance scv − 2.0·⟨sv,cv⟩
+    """Driver-side per-subspace Lloyd, bit-identical to a distributed
+    Lloyd loop over the same sample (the reference in
+    test_pq_driver_equals_distributed): distance scv − 2.0·⟨sv,cv⟩
     (left-fold dots), argmin ties to the SMALLER cell id (array_min
     over struct(d, cell)), DECIMAL(27,12) exact means. ``vectors``
     in (xxhash64(id), id) order; first k rows are the init."""
@@ -768,95 +663,39 @@ def _pq_lloyd_driver(vectors: list[list[float]], m: int, k: int,
 def train_pq_codebooks(df: DataFrame, m: int = 8, k: int = 16,
                        n_iters: int = 3, id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       max_train_rows: int | None = 4096,
-                       engine: str = "driver") -> DataFrame:
+                       max_train_rows: int = 4096) -> DataFrame:
     """Product-quantization codebooks: an independent k-means per
     subspace (the vector split into ``m`` contiguous subvectors).
 
-    One DataFrame pass trains ALL subspaces per iteration: rows explode
-    to (subspace, subvector), assignment is the same zero-shuffle
-    per-row argmin ``ivf_ann`` uses (codebooks broadcast as one
-    array-of-structs row), and means partial-aggregate on
-    (subspace, cell, dim) — shuffle is m·k·(d/m) rows per iteration,
-    never the corpus. Training runs on a deterministic hash-sample of
-    ≤ ``max_train_rows`` vectors (``_train_sample`` — codebooks are
-    model artifacts; encoding still covers every row), so iteration
-    cost is bounded regardless of corpus size. Deterministic end to
-    end (hash-sample init, decimal-exact means, min-distance ties to
-    the smaller cell id).
+    Training runs on a deterministic hash-sample: the smallest
+    ``max_train_rows`` vectors by (xxhash64(id), id) — codebooks are
+    model artifacts; encoding still covers every row. The sample
+    collects once and the whole per-subspace Lloyd loop runs on the
+    driver (``_pq_lloyd_driver``; same rationale and replication rules
+    as train_kmeans_codebook): distances scv − 2.0·⟨sv,cv⟩ as
+    left-fold dots, argmin ties to the smaller cell id, DECIMAL(27,12)
+    exact means, the first k sample rows as the init. The codebooks
+    are bit-identical to a distributed Lloyd loop over the same sample
+    (per-row argmin over a broadcast codebook row, means
+    partial-aggregated on (subspace, cell, dim)) — pinned by
+    ``test_pq_driver_equals_distributed``, whose reference is that loop.
+    ``max_train_rows=None`` (collect the whole corpus onto the driver)
+    is refused before any job starts.
 
     Returns (subspace, cell, cv ARRAY<DOUBLE>) — the model artifact
     ``pq_ann`` consumes.
-
-    ``engine="driver"`` (default, r8): the bounded training sample
-    collects once and the whole per-subspace Lloyd loop runs on the
-    driver, bit-identical to the distributed path (equality pinned by
-    ``test_pq_driver_equals_distributed``) — same rationale and
-    replication rules as train_kmeans_codebook.
     """
     from pyspark.sql import Row
 
-    spark = df.sparkSession
-    v = as_double(vec_col)
-    if engine == "driver" and max_train_rows is not None:
-        rows = (df.select(F.col(id_col).alias("id"), v.alias("v"))
-                .orderBy(F.xxhash64(F.col("id")), F.col("id"))
-                .limit(max_train_rows).collect())
-        books = _pq_lloyd_driver([list(r["v"]) for r in rows], m, k,
-                                 n_iters)
-        return spark.createDataFrame(
-            [Row(subspace=s, cell=c, cv=books[s][c])
-             for s in range(m) for c in range(k)],
-            "subspace INT, cell INT, cv ARRAY<DOUBLE>")
-    dim = len(df.select(v.alias("v")).first()["v"])
-    sub = dim // m
-    base = pin(_train_sample(
-        df.select(F.col(id_col).alias("id"), v.alias("v")),
-        "id", max_train_rows))
-    subs = F.array(*[
-        F.struct(F.lit(s).alias("s"),
-                 F.slice(F.col("v"), s * sub + 1, sub).alias("sv"))
-        for s in range(m)])
-    rows = spread(base) \
-        .select("id", F.explode(subs).alias("x")) \
-        .select("id", "x.s", "x.sv")
-
-    init = (base.orderBy(F.xxhash64(F.col("id")), F.col("id")).limit(k)
-            .collect())
-    codebooks = {s: [list(r["v"])[s * sub:(s + 1) * sub] for r in init]
-                 for s in range(m)}
-
-    for _ in range(n_iters):
-        cb_row = F.broadcast(spark.createDataFrame(
-            [Row(s=s, cell=c, cv=codebooks[s][c])
-             for s in range(m) for c in range(k)],
-            "s INT, cell INT, cv ARRAY<DOUBLE>")
-            .groupBy("s")
-            .agg(F.collect_list(F.struct("cell", "cv")).alias("cb")))
-        assigned = (
-            rows.join(cb_row, "s")
-            .withColumn("cell", F.array_min(F.transform(
-                F.col("cb"),
-                lambda ct: F.struct(
-                    (dot(ct["cv"], ct["cv"])
-                     - F.lit(2.0) * dot(F.col("sv"), ct["cv"])).alias("d"),
-                    ct["cell"].alias("cell"))))["cell"])
-            .select("s", "cell", F.posexplode("sv").alias("dim", "x")))
-        means = (
-            assigned.groupBy("s", "cell", "dim")
-            .agg((F.sum(F.col("x").cast("decimal(27,12)")).cast("double")
-                  / F.count("*")).alias("mu"))
-            .groupBy("s", "cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("dm"))
-            .select("s", "cell", F.col("dm.mu").alias("cv"))
-            .collect())
-        new_books = {s: list(codebooks[s]) for s in range(m)}
-        for r in means:  # empty cells keep their previous centroid
-            new_books[r["s"]][r["cell"]] = list(r["cv"])
-        codebooks = new_books
-
-    return spark.createDataFrame(
-        [Row(subspace=s, cell=c, cv=codebooks[s][c])
+    if max_train_rows is None:
+        raise ValueError("train_pq_codebooks: max_train_rows must bound "
+                         "the driver-side training sample")
+    rows = (df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
+            .orderBy(F.xxhash64(F.col("id")), F.col("id"))
+            .limit(max_train_rows).collect())
+    books = _pq_lloyd_driver([list(r["v"]) for r in rows], m, k, n_iters)
+    return df.sparkSession.createDataFrame(
+        [Row(subspace=s, cell=c, cv=books[s][c])
          for s in range(m) for c in range(k)],
         "subspace INT, cell INT, cv ARRAY<DOUBLE>")
 
@@ -888,7 +727,7 @@ def _pq_meta(codebooks: DataFrame):
 def pq_encode(df: DataFrame, codebooks: DataFrame,
               id_col: str = "vec_id",
               vec_col: str = "embedding",
-              _meta=None, engine: str = "kernel") -> DataFrame:
+              _meta=None) -> DataFrame:
     """Encode the corpus against trained codebooks: (n_id, nv, codes
     ARRAY<INT>[m], nsd_hat) — the PQ INDEX content. Per subspace,
     argmin over |c|² - 2 x·c (ties → smaller cell via array_min
@@ -897,100 +736,81 @@ def pq_encode(df: DataFrame, codebooks: DataFrame,
     production deployment MATERIALIZES (parquet/bucketed table) so
     serving never re-encodes — see ``pq_ann_from_index``.
 
-    ``engine="kernel"`` (default, r8): mapInPandas with the
-    fold-order-preserving numpy kernel — the interpreted per-row
-    encode costs m·k·(sub-dim fold + struct compare) ≈ 1 ms/row
-    (measured: it was the whole gap between pq_ann and the
-    train+serve split). The kernel replicates every IEEE step:
-    distances accumulate as csd − 2.0·(left-fold dot), argmin scans
-    cells in ascending cell order with strict ``<`` (≡ array_min
-    over struct(d, cell): ties keep the smaller cell), nsd_hat is
-    the sequential left fold of csd[code_s] over subspaces in cb
-    order. Bit-identity pinned by ``test_pq_encode_kernel_equals_expr``.
-    ``engine="expr"`` keeps the Column-expression path as the
-    equality oracle."""
-    m, sub_dim, cb_row = _meta if _meta else _pq_meta(codebooks)
+    Runs as a mapInPandas fold-order-preserving numpy kernel (r8) —
+    the interpreted per-row Column-expression encode costs
+    m·k·(sub-dim fold + struct compare) ≈ 1 ms/row (measured: it was
+    the whole gap between pq_ann and the train+serve split). The
+    kernel replicates every IEEE step of that expression: distances
+    accumulate as csd − 2.0·(left-fold dot), argmin scans cells in
+    ascending cell order with strict ``<`` (≡ array_min over
+    struct(d, cell): ties keep the smaller cell), nsd_hat is the
+    sequential left fold of csd[code_s] over subspaces in cb order.
+    Bit-identity against the expression form is pinned by
+    ``test_pq_encode_kernel_equals_expr`` and
+    ``test_kernel_equality_under_exact_ties``."""
+    import numpy as np
+    import pandas as pd
+
+    m, sub_dim, _ = _meta if _meta else _pq_meta(codebooks)
     c = spread(df.select(F.col(id_col).alias("n_id"),
                          as_double(vec_col).alias("nv")))
-    if engine == "kernel":
-        import numpy as np
-        import pandas as pd
 
-        # self-contained fold twin (see assign_cells: module-level
-        # refs pickle by module path and die on bare workers)
-        def _fold(A, B):
-            acc = np.zeros(A.shape[0])
-            for i in range(A.shape[1]):
-                acc = acc + A[:, i] * B[:, i]
-            return acc
+    # self-contained fold twin (see assign_cells: module-level
+    # refs pickle by module path and die on bare workers)
+    def _fold(A, B):
+        acc = np.zeros(A.shape[0])
+        for i in range(A.shape[1]):
+            acc = acc + A[:, i] * B[:, i]
+        return acc
 
-        rows = sorted(codebooks.select("subspace", "cell", "cv").collect(),
-                      key=lambda r: (r["subspace"], r["cell"]))
-        k = len(rows) // m
-        cells = np.array([r["cell"] for r in rows],
-                         dtype=np.int64).reshape(m, k)
-        C = np.array([list(r["cv"]) for r in rows],
-                     dtype=np.float64).reshape(m, k, sub_dim)
-        # csd exactly as the broadcast row computes it: left-fold
-        # self-dot of each centroid
-        csd = np.stack([_fold(C[s], C[s]) for s in range(m)])
-        id_t = c.schema["n_id"].dataType.simpleString()
-        schema = f"n_id {id_t}, nv ARRAY<DOUBLE>, codes ARRAY<INT>, " \
-                 f"nsd_hat DOUBLE"
+    rows = sorted(codebooks.select("subspace", "cell", "cv").collect(),
+                  key=lambda r: (r["subspace"], r["cell"]))
+    k = len(rows) // m
+    cells = np.array([r["cell"] for r in rows],
+                     dtype=np.int64).reshape(m, k)
+    C = np.array([list(r["cv"]) for r in rows],
+                 dtype=np.float64).reshape(m, k, sub_dim)
+    # csd exactly as the broadcast row computes it: left-fold
+    # self-dot of each centroid
+    csd = np.stack([_fold(C[s], C[s]) for s in range(m)])
+    id_t = c.schema["n_id"].dataType.simpleString()
+    schema = f"n_id {id_t}, nv ARRAY<DOUBLE>, codes ARRAY<INT>, " \
+             f"nsd_hat DOUBLE"
 
-        def encode(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["nv"].to_numpy())
-                n = len(X)
-                code_idx = np.empty((n, m), dtype=np.int64)
-                for s in range(m):
-                    Xs = np.ascontiguousarray(
-                        X[:, s * sub_dim:(s + 1) * sub_dim])
-                    best_d = None
-                    best = np.zeros(n, dtype=np.int64)
-                    for j in range(k):      # ascending cell order
-                        dj = csd[s, j] - 2.0 * _fold(
-                            Xs, np.broadcast_to(C[s, j], Xs.shape))
-                        if best_d is None:
-                            best_d = dj
-                        else:
-                            lt = dj < best_d   # strict: ties keep smaller
-                            best = np.where(lt, j, best)
-                            best_d = np.where(lt, dj, best_d)
-                    code_idx[:, s] = best
-                # nsd_hat: sequential left fold over subspaces
-                acc = np.zeros(n)
-                for s in range(m):
-                    acc = acc + csd[s][code_idx[:, s]]
-                codes = cells[np.arange(m)[None, :], code_idx]
-                yield pd.DataFrame({
-                    "n_id": pdf["n_id"], "nv": pdf["nv"],
-                    "codes": [row.astype(np.int32).tolist()
-                              for row in codes],
-                    "nsd_hat": acc})
+    def encode(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf["nv"].to_numpy())
+            n = len(X)
+            code_idx = np.empty((n, m), dtype=np.int64)
+            for s in range(m):
+                Xs = np.ascontiguousarray(
+                    X[:, s * sub_dim:(s + 1) * sub_dim])
+                best_d = None
+                best = np.zeros(n, dtype=np.int64)
+                for j in range(k):      # ascending cell order
+                    dj = csd[s, j] - 2.0 * _fold(
+                        Xs, np.broadcast_to(C[s, j], Xs.shape))
+                    if best_d is None:
+                        best_d = dj
+                    else:
+                        lt = dj < best_d   # strict: ties keep smaller
+                        best = np.where(lt, j, best)
+                        best_d = np.where(lt, dj, best_d)
+                code_idx[:, s] = best
+            # nsd_hat: sequential left fold over subspaces
+            acc = np.zeros(n)
+            for s in range(m):
+                acc = acc + csd[s][code_idx[:, s]]
+            codes = cells[np.arange(m)[None, :], code_idx]
+            yield pd.DataFrame({
+                "n_id": pdf["n_id"], "nv": pdf["nv"],
+                "codes": [row.astype(np.int32).tolist()
+                          for row in codes],
+                "nsd_hat": acc})
 
-        return c.mapInPandas(encode, schema)
-    subs = F.array(*[F.slice(F.col("nv"), s * sub_dim + 1, sub_dim)
-                     for s in range(m)])
-    return (
-        c.join(cb_row, F.lit(True))
-        .withColumn("sv", subs)
-        .withColumn("codes", F.transform(
-            F.col("cb"),
-            lambda b: F.array_min(F.transform(
-                b["cents"],
-                lambda ct: F.struct(
-                    (ct["csd"] - F.lit(2.0) * dot(
-                        F.element_at(F.col("sv"), b["subspace"] + 1),
-                        ct["cv"])).alias("d"),
-                    ct["cell"].alias("cell"))))["cell"]))
-        .withColumn("nsd_hat", F.aggregate(
-            F.zip_with(F.col("cb"), F.col("codes"),
-                       lambda b, code: b["cents"][code]["csd"]),
-            F.lit(0.0), lambda acc, x: acc + x))
-        .select("n_id", "nv", "codes", "nsd_hat"))
+    return c.mapInPandas(encode, schema)
 
 
 def pq_ann_from_index(enc: DataFrame, queries: DataFrame,
@@ -1185,20 +1005,6 @@ def ivf_pq_ann(df: DataFrame, queries: DataFrame, codebooks: DataFrame,
             .select("q_id", "n_id", "cos", "rn"))
 
 
-def _train_sample(c: DataFrame, id_col: str,
-                  max_train_rows: int | None) -> DataFrame:
-    """Deterministic hash-sample of the training set: the smallest
-    ``max_train_rows`` rows by xxhash64(id). k-means codebooks are
-    model artifacts — FAISS-style systems train them on a sample, and
-    full-corpus Lloyd iterations at 100 TB are a non-starter, so the
-    cap IS the scale posture (assignment/encoding still covers every
-    row). TakeOrdered (sort push-down into a top-K) — no full sort."""
-    if max_train_rows is None:
-        return c
-    return (c.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-            .limit(max_train_rows))
-
-
 def _fold_dot_rows(A, B):
     """Row-wise dot of two n×d float64 matrices, vectorized across
     ROWS but sequential across DIMS — each row's result is the exact
@@ -1214,8 +1020,10 @@ def _fold_dot_rows(A, B):
 
 def _lloyd_driver(vectors: list[list[float]], k: int,
                   n_iters: int) -> list[list[float]]:
-    """Driver-side Lloyd loop, bit-identical to the distributed path
-    (see train_kmeans_codebook docstring for the replication rules).
+    """Driver-side Lloyd loop, bit-identical to a distributed Lloyd
+    loop over the same sample (see train_kmeans_codebook docstring for
+    the replication rules; reference in
+    test_kmeans_driver_equals_distributed).
     ``vectors`` must already be in (xxhash64(id), id) order — the
     first k rows are the init centroids."""
     import numpy as np
@@ -1265,83 +1073,47 @@ def _lloyd_driver(vectors: list[list[float]], k: int,
 def train_kmeans_codebook(df: DataFrame, k: int = 16, n_iters: int = 5,
                           id_col: str = "vec_id",
                           vec_col: str = "embedding",
-                          max_train_rows: int | None = 4096,
-                          engine: str = "driver") -> DataFrame:
+                          max_train_rows: int = 4096) -> DataFrame:
     """Lloyd's k-means codebook for ``ivf_ann(centroids=...)``.
 
-    Each iteration: assign every vector to its max-cosine centroid with
-    the same zero-shuffle per-row argmax ivf_ann uses, then recompute
-    centroids as the element-wise mean of their members. Training runs
-    on a deterministic hash-sample of ≤ ``max_train_rows`` rows
-    (``_train_sample`` — the FAISS deployment shape; None = full
-    corpus), which bounds iteration cost independent of corpus size.
+    Each iteration assigns every training vector to its max-cosine
+    centroid, then recomputes centroids as the element-wise mean of
+    their members. Training runs on a deterministic hash-sample: the
+    smallest ``max_train_rows`` rows by (xxhash64(id), id) — the FAISS
+    deployment shape, which bounds iteration cost independent of
+    corpus size. ``max_train_rows=None`` (collect the whole corpus
+    onto the driver) is refused before any job starts.
 
-    Deterministic end to end: hash-sample init (smallest xxhash64(id)),
-    decimal-exact means (double avg would depend on partition order),
-    ties in the argmax broken by cent_id. Empty cells keep their
-    previous centroid.
+    Deterministic end to end: hash-sample init (the first k sample
+    rows), decimal-exact means (double avg would depend on partition
+    order), ties in the argmax broken by cent_id. Empty cells keep
+    their previous centroid.
 
-    ``engine="driver"`` (default, r8): since the training set is a
-    bounded model-sized sample, the whole Lloyd loop runs on the
-    DRIVER after ONE collect — the distributed path spends 2 cluster
-    actions per iteration on a ≤4096-row problem (measured 7.7–12.5 s
-    per codebook at sf0.1 vs ~0.5 s driver-side; at cluster scale
-    those round-trips are pure scheduler latency). The arithmetic is
-    replicated BIT-EXACTLY (the equality test
-    ``test_kmeans_driver_equals_distributed`` pins codebook identity):
-    left-fold dots vectorized across rows but sequential across dims,
-    cosine as dot/sqrt(sa·sb), ties to the larger cent_id, and means
-    as double→DECIMAL(27,12) HALF_UP quantization (via the 17-digit
+    The training set is a bounded model-sized sample, so the whole
+    Lloyd loop runs on the DRIVER after ONE collect (``_lloyd_driver``)
+    — a distributed loop spends 2 cluster actions per iteration on a
+    ≤4096-row problem (measured 7.7–12.5 s per codebook at sf0.1 vs
+    ~0.5 s driver-side). The arithmetic replicates the distributed
+    column-expression loop BIT-EXACTLY (codebook identity against that
+    loop is pinned by ``test_kmeans_driver_equals_distributed``): left-fold
+    dots vectorized across rows but sequential across dims, cosine as
+    dot/sqrt(sa·sb), ties to the larger cent_id, and means as
+    double→DECIMAL(27,12) HALF_UP quantization (via the 17-digit
     shortest repr, Spark's double→decimal route) summed in exact
     integers, back to double (correctly-rounded Fraction→float), then
-    one IEEE division by the count. ``engine="distributed"`` keeps
-    the cluster path for full-corpus training (max_train_rows=None
-    forces it) and serves as the equality oracle.
+    one IEEE division by the count.
     """
     from pyspark.sql import Row
 
-    spark = df.sparkSession
-    c = df.select(F.col(id_col).alias("n_id"), as_double(vec_col).alias("nv"))
-    if engine == "driver" and max_train_rows is not None:
-        rows = (c.select("n_id", "nv")
-                .orderBy(F.xxhash64(F.col("n_id")), F.col("n_id"))
-                .limit(max_train_rows).collect())
-        codebook = _lloyd_driver([list(r["nv"]) for r in rows], k, n_iters)
-        return spark.createDataFrame(
-            [Row(**{id_col: i, vec_col: v}) for i, v in enumerate(codebook)],
-            f"{id_col} INT, {vec_col} ARRAY<DOUBLE>")
-    c = pin(_train_sample(c, "n_id", max_train_rows))
-    init = (c.orderBy(F.xxhash64(F.col("n_id")), F.col("n_id")).limit(k)
-            .select("nv").collect())
-    codebook = [list(r["nv"]) for r in init]
-
-    for _ in range(n_iters):
-        cents = spark.createDataFrame(
-            [Row(cent_id=i, cv=v) for i, v in enumerate(codebook)],
-            "cent_id INT, cv ARRAY<DOUBLE>")
-        cent_row = F.broadcast(
-            cents.agg(F.collect_list(F.struct("cent_id", "cv")).alias("cb")))
-        assigned = (
-            c.join(cent_row, F.lit(True))
-            .withColumn("cell", F.array_max(F.transform(
-                F.col("cb"),
-                lambda ct: F.struct(cosine(F.col("nv"), ct["cv"]).alias("ccos"),
-                                    ct["cent_id"].alias("cent_id"))))["cent_id"])
-            .select("cell", F.posexplode("nv").alias("dim", "x")))
-        means = (
-            assigned.groupBy("cell", "dim")
-            .agg((F.sum(F.col("x").cast("decimal(27,12)")).cast("double")
-                  / F.count("*")).alias("mu"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("dm"))
-            .select("cell", F.col("dm.mu").alias("cv"))
-            .collect())
-        new_codebook = list(codebook)  # empty cells keep old centroid
-        for r in means:
-            new_codebook[r["cell"]] = list(r["cv"])
-        codebook = new_codebook
-
-    return spark.createDataFrame(
+    if max_train_rows is None:
+        raise ValueError("train_kmeans_codebook: max_train_rows must "
+                         "bound the driver-side training sample")
+    rows = (df.select(F.col(id_col).alias("n_id"),
+                      as_double(vec_col).alias("nv"))
+            .orderBy(F.xxhash64(F.col("n_id")), F.col("n_id"))
+            .limit(max_train_rows).collect())
+    codebook = _lloyd_driver([list(r["nv"]) for r in rows], k, n_iters)
+    return df.sparkSession.createDataFrame(
         [Row(**{id_col: i, vec_col: v}) for i, v in enumerate(codebook)],
         f"{id_col} INT, {vec_col} ARRAY<DOUBLE>")
 
@@ -1387,7 +1159,7 @@ def filtered_knn(df: DataFrame, queries: DataFrame, predicate,
 
 def assign_cells(df: DataFrame, centroids: DataFrame,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 n_probes: int = 1, engine: str = "kernel") -> DataFrame:
+                 n_probes: int = 1) -> DataFrame:
     """(id, vector, cell[, cells]): each vector labeled with its
     max-cosine centroid — still zero-shuffle (the codebook is a
     model-sized artifact shipped to every task; ties take the larger
@@ -1395,95 +1167,81 @@ def assign_cells(df: DataFrame, centroids: DataFrame,
     its top-p cells in score order — for overlap-assignment
     consumers (semdedup boundary recall).
 
-    ``engine="kernel"`` (default, r8): mapInPandas with the
-    fold-order-preserving numpy kernel — the interpreted per-row
-    scoring costs k×~25 µs per vector (it was the dominant term of
-    the bounded semdedup arms once pair scoring vectorized); the
-    kernel computes the same left-fold cosines vectorized across the
-    batch and replicates the (ccos, cent_id)-descending order with a
-    stable argsort over the cent_id-ascending codebook (reversed
-    stable ⇒ ties to the larger cent_id, exactly as
-    reverse(array_sort(struct)) orders). Bit-identity of cell AND
-    probe lists pinned by ``test_assign_cells_kernel_equals_expr``.
-    ``engine="expr"`` keeps the Column-expression path as the
-    equality oracle."""
+    Runs as a mapInPandas fold-order-preserving numpy kernel (r8) —
+    the interpreted per-row Column-expression scoring costs
+    k×~25 µs per vector (it was the dominant term of the bounded
+    semdedup arms once pair scoring vectorized). The kernel computes
+    the same left-fold cosines vectorized across the batch and
+    replicates the (ccos, cent_id)-descending order with a stable
+    argsort over the cent_id-ascending codebook (reversed stable ⇒
+    ties to the larger cent_id, exactly as
+    reverse(array_sort(struct(ccos, cent_id))) orders). Bit-identity
+    of cell AND probe lists against that expression is pinned by
+    ``test_assign_cells_kernel_equals_expr`` and
+    ``test_kernel_equality_under_exact_ties``."""
+    import numpy as np
+    import pandas as pd
+
     c = df.select(F.col(id_col).alias("n_id"), as_double(vec_col).alias("nv"))
     cents = centroids.select(F.col(id_col).alias("cent_id"),
                              as_double(vec_col).alias("cv"))
-    if engine == "kernel":
-        import numpy as np
-        import pandas as pd
 
-        # local twin of _fold_dot_rows: the closure must be
-        # self-contained — a module-level reference pickles by module
-        # path, which the driver-contract workers cannot import
-        def _fold(A, B):
-            acc = np.zeros(A.shape[0])
-            for i in range(A.shape[1]):
-                acc = acc + A[:, i] * B[:, i]
-            return acc
+    # local twin of _fold_dot_rows: the closure must be
+    # self-contained — a module-level reference pickles by module
+    # path, which the driver-contract workers cannot import
+    def _fold(A, B):
+        acc = np.zeros(A.shape[0])
+        for i in range(A.shape[1]):
+            acc = acc + A[:, i] * B[:, i]
+        return acc
 
-        crows = sorted(cents.collect(), key=lambda r: r["cent_id"])
-        cent_ids = np.array([r["cent_id"] for r in crows], dtype=np.int64)
-        C = np.array([list(r["cv"]) for r in crows], dtype=np.float64)
-        scv = _fold(C, C)
-        id_t = c.schema["n_id"].dataType.simpleString()
-        cid_t = cents.schema["cent_id"].dataType.simpleString()
-        schema = f"n_id {id_t}, nv ARRAY<DOUBLE>, cell {cid_t}"
-        if n_probes > 1:
-            schema += f", cells ARRAY<{cid_t}>"
-        p = n_probes
-
-        def assign(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["nv"].to_numpy())
-                sx = _fold(X, X)
-                cos = np.empty((len(X), len(C)))
-                for j in range(len(C)):
-                    cos[:, j] = _fold(
-                        X, np.broadcast_to(C[j], X.shape)) \
-                        / np.sqrt(sx * scv[j])
-                order = np.argsort(cos, axis=1, kind="stable")[:, ::-1]
-                out = {"n_id": pdf["n_id"], "nv": pdf["nv"],
-                       "cell": cent_ids[order[:, 0]]}
-                if p > 1:
-                    out["cells"] = [cent_ids[row[:p]].tolist()
-                                    for row in order]
-                yield pd.DataFrame(out)
-
-        return c.mapInPandas(assign, schema)
-    cent_row = F.broadcast(
-        cents.agg(F.collect_list(F.struct("cent_id", "cv")).alias("cb")))
-    scored = F.reverse(F.array_sort(F.transform(
-        F.col("cb"),
-        lambda ct: F.struct(cosine(F.col("nv"), ct["cv"]).alias("ccos"),
-                            ct["cent_id"].alias("cent_id")))))
-    out = (c.join(cent_row, F.lit(True))
-           .withColumn("_sc", scored)
-           .withColumn("cell", F.col("_sc")[0]["cent_id"]))
+    crows = sorted(cents.collect(), key=lambda r: r["cent_id"])
+    cent_ids = np.array([r["cent_id"] for r in crows], dtype=np.int64)
+    C = np.array([list(r["cv"]) for r in crows], dtype=np.float64)
+    scv = _fold(C, C)
+    id_t = c.schema["n_id"].dataType.simpleString()
+    cid_t = cents.schema["cent_id"].dataType.simpleString()
+    schema = f"n_id {id_t}, nv ARRAY<DOUBLE>, cell {cid_t}"
     if n_probes > 1:
-        out = out.withColumn(
-            "cells", F.slice(F.col("_sc"), 1, n_probes)["cent_id"])
-    return out.drop("cb", "_sc")
+        schema += f", cells ARRAY<{cid_t}>"
+    p = n_probes
+
+    def assign(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf["nv"].to_numpy())
+            sx = _fold(X, X)
+            cos = np.empty((len(X), len(C)))
+            for j in range(len(C)):
+                cos[:, j] = _fold(
+                    X, np.broadcast_to(C[j], X.shape)) \
+                    / np.sqrt(sx * scv[j])
+            order = np.argsort(cos, axis=1, kind="stable")[:, ::-1]
+            out = {"n_id": pdf["n_id"], "nv": pdf["nv"],
+                   "cell": cent_ids[order[:, 0]]}
+            if p > 1:
+                out["cells"] = [cent_ids[row[:p]].tolist()
+                                for row in order]
+            yield pd.DataFrame(out)
+
+    return c.mapInPandas(assign, schema)
 
 
 def semdedup(df: DataFrame, n_clusters: int = 16,
              threshold: float = 0.4, id_col: str = "vec_id",
              vec_col: str = "embedding",
              centroids: DataFrame | None = None,
-             max_train_rows: int | None = 4096,
-             n_probes: int = 1,
-             pair_engine: str = "kernel") -> DataFrame:
+             max_train_rows: int = 4096,
+             n_probes: int = 1) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication bounded
     by k-means clustering — pairwise cosine runs only WITHIN each
     cluster, turning the O(n²) exact pair join into k independent
     O((n/k)²) joins (with balanced cells, a k× work reduction that
     compounds with per-cell parallelism at scale).
 
-    Rule (deterministic): drop a vector iff its cluster contains a
-    neighbor with cosine ≥ threshold and a smaller id — the greedy
+    Rule (deterministic): drop a vector iff it shares a probe cell
+    with a neighbor of smaller id and cosine ≥ threshold — the greedy
     min-id keeper, matching the keeper convention of the text-dedup
     family. With the deterministic k-means trainer
     (train_kmeans_codebook: hash-sample init, decimal-exact means)
@@ -1501,20 +1259,24 @@ def semdedup(df: DataFrame, n_clusters: int = 16,
 
     Plan: assignment is zero-shuffle (broadcast codebook argmax);
     the wide exchanges are the per-cell scoring shuffle and the
-    flag-back join on id. r8: within-cell scoring defaults to the
-    fold-order-preserving numpy kernel (``pair_engine="kernel"`` —
-    one applyInPandas task per cell, row-chunked so memory is
-    chunk×cell-bounded; bit-identical cosines from the same
-    precomputed self-dots, equality pinned by
-    ``test_semdedup_kernel_equals_join``); ``pair_engine="join"``
-    keeps the within-cell equi-join over the interpreted dot as the
-    equality oracle. The dropped set is NOT broadcast-hinted —
-    on a duplicate-heavy corpus it is corpus-sized, so the planner
-    must stay free to pick a shuffled join (AQE broadcasts it when
-    it measures small).
+    flag-back join on id. Within-cell scoring is the
+    fold-order-preserving numpy kernel (r8; see cosine_pairs_blocked)
+    — one applyInPandas task per cell, row-chunked so task memory is
+    chunk×cell-bounded, not cell². Its cosines come from the SAME
+    precomputed self-dots as ``cosine_pairs``' interpreted dot, so the
+    dropped set is exactly the rule above over ``assign_cells`` cells
+    and ``cosine_pairs`` pairs (``test_semdedup_kernel_equals_join``
+    and ``test_kernel_equality_under_exact_ties`` build that
+    reference). The dropped set is NOT broadcast-hinted — on a
+    duplicate-heavy corpus it is corpus-sized, so the planner must
+    stay free to pick a shuffled join (AQE broadcasts it when it
+    measures small).
 
     Returns (id, cell, kept) for every input row.
     """
+    import numpy as np
+    import pandas as pd
+
     if centroids is None:
         centroids = train_kmeans_codebook(
             df, k=n_clusters, id_col=id_col, vec_col=vec_col,
@@ -1525,59 +1287,33 @@ def semdedup(df: DataFrame, n_clusters: int = 16,
 
     probe = (F.explode("cells").alias("pcell") if n_probes > 1
              else F.col("cell").alias("pcell"))
-    if pair_engine == "kernel":
-        # r8: score each cell with the fold-order-preserving numpy
-        # kernel (see cosine_pairs_blocked) instead of the within-cell
-        # equi-join over the interpreted HOF dot — bit-identical
-        # cosines from the SAME precomputed self-dots, so the dropped
-        # set provably matches the join path
-        # (test_semdedup_kernel_equals_join). Row-chunked so task
-        # memory is bounded by chunk×cell, not cell².
-        import numpy as np
-        import pandas as pd
+    thr = float(threshold)
+    id_t = assigned.schema["n_id"].dataType.simpleString()
 
-        thr = float(threshold)
-        id_t = assigned.schema["n_id"].dataType.simpleString()
+    def drop_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["n_id"].to_numpy()
+        if len(ids) < 2:
+            return pd.DataFrame(
+                {"n_id": pd.Series([], dtype=object)})
+        X = np.stack(pdf["nv"].to_numpy())
+        sd = pdf["nsd"].to_numpy()
+        dropped_mask = np.zeros(len(ids), dtype=bool)
+        for i0 in range(0, len(ids), 1024):
+            Xa = X[i0:i0 + 1024]
+            acc = np.zeros((Xa.shape[0], X.shape[0]))
+            for i in range(X.shape[1]):
+                acc = acc + np.outer(Xa[:, i], X[:, i])
+            cm = acc / np.sqrt(np.outer(sd[i0:i0 + 1024], sd))
+            hit = ((ids[i0:i0 + 1024, None] < ids[None, :])
+                   & (cm >= thr))
+            dropped_mask |= hit.any(axis=0)
+        return pd.DataFrame({"n_id": ids[dropped_mask]})
 
-        def drop_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf["n_id"].to_numpy()
-            if len(ids) < 2:
-                return pd.DataFrame(
-                    {"n_id": pd.Series([], dtype=object)})
-            X = np.stack(pdf["nv"].to_numpy())
-            sd = pdf["nsd"].to_numpy()
-            dropped_mask = np.zeros(len(ids), dtype=bool)
-            for i0 in range(0, len(ids), 1024):
-                Xa = X[i0:i0 + 1024]
-                acc = np.zeros((Xa.shape[0], X.shape[0]))
-                for i in range(X.shape[1]):
-                    acc = acc + np.outer(Xa[:, i], X[:, i])
-                cm = acc / np.sqrt(np.outer(sd[i0:i0 + 1024], sd))
-                hit = ((ids[i0:i0 + 1024, None] < ids[None, :])
-                       & (cm >= thr))
-                dropped_mask |= hit.any(axis=0)
-            return pd.DataFrame({"n_id": ids[dropped_mask]})
-
-        dropped = (
-            assigned.select("n_id", "nv", "nsd", probe)
-            .groupBy("pcell")
-            .applyInPandas(drop_in_cell, f"n_id {id_t}")
-            .distinct())
-    else:
-        a = assigned.select(F.col("n_id").alias("a_id"),
-                            F.col("nv").alias("va"),
-                            F.col("nsd").alias("sda"), probe)
-        b = assigned.select(F.col("n_id").alias("b_id"),
-                            F.col("nv").alias("vb"),
-                            F.col("nsd").alias("sdb"), probe)
-        cos = dot(F.col("va"), F.col("vb")) / F.sqrt(F.col("sda")
-                                                     * F.col("sdb"))
-        dropped = (
-            a.join(b, ["pcell"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            .filter(cos >= F.lit(threshold))
-            .select(F.col("b_id").alias("n_id"))
-            .distinct())
+    dropped = (
+        assigned.select("n_id", "nv", "nsd", probe)
+        .groupBy("pcell")
+        .applyInPandas(drop_in_cell, f"n_id {id_t}")
+        .distinct())
     return (
         assigned.join(dropped.withColumn("_d", F.lit(True)),
                       ["n_id"], "left")
@@ -1774,57 +1510,47 @@ def embedding_centroid_drift(vectors: DataFrame,
 
 
 def embedding_covariance(vectors: DataFrame,
-                         vec_col: str = "embedding",
-                         engine: str = "kernel") -> DataFrame:
+                         vec_col: str = "embedding") -> DataFrame:
     """Upper-triangle covariance matrix of the embedding distribution
     → (dim_i, dim_j, n, cov) with dim_i ≤ dim_j — the second-moment
     QA aggregate behind whitening/PCA decisions (anisotropy, dead or
     collinear dimensions) and the model-sized input an offline eigen
     step consumes.
 
-    Exactness (both engines): per-row products x_i·x_j are double
-    multiplies of exactly-widened floats, quantized to DECIMAL(27,6)
-    and summed EXACTLY (order-free — the DSIR single-rounding
-    device), same for the per-dim sums; the final
-    cov = (Sxy − Sx·Sy/n)/(n−1) evaluates the identical IEEE
-    expression on both engines (string-routed decimal→double hops).
-    Bit-identical in Spark and DuckDB.
+    Exactness: per-row products x_i·x_j are double multiplies of
+    exactly-widened floats, quantized to DECIMAL(27,6) and summed
+    EXACTLY (order-free — the DSIR single-rounding device), same for
+    the per-dim sums; the final cov = (Sxy − Sx·Sy/n)/(n−1) evaluates
+    the identical IEEE expression on both engines (string-routed
+    decimal→double hops). Bit-identical in Spark and DuckDB.
 
-    ``engine``:
-    - "kernel" (default): one Arrow pass computes the SAME quantized
-      micro-integer sums vectorized in numpy
-      (``cov_sums_exact_kernel`` — r16, guide §4.2: the expr path's
-      nested-transform lambda is INTERPRETED at ~d²·struct cost per
-      row and dominated the query wall); bit-identical by
-      construction, pinned by the equality + crafted-ties tests.
-    - "expr": the all-JVM column-expression path — the oracle-twin
-      form the streaming covariance mirrors.
+    One Arrow pass computes the quantized micro-integer sums
+    vectorized in numpy (``cov_sums_exact_kernel`` — r16, guide §4.2:
+    the all-JVM ``cov_pair_sums``/``cov_dim_sums`` form's
+    nested-transform lambda is INTERPRETED at ~d²·struct cost per row
+    and dominated the query wall). The result is bit-identical to
+    ``covariance_from_sums(cov_pair_sums(v), cov_dim_sums(v))`` — the
+    form the streaming covariance runs — pinned by
+    ``test_cov_kernel_equals_expr`` and ``test_cov_kernel_ties_and_edges``.
 
-    Shapes at 100 TB (both engines): pair products form IN-ROW (the
-    corpus never shuffles to be paired) and collapse map-side to
-    d(d+1)/2 rows per partition; the only exchange is that
-    partial-combined aggregate (expr additionally broadcasts a d-row
-    dim-sum table). Per-row cost is O(d²) — the covariance's
-    arithmetic lower bound, not a plan artifact."""
-    if engine not in ("kernel", "expr"):
-        raise ValueError(f"unknown engine {engine!r}: "
-                         "expected 'kernel' or 'expr'")
-    if engine == "kernel":
-        # one corpus pass: pair cells ride (i, j ≥ 0), per-dim sums
-        # ride (i, -1) sentinel rows; the d²-row aggregate is pinned
-        # so the two readout branches below share it, then the final
-        # arithmetic is covariance_from_sums VERBATIM — identical
-        # expression tree to the expr path from this point down
-        agg = pin(cov_sums_exact_kernel(vectors, vec_col)
-                  .groupBy("i", "j")
-                  .agg(F.sum("s").alias("s"), F.sum("n").alias("n")))
-        pairs = (agg.filter(F.col("j") >= 0)
-                 .select("i", "j", F.col("s").alias("sxy"), "n"))
-        dims = agg.filter(F.col("j") == -1).select(
-            "i", F.col("s").alias("sx"))
-        return covariance_from_sums(pairs, dims)
-    return covariance_from_sums(cov_pair_sums(vectors, vec_col),
-                                cov_dim_sums(vectors, vec_col))
+    Shape at 100 TB: pair products form IN-ROW (the corpus never
+    shuffles to be paired) and collapse map-side to d(d+1)/2 rows per
+    partition; the only exchange is that partial-combined aggregate.
+    Per-row cost is O(d²) — the covariance's arithmetic lower bound,
+    not a plan artifact."""
+    # one corpus pass: pair cells ride (i, j ≥ 0), per-dim sums ride
+    # (i, -1) sentinel rows; the d²-row aggregate is pinned so the two
+    # readout branches below share it, then the final arithmetic is
+    # covariance_from_sums VERBATIM — the same expression tree the
+    # streaming twin finishes with
+    agg = pin(cov_sums_exact_kernel(vectors, vec_col)
+              .groupBy("i", "j")
+              .agg(F.sum("s").alias("s"), F.sum("n").alias("n")))
+    pairs = (agg.filter(F.col("j") >= 0)
+             .select("i", "j", F.col("s").alias("sxy"), "n"))
+    dims = agg.filter(F.col("j") == -1).select(
+        "i", F.col("s").alias("sx"))
+    return covariance_from_sums(pairs, dims)
 
 
 def cov_sums_exact_kernel(vectors: DataFrame,
@@ -1837,7 +1563,8 @@ def cov_sums_exact_kernel(vectors: DataFrame,
     (i, j=-1, s=Σ quantized x_i, n=dim count), so a single groupBy
     aggregate yields both sufficient-statistic tables.
 
-    Bit-identity contract (pinned by
+    Bit-identity contract against the ``cov_pair_sums``/
+    ``cov_dim_sums`` expressions (pinned by
     test_cov_kernel_equals_expr / test_cov_kernel_ties_and_edges):
     every per-row product is the IDENTICAL IEEE double multiply
     (numpy float64 == JVM), and its DECIMAL(27,6) quantization is
@@ -1853,13 +1580,13 @@ def cov_sums_exact_kernel(vectors: DataFrame,
     decimal SUM), and surface as DECIMAL(38,6) partials whose Spark
     SUM is again exact.
 
-    Null/ragged semantics mirror the expr path: NULL arrays
+    Null/ragged semantics mirror those expressions: NULL arrays
     contribute nothing (explode-skip); rows with NULL elements or
     non-uniform lengths take a per-row Decimal slow path that emits
     null-skipping sums and slice-bounded cell counts. Non-finite
-    elements raise — the expr path's ANSI cast would too.
+    elements raise — the expressions' ANSI cast would too.
 
-    At 100 TB: same plan shape as the expr path (scan → narrow
+    At 100 TB: same plan shape as the expressions (scan → narrow
     project → per-partition partials → one d²-row exchange)."""
     import pyarrow as pa
 
@@ -1882,7 +1609,8 @@ def cov_sums_exact_kernel(vectors: DataFrame,
             if not np.isfinite(x):
                 raise ValueError(
                     f"cov_sums_exact_kernel: non-finite element {x!r} "
-                    "(the expr path's ANSI decimal cast errors here too)")
+                    "(the expression form's ANSI decimal cast errors "
+                    "here too)")
             return int(Decimal(repr(float(x)))
                        .quantize(MICRO, ROUND_HALF_UP).scaleb(6))
 

@@ -1,19 +1,23 @@
-"""External connector adapters (JDBC/PostgreSQL, Redis, Kafka) — the
-reference's actual storage targets, gated for environments without the
-driver jars / client libs.
+"""External connector adapters (PostgreSQL, Redis) — the reference's
+actual storage targets.
 
 Reference parity map:
-- PostgreSQL history + dims → Spark JDBC reader/writer
-  (postgres.go:103-136 insert batch, :138-185 point lookups).
-- Redis latest-value cache → foreachBatch pipelined writer
-  (cache_service.go:37-61); latest-state parquet/Delta is the default
-  stand-in (streaming/pipeline.py).
-- Kafka → the standard Spark source/sink for the wire stream when the
-  feed is brokered rather than raw WebSocket.
+- PostgreSQL history append → ``pg_wire_append`` over the minimal wire
+  client (postgres.go:103-136 insert batch), the ingest pipeline's PG
+  mirror; bootstrap DDL → ``pg_bootstrap`` (postgres.go:46-97).
+- PostgreSQL dimension reads → ``read_pg_dim`` over the wire client,
+  or ``read_jdbc_dim`` through Spark JDBC when the driver jar is on
+  the classpath (postgres.go:138-185 point lookups).
+- Redis latest-value cache → ``redis_wire_latest_sink`` per-partition
+  pipelined SET (cache_service.go:37-61), the pipeline's Redis mirror;
+  ``redis_wire_scan_latest`` reads it back (cache_service.go:67-93).
+  The latest-state parquet table (streaming/pipeline.py) is the
+  default store.
 
-Everything here degrades explicitly: ``available()`` probes report why
-a connector can't run (missing jar/package), and the pipeline falls
-back to the parquet-based sinks which carry the same semantics.
+Everything here degrades explicitly: ``*_available()`` probes report
+whether a connector can run (JDBC jar on the classpath, a server
+answering), and the pipeline falls back to the parquet-based sinks,
+which carry the same semantics.
 """
 
 from __future__ import annotations
@@ -41,72 +45,6 @@ def read_jdbc_dim(spark: SparkSession, url: str, table: str,
             "postgresql jar via spark.jars to enable (semantics are covered "
             "by the parquet dimension tables meanwhile)")
     return spark.read.jdbc(url, table, properties=properties or {})
-
-
-def write_history_jdbc(batch: DataFrame, url: str, table: str,
-                       properties: dict | None = None) -> None:
-    """K1 twin: per-micro-batch transactional append via JDBC (each
-    partition writes one prepared-statement batch in one txn)."""
-    if not jdbc_available(batch.sparkSession):
-        raise NotImplementedError("no JDBC driver on the classpath")
-    batch.write.mode("append").jdbc(url, table, properties=properties or {})
-
-
-def redis_available() -> bool:
-    try:
-        import redis  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def write_latest_redis(batch: DataFrame, host: str = "localhost",
-                       port: int = 6379, ttl_seconds: int = 86400) -> None:
-    """K2 twin: pipelined SET name → json(record) EX ttl per partition
-    (cache_service.go:37-61). Runs via foreachPartition so each task
-    holds one connection and one pipeline — the Spark realization of
-    the reference's per-batch pipeline."""
-    if not redis_available():
-        raise NotImplementedError(
-            "redis-py not installed in this environment; the latest-state "
-            "parquet table (streaming/pipeline.py) carries the same semantics")
-
-    def _write(rows) -> None:  # pragma: no cover - needs a live Redis
-        import json
-
-        import redis as _redis
-        client = _redis.Redis(host=host, port=port)
-        pipe = client.pipeline()
-        for row in rows:
-            record = row.asDict()
-            if record.get("timestamp", 0) == 0:
-                continue  # P2 guard (cache_service.go:41-43)
-            pipe.set(record["name"], json.dumps(record), ex=ttl_seconds)
-        pipe.execute()
-
-    batch.foreachPartition(_write)
-
-
-def kafka_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider")
-        return True
-    except Exception:
-        return False
-
-
-def read_kafka_stream(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
-    """S1 alternative: brokered wire stream. Partition-by-symbol topics
-    give per-key ordering, matching the reference's per-connection
-    ordering guarantee (SURVEY.md §2.9)."""
-    if not kafka_available(spark):
-        raise NotImplementedError(
-            "spark-sql-kafka package not on the classpath; use the file/rate "
-            "source or the ws_market_data source (streaming/sources.py)")
-    return (spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", brokers)
-            .option("subscribe", topic).load())
 
 
 # -- live Redis over the minimal RESP client (sources/redis_minimal) --

@@ -35,12 +35,6 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def delete_path(spark: SparkSession, path: str) -> bool:
-    """Recursive delete; True if something was removed."""
-    fs, hpath, _ = _fs_and_path(spark, path)
-    return bool(fs.delete(hpath, True))
-
-
 def rename_path(spark: SparkSession, src: str, dst: str) -> bool:
     fs, hsrc, jvm = _fs_and_path(spark, src)
     return bool(fs.rename(hsrc, jvm.org.apache.hadoop.fs.Path(dst)))

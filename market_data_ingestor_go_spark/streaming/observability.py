@@ -6,8 +6,9 @@ the reference's Prometheus metrics (internal/app/metrics/metrics.go:8-34):
 
 Engine mapping:
 - ``observe()`` named aggregations ride along the streaming (or batch)
-  plan at zero extra scans — counts of received/validated/dropped rows
-  per micro-batch.
+  plan at zero extra scans — e.g. the ``decode`` frames-received /
+  unmarshal-error counts ``pipeline.decode_raw_frames`` attaches per
+  micro-batch.
 - ``MetricsListener`` (a StreamingQueryListener) collects the observed
   values plus Spark's own progress (batch duration ≈ ProcessingLatency
   histogram, inputRowsPerSecond, state operator metrics) into an
@@ -22,32 +23,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 try:
     from pyspark.sql.streaming import StreamingQueryListener
     _HAS_LISTENER = True
 except ImportError:  # pragma: no cover
     StreamingQueryListener = object
     _HAS_LISTENER = False
-
-
-def observe_ingest(decoded: DataFrame, validate) -> DataFrame:
-    """Attach the ingest counters to the plan and apply validation.
-
-    Both observe nodes must sit on the *executed* lineage (an observe
-    on a branch nothing consumes never fires), so this chains:
-    decoded → observe(received) → validate → observe(processed).
-
-    - messages_received: every decoded frame (ingestor.go:124)
-    - messages_processed: P1 survivors; the difference is the
-      ErrorsTotal{type="validation"} count (market_data.go:12-20)
-    """
-    observed = decoded.observe(
-        "received", F.count(F.lit(1)).alias("messages_received"))
-    return validate(observed).observe(
-        "processed", F.count(F.lit(1)).alias("messages_processed"))
 
 
 @dataclass

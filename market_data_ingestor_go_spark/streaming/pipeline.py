@@ -385,24 +385,3 @@ def compact_history(spark: SparkSession, history_path: str,
     writer.parquet(os.path.join(staging, "epoch=-1"))
     fs.atomic_swap(spark, staging, history_path)
     return len(fs.list_files(spark, history_path))
-
-
-def rate_frames(spark: SparkSession, rows_per_second: int = 100,
-                symbols: list[str] | None = None) -> DataFrame:
-    """Synthetic wire-frame stream for smoke tests: the `rate` source
-    shaped like the WS feed (SURVEY.md §2.1 S1 test strategy)."""
-    symbols = symbols or ["AAPL", "MSFT", "BTCUSD", "EURUSD"]
-    sym = F.array(*[F.lit(s) for s in symbols])[
-        (F.col("value") % len(symbols)).cast("int")]
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second).load()
-        .select(
-            sym.alias("name"),
-            F.unix_millis(F.col("timestamp")).alias("timestamp"),
-            F.lit(None).cast("string").alias("exchange"),
-            F.to_json(F.struct(F.struct(
-                (F.rand(seed=42) * 100).alias("bid"),
-                (F.rand(seed=43) * 100).alias("ask")).alias("data"))).alias("data"),
-        )
-    )

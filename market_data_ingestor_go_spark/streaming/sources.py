@@ -14,7 +14,9 @@ pure-contract tests). A WS feed has no replay, so the source offers
 at-least-once from the connection buffer (documented; the reference
 is at-most-once, ingestor.go/processor.go).
 
-File/rate sources (tests, backfill) come from streaming/pipeline.py.
+File sources (tests, backfill) are plain ``spark.readStream.text``
+streams of the same JSON wire frames, decoded by
+streaming/pipeline.py::decode_raw_frames.
 """
 
 from __future__ import annotations

@@ -9,36 +9,38 @@ import time
 
 from pyspark.sql import Row, functions as F
 
+from market_data_ingestor_go_spark.functions.market import validate
 from market_data_ingestor_go_spark.streaming.endpoints import MetricsServer
 from market_data_ingestor_go_spark.streaming.observability import (
-    MetricsListener, MetricsRegistry, observe_ingest)
+    MetricsListener, MetricsRegistry)
+from market_data_ingestor_go_spark.streaming.pipeline import decode_raw_frames
 from market_data_ingestor_go_spark.streaming.stateful import streaming_latest_state
 
 
 def test_listener_collects_observed_metrics(spark, tmp_path):
-    """A2 + X9: observed metrics flow listener → registry → the
-    /metrics HTTP endpoint, scraped while the query is live
-    (main.go:47-59)."""
+    """A2 + X9: the ingest decode's observed metrics flow listener →
+    registry → the /metrics HTTP endpoint, scraped while the query is
+    live (main.go:47-59). Raw wire frames run through the pipeline's
+    own ``decode_raw_frames`` + ``validate``: one malformed frame is
+    an unmarshal error, one empty-name frame a validation drop."""
     from urllib.request import urlopen
 
     src = str(tmp_path / "src")
     import os
     os.makedirs(src)
-    with open(src + "/a.json", "w") as fh:
+    with open(src + "/a.txt", "w") as fh:
         for i in range(5):
             fh.write(json.dumps({"name": "AAPL" if i < 4 else "",
                                  "timestamp": i + 1}) + "\n")
+        fh.write('{"name": "AAPL", "timestamp": \n')  # malformed frame
 
     registry = MetricsRegistry()
     listener = MetricsListener(registry)
     spark.streams.addListener(listener)
     server = MetricsServer(registry).start()
     try:
-        raw = (spark.readStream.schema("name STRING, timestamp LONG")
-               .json(src))
-        validated = observe_ingest(
-            raw, lambda df: df.filter((F.col("name") != "")
-                                      & (F.col("timestamp") > 0)))
+        validated = validate(decode_raw_frames(spark.readStream.text(src))) \
+            .observe("processed", F.count(F.lit(1)).alias("messages_processed"))
         q = (validated.writeStream.format("noop")
              .option("checkpointLocation", str(tmp_path / "ckpt"))
              .start())
@@ -58,9 +60,11 @@ def test_listener_collects_observed_metrics(spark, tmp_path):
         spark.streams.removeListener(listener)
 
     assert registry.counters.get("batch_inserts", 0) >= 1
-    assert registry.counters.get("received.messages_received") == 5
+    assert registry.counters.get("decode.frames_received") == 6
+    assert registry.counters.get("decode.errors_unmarshal") == 1
     assert registry.counters.get("processed.messages_processed") == 4
-    assert "received_messages_received 5" in metrics
+    assert "decode_frames_received 6" in metrics
+    assert "decode_errors_unmarshal 1" in metrics
     assert "processed_messages_processed 4" in metrics
     assert "# TYPE batch_inserts counter" in metrics
     assert "last_batch_id" in metrics

@@ -172,28 +172,29 @@ def test_lsh_pairs_recall_and_precision(spark):
 
 
 def test_lsh_verify_kernel_equals_expr(spark):
-    """r15 optimization: lsh_cosine_pairs' candidate verification runs
-    the pair-list Arrow kernel by default (guide §4.2 — replaces the
-    interpreted zip_with+aggregate HOF cosine), with the
-    vectors-move-once blocked engine kept as the measured-and-
-    documented 100 TB shape (``engine='blocked'``, guide §8) and the
-    Column-expression path as ``engine='expr'`` (the in-repo equality
-    oracle — the cosine_pairs_blocked / pq_encode convention). All
-    kernels preserve the left fold across dimensions and the
-    sqrt(qsd·nsd) association, so pairs AND cosines must be
-    BIT-IDENTICAL across all three engines."""
+    """r15 optimization: lsh_cosine_pairs verifies its candidates with
+    the pair-list Arrow kernel (guide §4.2 — replaces the interpreted
+    zip_with+aggregate HOF cosine). The kernel preserves the left fold
+    across dimensions and the sqrt(qsd·nsd) association, so its
+    cosines must be BIT-IDENTICAL to the exact expression path
+    (``cosine_pairs``) on the same pairs: at threshold -2 every
+    candidate comes back with its cosine, and at the declared
+    threshold the output is exactly those candidates with cos ≥ it."""
     from market_data_ingestor_go_spark.operators.similarity import (
-        lsh_cosine_pairs)
+        cosine_pairs, lsh_cosine_pairs)
     emb = load_table(spark, SF, "embeddings")
-    expr = sorted((r["a_id"], r["b_id"], r["cos"]) for r in
-                  lsh_cosine_pairs(emb, threshold=0.4,
-                                   engine="expr").collect())
-    for eng in ("blocked", "kernel"):
-        got = sorted((r["a_id"], r["b_id"], r["cos"]) for r in
-                     lsh_cosine_pairs(emb, threshold=0.4,
-                                      engine=eng).collect())
-        assert got == expr, eng
-    assert len(expr) > 0
+    cand = {(r["a_id"], r["b_id"]): r["cos"] for r in
+            lsh_cosine_pairs(emb, threshold=-2.0).collect()}
+    exact = {(r["a_id"], r["b_id"]): r["cos"] for r in
+             cosine_pairs(emb, threshold=-2.0).collect()}
+    assert len(cand) > 0 and cand.keys() <= exact.keys()
+    diff = [p for p, c in cand.items() if repr(c) != repr(exact[p])]
+    assert not diff, diff[:5]
+    got = sorted((r["a_id"], r["b_id"], r["cos"]) for r in
+                 lsh_cosine_pairs(emb, threshold=0.4).collect())
+    want = sorted((a, b, c) for (a, b), c in cand.items() if c >= 0.4)
+    assert got == want
+    assert len(want) > 0
 
 
 def test_compact_history(spark, tmp_path):
@@ -2735,29 +2736,276 @@ def test_jpeg_progressive_through_extract_image_features(spark):
 
 
 # ------------------------------------------------------------------
-# Driver-side codebook trainers (r8): bit-identical to the
-# distributed Lloyd paths they replace on bounded samples
+# Similarity kernels: product code keeps one path per operator (the
+# numpy kernels and driver-side trainers); the Column-expression and
+# distributed forms below are the references each is pinned against
+# bit for bit
 # ------------------------------------------------------------------
+
+
+def _train_sample(c, id_col, max_train_rows):
+    """The trainers' deterministic hash-sample: the smallest
+    ``max_train_rows`` rows by (xxhash64(id), id)."""
+    return (c.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+            .limit(max_train_rows))
+
+
+def _kmeans_distributed(df, k, n_iters=5, max_train_rows=4096,
+                        id_col="vec_id", vec_col="embedding"):
+    """Distributed Lloyd loop over the training sample: per-row
+    max-cosine argmax over a broadcast codebook row (ties to the larger
+    cent_id), DECIMAL(27,12) exact means, 2 cluster actions per
+    iteration."""
+    from market_data_ingestor_go_spark.operators.cache import pin
+    from market_data_ingestor_go_spark.operators.similarity import (
+        as_double, cosine)
+
+    spark = df.sparkSession
+    c = df.select(F.col(id_col).alias("n_id"), as_double(vec_col).alias("nv"))
+    c = pin(_train_sample(c, "n_id", max_train_rows))
+    init = (c.orderBy(F.xxhash64(F.col("n_id")), F.col("n_id")).limit(k)
+            .select("nv").collect())
+    codebook = [list(r["nv"]) for r in init]
+
+    for _ in range(n_iters):
+        cents = spark.createDataFrame(
+            [Row(cent_id=i, cv=v) for i, v in enumerate(codebook)],
+            "cent_id INT, cv ARRAY<DOUBLE>")
+        cent_row = F.broadcast(
+            cents.agg(F.collect_list(F.struct("cent_id", "cv")).alias("cb")))
+        assigned = (
+            c.join(cent_row, F.lit(True))
+            .withColumn("cell", F.array_max(F.transform(
+                F.col("cb"),
+                lambda ct: F.struct(cosine(F.col("nv"), ct["cv"]).alias("ccos"),
+                                    ct["cent_id"].alias("cent_id"))))["cent_id"])
+            .select("cell", F.posexplode("nv").alias("dim", "x")))
+        means = (
+            assigned.groupBy("cell", "dim")
+            .agg((F.sum(F.col("x").cast("decimal(27,12)")).cast("double")
+                  / F.count("*")).alias("mu"))
+            .groupBy("cell")
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("dm"))
+            .select("cell", F.col("dm.mu").alias("cv"))
+            .collect())
+        new_codebook = list(codebook)  # empty cells keep old centroid
+        for r in means:
+            new_codebook[r["cell"]] = list(r["cv"])
+        codebook = new_codebook
+    return [(i, v) for i, v in enumerate(codebook)]
+
+
+def _pq_distributed(df, m, k, n_iters, max_train_rows=4096,
+                    id_col="vec_id", vec_col="embedding"):
+    """Distributed per-subspace Lloyd loop over the training sample:
+    rows explode to (subspace, subvector), argmin of scv − 2.0·⟨sv,cv⟩
+    over a broadcast codebook row (ties to the smaller cell), means
+    partial-aggregated on (subspace, cell, dim)."""
+    from market_data_ingestor_go_spark.operators.cache import pin
+    from market_data_ingestor_go_spark.operators.similarity import (
+        as_double, dot)
+
+    spark = df.sparkSession
+    v = as_double(vec_col)
+    dim = len(df.select(v.alias("v")).first()["v"])
+    sub = dim // m
+    base = pin(_train_sample(
+        df.select(F.col(id_col).alias("id"), v.alias("v")),
+        "id", max_train_rows))
+    subs = F.array(*[
+        F.struct(F.lit(s).alias("s"),
+                 F.slice(F.col("v"), s * sub + 1, sub).alias("sv"))
+        for s in range(m)])
+    rows = base.select("id", F.explode(subs).alias("x")) \
+        .select("id", "x.s", "x.sv")
+    init = (base.orderBy(F.xxhash64(F.col("id")), F.col("id")).limit(k)
+            .collect())
+    codebooks = {s: [list(r["v"])[s * sub:(s + 1) * sub] for r in init]
+                 for s in range(m)}
+
+    for _ in range(n_iters):
+        cb_row = F.broadcast(spark.createDataFrame(
+            [Row(s=s, cell=c, cv=codebooks[s][c])
+             for s in range(m) for c in range(k)],
+            "s INT, cell INT, cv ARRAY<DOUBLE>")
+            .groupBy("s")
+            .agg(F.collect_list(F.struct("cell", "cv")).alias("cb")))
+        assigned = (
+            rows.join(cb_row, "s")
+            .withColumn("cell", F.array_min(F.transform(
+                F.col("cb"),
+                lambda ct: F.struct(
+                    (dot(ct["cv"], ct["cv"])
+                     - F.lit(2.0) * dot(F.col("sv"), ct["cv"])).alias("d"),
+                    ct["cell"].alias("cell"))))["cell"])
+            .select("s", "cell", F.posexplode("sv").alias("dim", "x")))
+        means = (
+            assigned.groupBy("s", "cell", "dim")
+            .agg((F.sum(F.col("x").cast("decimal(27,12)")).cast("double")
+                  / F.count("*")).alias("mu"))
+            .groupBy("s", "cell")
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("dm"))
+            .select("s", "cell", F.col("dm.mu").alias("cv"))
+            .collect())
+        new_books = {s: list(codebooks[s]) for s in range(m)}
+        for r in means:  # empty cells keep their previous centroid
+            new_books[r["s"]][r["cell"]] = list(r["cv"])
+        codebooks = new_books
+    return [((s, c), codebooks[s][c]) for s in range(m) for c in range(k)]
+
+
+def _assign_cells_expr(df, centroids, n_probes=1,
+                       id_col="vec_id", vec_col="embedding"):
+    """Column-expression cell assignment: reverse(array_sort(struct(
+    ccos, cent_id))) over a broadcast codebook row — ties to the larger
+    cent_id."""
+    from market_data_ingestor_go_spark.operators.similarity import (
+        as_double, cosine)
+
+    c = df.select(F.col(id_col).alias("n_id"), as_double(vec_col).alias("nv"))
+    cents = centroids.select(F.col(id_col).alias("cent_id"),
+                             as_double(vec_col).alias("cv"))
+    cent_row = F.broadcast(
+        cents.agg(F.collect_list(F.struct("cent_id", "cv")).alias("cb")))
+    scored = F.reverse(F.array_sort(F.transform(
+        F.col("cb"),
+        lambda ct: F.struct(cosine(F.col("nv"), ct["cv"]).alias("ccos"),
+                            ct["cent_id"].alias("cent_id")))))
+    out = (c.join(cent_row, F.lit(True))
+           .withColumn("_sc", scored)
+           .withColumn("cell", F.col("_sc")[0]["cent_id"]))
+    if n_probes > 1:
+        out = out.withColumn(
+            "cells", F.slice(F.col("_sc"), 1, n_probes)["cent_id"])
+    return out.drop("cb", "_sc")
+
+
+def _pq_encode_expr(df, codebooks, id_col="vec_id", vec_col="embedding"):
+    """Column-expression PQ encode: per-subspace array_min over
+    struct(csd − 2.0·dot, cell) (ties to the smaller cell); nsd_hat
+    the left fold of csd[code_s] over subspaces in cb order."""
+    from market_data_ingestor_go_spark.operators.similarity import (
+        _pq_meta, as_double, dot)
+
+    m, sub_dim, cb_row = _pq_meta(codebooks)
+    c = df.select(F.col(id_col).alias("n_id"), as_double(vec_col).alias("nv"))
+    subs = F.array(*[F.slice(F.col("nv"), s * sub_dim + 1, sub_dim)
+                     for s in range(m)])
+    return (
+        c.join(cb_row, F.lit(True))
+        .withColumn("sv", subs)
+        .withColumn("codes", F.transform(
+            F.col("cb"),
+            lambda b: F.array_min(F.transform(
+                b["cents"],
+                lambda ct: F.struct(
+                    (ct["csd"] - F.lit(2.0) * dot(
+                        F.element_at(F.col("sv"), b["subspace"] + 1),
+                        ct["cv"])).alias("d"),
+                    ct["cell"].alias("cell"))))["cell"]))
+        .withColumn("nsd_hat", F.aggregate(
+            F.zip_with(F.col("cb"), F.col("codes"),
+                       lambda b, code: b["cents"][code]["csd"]),
+            F.lit(0.0), lambda acc, x: acc + x))
+        .select("n_id", "nv", "codes", "nsd_hat"))
+
+
+def _semdedup_reference(df, centroids, threshold, n_probes=1):
+    """The semdedup rule from its parts: row b is dropped iff some
+    a < b shares a probe cell with b and cos(a, b) ≥ threshold — cells
+    from ``assign_cells``, pairs and cosines from the exact expression
+    path ``cosine_pairs``."""
+    from market_data_ingestor_go_spark.operators.similarity import (
+        assign_cells, cosine_pairs)
+
+    cell, probes = {}, {}
+    for r in assign_cells(df, centroids, n_probes=n_probes).collect():
+        cell[r["n_id"]] = r["cell"]
+        probes[r["n_id"]] = set(r["cells"]) if n_probes > 1 else {r["cell"]}
+    dropped = {r["b_id"] for r in
+               cosine_pairs(df, threshold=threshold).collect()
+               if probes[r["a_id"]] & probes[r["b_id"]]}
+    return {(i, c, i not in dropped) for i, c in cell.items()}
+
+
+def test_similarity_operators_have_one_engine():
+    """Layout guard (no Spark session): every similarity operator keeps
+    exactly one product path — no function in operators/similarity.py
+    takes an ``engine`` or ``pair_engine`` selector. Reference forms
+    live in this file."""
+    import ast
+    import pathlib
+
+    from market_data_ingestor_go_spark.operators import similarity
+
+    tree = ast.parse(pathlib.Path(similarity.__file__).read_text())
+    knobs = [(fn.name, a.arg) for fn in ast.walk(tree)
+             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+             for a in (fn.args.posonlyargs + fn.args.args
+                       + fn.args.kwonlyargs)
+             if a.arg in ("engine", "pair_engine")]
+    assert knobs == []
+
+
+def test_trainers_refuse_unbounded_sample_before_any_job(spark):
+    """``max_train_rows=None`` would collect the whole corpus onto the
+    driver: both trainers raise ValueError before starting a Spark job.
+    Checked with the status tracker under a job group; a bounded call
+    in a second group is the control that the tracker sees their jobs
+    (listener events arrive in order, so once the control's jobs show,
+    any job of the refused call would show too)."""
+    import time
+
+    from market_data_ingestor_go_spark.operators.similarity import (
+        train_kmeans_codebook, train_pq_codebooks)
+
+    df = load_table(spark, SF, "embeddings")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def in_group(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    for name, train in (
+            ("kmeans", lambda n: train_kmeans_codebook(
+                df, k=4, n_iters=1, max_train_rows=n)),
+            ("pq", lambda n: train_pq_codebooks(
+                df, m=4, k=4, n_iters=1, max_train_rows=n))):
+        refused = f"unbounded-{name}-{time.monotonic_ns()}"
+        control = f"bounded-{name}-{time.monotonic_ns()}"
+
+        def call_unbounded():
+            with pytest.raises(ValueError, match="max_train_rows"):
+                train(None)
+
+        in_group(refused, call_unbounded)
+        in_group(control, lambda: train(32))
+        deadline = time.time() + 10
+        while (time.time() < deadline
+               and not tracker.getJobIdsForGroup(control)):
+            time.sleep(0.1)
+        assert list(tracker.getJobIdsForGroup(control)), name
+        assert list(tracker.getJobIdsForGroup(refused)) == [], name
 
 
 def test_kmeans_driver_equals_distributed(spark):
     """The r8 driver-side Lloyd loop must reproduce the distributed
-    trainer's codebook BIT-EXACTLY (same hash-sample init, left-fold
+    Lloyd loop's codebook BIT-EXACTLY (same hash-sample init, left-fold
     dots, tie-to-larger-cent argmax, DECIMAL(27,12) HALF_UP means) —
     every downstream consumer (semdedup cells, IVF assignment, ANN
     recall floors) then provably cannot move."""
     from market_data_ingestor_go_spark.operators.similarity import (
         train_kmeans_codebook)
-    from market_data_ingestor_go_spark.sources.tables import load_table
 
     df = load_table(spark, SF, "embeddings")
     for k in (4, 16):
         a = sorted(((r["vec_id"], list(r["embedding"])) for r in
                     train_kmeans_codebook(df, k=k).collect()))
-        b = sorted(((r["vec_id"], list(r["embedding"])) for r in
-                    train_kmeans_codebook(
-                        df, k=k, engine="distributed").collect()))
-        assert a == b, f"k={k}: codebooks diverge"
+        assert a == _kmeans_distributed(df, k=k), f"k={k}: codebooks diverge"
 
 
 def test_pq_driver_equals_distributed(spark):
@@ -2765,16 +3013,12 @@ def test_pq_driver_equals_distributed(spark):
     (argmin ties to the SMALLER cell, distance scv − 2.0·⟨sv,cv⟩)."""
     from market_data_ingestor_go_spark.operators.similarity import (
         train_pq_codebooks)
-    from market_data_ingestor_go_spark.sources.tables import load_table
 
     df = load_table(spark, SF, "embeddings")
     key = lambda r: (r["subspace"], r["cell"])  # noqa: E731
     a = [(key(r), list(r["cv"])) for r in sorted(
         train_pq_codebooks(df, m=8, k=16, n_iters=3).collect(), key=key)]
-    b = [(key(r), list(r["cv"])) for r in sorted(
-        train_pq_codebooks(df, m=8, k=16, n_iters=3,
-                           engine="distributed").collect(), key=key)]
-    assert a == b
+    assert a == _pq_distributed(df, m=8, k=16, n_iters=3)
 
 
 def test_cosine_pairs_blocked_bit_identical(spark):
@@ -2838,22 +3082,19 @@ def test_cosine_pairs_blocked_empty_blocks_and_id_types(spark):
 
 
 def test_semdedup_kernel_equals_join(spark):
-    """The r8 per-cell numpy scoring kernel must reproduce the
-    within-cell equi-join's dropped set EXACTLY (same precomputed
-    self-dots, fold-order-preserving cosines) — single-probe and
-    multiprobe."""
+    """The r8 per-cell numpy scoring kernel must reproduce the semdedup
+    rule EXACTLY (same precomputed self-dots, fold-order-preserving
+    cosines) — the reference applies the rule to ``assign_cells``
+    cells and ``cosine_pairs`` pairs — single-probe and multiprobe."""
     from market_data_ingestor_go_spark.operators.similarity import (
         semdedup, train_kmeans_codebook)
-    from market_data_ingestor_go_spark.sources.tables import load_table
 
     df = load_table(spark, SF, "embeddings")
     cents = train_kmeans_codebook(df, k=8)
     for probes in (1, 2):
         a = {(r["vec_id"], r["cell"], r["kept"]) for r in semdedup(
             df, n_clusters=8, centroids=cents, n_probes=probes).collect()}
-        b = {(r["vec_id"], r["cell"], r["kept"]) for r in semdedup(
-            df, n_clusters=8, centroids=cents, n_probes=probes,
-            pair_engine="join").collect()}
+        b = _semdedup_reference(df, cents, 0.4, n_probes=probes)
         assert a == b, f"n_probes={probes}"
         assert len(a) == df.count()
 
@@ -2866,20 +3107,19 @@ def test_assign_cells_kernel_equals_expr(spark):
     n_probes."""
     from market_data_ingestor_go_spark.operators.similarity import (
         assign_cells, train_kmeans_codebook)
-    from market_data_ingestor_go_spark.sources.tables import load_table
 
     df = load_table(spark, SF, "embeddings")
     for k, p in ((8, 1), (8, 3), (64, 2)):
         cents = train_kmeans_codebook(df, k=k)
 
-        def snap(engine):
-            out = assign_cells(df, cents, n_probes=p, engine=engine)
+        def snap(out):
             return sorted(
                 (r["n_id"], r["cell"],
                  tuple(r["cells"]) if p > 1 else None)
                 for r in out.collect())
 
-        assert snap("kernel") == snap("expr"), f"k={k} p={p}"
+        assert snap(assign_cells(df, cents, n_probes=p)) == \
+            snap(_assign_cells_expr(df, cents, n_probes=p)), f"k={k} p={p}"
 
 
 def test_pq_encode_kernel_equals_expr(spark):
@@ -2889,19 +3129,18 @@ def test_pq_encode_kernel_equals_expr(spark):
     across (m, k) shapes."""
     from market_data_ingestor_go_spark.operators.similarity import (
         pq_encode, train_pq_codebooks)
-    from market_data_ingestor_go_spark.sources.tables import load_table
 
     df = load_table(spark, SF, "embeddings")
     for m, k in ((16, 16), (8, 4)):
         books = train_pq_codebooks(df, m=m, k=k, n_iters=2)
 
-        def snap(engine):
-            out = pq_encode(df, books, engine=engine)
+        def snap(out):
             return sorted(
                 (r["n_id"], tuple(r["codes"]), repr(r["nsd_hat"]))
                 for r in out.collect())
 
-        assert snap("kernel") == snap("expr"), f"m={m} k={k}"
+        assert snap(pq_encode(df, books)) == \
+            snap(_pq_encode_expr(df, books)), f"m={m} k={k}"
 
 
 def test_kernel_equality_under_exact_ties(spark):
@@ -2909,8 +3148,8 @@ def test_kernel_equality_under_exact_ties(spark):
     sign-flipped twins, and centroids EQUAL to corpus vectors force
     exact score ties — the one regime where an argmin/argmax order
     mismatch between the numpy kernels and the Column-expression
-    paths would show. Fixture embeddings have no exact ties, so this
-    is the only coverage of the tie branches."""
+    references would show. Fixture embeddings have no exact ties, so
+    this is the only coverage of the tie branches."""
     from market_data_ingestor_go_spark.operators.similarity import (
         assign_cells, pq_encode, semdedup)
 
@@ -2933,9 +3172,9 @@ def test_kernel_equality_under_exact_ties(spark):
         "vec_id INT, embedding ARRAY<DOUBLE>")
 
     a = sorted((r["n_id"], r["cell"], tuple(r["cells"])) for r in
-               assign_cells(df, cents, n_probes=2, engine="kernel").collect())
+               assign_cells(df, cents, n_probes=2).collect())
     b = sorted((r["n_id"], r["cell"], tuple(r["cells"])) for r in
-               assign_cells(df, cents, n_probes=2, engine="expr").collect())
+               _assign_cells_expr(df, cents, n_probes=2).collect())
     assert a == b
 
     # PQ: m=2 subspaces of dim 2; duplicate centroids per subspace
@@ -2944,21 +3183,18 @@ def test_kernel_equality_under_exact_ties(spark):
          for c, v in enumerate([[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]])],
         "subspace INT, cell INT, cv ARRAY<DOUBLE>")
     pa = sorted((r["n_id"], tuple(r["codes"]), repr(r["nsd_hat"])) for r in
-                pq_encode(df, books, engine="kernel").collect())
+                pq_encode(df, books).collect())
     pb = sorted((r["n_id"], tuple(r["codes"]), repr(r["nsd_hat"])) for r in
-                pq_encode(df, books, engine="expr").collect())
+                _pq_encode_expr(df, books).collect())
     assert pa == pb
 
     # semdedup: duplicate vectors give cosine exactly 1.0 within
-    # cells — the kept set must match the join path including the
-    # min-id drop rule across exact-tie scores
+    # cells — the kept set must match the rule's reference including
+    # the min-id drop across exact-tie scores
     sa = sorted((r["vec_id"], r["cell"], r["kept"]) for r in
-                semdedup(df, centroids=cents, threshold=0.999,
-                         pair_engine="kernel").collect())
-    sb = sorted((r["vec_id"], r["cell"], r["kept"]) for r in
-                semdedup(df, centroids=cents, threshold=0.999,
-                         pair_engine="join").collect())
-    assert sa == sb
+                semdedup(df, centroids=cents, threshold=0.999).collect())
+    assert sa == sorted(_semdedup_reference(df, cents, 0.999))
+    assert not all(kept for _, _, kept in sa)
 
 
 def test_cc_alternating_equals_labelprop(spark):
@@ -3389,18 +3625,29 @@ def _cov_canon(rows):
                   for r in rows)
 
 
+def _cov_expr(emb, vec_col="embedding"):
+    """The all-JVM covariance: the quantized-decimal sufficient
+    statistics as column expressions, finished by the shared readout —
+    the composition the streaming covariance runs."""
+    from market_data_ingestor_go_spark.operators.similarity import (
+        cov_dim_sums, cov_pair_sums, covariance_from_sums)
+    return covariance_from_sums(cov_pair_sums(emb, vec_col),
+                                cov_dim_sums(emb, vec_col))
+
+
 def test_cov_kernel_equals_expr(spark):
-    """r16: the vectorized exact-quantization kernel (default engine)
-    is BIT-identical to the all-JVM expr path on the fixture corpus —
-    same cells, same n, covariance doubles equal to the last bit
-    (repr-compared). This is the lsh verify-kernel convention: the
-    fast path must not be approximately right."""
+    """r16: the vectorized exact-quantization kernel behind
+    embedding_covariance is BIT-identical to the all-JVM expression
+    composition on the fixture corpus — same cells, same n, covariance
+    doubles equal to the last bit (repr-compared). This is the lsh
+    verify-kernel convention: the fast path must not be approximately
+    right."""
     from market_data_ingestor_go_spark.operators.similarity import (
         embedding_covariance)
     from market_data_ingestor_go_spark.sources.tables import load_table
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    kern = _cov_canon(embedding_covariance(emb, engine="kernel").collect())
-    expr = _cov_canon(embedding_covariance(emb, engine="expr").collect())
+    kern = _cov_canon(embedding_covariance(emb).collect())
+    expr = _cov_canon(_cov_expr(emb).collect())
     assert len(kern) == 64 * 65 // 2
     assert kern == expr
 
@@ -3425,24 +3672,12 @@ def test_cov_kernel_ties_and_edges(spark):
         (7, [1.0, 2.0, 3.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id BIGINT, v ARRAY<DOUBLE>")
-    kern = _cov_canon(
-        embedding_covariance(emb, "v", engine="kernel").collect())
-    expr = _cov_canon(
-        embedding_covariance(emb, "v", engine="expr").collect())
+    kern = _cov_canon(embedding_covariance(emb, "v").collect())
+    expr = _cov_canon(_cov_expr(emb, "v").collect())
     assert kern == expr
     # the crafted corpus must actually cover the interesting cells
     assert {(i, j) for i, j, _, _ in kern} == \
         {(i, j) for i in range(3) for j in range(i, 3)}
-
-
-def test_cov_kernel_engine_validated():
-    """A typo'd engine name fails loud before any work."""
-    import pytest as _pytest
-
-    from market_data_ingestor_go_spark.operators.similarity import (
-        embedding_covariance)
-    with _pytest.raises(ValueError, match="unknown engine"):
-        embedding_covariance(None, engine="Kernel")
 
 
 def test_one_pass_covariance_family(spark):

@@ -581,20 +581,27 @@ def test_embedding_covariance_shapes(spark):
     one-pass family's memoized localCheckpoint (r12), whose truncated
     plan is by design a bounded-RDD scan, not the corpus pass.
 
-    r16: the default engine is the exact-quantization Arrow kernel —
-    same constraints, plus the corpus pass must be a MapInArrow node
-    (no interpreted nested-transform lambda, no BatchEvalPython)."""
+    r16: the operator runs the exact-quantization Arrow kernel — same
+    constraints, plus the corpus pass must be a MapInArrow node (no
+    interpreted nested-transform lambda, no BatchEvalPython). The
+    all-JVM composition the streaming covariance runs
+    (covariance_from_sums over cov_pair_sums/cov_dim_sums) meets the
+    same constraints with no Python node at all."""
     from market_data_ingestor_go_spark.operators.similarity import (
+        cov_dim_sums, cov_pair_sums, covariance_from_sums,
         embedding_covariance)
     from market_data_ingestor_go_spark.sources.tables import load_table
-    for engine in ("expr", "kernel"):
-        plan = _plan(embedding_covariance(
-            load_table(spark, SF, "embeddings"), engine=engine))
+    emb = load_table(spark, SF, "embeddings")
+    forms = {"kernel": embedding_covariance(emb),
+             "streaming": covariance_from_sums(cov_pair_sums(emb),
+                                               cov_dim_sums(emb))}
+    for name, cov in forms.items():
+        plan = _plan(cov)
         assert "SortMergeJoin" not in plan, plan
         assert plan.count("BroadcastHashJoin") == 2, plan
         assert _scan_columns(plan, "embeddings") == {"embedding"}, plan
         assert "windowspecdefinition" not in plan, plan
-        assert ("MapInArrow" in plan) == (engine == "kernel"), plan
+        assert ("MapInArrow" in plan) == (name == "kernel"), plan
         assert "BatchEvalPython" not in plan, plan
 
 
