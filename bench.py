@@ -2,8 +2,7 @@
 """Benchmark harness — runs the headline query set at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]. The FINAL stdout line is the driver
-contract, kept under the driver's 2000-char tail window so it parses
-(round-7 fix — BENCH_r03..r06 recorded "parsed": null):
+contract, kept under the driver's 2000-char tail window so it parses:
 
     {"metric": ..., "value": total_sec, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
@@ -12,79 +11,31 @@ The penultimate line (and bench_detail.json beside this script)
 carries the full per-query detail: steady min + median + stdev and
 cold timings for every query, nothing truncated.
 
-Headline set = the scale-representative queries: scan-heavy aggs
-(q1/q6), shuffle joins (q3/q5), keyed latest-state (a1), event-time
-windows/sessions, and the 100 TB-path extension operators (fingerprint
-dedup, MinHash LSH near-dup, brute-force + LSH kNN). The O(n²)
+Headline set = the scale-representative registry queries. The O(n²)
 exact-pair queries are deliberately absent — their scalable twins
 (minhash, hyperplane ANN) stand in, which is the whole point.
 (neardup_pagerank also sits out for the same reason: its declared
 pair graph is the exact O(n²) jaccard join.)
 
-Round-3 note: embedding_lsh_neardup costs ~2.5× its round-2 number BY
-DESIGN — r2's config recalled only 56% of true pairs at its declared
-threshold; the banded config verifies enough candidates for ≥0.9
-recall, and at a threshold barely above random correlation (0.4) that
-candidate volume is information-theoretically irreducible.
-
-Round-6 note (supersedes the r5 PQ note): PQ train and serve are now
-SPLIT (r5 verdict #2). knn_ann_pq benches the SERVE path against the
-stored codebook artifact (trained once per process — production
-trains offline); knn_ann_pq_train benches the model build separately
-(hash-sampled ≤4096 vectors, driver-synchronized Lloyd iterations —
-bounded by the sample, not the corpus). Serve still reads above
-knn_ann_ivf because corpus ENCODE + ADC scoring run through
-interpreted higher-order array functions (~1 ms/row measured, flat
-across partition counts — per-row constant, so it partitions cleanly
-at scale; a BLAS-style Arrow kernel would shave the constant but
-trade away the all-JVM plan). dedup_cluster_keepers still
-includes full MinHash pair generation plus the iterative
-connected-components rounds by design. events_motif_search now runs
-the CHUNKED window path (keys × chunks parallelism — the 100 TB
-plan); at sf0.1 it reads ~0.8 s over the plain per-key window
-because the row-numbering machinery adds two bucket-grain exchanges
-— the price of not serializing 20% of the stream through one task
-at scale. events_twap pays the same toll for the same reason (its
-lead() became a co-partitioned rn+1 join over chunk-parallel row
-numbers; durations — and therefore oracle parity — are identical).
+knn_ann_pq trains its codebook once per process (the cold run pays
+it) and benches encode + ADC scan + exact rerank.
+embedding_{covariance,correlation}_matrix and embedding_pca_spectrum
+share one memoized covariance pass per steady pass
+(plans/queries_vectors.py::_cov_once); embedding_covariance_arrow
+recomputes it every sample.
 
 Results materialize through the noop sink (full execution, no driver
 collect).
 
-Round-11: cross-round comparisons are now LOAD-INVARIANT — a fixed
-pure-CPU calibration query is interleaved through every steady pass
-and each query reports a `queries_calibrated` ratio. Host noise (the
-r9/r10 saga: code-identical queries swinging ±2x under recorded
-loadavg 1.6-7.8) divides out of the ratio; the calibration's own
-cross-round ratio isolates any true host-speed change.
-
-Round-12 (burst-robust pairing, supersedes the r11 nearest-in-time
-design): each query sample divides by the MEDIAN calibration of its
-OWN pass, the reported ratio is the MEDIAN across passes, and a >30%
-calibrated flag must be corroborated by the raw time moving the same
-direction (>10%) — r11's nearest-in-time pairing produced 23 flags on
-code-identical queries under bursty load while their raw times all
-improved. Method is stamped in calibration_sec.method; flags compare
-calibrated only like-for-like, falling back to raw seconds otherwise.
-
-Round-12 one-pass family note: embedding_{covariance,correlation}_
-matrix and embedding_pca_spectrum now SHARE one memoized covariance
-pass per process (plans/queries.py::_cov_once — the deployment
-shape: the matrix is computed once, both readouts derive from it).
-The corpus pass lands in the COLD numbers (first query of the trio);
-steady samples measure the d²-sized readouts — the knn_ann_pq_serve
-"train once per process, bench the serve path" precedent. The
-per-sample covariance COMPUTE cost stays visible in
-embedding_covariance_arrow, which recomputes every sample.
-
-Round-5 host-variance evidence (for cross-round comparisons): late in
-round 5 the SAME code measured +60%..+270% vs the BENCH_r04 artifact
-on queries that had not changed a byte (dedup_fingerprint 0.23→0.88,
-events_ohlc_bars 0.34→0.86, q5 0.74→1.39), and the full test suite
-swung 403 s → 1073 s between sessions. Absolute seconds on this host
-are only comparable within one run; regressions should be judged by
-the per-round artifact's internal ratios and the plan-shape tests
-(tests/test_plans.py), not by cross-round seconds.
+Comparisons across runs are load-invariant: a fixed pure-CPU
+calibration query is interleaved through every steady pass, each
+query sample divides by the MEDIAN calibration of its own pass, the
+reported ratio is the median across passes, and a >30% calibrated
+flag must be corroborated by the raw time moving the same direction
+(>10%). Host variance is large (code-identical queries have measured
++60%..+270% across sessions), so judge regressions by within-run
+ratios and the plan-shape tests (tests/test_plans.py), not by
+cross-run seconds.
 """
 
 from __future__ import annotations
@@ -100,18 +51,12 @@ from market_data_ingestor_go_spark.operators.cache import release_pinned  # noqa
 from market_data_ingestor_go_spark.plans.queries import ALL_QUERIES  # noqa: E402
 from market_data_ingestor_go_spark.session import get_spark  # noqa: E402
 
-# ALL_QUERIES (not the declared window) so the headline set survives
-# window rotations — events_tumbling_window moved to EXTRA in round 5
-# but stays perf-tracked here.
+# Names resolve through ALL_QUERIES, not the declared window.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_top_revenue_orders",
     "q5_region_nation_revenue",
-    "q6_revenue_delta",
-    "p1_validation_filter",
     "a1_latest_per_key",
-    "agg_orders_stats",
-    "window_topk_per_group",
     "events_tumbling_window",
     "events_sessionization",
     "events_ohlc_bars",
@@ -122,8 +67,6 @@ HEADLINE = [
     "embedding_lsh_neardup",
     "knn_bruteforce",
     "knn_ann_hyperplane",
-    "knn_ann_ivf",
-    "text_token_stats",
     # round-5 additions: the round-3 operators previously outside any
     # perf tracking (graph clustering, cross-corpus MinHash, PQ ANN)
     "dedup_cluster_keepers",
@@ -145,11 +88,7 @@ HEADLINE = [
     # collect_list windows + array-expression distances; chunked
     # window path since r6
     "events_motif_search",
-    # round-6 additions: every ROTATED_IN_R6 member not already
-    # tracked above gets a perf row the round its correctness row
-    # lands, plus the PQ train/serve split
-    "knn_ann_pq_train",
-    "knn_ann_pq_serve",
+    # round-6 additions: the late-r5 operator build
     "events_twap",
     "events_ewma_smooth",
     "events_zscore_outliers",
@@ -165,10 +104,8 @@ HEADLINE = [
     "shard_manifest",
     "doc_length_buckets",
     "q15_top_supplier",
-    "lineitem_price_qty_corr",
     "source_overlap_exact",
     "token_heavy_hitters_sketch",
-    "knn_filtered_bruteforce",
     # r6: the segmented-EWMA path on 2000-row keys (20x past the
     # closed form's decimal bound — only computable chunked)
     "events_ewma_chunked",
@@ -196,8 +133,7 @@ HEADLINE = [
     # late r6: SemDeDup — k-means-bounded semantic dedup (serve path
     # against the cached centroid artifact, like knn_ann_pq)
     "semdedup_keepers",
-    # r9: every ROTATED_IN_R9 member gets a perf row the round its
-    # first correctness row lands — TPC-H shape completion (q9/q11/
+    # r9: TPC-H shape completion (q9/q11/
     # q16/q20), maximal duplicated spans, rank-based MAD outliers,
     # and the retrieval/KS family (BM25 postings-prefilter top-k,
     # Jaccard+cosine RRF hybrid fusion, exact KS drift)
@@ -211,8 +147,8 @@ HEADLINE = [
     "hybrid_rrf_retrieval",
     "source_ks_drift",
     # r9: the materialized-index serve split (pure serve cost in the
-    # doc_bm25_topk class, the knn_ann_pq_serve pattern; first-call
-    # index build lands in the cold run, steady runs measure serve)
+    # doc_bm25_topk class; first-call index build lands in the cold
+    # run, steady runs measure serve)
     "doc_bm25_from_index",
     # r9: the ANN-armed hybrid (IVF dense arm) next to its exact twin
     "hybrid_rrf_ann",
@@ -383,13 +319,13 @@ HEADLINE = [
 
 # STABLE TIER (r14, verdict #4): queries measured in ALL of
 # BENCH_r10..r13 whose raw medians never spread past 1.6x across
-# those four rounds and that carry no open flag — minus the three
-# r13-rerun-flagged names (lineitem_price_qty_corr, knn_ann_pq,
-# doc_length_buckets: exonerated in SCALING.md r14, kept observable
-# anyway). Mid-round iteration can skip these with
-# SPARK_GRAFT_BENCH_TIER=active (~40 fewer queries per sweep); the
-# DEFAULT (the driver's invocation, no env) remains the FULL set, so
-# the closing artifact and both flag passes always measure everything.
+# those four rounds and that carry no open flag — minus the
+# r13-rerun-flagged names (knn_ann_pq, doc_length_buckets: exonerated
+# in SCALING.md r14, kept observable anyway). Mid-round iteration can
+# skip these with SPARK_GRAFT_BENCH_TIER=active (~40 fewer queries
+# per sweep); the DEFAULT (the driver's invocation, no env) remains
+# the FULL set, so the closing artifact and both flag passes always
+# measure everything.
 STABLE_TIER: frozenset = frozenset({
     "bloom_semi_join_agg", "contamination_check", "corpus_datacard",
     "dedup_cluster_keepers", "distinct_rollup_hll",
@@ -400,8 +336,8 @@ STABLE_TIER: frozenset = frozenset({
     "events_ewma_chunked", "events_mad_outliers",
     "events_motif_search", "events_twap", "events_variant_extract",
     "fuzzy_name_block_join", "hybrid_rrf_ann", "hybrid_rrf_retrieval",
-    "jl_projection_distortion", "knn_ann_hyperplane", "knn_ann_ivf",
-    "knn_ann_pq_serve", "lm_quality_bands", "minhash_neardup",
+    "jl_projection_distortion", "knn_ann_hyperplane",
+    "lm_quality_bands", "minhash_neardup",
     "passage_dedup_scrub", "q16_supplier_part_counts",
     "q1_pricing_summary", "q20_part_promotion", "q9_product_profit",
     "semantic_dedup_clusters", "semdedup_keepers", "simhash_neardup",

@@ -1155,7 +1155,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 8, w: int = 4,
     shared token run of ≥ k + w − 1 tokens is always detected via a
     shared fp, while only ~2/(w+1) of window hashes are stored — the
     fingerprint index shrinks ~(w+1)/2× against the full rolling-hash
-    table (``doc_rolling_fingerprint``) with NO detection gap above
+    table with NO detection gap above
     the guarantee length. All integers (md5-prefix token hashes,
     mod-reduced Rabin-Karp, encoded argmin) ⇒ bit-exact cross-engine.
 

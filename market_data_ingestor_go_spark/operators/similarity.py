@@ -583,8 +583,8 @@ def hyperplane_ann_from_index(spark, table: str, queries: DataFrame,
     reads only its buckets' row groups and drops non-matching rows
     before the join — which keeps k results filled from the filtered
     subset (post-filtering an unfiltered top-k under-fills k).
-    Ground-truth twin: knn_filtered_bruteforce; recall asserted in
-    tests."""
+    Ground truth: exact knn_bruteforce over the filtered corpus;
+    recall asserted in tests."""
     from itertools import combinations
 
     planes = _hyperplanes(dim, n_planes)
@@ -702,7 +702,7 @@ def train_pq_codebooks(df: DataFrame, m: int = 8, k: int = 16,
 
 def _pq_cb_row(codebooks: DataFrame):
     """One broadcast row: cb[s] = array of (cell, cv, csd) per
-    subspace — the shared lookup structure for encode and scan."""
+    subspace — the lookup structure the ADC scan reads."""
     return F.broadcast(
         codebooks
         .withColumn("csd", dot(F.col("cv"), F.col("cv")))
@@ -715,10 +715,8 @@ def _pq_cb_row(codebooks: DataFrame):
 
 
 def _pq_meta(codebooks: DataFrame):
-    """(m, sub_dim, broadcast cb row) — computed ONCE per call chain:
-    each evaluation runs two driver actions on the codebooks lineage
-    plus a broadcast, so composed paths (pq_ann = encode + scan) pass
-    this down instead of re-deriving it (review catch r6)."""
+    """(m, sub_dim, broadcast cb row) for the serve scan: two driver
+    actions on the codebooks lineage plus a broadcast."""
     m = codebooks.select(F.max("subspace")).first()[0] + 1
     sub_dim = len(codebooks.select("cv").first()["cv"])
     return m, sub_dim, _pq_cb_row(codebooks)
@@ -726,8 +724,7 @@ def _pq_meta(codebooks: DataFrame):
 
 def pq_encode(df: DataFrame, codebooks: DataFrame,
               id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              _meta=None) -> DataFrame:
+              vec_col: str = "embedding") -> DataFrame:
     """Encode the corpus against trained codebooks: (n_id, nv, codes
     ARRAY<INT>[m], nsd_hat) — the PQ INDEX content. Per subspace,
     argmin over |c|² - 2 x·c (ties → smaller cell via array_min
@@ -747,11 +744,11 @@ def pq_encode(df: DataFrame, codebooks: DataFrame,
     sequential left fold of csd[code_s] over subspaces in cb order.
     Bit-identity against the expression form is pinned by
     ``test_pq_encode_kernel_equals_expr`` and
-    ``test_kernel_equality_under_exact_ties``."""
+    ``test_kernel_equality_under_exact_ties``. Construction runs ONE
+    driver job: the codebook collect also yields m and the sub-dim."""
     import numpy as np
     import pandas as pd
 
-    m, sub_dim, _ = _meta if _meta else _pq_meta(codebooks)
     c = spread(df.select(F.col(id_col).alias("n_id"),
                          as_double(vec_col).alias("nv")))
 
@@ -765,6 +762,8 @@ def pq_encode(df: DataFrame, codebooks: DataFrame,
 
     rows = sorted(codebooks.select("subspace", "cell", "cv").collect(),
                   key=lambda r: (r["subspace"], r["cell"]))
+    m = rows[-1]["subspace"] + 1
+    sub_dim = len(rows[0]["cv"])
     k = len(rows) // m
     cells = np.array([r["cell"] for r in rows],
                      dtype=np.int64).reshape(m, k)
@@ -816,8 +815,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame,
 def pq_ann_from_index(enc: DataFrame, queries: DataFrame,
                       codebooks: DataFrame, k: int = 5,
                       shortlist: int = 4, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      _meta=None) -> DataFrame:
+                      vec_col: str = "embedding") -> DataFrame:
     """PQ ANN SERVE against a pre-built encoded index (``pq_encode``
     output, typically a materialized table): ADC-scored shortlist +
     exact cosine re-rank, identical results to ``pq_ann`` over the
@@ -826,7 +824,7 @@ def pq_ann_from_index(enc: DataFrame, queries: DataFrame,
     scan at serve)."""
     from pyspark.sql.window import Window
 
-    m, sub_dim, cb_row = _meta if _meta else _pq_meta(codebooks)
+    m, sub_dim, cb_row = _pq_meta(codebooks)
 
     # query side: per-subspace IP tables q_s · c (array of k doubles)
     q = _query_side(queries, id_col, vec_col)
@@ -886,123 +884,9 @@ def pq_ann(df: DataFrame, queries: DataFrame, codebooks: DataFrame,
     MATERIALIZED index instead (no per-call encode): ``pq_encode`` +
     ``pq_ann_from_index``.
     """
-    meta = _pq_meta(codebooks)
-    enc = pin(pq_encode(df, codebooks, id_col, vec_col, _meta=meta))
+    enc = pin(pq_encode(df, codebooks, id_col, vec_col))
     return pq_ann_from_index(enc, queries, codebooks, k, shortlist,
-                             id_col, vec_col, _meta=meta)
-
-
-def ivf_pq_ann(df: DataFrame, queries: DataFrame, codebooks: DataFrame,
-               k: int = 5, n_cells: int = 16, n_probe_cells: int = 4,
-               shortlist: int = 8, id_col: str = "vec_id",
-               vec_col: str = "embedding",
-               centroids: DataFrame | None = None) -> DataFrame:
-    """Composed IVF + PQ — the production vector-index shape: the
-    coarse quantizer restricts candidates to the query's probed cells
-    (an equi-join on cell id, so the scan is |probed cells| not the
-    corpus), PQ codes score those candidates with ADC (m lookups per
-    pair), and the top ``k·shortlist`` are re-ranked with exact cosine.
-    Flat ``pq_ann`` scans every code; this bounds the scan AND keeps
-    the per-pair cost — compression × pruning, the FAISS IVFPQ layout
-    re-expressed as two broadcast joins and one equi-join.
-    """
-    from pyspark.sql.window import Window
-
-    m = codebooks.select(F.max("subspace")).first()[0] + 1
-    sub_dim = len(codebooks.select("cv").first()["cv"])
-
-    # coarse quantizer (same shape as ivf_ann): per-row argmax over a
-    # broadcast centroid row
-    c = spread(df.select(F.col(id_col).alias("n_id"),
-                         as_double(vec_col).alias("nv")))
-    if centroids is None:
-        cent_src = (
-            c.orderBy(F.xxhash64(F.col("n_id")), F.col("n_id"))
-            .limit(n_cells)
-            .select(F.col("n_id").alias("cent_id"), F.col("nv").alias("cv")))
-    else:
-        cent_src = centroids.select(
-            F.col(id_col).alias("cent_id"), as_double(vec_col).alias("cv"))
-    cent_row = F.broadcast(F.broadcast(cent_src).agg(
-        F.collect_list(F.struct("cent_id", "cv")).alias("coarse")))
-
-    def scored_cells(vec):
-        return F.transform(
-            F.col("coarse"),
-            lambda ct: F.struct(cosine(vec, ct["cv"]).alias("ccos"),
-                                ct["cent_id"].alias("cent_id")))
-
-    # PQ codebooks broadcast row (identical layout to pq_ann)
-    cb_row = F.broadcast(
-        codebooks
-        .withColumn("csd", dot(F.col("cv"), F.col("cv")))
-        .groupBy("subspace")
-        .agg(F.array_sort(F.collect_list(
-            F.struct("cell", "cv", "csd"))).alias("cents"))
-        .groupBy()
-        .agg(F.array_sort(F.collect_list(
-            F.struct("subspace", "cents"))).alias("cb")))
-
-    subs = F.array(*[F.slice(F.col("nv"), s * sub_dim + 1, sub_dim)
-                     for s in range(m)])
-    enc = (
-        c.join(cent_row, F.lit(True)).join(cb_row, F.lit(True))
-        .withColumn("cell", F.array_max(scored_cells(F.col("nv")))["cent_id"])
-        .withColumn("sv", subs)
-        .withColumn("codes", F.transform(
-            F.col("cb"),
-            lambda b: F.array_min(F.transform(
-                b["cents"],
-                lambda ct: F.struct(
-                    (ct["csd"] - F.lit(2.0) * dot(
-                        F.element_at(F.col("sv"), b["subspace"] + 1),
-                        ct["cv"])).alias("d"),
-                    ct["cell"].alias("cell"))))["cell"]))
-        .withColumn("nsd_hat", F.aggregate(
-            F.zip_with(F.col("cb"), F.col("codes"),
-                       lambda b, code: b["cents"][code]["csd"]),
-            F.lit(0.0), lambda acc, x: acc + x))
-        .select("n_id", "nv", "cell", "codes", "nsd_hat"))
-    enc = pin(enc)
-
-    # query: probe best cells + build ADC tables
-    q = _query_side(queries, id_col, vec_col)
-    qsubs = F.array(*[F.slice(F.col("qv"), s * sub_dim + 1, sub_dim)
-                      for s in range(m)])
-    qt = F.broadcast(
-        q.join(cent_row, F.lit(True)).join(cb_row, F.lit(True))
-        .withColumn("best", F.slice(F.reverse(F.array_sort(
-            scored_cells(F.col("qv")))), 1, n_probe_cells))
-        .withColumn("qs", qsubs)
-        .withColumn("tables", F.transform(
-            F.col("cb"),
-            lambda b: F.transform(
-                b["cents"],
-                lambda ct: dot(F.element_at(F.col("qs"),
-                                            b["subspace"] + 1), ct["cv"]))))
-        .select("q_id", "qv", "qsd", "tables",
-                F.explode(F.col("best")["cent_id"]).alias("cell")))
-
-    adc = (
-        qt.join(enc, (F.col("q_id") != F.col("n_id"))
-                & (qt.cell == enc.cell))            # cell equi-join
-        .select(
-            "q_id", "qv", "qsd", "n_id", "nv",
-            (F.aggregate(
-                F.zip_with(F.col("tables"), F.col("codes"),
-                           lambda t, code: t[code]),
-                F.lit(0.0), lambda acc, x: acc + x)
-             / F.sqrt(F.col("qsd") * F.col("nsd_hat"))).alias("adc")))
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id"))
-    short = (adc.withColumn("srn", F.row_number().over(w))
-             .filter(F.col("srn") <= F.lit(k * shortlist)))
-    cos = dot(F.col("qv"), F.col("nv")) / F.sqrt(
-        F.col("qsd") * dot(F.col("nv"), F.col("nv")))
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (short.select("q_id", "n_id", cos.alias("cos"))
-            .withColumn("rn", F.row_number().over(w2))
-            .filter(F.col("rn") <= F.lit(k))
-            .select("q_id", "n_id", "cos", "rn"))
+                             id_col, vec_col)
 
 
 def _fold_dot_rows(A, B):

@@ -72,7 +72,7 @@ def _pq_enc_root():
     # two concurrent processes benching the same corpus overwrite
     # each other's index mid-read, and on multi-user hosts the fixed
     # path was pre-creatable by another user (advisor catch r6). The
-    # per-(applicationId, sf_dir) cache key below still guarantees
+    # caller's per-(applicationId, sf_dir) cache key still guarantees
     # exactly ONE index copy per corpus within a process, and the
     # atexit cleanup keeps the no-leaked-tempdir property the r6
     # review established.

@@ -7,13 +7,10 @@ value-hash. See queries.py module doc for the cross-engine determinism
 rules (decimal-cast sums, epoch-millis timestamps, unique tiebreaks).
 
 SQL text lives in the per-domain modules (oracles_warehouse /
-oracles_pipeline / oracles_events / oracles_docs / oracles_vectors,
-split round 15 — r14 verdict #6); this module merges them and derives
-window membership MECHANICALLY from the declared QUERIES window:
-ORACLES is exactly the oracle-backed subset of the driver's 50-query
-window, EXTRA_ORACLES everything else. Rotations therefore edit ONLY
-plans/queries.py — the old per-round _R{n}_IN/_R{n}_OUT pop blocks are
-gone (their history lives in queries.py's rotation ledger).
+oracles_pipeline / oracles_events / oracles_docs / oracles_vectors);
+this module merges them and derives window membership from the
+declared QUERIES window: ORACLES is exactly the oracle-backed subset
+of the driver's 50-query window, EXTRA_ORACLES everything else.
 
 Queries intentionally absent (rows-only driver check): engine-side
 LSH/sketch/randomized operators whose exact twins are the

@@ -59,31 +59,6 @@ SQL["minhash_neardup"] = SQL["ngram_jaccard_neardup"]
 
 _STOP = "['the', 'a', 'and', 'of', 'to']"
 
-SQL["text_token_stats"] = """
-WITH t AS (
-  SELECT lang, n_chars,
-         len(regexp_split_to_array(trim(text), '\\s+')) AS n_tokens
-  FROM documents)
-SELECT lang, COUNT(*) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-       CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars,
-       CAST(SUM(n_tokens) AS DOUBLE) / COUNT(*) AS avg_tokens
-FROM t GROUP BY lang
-"""
-
-SQL["text_quality_score"] = f"""
-WITH t AS (
-  SELECT doc_id,
-         len(regexp_split_to_array(trim(text), '\\s+')) AS n_tokens,
-         len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                         x -> list_contains({_STOP}, x))) AS n_stop
-  FROM documents)
-SELECT doc_id, n_tokens,
-       CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stop_ratio,
-       (n_tokens >= 20 AND CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE) <= 0.5) AS keep
-FROM t
-"""
-
 SQL["text_langid"] = f"""
 WITH t AS (
   SELECT doc_id, lang,
@@ -277,26 +252,6 @@ _ROLL_POWERS = [pow(257, 8 - 1 - k, _ROLL_P) for k in range(8)]
 
 _ROLL_TERMS = " + ".join(
     f"(hs[i + {k}] * {_ROLL_POWERS[k]}) % {_ROLL_P}" for k in range(8))
-
-SQL["doc_rolling_fingerprint"] = f"""
-WITH h AS (
-  SELECT doc_id,
-         list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                        t -> CAST(concat('0x', substring(md5(t), 1, 8))
-                                  AS BIGINT)) AS hs
-  FROM documents
-), w AS (
-  SELECT doc_id,
-         [({_ROLL_TERMS}) % {_ROLL_P}
-          for i in range(1, len(hs) - 8 + 2)] AS wh
-  FROM h
-)
-SELECT doc_id,
-       CAST(len(wh) AS BIGINT) AS n_windows,
-       CAST(len(list_distinct(wh)) AS BIGINT) AS n_distinct,
-       list_min(wh) AS min_whash
-FROM w
-"""
 
 SQL["rolling_fingerprint_neardup"] = f"""
 WITH h AS (
@@ -951,8 +906,7 @@ GROUP BY ga, gb, na, nb, d_max
 # BM25 serve path against the materialized inverted index: the index
 # build is lossless (tf/df/dl/stats identical by construction, shared
 # scoring tail in operators/retrieval.py), so the oracle IS
-# doc_bm25_topk's — same result set, different physical path (the
-# knn_ann_pq_serve pattern, but exactly checkable).
+# doc_bm25_topk's — same result set, different physical path.
 SQL["doc_bm25_from_index"] = SQL["doc_bm25_topk"]
 
 # PMI collocation extraction (r9): log-free surrogate — the PMI

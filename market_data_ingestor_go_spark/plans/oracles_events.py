@@ -99,28 +99,6 @@ FROM e LEFT JOIN c
 GROUP BY e.error_id, e.user_id, e.e_ts
 """
 
-SQL["events_funnel_conversion"] = """
-WITH u AS (
-  SELECT user_id,
-         MIN(CASE WHEN event_type = 'click' THEN epoch_ms(ts) END)
-           AS first_click,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_ms(ts) END)
-           AS first_purchase
-  FROM events GROUP BY user_id)
-SELECT COUNT(CASE WHEN first_click IS NOT NULL THEN 1 END) AS n_clickers,
-       COUNT(CASE WHEN first_click IS NOT NULL
-                   AND first_purchase IS NOT NULL
-                   AND first_purchase >= first_click THEN 1 END)
-         AS n_converted,
-       CAST(COUNT(CASE WHEN first_click IS NOT NULL
-                        AND first_purchase IS NOT NULL
-                        AND first_purchase >= first_click THEN 1 END)
-            AS DOUBLE)
-         / COUNT(CASE WHEN first_click IS NOT NULL THEN 1 END)
-         AS conversion_rate
-FROM u
-"""
-
 SQL["events_moving_stats"] = """
 WITH e AS (
   SELECT user_id, event_id, epoch_ms(ts) AS ts_ms, value FROM events)

@@ -6,39 +6,9 @@ from __future__ import annotations
 
 SQL: dict[str, str] = {}
 
-SQL["p1_validation_filter"] = """
-SELECT event_id, user_id, event_type, value, epoch_ms(ts) AS ts_ms
-FROM events
-WHERE event_type <> '' AND user_id IS NOT NULL
-  AND value > 0 AND epoch_ms(ts) > 0
-"""
-
-SQL["p3_flatten_payload"] = """
-SELECT event_id, event_type, value,
-       CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-FROM events
-"""
-
-SQL["p4_value_rules"] = """
-SELECT l_orderkey, l_linenumber,
-       l_extendedprice + 10.0 AS price_add,
-       l_extendedprice - 5.0  AS price_sub,
-       l_quantity * 2.0       AS qty_mul,
-       CASE WHEN l_discount <> 0 THEN l_extendedprice / l_discount
-            ELSE l_extendedprice END AS price_div_guarded
-FROM lineitem
-"""
-
 SQL["p5p6p7_config_pipeline"] = """
 SELECT event_id, event_type, value * 1.1 AS price, user_id,
        'replay' AS source_tag, epoch_ms(ts) AS ts_ms
-FROM events
-"""
-
-SQL["p8_conditional_gate"] = """
-SELECT event_id, event_type,
-       CASE WHEN event_type IN ('click', 'view') THEN value * 2.0
-            ELSE value END AS value_t
 FROM events
 """
 
@@ -62,11 +32,6 @@ SQL["p11_wire_json"] = """
 SELECT n_nationkey,
        to_json(struct_pack(n_nationkey := n_nationkey, n_name := n_name)) AS wire
 FROM nation
-"""
-
-SQL["j2_semi_join_auth"] = """
-SELECT c_custkey, c_name FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """
 
 SQL["j2_anti_join_unmatched"] = """

@@ -92,23 +92,6 @@ SELECT cluster_id AS keeper_id, CAST(COUNT(*) AS BIGINT) AS n_members
 FROM comp GROUP BY cluster_id
 """
 
-# Filtered vector search: identical label pre-filter before scoring.
-SQL["knn_filtered_bruteforce"] = f"""
-WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings),
-q AS (SELECT * FROM e WHERE vec_id < 10),
-c AS (SELECT * FROM e WHERE label = 1),
-scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         {_COS.format(a='q.v', b='c.v')} AS cos
-  FROM q JOIN c ON q.vec_id <> c.vec_id)
-SELECT q_id, n_id, cos, rn FROM (
-  SELECT q_id, n_id, cos,
-         row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rn
-  FROM scored
-) WHERE rn <= 5
-"""
-
 # Achlioptas JL projection distortion (late r6): the ±1 sign matrix
 # is md5-derived Python literals (operators/similarity.py::jl_signs)
 # inlined below, so both engines project with the identical matrix;

@@ -54,60 +54,6 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01'
 GROUP BY r_name, n_name
 """
 
-SQL["q6_revenue_delta"] = f"""
-SELECT {_dsum('l_extendedprice * l_discount')} AS revenue,
-       COUNT(*) AS n_items
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-  AND l_discount >= 0.02 AND l_discount <= 0.06
-  AND l_quantity < 24
-"""
-
-SQL["agg_orders_stats"] = f"""
-SELECT o_orderstatus, o_orderpriority,
-       COUNT(*) AS n_orders,
-       {_dsum('o_totalprice')} AS sum_total,
-       MIN(o_totalprice) AS min_total,
-       MAX(o_totalprice) AS max_total,
-       {_dsum('o_totalprice')} / COUNT(*) AS avg_total
-FROM orders
-GROUP BY o_orderstatus, o_orderpriority
-"""
-
-SQL["agg_rollup"] = f"""
-SELECT o_orderstatus, o_orderpriority,
-       COUNT(*) AS n_orders,
-       {_dsum('o_totalprice')} AS sum_total
-FROM orders
-GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-
-SQL["distinct_count_exact"] = """
-SELECT l_returnflag,
-       COUNT(DISTINCT l_partkey) AS n_parts,
-       COUNT(DISTINCT l_suppkey) AS n_supps,
-       COUNT(*) AS n_rows
-FROM lineitem
-GROUP BY l_returnflag
-"""
-
-SQL["window_topk_per_group"] = """
-SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders
-) WHERE rn <= 3
-"""
-
-SQL["order_limit_topk"] = """
-SELECT p_partkey, p_name, p_retailprice
-FROM part
-ORDER BY p_retailprice DESC, p_partkey
-LIMIT 20
-"""
-
 SQL["set_ops_status_migration"] = """
 SELECT o_custkey, 'only_open' AS tag FROM (
   SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
@@ -150,31 +96,12 @@ WINDOW w AS (PARTITION BY o_custkey
              ORDER BY o_totalprice DESC, o_orderkey)
 """
 
-SQL["pivot_event_matrix"] = """
-SELECT user_id,
-       COUNT(CASE WHEN event_type = 'click'    THEN 1 END) AS n_click,
-       COUNT(CASE WHEN event_type = 'view'     THEN 1 END) AS n_view,
-       COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_purchase,
-       COUNT(CASE WHEN event_type = 'signup'   THEN 1 END) AS n_signup,
-       COUNT(CASE WHEN event_type = 'error'    THEN 1 END) AS n_error
-FROM events
-GROUP BY user_id
-"""
-
 SQL["agg_cube_year_status"] = f"""
 SELECT year(o_orderdate) AS order_year, o_orderstatus,
        COUNT(*) AS n_orders,
        {_dsum('o_totalprice')} AS sum_total
 FROM orders
 GROUP BY CUBE (order_year, o_orderstatus)
-"""
-
-SQL["window_running_total"] = """
-SELECT o_custkey, o_orderkey, epoch_ms(o_orderdate) AS o_orderdate_ms,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(27,6)))
-            OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                  ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total
-FROM orders
 """
 
 SQL["orders_by_year"] = f"""
@@ -205,15 +132,6 @@ JOIN (
   SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(27,6))) AS qty
   FROM lineitem GROUP BY l_orderkey HAVING qty > 300
 ) b ON o_orderkey = b.l_orderkey
-"""
-
-SQL["q2_min_cost_supplier"] = """
-SELECT s_suppkey, s_name, n_name, s_acctbal
-FROM supplier
-JOIN (SELECT s_nationkey, MIN(s_acctbal) AS min_bal
-      FROM supplier GROUP BY s_nationkey) m USING (s_nationkey)
-JOIN nation ON s_nationkey = n_nationkey
-WHERE s_acctbal = min_bal
 """
 
 SQL["q7_nation_volume"] = f"""
@@ -263,30 +181,6 @@ WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 """
 
-SQL["q8_nation_market_share"] = """
-SELECT year(o_orderdate) AS order_year,
-       CAST(SUM(CASE WHEN n_name = 'NATION_1'
-                     THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))
-                     ELSE CAST(0 AS DECIMAL(27,6)) END) AS DOUBLE)
-       / CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))) AS DOUBLE)
-       AS nation1_share,
-       COUNT(*) AS n_items
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN nation   ON s_nationkey = n_nationkey
-GROUP BY 1
-"""
-
-SQL["q12_late_shipment_priority"] = """
-SELECT year(o_orderdate) AS order_year,
-       COUNT(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 END) AS late_critical,
-       COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 END) AS late_other
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY
-GROUP BY 1
-"""
-
 SQL["q14_promo_revenue_share"] = """
 SELECT CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
                      THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))
@@ -297,15 +191,6 @@ SELECT CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_shipdate <  TIMESTAMP '1996-07-01'
-"""
-
-SQL["q19_disjunctive_filter"] = f"""
-SELECT {_dsum('l_extendedprice * (1 - l_discount)')} AS revenue,
-       COUNT(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size <= 15 AND l_quantity >= 10)
-   OR (p_brand = 'Brand#2' AND p_size <= 30 AND l_quantity >= 20)
-   OR (p_brand = 'Brand#3' AND p_size <= 45 AND l_quantity >= 30)
 """
 
 SQL["q22_idle_customers"] = f"""
@@ -358,31 +243,6 @@ ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """
 
-SQL["q13_customer_distribution"] = """
-SELECT c_count, COUNT(*) AS custdist FROM (
-  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-  FROM customer
-  LEFT JOIN (SELECT * FROM orders WHERE o_orderstatus <> 'F') o
-    ON c_custkey = o_custkey
-  GROUP BY c_custkey)
-GROUP BY c_count
-"""
-
-SQL["q17_small_qty_revenue"] = """
-WITH t AS (
-  SELECT l_partkey,
-         0.2 * (CAST(SUM(CAST(l_quantity AS DECIMAL(27,6))) AS DOUBLE)
-                / COUNT(*)) AS qty_threshold
-  FROM lineitem
-  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = 'Brand#1')
-  GROUP BY l_partkey)
-SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(27,6))) AS DOUBLE) / 7.0
-         AS avg_yearly,
-       COUNT(*) AS n_lines
-FROM lineitem JOIN t ON lineitem.l_partkey = t.l_partkey
-WHERE l_quantity < qty_threshold
-"""
-
 SQL["orders_cohort_matrix"] = """
 WITH f AS (
   SELECT o_custkey, year(MIN(o_orderdate)) AS cohort_year
@@ -392,34 +252,6 @@ SELECT cohort_year, year(o_orderdate) AS order_year,
        COUNT(DISTINCT orders.o_custkey) AS n_active_custs
 FROM orders JOIN f ON orders.o_custkey = f.o_custkey
 GROUP BY cohort_year, year(o_orderdate)
-"""
-
-# Exact-moment Pearson: identical integer-decimal sums, string-routed
-# decimal→double casts, identical op sequence — bit-exact correlation.
-SQL["lineitem_price_qty_corr"] = """
-WITH r AS (
-  SELECT l_returnflag,
-         CAST(round(l_quantity * 100.0) AS DECIMAL(10,0)) AS x,
-         CAST(round(l_extendedprice * 100.0) AS DECIMAL(12,0)) AS y
-  FROM lineitem),
-g AS (
-  SELECT l_returnflag, COUNT(*) AS n,
-         SUM(x) AS sx, SUM(y) AS sy,
-         SUM(x * x) AS sxx, SUM(y * y) AS syy,
-         SUM(x * y) AS sxy
-  FROM r GROUP BY l_returnflag)
-SELECT l_returnflag, n,
-       ((CAST(CAST(sxy AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
-         - (CAST(CAST(sx AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE))
-           * (CAST(CAST(sy AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)))
-        / sqrt((CAST(CAST(sxx AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
-                - (CAST(CAST(sx AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(CAST(sx AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)))
-               * (CAST(CAST(syy AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
-                  - (CAST(CAST(sy AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE))
-                    * (CAST(CAST(sy AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)))))
-         AS corr_qty_price
-FROM g
 """
 
 # TPC-H Q15 shape: decimal-exact revenue, max kept via a window over
@@ -577,9 +409,8 @@ SELECT l_orderkey, l_linenumber, promo_orderkey,
 FROM a JOIN b ON a_s <= b_s + 30 AND b_s <= a_e
 """
 
-# --- round-13 additions (oracle-backed, queued in
-# ROTATION_CANDIDATES_R13; plans/queries.py docstrings carry the
-# operator rationale) -------------------------------------------------
+# --- round-13 additions (the query docstrings carry the operator
+# rationale) -----------------------------------------------------------
 
 # Benford first-digit conformance. First digit via floor() on BOTH
 # engines: DuckDB's double→int CAST rounds half-to-even while Spark

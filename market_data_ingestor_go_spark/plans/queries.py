@@ -28,57 +28,48 @@ from pyspark.sql import DataFrame, SparkSession
 
 # Shared helpers re-exported for tests and downstream modules.
 from .common import (  # noqa: F401
-    _PQ_ENC_ROOT, _davg, _dstr, _dsum, _events, _pearson_from_moments, _pq_enc_root, _slope_from_moments, _t)
+    _PQ_ENC_ROOT, _davg, _dstr, _dsum, _events, _pearson_from_moments,
+    _pq_enc_root, _slope_from_moments, _t)
 from .queries_warehouse import (  # noqa: F401
-    agg_cube_year_status, agg_orders_stats, agg_rollup,
-    approx_distinct_sketch, bloom_semi_join_agg, customer_revenue_pareto,
-    customer_reorder_rate,
-    customer_revenue_pareto_approx, customer_yoy_sign_test, customer_sorted_neighborhood_pairs,
-    distinct_count_exact,
-    distinct_rollup_hll, fk_orphan_audit, fuzzy_name_block_join,
-    lineitem_qty_price_spearman, nation_supplier_hhi,
-    orders_daily_autocorr, orders_fulfillment_lag_approx,
-    orders_open_backlog_days,
-    orders_revenue_runs_test, orders_theilsen_trend,
-    interval_overlap_shipments, lineitem_price_qty_corr, order_limit_topk,
-    orders_benford_test, orders_by_year, orders_cohort_matrix,
+    agg_cube_year_status, approx_distinct_sketch, bloom_semi_join_agg,
+    customer_reorder_rate, customer_revenue_pareto,
+    customer_revenue_pareto_approx, customer_sorted_neighborhood_pairs,
+    customer_yoy_sign_test, distinct_rollup_hll, fk_orphan_audit,
+    fuzzy_name_block_join, interval_overlap_shipments,
+    lineitem_qty_price_spearman, nation_supplier_hhi, orders_benford_test,
+    orders_by_year, orders_cohort_matrix, orders_daily_autocorr,
     orders_dq_profile, orders_dq_profile_approx, orders_fulfillment_lag,
-    orders_price_skew_kurtosis, part_brand_price_anova,
-    part_brand_return_rates, pivot_event_matrix, q10_returned_items,
-    q11_important_stock, q12_late_shipment_priority,
-    q13_customer_distribution, q14_promo_revenue_share, q15_top_supplier,
-    q16_supplier_part_counts, q17_small_qty_revenue, q18_large_orders,
-    q19_disjunctive_filter, q1_pricing_summary, q20_part_promotion,
-    q21_sole_late_supplier, q22_idle_customers, q2_min_cost_supplier,
-    q3_top_revenue_orders, q4_order_priority, q5_region_nation_revenue,
-    q6_revenue_delta, q7_nation_volume, q8_nation_market_share,
-    q9_product_profit, set_ops_all_variants, set_ops_status_migration,
-    skew_salted_agg, sql_api_pricing_summary, string_functions,
-    unpivot_event_matrix, window_rank_stats, window_running_total,
-    window_topk_per_group)
+    orders_fulfillment_lag_approx, orders_open_backlog_days,
+    orders_price_skew_kurtosis, orders_revenue_runs_test,
+    orders_theilsen_trend, part_brand_price_anova, part_brand_return_rates,
+    q10_returned_items, q11_important_stock, q14_promo_revenue_share,
+    q15_top_supplier, q16_supplier_part_counts, q18_large_orders,
+    q1_pricing_summary, q20_part_promotion, q21_sole_late_supplier,
+    q22_idle_customers, q3_top_revenue_orders, q4_order_priority,
+    q5_region_nation_revenue, q7_nation_volume, q9_product_profit,
+    set_ops_all_variants, set_ops_status_migration, skew_salted_agg,
+    sql_api_pricing_summary, string_functions, unpivot_event_matrix,
+    window_rank_stats)
 from .queries_pipeline import (  # noqa: F401
     a1_latest_per_key, a1_latest_with_ttl, j2_anti_join_unmatched,
-    j2_semi_join_auth, p10_api_key_hash, p11_wire_json,
-    p1_validation_filter, p3_flatten_payload, p4_value_rules,
-    p5p6p7_config_pipeline, p8_conditional_gate, p9_exchange_enrichment)
+    p10_api_key_hash, p11_wire_json, p5p6p7_config_pipeline,
+    p9_exchange_enrichment)
 from .queries_events import (  # noqa: F401
     asof_join_purchase_click, event_gaps, events_cohort_retention,
     events_conversion_latency, events_conversion_latency_approx,
     events_cusum_bucketed, events_cusum_changepoint, events_drawdown,
-    events_ewma_chunked, events_ewma_smooth, events_funnel_conversion,
-    events_gapfill_interpolate, events_gapfill_locf,
-    events_hourly_seasonality, events_kruskal_value_test,
-    events_mad_outliers, events_markov_attribution,
-    events_purchase_rate_ztest,
-    events_mannwhitney_value_test, events_markov_transitions,
-    events_motif_search, events_moving_stats, events_ohlc_bars,
-    events_pair_correlation, events_rfm_segments,
-    events_rolling_active_users, events_session_funnel_paths,
-    events_sessionization, events_trend_slope, events_tumbling_window,
-    events_twap, events_type_cooccurrence_lift, events_user_growth,
-    events_user_growth_accounting, events_variant_extract, events_vwap,
-    events_zscore_outliers, range_join_click_context, value_percentiles,
-    value_quantiles_kll)
+    events_ewma_chunked, events_ewma_smooth, events_gapfill_interpolate,
+    events_gapfill_locf, events_hourly_seasonality,
+    events_kruskal_value_test, events_mad_outliers,
+    events_mannwhitney_value_test, events_markov_attribution,
+    events_markov_transitions, events_motif_search, events_moving_stats,
+    events_ohlc_bars, events_pair_correlation, events_purchase_rate_ztest,
+    events_rfm_segments, events_rolling_active_users,
+    events_session_funnel_paths, events_sessionization, events_trend_slope,
+    events_tumbling_window, events_twap, events_type_cooccurrence_lift,
+    events_user_growth, events_user_growth_accounting,
+    events_variant_extract, events_vwap, events_zscore_outliers,
+    range_join_click_context, value_percentiles, value_quantiles_kll)
 from .queries_docs import (  # noqa: F401
     _BM25_IDX, _bm25_index_path, _source_shingles, contamination_check,
     corpus_datacard, corpus_mix, corpus_snapshot_diff,
@@ -87,10 +78,9 @@ from .queries_docs import (  # noqa: F401
     dedup_fingerprint, doc_bm25_from_index, doc_bm25_topk,
     doc_bpe_token_real, doc_containment_pairs, doc_length_buckets,
     doc_lm_quality, doc_ngram_novelty, doc_pmi_collocations,
-    doc_quality_signals, doc_repetition_signals, doc_rolling_fingerprint,
-    doc_sparse_cosine_neardup, doc_top_terms,
-    docs_lang_source_independence, docs_source_lang_diversity,
-    docs_stratified_kfold,
+    doc_quality_signals, doc_repetition_signals, doc_sparse_cosine_neardup,
+    doc_top_terms, docs_lang_source_independence,
+    docs_source_lang_diversity, docs_stratified_kfold,
     docs_weighted_sample, dsir_importance_weights, dup_span_extents,
     dup_span_scrub, eval_leak_scrub, eval_leak_spans, hybrid_rrf_ann,
     hybrid_rrf_retrieval, lm_quality_bands, minhash_neardup,
@@ -102,52 +92,24 @@ from .queries_docs import (  # noqa: F401
     source_mix_weights, source_overlap_exact, source_overlap_theta,
     source_quality_floor, source_quality_floor_approx, source_tv_drift,
     stratified_resample_stats, text_bpe_token_estimate, text_langid,
-    text_quality_score, text_repetition, text_token_stats,
-    token_frequencies, token_heavy_hitters_sketch, train_test_split_hash,
-    winnow_fingerprint_neardup)
+    text_repetition, token_frequencies, token_heavy_hitters_sketch,
+    train_test_split_hash, winnow_fingerprint_neardup)
 from .queries_vectors import (  # noqa: F401
-    _COV_MEMO, _PQ_BOOKS, _PQ_ENC, _SEM_CENTS, _cov_once, _pq_codebooks,
-    _pq_index, _sem_centroids, audio_afp_neardup,
-    embedding_correlation_matrix, embedding_cosine_neardup,
-    embedding_covariance_arrow_q, embedding_covariance_matrix,
-    embedding_lsh_neardup, embedding_norm_stats, embedding_outlier_docs,
-    embedding_pca_spectrum, embedding_quantize_stats, image_dedup_keepers,
-    image_dhash_neardup, jl_projection_distortion, knn_ann_hyperplane,
-    knn_ann_ivf, knn_ann_pq, knn_ann_pq_serve, knn_ann_pq_train,
-    knn_bruteforce, knn_filtered_bruteforce, multimodal_binary_meta,
-    semantic_dedup_clusters, semdedup_keepers, source_embedding_drift,
-    video_frame_neardup)
+    _COV_MEMO, _PQ_BOOKS, _SEM_CENTS, _cov_once, _pq_codebooks,
+    _sem_centroids, audio_afp_neardup, embedding_correlation_matrix,
+    embedding_cosine_neardup, embedding_covariance_arrow_q,
+    embedding_covariance_matrix, embedding_lsh_neardup,
+    embedding_norm_stats, embedding_outlier_docs, embedding_pca_spectrum,
+    embedding_quantize_stats, image_dedup_keepers, image_dhash_neardup,
+    jl_projection_distortion, knn_ann_hyperplane, knn_ann_pq,
+    knn_bruteforce, multimodal_binary_meta, semantic_dedup_clusters,
+    semdedup_keepers, source_embedding_drift, video_frame_neardup)
 
 
-
-# The driver's correctness gate checks the FIRST 50 entries of
-# queries() (CORRECTNESS_r01 stopped at exactly entry 50, leaving the
-# whole §2.11 extension surface unverified). QUERIES is therefore a
-# curated, ordered window of exactly ≤50 entries: the driver-mandated
-# LLM-pipeline operators first, then the reference-parity shapes, then
-# the analytics shapes — with near-duplicate plan shapes demoted to
-# EXTRA_QUERIES (still run by tests/test_parity.py, just not declared
-# to the driver).
-#
-# ROUND-7 ROTATION (supersedes the round-6 one, same mechanics): the
-# 34 ROTATION_CANDIDATES_R7 queries — the 22 round-2 window
-# re-curation demotions plus the 12 late-r6 additions, i.e. every
-# remaining oracle-backed query that had NEVER held a green external
-# CORRECTNESS row — rotate IN; 34 long-green shapes rotate OUT to
-# EXTRA_QUERIES, each leaving an in-window twin of its plan shape
-# (twin noted per entry below; all stay parity-tested locally every
-# round). The two rows-only sketch readouts (CMS heavy-hitters, HLL
-# rollup) rotate out in favor of their exact oracle-backed twins
-# (token_frequencies, agg_cube_year_status), so the window is now
-# 50/50 hash-checked — zero rows-only entries.
+# The driver checks the FIRST 50 entries of queries() against their
+# DuckDB oracles, so QUERIES is the declared window: at most 50
+# entries, each one oracle-backed (test_driver_window_is_at_most_50).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # -- strong representatives KEPT in-window through the round-7
-    #    rotation (each anchors an operator family whose siblings
-    #    rotated out): dedup/graph/contamination/fingerprint core,
-    #    exact + filtered kNN, multimodal metadata, config-compiled
-    #    transforms, keyed latest-state, fuzzy blocking, hypertable
-    #    gapfill, exact moments, chunked motif windows, range join,
-    #    skew-salted agg.
     "dedup_cluster_keepers": dedup_cluster_keepers,
     "contamination_check": contamination_check,
     "knn_bruteforce": knn_bruteforce,
@@ -155,32 +117,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "a1_latest_per_key": a1_latest_per_key,
     "events_gapfill_interpolate": events_gapfill_interpolate,
     "skew_salted_agg": skew_salted_agg,
-    # -- r7-rotated shapes KEPT in-window (anchors for ordered-frame
-    #    windows; their demoted siblings note them as twins).
     "events_moving_stats": events_moving_stats,
-    # -- ROTATED IN (round 9): all nine ROTATION_CANDIDATES_R8 —
-    #    the round-8 TPC-H shape completion, the two late-r8 curation
-    #    operators, and the retrieval/KS family whose oracles landed
-    #    in round 9 — externally verified for the first time this
-    #    round. Nine twice-green r7 shapes demoted in exchange (twin
-    #    noted per entry in EXTRA_QUERIES).
     "q16_supplier_part_counts": q16_supplier_part_counts,
     "q20_part_promotion": q20_part_promotion,
-    # -- ROTATED IN (round 10): both ROTATION_CANDIDATES_R9 — the
-    #    materialized-index BM25 serve path and the (r10-fixed,
-    #    TakeOrdered top-k) PMI collocation extraction — externally
-    #    verified for the first time this round. Two thrice-green
-    #    (r7+r8+r9) shapes demoted in exchange (twin noted per entry
-    #    in EXTRA_QUERIES).
     "doc_bm25_from_index": doc_bm25_from_index,
-    # -- ROTATED IN (round 12): all twelve ROTATION_CANDIDATES_R11 —
-    #    the round-11 build (decontamination scrub ×2, crawl-delta
-    #    upsert, winnowing near-dup, χ² drift, Gopher quality +
-    #    repetition signals, cohort retention, Markov transitions,
-    #    CUSUM changepoint, embedding covariance + correlation) —
-    #    collecting their first external CORRECTNESS row this round.
-    #    Twelve long-green (≥3 external rounds each) shapes demoted in
-    #    exchange (twin noted per entry in EXTRA_QUERIES).
     "eval_leak_scrub": eval_leak_scrub,
     "crawl_delta_apply": crawl_delta_apply,
     "winnow_fingerprint_neardup": winnow_fingerprint_neardup,
@@ -193,15 +133,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "doc_quality_signals": doc_quality_signals,
     "embedding_covariance_matrix": embedding_covariance_matrix,
     "embedding_correlation_matrix": embedding_correlation_matrix,
-    # -- ROTATED IN (round 13): all nine ROTATION_CANDIDATES_R12 —
-    #    the round-12 build (perceptual image dHash near-dup + CC
-    #    keepers, video frame near-dup, bucket-grain streaming CUSUM,
-    #    RFM segmentation, triangle counting over the production pair
-    #    graph, the interval×interval overlap join, per-source quality
-    #    floors, the per-column DQ profile) — collecting their first
-    #    external CORRECTNESS row this round. Nine long-green (≥3
-    #    external rounds each) shapes demoted in exchange (twin noted
-    #    per entry in EXTRA_QUERIES).
     "image_dhash_neardup": image_dhash_neardup,
     "image_dedup_keepers": image_dedup_keepers,
     "events_cusum_bucketed": events_cusum_bucketed,
@@ -211,15 +142,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "interval_overlap_shipments": interval_overlap_shipments,
     "source_quality_floor": source_quality_floor,
     "orders_dq_profile": orders_dq_profile,
-    # -- ROTATED IN (round 14): all eight ROTATION_CANDIDATES_R13 —
-    #    the round-13 analytics build (Benford first-digit
-    #    conformance, session path mining, per-source Gini
-    #    concentration, user-grain co-occurrence lift, χ² lang×source
-    #    independence, per-group embedding outlier screen, rolling
-    #    7-day distinct actives, one-way ANOVA over brands) —
-    #    collecting their first external CORRECTNESS row this round.
-    #    Eight long-green (≥3 external rounds each) shapes demoted in
-    #    exchange (twin noted per entry in EXTRA_QUERIES).
     "orders_benford_test": orders_benford_test,
     "events_session_funnel_paths": events_session_funnel_paths,
     "source_gini_concentration": source_gini_concentration,
@@ -228,16 +150,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_outlier_docs": embedding_outlier_docs,
     "events_rolling_active_users": events_rolling_active_users,
     "part_brand_price_anova": part_brand_price_anova,
-    # -- ROTATED IN (round 15): all ten ROTATION_CANDIDATES_R14 —
-    #    the round-14 analytics build (FK orphan audit, order
-    #    fulfillment lag, Wilson-interval return-rate ranking,
-    #    weighted systematic sampling, exact skew/kurtosis moments,
-    #    user growth accounting, Pareto revenue concentration,
-    #    view→purchase conversion latency, Mann–Whitney U test,
-    #    Gini–Simpson lang diversity) — collecting their first
-    #    external CORRECTNESS row this round. Ten long-green (≥6
-    #    external rounds each) shapes demoted in exchange (twin noted
-    #    per entry in EXTRA_QUERIES).
     "fk_orphan_audit": fk_orphan_audit,
     "orders_fulfillment_lag": orders_fulfillment_lag,
     "part_brand_return_rates": part_brand_return_rates,
@@ -252,219 +164,147 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 assert len(QUERIES) <= 50, "driver correctness window is 50 queries"
 
-# Near-duplicate plan shapes pruned from the driver window (their
-# operator classes stay evidenced by a QUERIES twin) — still fully
-# parity-tested against their DuckDB oracles in tests/test_parity.py.
+# Registered operators outside the driver window. Oracle-backed entries
+# are parity-tested against DuckDB in tests/test_parity.py; rows-only
+# entries carry their reason inline and are smoke-run there.
 EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "source_overlap_theta": source_overlap_theta,    # rows-only (theta ∩/∪)
-    "doc_bpe_token_real": doc_bpe_token_real,        # rows-only (trained)
-    "value_quantiles_kll": value_quantiles_kll,      # rows-only (KLL, randomized)
-    "pack_greedy_packing": pack_greedy_packing,      # rows-only (applyInPandas)
-    # round-5 rotation: long-green shapes demoted so the 13 round-3
-    # operators above could enter the driver's 50-query window — each
-    # keeps an in-window twin of its plan shape.
-    "p11_wire_json": p11_wire_json,                  # to_json ⊂ p3 family
-    "q2_min_cost_supplier": q2_min_cost_supplier,    # corr-subquery ⊂ q21 family
-    "q3_top_revenue_orders": q3_top_revenue_orders,  # top-k ⊂ window_topk_per_group
-    "q6_revenue_delta": q6_revenue_delta,            # filter-agg ⊂ q1
-    "q8_nation_market_share": q8_nation_market_share,  # ratio-agg ⊂ q5 family
-    "q18_large_orders": q18_large_orders,            # having ⊂ agg_orders_stats
-    "q21_sole_late_supplier": q21_sole_late_supplier,  # exists/anti ⊂ j2 pair
-    "agg_rollup": agg_rollup,                        # grouping-sets ⊂ cube (EXTRA)
-    "distinct_count_exact": distinct_count_exact,    # ⊂ agg_orders_stats
+    "source_overlap_theta": source_overlap_theta,  # rows-only (theta ∩/∪)
+    "doc_bpe_token_real": doc_bpe_token_real,  # rows-only (trained)
+    "value_quantiles_kll": value_quantiles_kll,  # rows-only (KLL, randomized)
+    "pack_greedy_packing": pack_greedy_packing,  # rows-only (applyInPandas)
+    "p11_wire_json": p11_wire_json,
+    "q3_top_revenue_orders": q3_top_revenue_orders,
+    "q18_large_orders": q18_large_orders,
+    "q21_sole_late_supplier": q21_sole_late_supplier,
     "approx_distinct_sketch": approx_distinct_sketch,  # rows-only (HLL)
-    "pivot_event_matrix": pivot_event_matrix,        # inverse in unpivot (EXTRA)
-    "a1_latest_with_ttl": a1_latest_with_ttl,        # ⊂ a1_latest_per_key
-    "events_tumbling_window": events_tumbling_window,  # ⊂ events_ohlc_bars
-    "events_ewma_chunked": events_ewma_chunked,      # rows-only (r6 chunked path)
-    "knn_ann_pq_train": knn_ann_pq_train,            # rows-only (codebook build)
-    "knn_ann_pq_serve": knn_ann_pq_serve,            # rows-only (indexed serve)
-    # round-6 rotation: 25 long-green shapes demoted so every
-    # ROTATION_CANDIDATES_R6 query (the whole late-r5 build) gets its
-    # first external CORRECTNESS row — in-window twin noted per entry.
-    "dedup_exact": dedup_exact,                      # ⊂ dedup_fingerprint + passage_dedup_scrub
-    "ngram_jaccard_neardup": ngram_jaccard_neardup,  # pair-join ⊂ minhash_neardup
-    "simhash_neardup": simhash_neardup,              # block equi-join ⊂ minhash_neardup
-    "text_quality_score": text_quality_score,        # Column exprs ⊂ text_token_stats
-    "text_langid": text_langid,                      # Column exprs ⊂ text_token_stats
-    "embedding_lsh_neardup": embedding_lsh_neardup,  # ⊂ embedding_cosine_neardup (exact twin)
-    "embedding_norm_stats": embedding_norm_stats,    # array exprs ⊂ embedding_quantize_stats
-    "knn_ann_hyperplane": knn_ann_hyperplane,        # ANN ⊂ knn_bruteforce + knn_filtered
-    "knn_ann_ivf": knn_ann_ivf,                      # ANN ⊂ knn_bruteforce + knn_filtered
-    "knn_ann_pq": knn_ann_pq,                        # ANN ⊂ knn_bruteforce + knn_filtered
-    "p1_validation_filter": p1_validation_filter,    # filter ⊂ p5p6p7 pipeline
-    "p3_flatten_payload": p3_flatten_payload,        # nested access ⊂ events_variant_extract
-    "p4_value_rules": p4_value_rules,                # config rules ⊂ p5p6p7_config_pipeline
-    "p8_conditional_gate": p8_conditional_gate,      # config gate ⊂ p5p6p7_config_pipeline
-    "p10_api_key_hash": p10_api_key_hash,            # hash fn ⊂ train_test_split_hash
-    "j2_semi_join_auth": j2_semi_join_auth,          # semi-join ⊂ bloom_semi_join_agg (EXISTS)
-    "q5_region_nation_revenue": q5_region_nation_revenue,  # multi-join agg ⊂ q15_top_supplier
-    "agg_orders_stats": agg_orders_stats,            # multi-agg ⊂ orders_cohort_matrix
-    "window_topk_per_group": window_topk_per_group,  # WindowGroupLimit ⊂ events_motif_search
-    "set_ops_status_migration": set_ops_status_migration,  # ∩/∪ ⊂ source_overlap_exact
-    "events_ohlc_bars": events_ohlc_bars,            # time-bucket agg ⊂ events_twap/gapfill
-    "pack_sequences_chunked": pack_sequences_chunked,  # training prep ⊂ shard_manifest
-    "events_sessionization": events_sessionization,  # ordered key window ⊂ events_gapfill_locf
-    "asof_join_purchase_click": asof_join_purchase_click,  # ⊂ range_join_click_context
-    "value_percentiles": value_percentiles,          # exact ranks ⊂ doc_length_buckets
-    # rows-only by design (engine-trained centroids); exact twin
-    # semantic_dedup_clusters stays parity-tested in EXTRA
+    "a1_latest_with_ttl": a1_latest_with_ttl,
+    "events_tumbling_window": events_tumbling_window,
+    "events_ewma_chunked": events_ewma_chunked,  # rows-only (chunked path)
+    "dedup_exact": dedup_exact,
+    "ngram_jaccard_neardup": ngram_jaccard_neardup,
+    "simhash_neardup": simhash_neardup,  # rows-only (LSH buckets)
+    "text_langid": text_langid,
+    "embedding_lsh_neardup": embedding_lsh_neardup,  # rows-only (LSH buckets)
+    "embedding_norm_stats": embedding_norm_stats,
+    "knn_ann_hyperplane": knn_ann_hyperplane,  # rows-only (ANN)
+    "knn_ann_pq": knn_ann_pq,  # rows-only (trained codebook)
+    "p10_api_key_hash": p10_api_key_hash,
+    "q5_region_nation_revenue": q5_region_nation_revenue,
+    "set_ops_status_migration": set_ops_status_migration,
+    "events_ohlc_bars": events_ohlc_bars,
+    "pack_sequences_chunked": pack_sequences_chunked,
+    "events_sessionization": events_sessionization,
+    "asof_join_purchase_click": asof_join_purchase_click,
+    "value_percentiles": value_percentiles,
+    # rows-only by design (engine-trained centroids); the exact
+    # semantic_dedup_clusters is oracle-backed
     "semdedup_keepers": semdedup_keepers,
-    # round-7 rotation: 34 long-green shapes demoted so every
-    # ROTATION_CANDIDATES_R7 query (the round-2 demotions + the whole
-    # late-r6 build) gets its first external CORRECTNESS row —
-    # in-window twin noted per entry; all stay parity-tested locally.
-    "dedup_fingerprint": dedup_fingerprint,          # normalized fp ⊂ corpus_datacard
-    "minhash_neardup": minhash_neardup,              # banded minhash ⊂ contamination_check
-    "semantic_dedup_clusters": semantic_dedup_clusters,  # CC ⊂ dedup_cluster_keepers + neardup_pagerank
-    "text_token_stats": text_token_stats,            # token exprs ⊂ token_frequencies
-    "text_repetition": text_repetition,              # token-stream exprs ⊂ doc_lm_quality
-    "text_bpe_token_estimate": text_bpe_token_estimate,  # token exprs ⊂ token_frequencies
-    "doc_rolling_fingerprint": doc_rolling_fingerprint,  # ⊂ rolling_fingerprint_neardup (kept)
-    "doc_top_terms": doc_top_terms,                  # rank-per-group ⊂ window_rank_stats + token_frequencies
-    "doc_length_buckets": doc_length_buckets,        # exact ntile ⊂ lm_quality_bands
-    "pii_scrub_stats": pii_scrub_stats,              # regexp surface ⊂ string_functions
-    "train_test_split_hash": train_test_split_hash,  # md5 coin ⊂ corpus_mix + stratified_resample_stats
-    "corpus_upsample_stats": corpus_upsample_stats,  # weighting ⊂ corpus_mix
-    "source_cap_sample": source_cap_sample,          # per-key top-k ⊂ order_limit_topk + corpus_datacard
-    "shard_manifest": shard_manifest,                # cum window ⊂ window_running_total
-    "curation_pipeline_summary": curation_pipeline_summary,  # signal composition ⊂ corpus_datacard
-    "embedding_cosine_neardup": embedding_cosine_neardup,  # exact cosine ⊂ knn_bruteforce + embedding_outlier_docs (rotated in r14; exact-decimal centroid + fold distance)
-    "embedding_quantize_stats": embedding_quantize_stats,  # array exprs ⊂ embedding_outlier_docs (rotated in r14; dim-exploded decimal centroid aggregate)
-    "source_overlap_exact": source_overlap_exact,    # ∩/∪ ⊂ set_ops_all_variants
-    "bloom_semi_join_agg": bloom_semi_join_agg,      # EXISTS semi ⊂ q4_order_priority
-    "token_heavy_hitters_sketch": token_heavy_hitters_sketch,  # rows-only CMS; exact twin token_frequencies IN-window
-    "distinct_rollup_hll": distinct_rollup_hll,      # rows-only HLL; grouping-sets distinct ⊂ agg_cube_year_status
-    "p9_exchange_enrichment": p9_exchange_enrichment,  # broadcast dim join ⊂ q9_product_profit (broadcast nation dim)
-    "j2_anti_join_unmatched": j2_anti_join_unmatched,  # anti join ⊂ q22_idle_customers
-    "q1_pricing_summary": q1_pricing_summary,        # plan ≡ sql_api_pricing_summary
-    "q15_top_supplier": q15_top_supplier,            # agg-join-topk ⊂ q9_product_profit + order_limit_topk
-    "events_variant_extract": events_variant_extract,  # VARIANT path ⊂ events_vwap
-    "events_gapfill_locf": events_gapfill_locf,      # grid/join/window ⊂ events_gapfill_interpolate (kept)
-    "events_twap": events_twap,                      # weighted mean ⊂ events_vwap + events_gapfill_interpolate
-    "events_ewma_smooth": events_ewma_smooth,        # rolling stats ⊂ events_moving_stats + window_running_total
-    "events_zscore_outliers": events_zscore_outliers,  # moments ⊂ events_pair_correlation (kept)
-    "events_trend_slope": events_trend_slope,        # moments ⊂ events_pair_correlation (kept)
-    "lineitem_price_qty_corr": lineitem_price_qty_corr,  # moments ⊂ events_pair_correlation (kept)
-    "events_funnel_conversion": events_funnel_conversion,  # first-touch ⊂ events_user_growth
-    "orders_cohort_matrix": orders_cohort_matrix,    # cohort histogram ⊂ q16_supplier_part_counts (count-of-counts)
-    # round-9 rotation: 9 twice-green (r7+r8) shapes demoted so every
-    # ROTATION_CANDIDATES_R8 query gets its first external
-    # CORRECTNESS row — in-window twin noted per entry; all stay
-    # parity-tested locally every round.
-    # round-9 addition: ANN-armed hybrid fusion — rows-only (IVF cell
-    # assignment is engine-side, the knn_ann_* precedent); overlap
-    # floor vs the exact hybrid tested in tests/test_retrieval.py
+    "dedup_fingerprint": dedup_fingerprint,
+    "minhash_neardup": minhash_neardup,
+    "semantic_dedup_clusters": semantic_dedup_clusters,
+    "text_repetition": text_repetition,
+    "text_bpe_token_estimate": text_bpe_token_estimate,
+    "doc_top_terms": doc_top_terms,
+    "doc_length_buckets": doc_length_buckets,
+    "pii_scrub_stats": pii_scrub_stats,
+    "train_test_split_hash": train_test_split_hash,
+    "corpus_upsample_stats": corpus_upsample_stats,
+    "source_cap_sample": source_cap_sample,
+    "shard_manifest": shard_manifest,
+    "curation_pipeline_summary": curation_pipeline_summary,
+    "embedding_cosine_neardup": embedding_cosine_neardup,
+    "embedding_quantize_stats": embedding_quantize_stats,
+    "source_overlap_exact": source_overlap_exact,
+    "bloom_semi_join_agg": bloom_semi_join_agg,
+    # rows-only (CMS)
+    "token_heavy_hitters_sketch": token_heavy_hitters_sketch,
+    "distinct_rollup_hll": distinct_rollup_hll,  # rows-only (HLL)
+    "p9_exchange_enrichment": p9_exchange_enrichment,
+    "j2_anti_join_unmatched": j2_anti_join_unmatched,
+    "q1_pricing_summary": q1_pricing_summary,
+    "q15_top_supplier": q15_top_supplier,
+    "events_variant_extract": events_variant_extract,
+    "events_gapfill_locf": events_gapfill_locf,
+    "events_twap": events_twap,
+    "events_ewma_smooth": events_ewma_smooth,
+    "events_zscore_outliers": events_zscore_outliers,
+    "events_trend_slope": events_trend_slope,
+    "orders_cohort_matrix": orders_cohort_matrix,
+    # rows-only: IVF cell assignment is engine-side; overlap floor
+    # vs the exact hybrid tested in tests/test_retrieval.py
     "hybrid_rrf_ann": hybrid_rrf_ann,
-    # round-10 rotation: 2 thrice-green (r7+r8+r9) shapes demoted so
-    # both ROTATION_CANDIDATES_R9 queries get their first external
-    # CORRECTNESS row — in-window twin noted per entry; both stay
-    # parity-tested locally every round.
-    "orders_by_year": orders_by_year,                # year agg ⊂ agg_cube_year_status (rollup of the same grain)
-    "window_running_total": window_running_total,    # cumulative window ⊂ events_user_growth (day-grain running totals) + events_moving_stats (rolling frames)
-    "q4_order_priority": q4_order_priority,          # EXISTS semi ⊂ q20_part_promotion (IN semi, rotated in)
-    "q7_nation_volume": q7_nation_volume,            # multi-join year agg ⊂ q9_product_profit (rotated in)
-    "q14_promo_revenue_share": q14_promo_revenue_share,  # ratio-vs-total agg ⊂ q11_important_stock (rotated in)
-    "q17_small_qty_revenue": q17_small_qty_revenue,  # per-key-threshold agg-join ⊂ q20_part_promotion (rotated in)
-    "q22_idle_customers": q22_idle_customers,        # NOT-IN anti ⊂ q16_supplier_part_counts (rotated in)
-    "event_gaps": event_gaps,                        # lag/gaps-and-islands ⊂ dup_span_extents (rotated in)
-    "window_rank_stats": window_rank_stats,          # rank windows ⊂ doc_bm25_topk top-k + events_mad_outliers rank-median (rotated in)
-    "source_tv_drift": source_tv_drift,              # pairwise common-denominator drift ⊂ source_ks_drift (rotated in)
-    "dsir_importance_weights": dsir_importance_weights,  # broadcast-model decimal-mean scoring ⊂ doc_lm_quality (kept)
-    # round-11 rotation: 7 four-times-green (r7+r8+r9+r10) shapes
-    # demoted so every ROTATION_CANDIDATES_R10 query gets its first
-    # external CORRECTNESS row — in-window twin noted per entry; all
-    # stay parity-tested locally every round.
-    "q10_returned_items": q10_returned_items,        # multi-join agg-topk ⊂ q9_product_profit (multi-join agg) + order_limit_topk (top-k)
-    "q12_late_shipment_priority": q12_late_shipment_priority,  # conditional lineitem aggs ⊂ sql_api_pricing_summary + q9_product_profit (orders×lineitem join)
-    "q13_customer_distribution": q13_customer_distribution,  # count-of-counts histogram ⊂ q16_supplier_part_counts (distinct-count per group)
-    "q19_disjunctive_filter": q19_disjunctive_filter,  # disjunctive part×lineitem predicate join ⊂ q20_part_promotion
-    "events_drawdown": events_drawdown,              # per-key running-peak window ⊂ events_moving_stats (ordered frames) + events_user_growth (cumulative window)
-    "doc_containment_pairs": doc_containment_pairs,  # inverted-index pair equi-join ⊂ doc_sparse_cosine_neardup (kept)
-    "jl_projection_distortion": jl_projection_distortion,  # exact-decimal embedding arithmetic ⊂ embedding_outlier_docs (rotated in r14) + knn_bruteforce (pairwise cosine)
-    # round-11 additions that stay EXTRA: rows-only by design (PCA
-    # eigen-decomposition is driver-side eigh over the d×d matrix;
-    # the Arrow/BLAS covariance twin is float64, equality-tested
-    # against the exact in-window embedding_covariance_matrix)
+    "orders_by_year": orders_by_year,
+    "q4_order_priority": q4_order_priority,
+    "q7_nation_volume": q7_nation_volume,
+    "q14_promo_revenue_share": q14_promo_revenue_share,
+    "q22_idle_customers": q22_idle_customers,
+    "event_gaps": event_gaps,
+    "window_rank_stats": window_rank_stats,
+    "source_tv_drift": source_tv_drift,
+    "dsir_importance_weights": dsir_importance_weights,
+    "q10_returned_items": q10_returned_items,
+    "events_drawdown": events_drawdown,
+    "doc_containment_pairs": doc_containment_pairs,
+    "jl_projection_distortion": jl_projection_distortion,
+    # rows-only by design: PCA eigen-decomposition is driver-side
+    # eigh over the d×d matrix; the Arrow/BLAS covariance twin is
+    # float64, equality-tested against the exact
+    # embedding_covariance_matrix
     "embedding_pca_spectrum": embedding_pca_spectrum,
     "embedding_covariance_arrow": embedding_covariance_arrow_q,
-    # round-12 rotation: 12 long-green (≥3 external rounds each)
-    # shapes demoted so every ROTATION_CANDIDATES_R11 query gets its
-    # first external CORRECTNESS row — in-window twin noted per entry;
-    # all stay parity-tested against their DuckDB oracles locally
-    # every round (tests/test_parity.py).
-    "passage_dedup_scrub": passage_dedup_scrub,      # window-key scrub ⊂ dup_span_scrub + eval_leak_scrub (rotated in)
-    "rolling_fingerprint_neardup": rolling_fingerprint_neardup,  # rolling-hash postings join ⊂ winnow_fingerprint_neardup (rotated in; same Rabin-Karp machinery + winnowed selection)
-    "dup_span_extents": dup_span_extents,            # gaps-and-islands extents ⊂ dup_span_scrub (rotated in; same island merge feeding the scrub)
-    "source_ks_drift": source_ks_drift,              # shared-histogram drift ⊂ source_chi2_drift (rotated in; same ONE-shuffle histogram spine)
-    "events_user_growth": events_user_growth,        # user-day cumulative windows ⊂ events_cohort_retention (rotated in; same (user,day) distinct base)
-    "events_pair_correlation": events_pair_correlation,  # exact decimal moments ⊂ embedding_correlation_matrix (rotated in) + events_cusum_changepoint (keyed exact stats)
-    "corpus_mix": corpus_mix,                        # corpus mixing aggregate ⊂ source_gini_concentration (rotated in r14; per-source composition) + stratified_resample_stats (kept)
-    "doc_lm_quality": doc_lm_quality,                # broadcast-model scoring ⊂ doc_quality_signals + doc_repetition_signals (rotated in) + lm_quality_bands (kept)
-    "doc_bm25_topk": doc_bm25_topk,                  # BM25 rank top-k ⊂ doc_bm25_from_index (in window; same scoring over the materialized index)
-    "events_mad_outliers": events_mad_outliers,      # rank-median windows ⊂ events_moving_stats (kept ordered frames) + events_cusum_changepoint (keyed argmax)
-    "events_motif_search": events_motif_search,      # chunked sliding windows + WindowGroupLimit ⊂ order_limit_topk (kept top-k) + events_moving_stats (kept frames)
-    "knn_filtered_bruteforce": knn_filtered_bruteforce,  # predicate-first exact kNN ⊂ knn_bruteforce (kept; same dot-product top-k)
-    # round-13 rotation: nine long-green (≥3 external rounds each)
-    # shapes demoted so every ROTATION_CANDIDATES_R12 query gets its
-    # first external CORRECTNESS row — in-window twin noted per entry;
-    # all stay parity-tested against their DuckDB oracles locally
-    # every round (tests/test_parity.py).
-    "token_frequencies": token_frequencies,          # token-grain explode+agg ⊂ string_functions (kept tokenize exprs) + doc_quality_signals (in window; token-grain signal aggregation)
-    "events_vwap": events_vwap,                      # keyed weighted decimal agg ⊂ sql_api_pricing_summary (kept decimal aggregate tree) + events_cusum_bucketed (rotated in; keyed decimal bucket aggregation)
-    "corpus_datacard": corpus_datacard,              # one-scan multi-aggregate profile ⊂ orders_dq_profile (in window; same single-scan profile readout) + source_gini_concentration (rotated in r14; corpus composition)
-    "neardup_pagerank": neardup_pagerank,            # per-round equi-join + integer agg over the pair graph ⊂ neardup_triangle_stats (rotated in; same banded pair graph) + dedup_cluster_keepers (kept CC rounds)
-    "doc_sparse_cosine_neardup": doc_sparse_cosine_neardup,  # df-capped postings pair equi-join ⊂ image_dhash_neardup (rotated in; pigeonhole posting join) + winnow_fingerprint_neardup (kept postings join)
-    "lm_quality_bands": lm_quality_bands,            # quality-score banding ⊂ doc_quality_signals (kept signal scoring) + source_quality_floor (rotated in; per-source quality thresholding)
-    "hybrid_rrf_retrieval": hybrid_rrf_retrieval,    # BM25 + rank fusion top-k ⊂ doc_bm25_from_index (kept; same scoring over the materialized index)
-    "q9_product_profit": q9_product_profit,          # multi-join year agg ⊂ q20_part_promotion + q16_supplier_part_counts (kept multi-join agg family)
-    "agg_cube_year_status": agg_cube_year_status,    # Expand grouping-sets agg ⊂ orders_dq_profile (rotated in; same single-scan Expand machinery) + unpivot_event_matrix (kept reshape)
+    "passage_dedup_scrub": passage_dedup_scrub,
+    "rolling_fingerprint_neardup": rolling_fingerprint_neardup,
+    "dup_span_extents": dup_span_extents,
+    "source_ks_drift": source_ks_drift,
+    "events_user_growth": events_user_growth,
+    "events_pair_correlation": events_pair_correlation,
+    "corpus_mix": corpus_mix,
+    "doc_lm_quality": doc_lm_quality,
+    "doc_bm25_topk": doc_bm25_topk,
+    "events_mad_outliers": events_mad_outliers,
+    "events_motif_search": events_motif_search,
+    "token_frequencies": token_frequencies,
+    "events_vwap": events_vwap,
+    "corpus_datacard": corpus_datacard,
+    "neardup_pagerank": neardup_pagerank,
+    "doc_sparse_cosine_neardup": doc_sparse_cosine_neardup,
+    "lm_quality_bands": lm_quality_bands,
+    "hybrid_rrf_retrieval": hybrid_rrf_retrieval,
+    "q9_product_profit": q9_product_profit,
+    "agg_cube_year_status": agg_cube_year_status,
     # rows-only by design (FFT not SQL-expressible; invariance +
-    # recall tests pin correctness — the simhash/knn_ann precedent)
+    # recall tests pin correctness)
     "audio_afp_neardup": audio_afp_neardup,
-    # r13: HLL swap of the in-window exact DQ profile — rows-only by
-    # design (Datasketches HLL ≠ DuckDB's sketch); accuracy pinned
+    # HLL swap of the exact DQ profile — rows-only by design
+    # (Datasketches HLL ≠ DuckDB's sketch); accuracy pinned
     # against the exact profile (≤5% relative-error contract test)
     "orders_dq_profile_approx": orders_dq_profile_approx,
-    # r13: GK-percentile swap of the in-window exact quality floor —
-    # rows-only by design (engine-internal sketch); accuracy pinned
-    # against the exact floor (rank-error contract test)
+    # GK-percentile swap of the exact quality floor — rows-only
+    # by design (engine-internal sketch); accuracy pinned against
+    # the exact floor (rank-error contract test)
     "source_quality_floor_approx": source_quality_floor_approx,
-    # round-14 rotation: eight long-green (≥3 external rounds each)
-    # shapes demoted so every ROTATION_CANDIDATES_R13 query gets its
-    # first external CORRECTNESS row — in-window twin noted per entry;
-    # all stay parity-tested against their DuckDB oracles locally
-    # every round (tests/test_parity.py).
-    "doc_pmi_collocations": doc_pmi_collocations,    # pair support/lift arithmetic ⊂ events_type_cooccurrence_lift (rotated in; same co-occurrence counting, lift is PMI's exp form) + string_functions (kept tokenize exprs)
-    "doc_ngram_novelty": doc_ngram_novelty,          # n-gram explode + broadcast reference join ⊂ contamination_check (kept; same shingle/reference machinery)
-    "source_mix_weights": source_mix_weights,        # per-source composition weights ⊂ source_gini_concentration (rotated in; per-source composition readout) + stratified_resample_stats (kept)
-    "corpus_vocab_growth": corpus_vocab_growth,      # first-seen cumulative distinct growth ⊂ events_rolling_active_users (rotated in; windowed distinct-user machinery) + string_functions (kept tokenize)
-    "corpus_snapshot_diff": corpus_snapshot_diff,    # snapshot key diff ⊂ crawl_delta_apply (in window; same snapshot upsert/delta machinery)
-    "source_embedding_drift": source_embedding_drift,  # exact-decimal centroid + fold distance ⊂ embedding_outlier_docs (rotated in; same centroid broadcast + squared-delta fold)
-    "snapshot_change_magnitude": snapshot_change_magnitude,  # diff magnitude agg ⊂ crawl_delta_apply (in window; same snapshot delta base)
-    "eval_leak_spans": eval_leak_spans,              # span localization postings ⊂ eval_leak_scrub (in window; same span machinery feeding the scrub)
-    # r14: GK scale twins of the two new rank-window queries — rows-
-    # only by design (engine-internal sketch; the exact forms are the
+    "doc_pmi_collocations": doc_pmi_collocations,
+    "doc_ngram_novelty": doc_ngram_novelty,
+    "source_mix_weights": source_mix_weights,
+    "corpus_vocab_growth": corpus_vocab_growth,
+    "corpus_snapshot_diff": corpus_snapshot_diff,
+    "source_embedding_drift": source_embedding_drift,
+    "snapshot_change_magnitude": snapshot_change_magnitude,
+    "eval_leak_spans": eval_leak_spans,
+    # GK scale twins of two rank-window queries — rows-only by
+    # design (engine-internal sketch; the exact forms are the
     # oracle-checkable ground truth), accuracy-contract-tested
     "events_conversion_latency_approx": events_conversion_latency_approx,
     "customer_revenue_pareto_approx": customer_revenue_pareto_approx,
-    # round-15 rotation: ten long-green (≥6 external rounds each)
-    # shapes demoted so every ROTATION_CANDIDATES_R14 query gets its
-    # first external CORRECTNESS row — in-window twin noted per entry;
-    # all stay parity-tested against their DuckDB oracles locally
-    # every round (tests/test_parity.py).
-    "stratified_resample_stats": stratified_resample_stats,  # deterministic hash-order sampling ⊂ docs_weighted_sample (rotated in; same md5-keyed systematic draw) + source_quality_floor (kept per-source thresholding)
-    "multimodal_binary_meta": multimodal_binary_meta,  # corrupt-safe binary decode mapInPandas ⊂ image_dhash_neardup + video_frame_neardup (in window; same codec/Arrow batch machinery)
-    "fuzzy_name_block_join": fuzzy_name_block_join,    # blocked candidate equi-join ⊂ winnow_fingerprint_neardup (in window; postings/block join) + image_dhash_neardup (pigeonhole block join)
-    "range_join_click_context": range_join_click_context,  # bounded-interval event pairing ⊂ interval_overlap_shipments (in window; interval×interval join) + events_conversion_latency (rotated in; ordered event pairing)
-    "sql_api_pricing_summary": sql_api_pricing_summary,  # spark.sql decimal aggregate tree ⊂ orders_price_skew_kurtosis (rotated in; exact decimal moments over the same scan family); plan ≡ q1_pricing_summary (EXTRA)
-    "set_ops_all_variants": set_ops_all_variants,      # ∩/∪/EXCEPT (ALL) ⊂ fk_orphan_audit (rotated in; anti/semi-join audit of the same key-membership class)
-    "unpivot_event_matrix": unpivot_event_matrix,      # Expand reshape ⊂ orders_dq_profile (in window; same single-scan Expand machinery)
-    "string_functions": string_functions,              # string expr surface ⊂ doc_quality_signals (in window; token/string signal exprs) + docs_source_lang_diversity (rotated in; lang-grain string aggregation)
-    "order_limit_topk": order_limit_topk,              # global/keyed top-k ⊂ customer_revenue_pareto (rotated in; global ordered rank window) + events_session_funnel_paths (in window; per-key ordered window)
-    "q11_important_stock": q11_important_stock,        # share-of-global-total threshold ⊂ customer_revenue_pareto (rotated in; cumulative share vs total) + q16_supplier_part_counts (kept multi-join agg)
-    # round-15 additions: oracle-backed, queued in
-    # ROTATION_CANDIDATES_R15 for their first external row next round.
+    "stratified_resample_stats": stratified_resample_stats,
+    "multimodal_binary_meta": multimodal_binary_meta,
+    "fuzzy_name_block_join": fuzzy_name_block_join,
+    "range_join_click_context": range_join_click_context,
+    "sql_api_pricing_summary": sql_api_pricing_summary,
+    "set_ops_all_variants": set_ops_all_variants,
+    "unpivot_event_matrix": unpivot_event_matrix,
+    "string_functions": string_functions,
+    "q11_important_stock": q11_important_stock,
     "nation_supplier_hhi": nation_supplier_hhi,
     "lineitem_qty_price_spearman": lineitem_qty_price_spearman,
     "orders_daily_autocorr": orders_daily_autocorr,
@@ -478,498 +318,16 @@ EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "customer_reorder_rate": customer_reorder_rate,
     "events_purchase_rate_ztest": events_purchase_rate_ztest,
     "customer_yoy_sign_test": customer_yoy_sign_test,
-    # r15: GK scale twin of the per-priority rank-window exact form —
+    # GK scale twin of the per-priority rank-window exact form —
     # rows-only by design (engine-internal sketch; the exact
-    # orders_fulfillment_lag is the oracle-checkable ground truth),
-    # accuracy-contract-tested
+    # orders_fulfillment_lag is the oracle-checkable ground
+    # truth), accuracy-contract-tested
     "orders_fulfillment_lag_approx": orders_fulfillment_lag_approx,
-    # r15: Markov removal-effect attribution — rows-only by design
+    # Markov removal-effect attribution — rows-only by design
     # (driver-side absorbing-chain solve over the bounded count
-    # artifact; the PCA-spectrum precedent), reference-tested
+    # artifact), reference-tested
     "events_markov_attribution": events_markov_attribution,
 }
 
 ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     **QUERIES, **EXTRA_QUERIES}
-
-
-# Round-6 rotation (EXECUTED this round): the 25 candidates below
-# rotated INTO the driver window above — pinned by
-# tests/test_parity.py::test_round6_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R6: list[str] = [
-    "stratified_resample_stats",
-    "semantic_dedup_clusters",
-    "curation_pipeline_summary",
-    "events_gapfill_locf",
-    "events_gapfill_interpolate",
-    "bloom_semi_join_agg",
-    "passage_dedup_scrub",
-    "shard_manifest",
-    "events_ewma_smooth",
-    "source_cap_sample",
-    "events_zscore_outliers",
-    "knn_filtered_bruteforce",
-    "doc_length_buckets",
-    "corpus_upsample_stats",
-    "q15_top_supplier",
-    "fuzzy_name_block_join",
-    "lineitem_price_qty_corr",
-    "events_twap",
-    "events_motif_search",
-    "events_pair_correlation",
-    "events_trend_slope",
-    "events_variant_extract",
-    "source_overlap_exact",
-    "token_heavy_hitters_sketch",   # rows-only, CMS — weaker check ok
-    "distinct_rollup_hll",          # rows-only, HLL
-]
-
-# Round-7 rotation (EXECUTED this round, window literal above): the 34
-# candidates below rotated INTO the driver window for their first
-# external CORRECTNESS row — the 22 round-2 window re-curation
-# demotions plus the 12 late-r6 additions; 34 long-green shapes
-# demoted to EXTRA_QUERIES (twin per entry there). Pinned by
-# tests/test_parity.py::test_round7_rotated_operators_sit_in_declared_window.
-# After this rotation EVERY oracle-backed query in the corpus has held
-# a green external row in at least one round.
-ROTATED_IN_R7: list[str] = [
-    "q4_order_priority",
-    "q7_nation_volume",
-    "q10_returned_items",
-    "q12_late_shipment_priority",
-    "q13_customer_distribution",
-    "q14_promo_revenue_share",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_filter",
-    "q22_idle_customers",
-    "sql_api_pricing_summary",
-    "orders_by_year",
-    "set_ops_all_variants",
-    "unpivot_event_matrix",
-    "window_running_total",
-    "event_gaps",
-    "token_frequencies",
-    "string_functions",
-    "agg_cube_year_status",
-    "order_limit_topk",
-    "window_rank_stats",
-    "corpus_mix",
-    "events_moving_stats",
-    "doc_sparse_cosine_neardup",  # added r6, oracle-backed, never verified
-    "doc_containment_pairs",      # added r6, oracle-backed, never verified
-    "doc_lm_quality",             # added r6, oracle-backed, never verified
-    "lm_quality_bands",           # added r6, oracle-backed, never verified
-    "jl_projection_distortion",   # added r6, oracle-backed, never verified
-    "corpus_datacard",            # added r6, oracle-backed, never verified
-    "neardup_pagerank",           # added r6, oracle-backed, never verified
-    "events_user_growth",         # added r6, oracle-backed, never verified
-    "events_vwap",                # added r6, oracle-backed, never verified
-    "events_drawdown",            # added r6, oracle-backed, never verified
-    "dsir_importance_weights",    # added r6, oracle-backed, never verified
-    "source_tv_drift",            # added r6, oracle-backed, never verified
-]
-
-
-# Round-8 rotation candidates (HISTORICAL — rotation EXECUTED round
-# 9, see ROTATED_IN_R9): oracle-backed queries that had never held a
-# green external CORRECTNESS row at the r8 close. Three of them were
-# registered late in r8 with an "oracle-backed" claim their session
-# never fulfilled (the r8 verdict's headline finding); their oracles
-# and engine tests landed at the start of round 9, and all nine then
-# rotated into the declared window.
-ROTATION_CANDIDATES_R8: list[str] = [
-    "q9_product_profit",          # added r8, oracle-backed
-    "q11_important_stock",        # added r8, oracle-backed
-    "q16_supplier_part_counts",   # added r8, oracle-backed
-    "q20_part_promotion",         # added r8, oracle-backed
-    "dup_span_extents",           # added r8, oracle-backed
-    "events_mad_outliers",        # added r8, oracle-backed
-    "doc_bm25_topk",              # added r8, oracle landed r9
-    "hybrid_rrf_retrieval",       # added r8, oracle landed r9
-    "source_ks_drift",            # added r8, oracle landed r9
-]
-
-# Round-9 rotation (EXECUTED this round, window literal above): all
-# nine ROTATION_CANDIDATES_R8 rotated INTO the driver window for
-# their first external CORRECTNESS row; nine twice-green (r7+r8)
-# shapes demoted to EXTRA_QUERIES (twin per entry there). Pinned by
-# tests/test_parity.py::test_round9_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R9: list[str] = list(ROTATION_CANDIDATES_R8)
-
-# Round-9 rotation candidates: oracle-backed queries that have never
-# held a green external CORRECTNESS row AND are not already in the
-# declared window collecting one. Empty at the START of round 9 (the
-# r9 rotation queued the whole backlog); every oracle-backed query
-# added during round 9 must be listed here — POLICY (adopted after
-# two consecutive rounds shipped claims ahead of artifacts): an entry
-# may be added here, and may say "oracle-backed" anywhere, only in
-# the commit that adds the oracle itself; the never-verified scan in
-# tests/test_parity.py enforces listing, and the rotation-policy test
-# is fast (<1 s) — run it before every end-of-round commit.
-ROTATION_CANDIDATES_R9: list[str] = [
-    "doc_bm25_from_index",        # added r9, oracle added same commit
-    "doc_pmi_collocations",       # added r9, oracle added same commit
-]
-
-# Round-10 rotation (EXECUTED this round, window literal above): both
-# ROTATION_CANDIDATES_R9 rotated INTO the driver window for their
-# first external CORRECTNESS row; two thrice-green (r7+r8+r9) shapes
-# demoted to EXTRA_QUERIES (twin per entry there). Pinned by
-# tests/test_parity.py::test_round10_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R10: list[str] = list(ROTATION_CANDIDATES_R9)
-
-# Round-10 rotation candidates: oracle-backed queries that have never
-# held a green external CORRECTNESS row AND are not already in the
-# declared window collecting one. Empty at the START of round 10 (the
-# r10 rotation queued the whole backlog); every oracle-backed query
-# added during round 10 must be listed here in the SAME commit that
-# adds its oracle (the r9 policy, enforced by the never-verified scan
-# in tests/test_parity.py).
-ROTATION_CANDIDATES_R10: list[str] = [
-    "doc_ngram_novelty",          # added r10, oracle added same commit
-    "source_mix_weights",         # added r10, oracle added same commit
-    "corpus_vocab_growth",        # added r10, oracle added same commit
-    "corpus_snapshot_diff",       # added r10, oracle added same commit
-    "source_embedding_drift",     # added r10, oracle added same commit
-    "snapshot_change_magnitude",  # added r10, oracle added same commit
-    "eval_leak_spans",            # added r10, oracle added same commit
-]
-
-# Round-11 rotation (EXECUTED this round, window literal above): all
-# seven ROTATION_CANDIDATES_R10 rotated INTO the driver window for
-# their first external CORRECTNESS row; seven four-times-green
-# (r7+r8+r9+r10) shapes demoted to EXTRA_QUERIES (twin per entry
-# there). Pinned by
-# tests/test_parity.py::test_round11_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R11: list[str] = list(ROTATION_CANDIDATES_R10)
-
-# Round-11 rotation candidates: oracle-backed queries that have never
-# held a green external CORRECTNESS row AND are not already in the
-# declared window collecting one. Empty at the START of round 11 (the
-# r11 rotation queued the whole backlog); every oracle-backed query
-# added during round 11 must be listed here in the SAME commit that
-# adds its oracle (the r9 policy, enforced by the never-verified scan
-# in tests/test_parity.py).
-ROTATION_CANDIDATES_R11: list[str] = [
-    "eval_leak_scrub",            # added r11, oracle added same commit
-    "crawl_delta_apply",          # added r11, oracle added same commit
-    "winnow_fingerprint_neardup",  # added r11, oracle added same commit
-    "dup_span_scrub",             # added r11, oracle added same commit
-    "source_chi2_drift",          # added r11, oracle added same commit
-    "doc_repetition_signals",     # added r11, oracle added same commit
-    "events_cohort_retention",    # added r11, oracle added same commit
-    "events_markov_transitions",  # added r11, oracle added same commit
-    "events_cusum_changepoint",   # added r11, oracle added same commit
-    "doc_quality_signals",        # added r11, oracle added same commit
-    "embedding_covariance_matrix",  # added r11, oracle added same commit
-    "embedding_correlation_matrix",  # added r11, oracle added same commit
-]
-
-# Round-12 rotation (EXECUTED this round, window literal above): all
-# twelve ROTATION_CANDIDATES_R11 rotated INTO the driver window for
-# their first external CORRECTNESS row; twelve long-green (≥3 external
-# rounds each) shapes demoted to EXTRA_QUERIES (twin per entry there).
-# Pinned by
-# tests/test_parity.py::test_round12_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R12: list[str] = list(ROTATION_CANDIDATES_R11)
-
-# Round-12 rotation candidates: oracle-backed queries that have never
-# held a green external CORRECTNESS row AND are not already in the
-# declared window collecting one. Empty at the START of round 12 (the
-# r12 rotation queued the whole backlog); every oracle-backed query
-# added during round 12 must be listed here in the SAME commit that
-# adds its oracle (the r9 policy, enforced by the never-verified scan
-# in tests/test_parity.py).
-ROTATION_CANDIDATES_R12: list[str] = [
-    "image_dhash_neardup",        # added r12, oracle added same commit
-    "image_dedup_keepers",        # added r12, oracle added same commit
-    "events_cusum_bucketed",      # added r12, oracle added same commit
-    "events_rfm_segments",        # added r12, oracle added same commit
-    "video_frame_neardup",        # added r12, oracle added same commit
-    "neardup_triangle_stats",     # added r12, oracle added same commit
-    "interval_overlap_shipments",  # added r12, oracle added same commit
-    "source_quality_floor",       # added r12, oracle added same commit
-    "orders_dq_profile",          # added r12, oracle added same commit
-]
-
-# Round-13 rotation (EXECUTED this round, window literal above): all
-# nine ROTATION_CANDIDATES_R12 rotated INTO the driver window for
-# their first external CORRECTNESS row; nine long-green (≥3 external
-# rounds each) shapes demoted to EXTRA_QUERIES (twin per entry there).
-# Pinned by
-# tests/test_parity.py::test_round13_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R13: list[str] = list(ROTATION_CANDIDATES_R12)
-
-# Round-13 rotation candidates: oracle-backed queries that have never
-# held a green external CORRECTNESS row AND are not already in the
-# declared window collecting one. Empty at the START of round 13 (the
-# r13 rotation queued the whole backlog); every oracle-backed query
-# added during round 13 must be listed here in the SAME commit that
-# adds its oracle (the r9 policy, enforced by the never-verified scan
-# in tests/test_parity.py).
-ROTATION_CANDIDATES_R13: list[str] = [
-    "orders_benford_test",          # added r13, oracle added same commit
-    "events_session_funnel_paths",  # added r13, oracle added same commit
-    "source_gini_concentration",    # added r13, oracle added same commit
-    "events_type_cooccurrence_lift",   # added r13, oracle same commit
-    "docs_lang_source_independence",   # added r13, oracle same commit
-    "embedding_outlier_docs",          # added r13, oracle same commit
-    "events_rolling_active_users",     # added r13, oracle same commit
-    "part_brand_price_anova",          # added r13, oracle same commit
-]
-
-# Round-14 rotation (EXECUTED this round, window literal above): all
-# eight ROTATION_CANDIDATES_R13 rotated INTO the driver window for
-# their first external CORRECTNESS row; eight long-green (≥3 external
-# rounds each) shapes demoted to EXTRA_QUERIES (twin per entry there).
-# Pinned by
-# tests/test_parity.py::test_round14_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R14: list[str] = list(ROTATION_CANDIDATES_R13)
-
-# Round-14 rotation candidates: oracle-backed queries that have never
-# held a green external CORRECTNESS row AND are not already in the
-# declared window collecting one. Empty at the START of round 14 (the
-# r14 rotation queued the whole backlog); every oracle-backed query
-# added during round 14 must be listed here in the SAME commit that
-# adds its oracle (the r9 policy, enforced by the never-verified scan
-# in tests/test_parity.py).
-ROTATION_CANDIDATES_R14: list[str] = [
-    "docs_source_lang_diversity",   # added r14, oracle added same commit
-    "fk_orphan_audit",              # added r14, oracle added same commit
-    "customer_revenue_pareto",      # added r14, oracle added same commit
-    "events_conversion_latency",    # added r14, oracle added same commit
-    "events_mannwhitney_value_test",  # added r14, oracle same commit
-    "events_user_growth_accounting",  # added r14, oracle same commit
-    "orders_price_skew_kurtosis",     # added r14, oracle same commit
-    "docs_weighted_sample",           # added r14, oracle same commit
-    "orders_fulfillment_lag",         # added r14, oracle same commit
-    "part_brand_return_rates",        # added r14, oracle same commit
-]
-
-# Round-15 rotation (EXECUTED this round, window literal above): all
-# ten ROTATION_CANDIDATES_R14 rotated INTO the driver window for
-# their first external CORRECTNESS row; ten long-green (≥6 external
-# rounds each) shapes demoted to EXTRA_QUERIES (twin per entry there).
-# Pinned by
-# tests/test_parity.py::test_round15_rotated_operators_sit_in_declared_window.
-ROTATED_IN_R15: list[str] = list(ROTATION_CANDIDATES_R14)
-
-# Round-15 rotation candidates: oracle-backed queries that have never
-# held a green external CORRECTNESS row AND are not already in the
-# declared window collecting one. Empty at the START of round 15 (the
-# r15 rotation queued the whole backlog); every oracle-backed query
-# added during round 15 must be listed here in the SAME commit that
-# adds its oracle (the r9 policy, enforced by the never-verified scan
-# in tests/test_parity.py).
-ROTATION_CANDIDATES_R15: list[str] = [
-    "nation_supplier_hhi",            # added r15, oracle added same commit
-    "lineitem_qty_price_spearman",    # added r15, oracle added same commit
-    "orders_daily_autocorr",          # added r15, oracle added same commit
-    "customer_sorted_neighborhood_pairs",  # added r15, oracle same commit
-    "orders_open_backlog_days",       # added r15, oracle added same commit
-    "events_hourly_seasonality",      # added r15, oracle added same commit
-    "events_kruskal_value_test",      # added r15, oracle added same commit
-    "orders_theilsen_trend",          # added r15, oracle added same commit
-    "orders_revenue_runs_test",       # added r15, oracle added same commit
-    "docs_stratified_kfold",          # added r15, oracle added same commit
-    "customer_reorder_rate",          # added r15, oracle added same commit
-    "events_purchase_rate_ztest",     # added r15, oracle added same commit
-    "customer_yoy_sign_test",         # added r15, oracle added same commit
-]
-
-
-# Frozen at the close of round 7: every oracle-backed query name that
-# existed when the round-7 rotation completed (all have held a green
-# external CORRECTNESS row in rounds 1-7, except events_vwap, which
-# stays in the round-8 window to collect its row now that its oracle's
-# HUGEINT projection is cast to BIGINT). Any oracle-backed query NOT
-# in this set was added in round 8 or later and must appear in
-# ROTATION_CANDIDATES_R8 or already sit in the declared window --
-# enforced by tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R7_CLOSE: frozenset = frozenset({
-    "a1_latest_per_key",
-    "a1_latest_with_ttl",
-    "agg_cube_year_status",
-    "agg_orders_stats",
-    "agg_rollup",
-    "asof_join_purchase_click",
-    "bloom_semi_join_agg",
-    "contamination_check",
-    "corpus_datacard",
-    "corpus_mix",
-    "corpus_upsample_stats",
-    "curation_pipeline_summary",
-    "dedup_cluster_keepers",
-    "dedup_exact",
-    "dedup_fingerprint",
-    "distinct_count_exact",
-    "doc_containment_pairs",
-    "doc_length_buckets",
-    "doc_lm_quality",
-    "doc_rolling_fingerprint",
-    "doc_sparse_cosine_neardup",
-    "doc_top_terms",
-    "dsir_importance_weights",
-    "embedding_cosine_neardup",
-    "embedding_norm_stats",
-    "embedding_quantize_stats",
-    "event_gaps",
-    "events_drawdown",
-    "events_ewma_smooth",
-    "events_funnel_conversion",
-    "events_gapfill_interpolate",
-    "events_gapfill_locf",
-    "events_motif_search",
-    "events_moving_stats",
-    "events_ohlc_bars",
-    "events_pair_correlation",
-    "events_sessionization",
-    "events_trend_slope",
-    "events_tumbling_window",
-    "events_twap",
-    "events_user_growth",
-    "events_variant_extract",
-    "events_vwap",
-    "events_zscore_outliers",
-    "fuzzy_name_block_join",
-    "j2_anti_join_unmatched",
-    "j2_semi_join_auth",
-    "jl_projection_distortion",
-    "knn_bruteforce",
-    "knn_filtered_bruteforce",
-    "lineitem_price_qty_corr",
-    "lm_quality_bands",
-    "minhash_neardup",
-    "multimodal_binary_meta",
-    "neardup_pagerank",
-    "ngram_jaccard_neardup",
-    "order_limit_topk",
-    "orders_by_year",
-    "orders_cohort_matrix",
-    "p10_api_key_hash",
-    "p11_wire_json",
-    "p1_validation_filter",
-    "p3_flatten_payload",
-    "p4_value_rules",
-    "p5p6p7_config_pipeline",
-    "p8_conditional_gate",
-    "p9_exchange_enrichment",
-    "pack_sequences_chunked",
-    "passage_dedup_scrub",
-    "pii_scrub_stats",
-    "pivot_event_matrix",
-    "q10_returned_items",
-    "q12_late_shipment_priority",
-    "q13_customer_distribution",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_filter",
-    "q1_pricing_summary",
-    "q21_sole_late_supplier",
-    "q22_idle_customers",
-    "q2_min_cost_supplier",
-    "q3_top_revenue_orders",
-    "q4_order_priority",
-    "q5_region_nation_revenue",
-    "q6_revenue_delta",
-    "q7_nation_volume",
-    "q8_nation_market_share",
-    "range_join_click_context",
-    "rolling_fingerprint_neardup",
-    "semantic_dedup_clusters",
-    "set_ops_all_variants",
-    "set_ops_status_migration",
-    "shard_manifest",
-    "skew_salted_agg",
-    "source_cap_sample",
-    "source_overlap_exact",
-    "source_tv_drift",
-    "sql_api_pricing_summary",
-    "stratified_resample_stats",
-    "string_functions",
-    "text_bpe_token_estimate",
-    "text_langid",
-    "text_quality_score",
-    "text_repetition",
-    "text_token_stats",
-    "token_frequencies",
-    "train_test_split_hash",
-    "unpivot_event_matrix",
-    "value_percentiles",
-    "window_rank_stats",
-    "window_running_total",
-    "window_topk_per_group",
-})
-
-
-# Frozen at the close of round 8: the round-7 set plus the nine
-# round-8 additions (ROTATION_CANDIDATES_R8). All round-7-close names
-# held a green external row in rounds 1-8; the nine additions sit in
-# the round-9 window collecting theirs. Any oracle-backed query NOT
-# in this set was added in round 9 or later and must appear in
-# ROTATION_CANDIDATES_R9 or already sit in the declared window --
-# enforced by tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R8_CLOSE: frozenset = frozenset(
-    ORACLE_BACKED_AT_R7_CLOSE | set(ROTATION_CANDIDATES_R8))
-
-# Frozen at the close of round 9: the round-8 set plus the two
-# round-9 additions (ROTATION_CANDIDATES_R9), which sit in the
-# round-10 window collecting their first external row. Any
-# oracle-backed query NOT in this set was added in round 10 or later
-# and must appear in ROTATION_CANDIDATES_R10 or already sit in the
-# declared window — enforced by
-# tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R9_CLOSE: frozenset = frozenset(
-    ORACLE_BACKED_AT_R8_CLOSE | set(ROTATION_CANDIDATES_R9))
-
-# Frozen at the close of round 10: the round-9 set plus the seven
-# round-10 additions (ROTATION_CANDIDATES_R10), which sit in the
-# round-11 window collecting their first external row. Any
-# oracle-backed query NOT in this set was added in round 11 or later
-# and must appear in ROTATION_CANDIDATES_R11 or already sit in the
-# declared window — enforced by
-# tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R10_CLOSE: frozenset = frozenset(
-    ORACLE_BACKED_AT_R9_CLOSE | set(ROTATION_CANDIDATES_R10))
-
-# Frozen at the close of round 11: the round-10 set plus the twelve
-# round-11 additions (ROTATION_CANDIDATES_R11), which sit in the
-# round-12 window collecting their first external row. Any
-# oracle-backed query NOT in this set was added in round 12 or later
-# and must appear in ROTATION_CANDIDATES_R12 or already sit in the
-# declared window — enforced by
-# tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R11_CLOSE: frozenset = frozenset(
-    ORACLE_BACKED_AT_R10_CLOSE | set(ROTATION_CANDIDATES_R11))
-
-# Frozen at the close of round 12: the round-11 set plus the nine
-# round-12 additions (ROTATION_CANDIDATES_R12), which sit in the
-# round-13 window collecting their first external row. Any
-# oracle-backed query NOT in this set was added in round 13 or later
-# and must appear in ROTATION_CANDIDATES_R13 or already sit in the
-# declared window — enforced by
-# tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R12_CLOSE: frozenset = frozenset(
-    ORACLE_BACKED_AT_R11_CLOSE | set(ROTATION_CANDIDATES_R12))
-
-# Frozen at the close of round 13: the round-12 set plus the eight
-# round-13 additions (ROTATION_CANDIDATES_R13), which sit in the
-# round-14 window collecting their first external row. Any
-# oracle-backed query NOT in this set was added in round 14 or later
-# and must appear in ROTATION_CANDIDATES_R14 or already sit in the
-# declared window — enforced by
-# tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R13_CLOSE: frozenset = frozenset(
-    ORACLE_BACKED_AT_R12_CLOSE | set(ROTATION_CANDIDATES_R13))
-
-# Frozen at the close of round 14: the round-13 set plus the ten
-# round-14 additions (ROTATION_CANDIDATES_R14), which sit in the
-# round-15 window collecting their first external row. Any
-# oracle-backed query NOT in this set was added in round 15 or later
-# and must appear in ROTATION_CANDIDATES_R15 or already sit in the
-# declared window — enforced by
-# tests/test_parity.py::test_rotation_candidates_are_rotatable.
-ORACLE_BACKED_AT_R14_CLOSE: frozenset = frozenset(
-    ORACLE_BACKED_AT_R13_CLOSE | set(ROTATION_CANDIDATES_R14))

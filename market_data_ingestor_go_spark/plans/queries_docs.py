@@ -61,29 +61,6 @@ def simhash_neardup(spark, sf_dir):
     return DD.simhash_pairs(d)
 
 
-def text_token_stats(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    n = F.count("*")
-    return (
-        d.withColumn("n_tokens", TX.token_count("text"))
-        .groupBy("lang")
-        .agg(n.alias("n_docs"),
-             F.sum("n_tokens").alias("total_tokens"),
-             (F.sum("n_chars").cast("double") / n).alias("avg_chars"),
-             (F.sum("n_tokens").cast("double") / n).alias("avg_tokens"))
-    )
-
-
-def text_quality_score(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        TX.token_count("text").alias("n_tokens"),
-        TX.stopword_ratio("text").alias("stop_ratio"),
-        TX.quality_flag("text").alias("keep"),
-    )
-
-
 def text_langid(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     pred = TX.lang_guess("text")
@@ -429,22 +406,6 @@ def text_bpe_token_estimate(spark, sf_dir):
         (bpe.cast("double") / ws.cast("double")).alias("bpe_per_ws"))
 
 
-def doc_rolling_fingerprint(spark, sf_dir):
-    """Document fingerprinting via Rabin-Karp rolling hashes over
-    8-token windows (winnowing's ingredient): per doc the window
-    count, distinct count, and min window hash (the shift-tolerant
-    fingerprint). Integer mod arithmetic end to end — bit-identical
-    across engines."""
-    d = _t(spark, sf_dir, "documents")
-    hs = d.select("doc_id", TX.token_hash_array("text").alias("hs"))
-    wh = hs.select("doc_id", TX.rolling_window_hashes("hs").alias("wh"))
-    return wh.select(
-        "doc_id",
-        F.size("wh").cast("bigint").alias("n_windows"),
-        F.size(F.array_distinct("wh")).cast("bigint").alias("n_distinct"),
-        F.array_min("wh").alias("min_whash"))
-
-
 def rolling_fingerprint_neardup(spark, sf_dir):
     """Shift-tolerant near-dup candidates: doc pairs sharing ≥3
     distinct 8-token rolling-window hashes (winnowing's candidate
@@ -709,8 +670,8 @@ _BM25_IDX: dict = {}
 
 def _bm25_index_path(spark, sf_dir):
     """Materialize the full-vocabulary inverted index ONCE per
-    (application, corpus) — same private-tempdir caching discipline
-    as the PQ index (_pq_index above). Written PARTITIONED BY the
+    (application, corpus) under the private per-process tempdir
+    (common._pq_enc_root). Written PARTITIONED BY the
     md5 term bucket (r10) so the serve path's driver-side vocabulary
     filter becomes partition pruning — the deployment layout
     bm25_index's docstring prescribes, exercised by the benched
@@ -750,9 +711,9 @@ def doc_bm25_from_index(spark, sf_dir):
     """BM25 top-10 against the MATERIALIZED inverted index
     (operators/retrieval.py::bm25_index / bm25_from_index): zero
     tokenize/explode work per query, corpus stats derived from the
-    index itself — the steady-state serve cost next to doc_bm25_topk
-    the way knn_ann_pq_serve sits next to knn_ann_pq. Row-identical
-    to doc_bm25_topk (shared scoring tail; same oracle)."""
+    index itself — the steady-state serve cost next to
+    doc_bm25_topk. Row-identical to doc_bm25_topk (shared scoring
+    tail; same oracle)."""
     from ..operators.retrieval import FIXTURE_QUERIES, bm25_from_index
     postings = spark.read.parquet(_bm25_index_path(spark, sf_dir))
     return bm25_from_index(postings, FIXTURE_QUERIES, k=10)

@@ -219,8 +219,8 @@ def events_pair_correlation(spark, sf_dir):
     """Cross-series correlation matrix (pairs screening): align every
     event-type pair on a 1-hour bucket grid (last observation per
     bucket), then Pearson over the shared buckets with the exact-
-    decimal moment machinery — the same bit-exact recipe as
-    lineitem_price_qty_corr, composed with time-bucket alignment and
+    decimal moment machinery (the shared bit-exact
+    _pearson_from_moments recipe), composed with time-bucket alignment and
     an unordered pair self-join. K series ⇒ the join is over K
     bucket-grain tables (tiny), never the raw stream."""
     from ..operators.cache import pin
@@ -474,27 +474,6 @@ def events_moving_stats(spark, sf_dir):
     )
 
 
-def events_funnel_conversion(spark, sf_dir):
-    """Funnel shape without self-joins: first click / first purchase
-    per user as conditional MIN aggregates, conversion = purchase at
-    or after the first click — one shuffle on user_id, then a scalar
-    rollup."""
-    e = _events(spark, sf_dir)
-    per_user = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "click", F.col("ts_ms")))
-         .alias("first_click"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts_ms")))
-         .alias("first_purchase"))
-    clicked = F.col("first_click").isNotNull()
-    converted = clicked & F.col("first_purchase").isNotNull() \
-        & (F.col("first_purchase") >= F.col("first_click"))
-    return per_user.agg(
-        F.count(F.when(clicked, 1)).alias("n_clickers"),
-        F.count(F.when(converted, 1)).alias("n_converted"),
-        (F.count(F.when(converted, 1)).cast("double")
-         / F.count(F.when(clicked, 1))).alias("conversion_rate"))
-
-
 # --------------------------------- training-pipeline + market rollup §2.11
 
 def events_ohlc_bars(spark, sf_dir):
@@ -680,11 +659,10 @@ def events_session_funnel_paths(spark, sf_dir):
     """Session path mining — the top-20 most common 3-step opening
     event paths: sessionize by (user, >30 min gap), take each
     session's first three event types in (ts, event_id) order, count
-    sessions per 'a>b>c' path. The discovery-mode sibling of the
-    fixed-funnel events_funnel_conversion (which paths DO users take,
-    not how many complete a given one). All strings + exact counts;
-    top-20 ordered by (n_sessions DESC, path ASC) — a total order ⇒
-    bit-exact oracle.
+    sessions per 'a>b>c' path. A discovery-mode funnel (which paths
+    DO users take, not how many complete a given one). All strings +
+    exact counts; top-20 ordered by (n_sessions DESC, path ASC) — a
+    total order ⇒ bit-exact oracle.
 
     Scale: two keyed window passes over the same (user, ts) sort
     (session boundaries, then per-session row numbers — one exchange,
@@ -941,7 +919,7 @@ def events_conversion_latency_approx(spark, sf_dir):
     exact global rank window, so the readout is ONE plain aggregate
     over the converted-user latencies — no single-partition sort,
     no matter how many users convert. Rows-only BY DESIGN (the
-    sketch is engine-internal; the exact in-rotation
+    sketch is engine-internal; the exact in-window
     events_conversion_latency is the oracle-checkable ground truth);
     accuracy pinned by
     tests/test_operators.py::test_conversion_latency_approx_accuracy.

@@ -7,46 +7,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from ..functions import market as M
-from ..operators.enrich import anti_join, enrich_exchange, semi_join
+from ..operators.enrich import anti_join, enrich_exchange
 from ..operators.latest import latest_per_key
 from .common import _events, _t  # noqa: F401
 
 
 # ------------------------------------------------------- reference operators §2.3
-
-def p1_validation_filter(spark, sf_dir):
-    """P1 (models/market_data.go:12-20): drop empty-name / bad-ts rows —
-    here: events with blank type, non-positive value or null user."""
-    e = _events(spark, sf_dir)
-    return (
-        e.filter((F.col("event_type") != "") & F.col("user_id").isNotNull()
-                 & (F.col("value") > 0) & (F.col("ts_ms") > 0))
-        .select("event_id", "user_id", "event_type", "value", "ts_ms")
-    )
-
-
-def p3_flatten_payload(spark, sf_dir):
-    """P3 (server.go:176-188): promote the JSON payload's inner keys to
-    top-level columns (schema-on-read json_get on the props envelope)."""
-    e = _events(spark, sf_dir)
-    return e.select(
-        "event_id", "event_type", "value",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k"))
-
-
-def p4_value_rules(spark, sf_dir):
-    """P4 (server.go:224-238): add/subtract/multiply/divide value rules;
-    divide-by-zero → identity (server.go:232-236)."""
-    li = _t(spark, sf_dir, "lineitem")
-    price, qty, disc = F.col("l_extendedprice"), F.col("l_quantity"), F.col("l_discount")
-    return li.select(
-        "l_orderkey", "l_linenumber",
-        (price + 10.0).alias("price_add"),
-        (price - 5.0).alias("price_sub"),
-        (qty * 2.0).alias("qty_mul"),
-        F.when(disc != 0, price / disc).otherwise(price).alias("price_div_guarded"),
-    )
-
 
 def p5p6p7_config_pipeline(spark, sf_dir):
     """P5/P6/P7 (server.go:199-219) in stage order: value rule →
@@ -59,15 +25,6 @@ def p5p6p7_config_pipeline(spark, sf_dir):
         .withColumn("source_tag", F.lit("replay"))         # 4. override
         .select("event_id", "event_type", "price", "user_id", "source_tag", "ts_ms")
     )
-
-
-def p8_conditional_gate(spark, sf_dir):
-    """P8 (server.go:112-115): transform only configured symbols; others
-    pass through untouched."""
-    e = _events(spark, sf_dir)
-    gated = F.when(F.col("event_type").isin("click", "view"),
-                   F.col("value") * 2.0).otherwise(F.col("value"))
-    return e.select("event_id", "event_type", gated.alias("value_t"))
 
 
 def p9_exchange_enrichment(spark, sf_dir):
@@ -97,14 +54,6 @@ def p11_wire_json(spark, sf_dir):
 
 
 # ------------------------------------------------------------------ joins §2.4
-
-def j2_semi_join_auth(spark, sf_dir):
-    """J2 (postgres.go:138-163): semi-join shape — customers holding at
-    least one order (valid API keys)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return semi_join(c, o, "c_custkey").select("c_custkey", "c_name")
-
 
 def j2_anti_join_unmatched(spark, sf_dir):
     """Anti-join twin of J2: probe keys with no matching order

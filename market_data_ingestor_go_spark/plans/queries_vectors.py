@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
-from .common import _davg, _pq_enc_root, _t  # noqa: F401
+from .common import _davg, _t  # noqa: F401
 
 
 def embedding_cosine_neardup(spark, sf_dir):
@@ -45,20 +45,6 @@ def knn_bruteforce(spark, sf_dir):
     return SIM.knn_bruteforce(e, q, k=5)
 
 
-def knn_filtered_bruteforce(spark, sf_dir):
-    """Metadata-FILTERED vector search (the vector-store feature every
-    retrieval pipeline needs): exact top-5 cosine neighbors among the
-    corpus subset with the query's label — pre-filtering the corpus
-    BEFORE scoring, so the scan and the pair join shrink with the
-    predicate's selectivity (post-filtering an unfiltered top-k
-    under-fills k instead). Self-excluding, deterministic tiebreak;
-    same oracle family as knn_bruteforce."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    corpus = e.filter(F.col("label") == 1)
-    return SIM.knn_bruteforce(corpus, q, k=5)
-
-
 def embedding_lsh_neardup(spark, sf_dir):
     """Banded-LSH near-dup pairs over embeddings — rows-only (banding
     is engine-side; the exact twin embedding_cosine_neardup is the
@@ -77,16 +63,6 @@ def knn_ann_hyperplane(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     return SIM.random_hyperplane_ann(e, q, k=5)
-
-
-def knn_ann_ivf(spark, sf_dir):
-    """IVF-cell ANN (probe 2 nearest of 16 cells) — rows-only (cell
-    assignment is engine-side); recall vs knn_bruteforce is asserted in
-    tests. Centroids default to a deterministic hash-sample; at scale a
-    k-means codebook is passed in via the ``centroids`` parameter."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    return SIM.ivf_ann(e, q, k=5)
 
 
 def embedding_norm_stats(spark, sf_dir):
@@ -161,59 +137,14 @@ def knn_ann_pq(spark, sf_dir):
     """Product-quantization ANN SERVE path: ADC-scored shortlist (m
     table lookups per pair instead of a 64-dim dot) against the
     stored 16×16 codebook artifact (trained once per process —
-    production trains offline; see knn_ann_pq_train for the build
-    cost), exact cosine re-rank of the shortlist. Rows-only (the
+    production trains offline), exact cosine re-rank of the
+    shortlist. Rows-only (the
     index is engine-side); recall vs knn_bruteforce asserted in
     tests."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     return SIM.pq_ann(e, q, _pq_codebooks(spark, sf_dir), k=5,
                       shortlist=8)
-
-
-def knn_ann_pq_train(spark, sf_dir):
-    """PQ codebook TRAINING as its own tracked query (the model-build
-    half of the train/serve split): per-subspace Lloyd iterations on
-    the deterministic ≤4096-row hash sample. Returns the codebook
-    table (m·k rows). Rows-only — k-means artifacts are engine-side
-    by construction; determinism is asserted in tests."""
-    e = _t(spark, sf_dir, "embeddings")
-    return SIM.train_pq_codebooks(e, m=16, k=16, n_iters=3)
-
-
-# Materialized ENCODED index per (session, sf_dir): the production PQ
-# deployment stores the codes table (encode on ingest), so serving
-# does ADC + rerank only. The artifact is a real PARQUET table (not
-# cached blocks) so the benched serve cost honestly includes the
-# index scan a deployment pays; keyed by applicationId so a fresh
-# session re-materializes.
-_PQ_ENC: dict[tuple, object] = {}
-
-
-def _pq_index(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_ENC:
-        import hashlib
-        import os
-        tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:16]
-        path = os.path.join(_pq_enc_root(), tag, "codes")
-        e = _t(spark, sf_dir, "embeddings")
-        SIM.pq_encode(e, _pq_codebooks(spark, sf_dir)) \
-            .write.mode("overwrite").parquet(path)
-        _PQ_ENC[key] = path
-    return spark.read.parquet(_PQ_ENC[key])
-
-
-def knn_ann_pq_serve(spark, sf_dir):
-    """PQ ANN against the MATERIALIZED encoded index: ADC shortlist +
-    exact rerank with zero train/encode work in the query — the pure
-    serve cost (what a steady-state deployment pays per query batch).
-    Results ≡ knn_ann_pq over the same corpus (tested). Rows-only."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    return SIM.pq_ann_from_index(_pq_index(spark, sf_dir), q,
-                                 _pq_codebooks(spark, sf_dir),
-                                 k=5, shortlist=8)
 
 
 # Centroid artifact cache, keyed by sf_dir — the same train/serve

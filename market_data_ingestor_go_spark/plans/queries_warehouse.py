@@ -1,14 +1,13 @@
 """Warehouse-domain queries: the TPC-H-ish relational surface
 (q1-q22 shapes), aggregate/window/set-op operators, and the
-orders/customer/part analytics family. The registry (declared
-window + rotation bookkeeping) lives in plans/queries.py; split out
-in round 15 (r14 verdict #6)."""
+orders/customer/part analytics family. The registry lives in
+plans/queries.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from ..operators.enrich import anti_join, enrich_exchange, semi_join
+from ..operators.enrich import anti_join, semi_join
 from .common import _davg, _dstr, _dsum, _events, _pearson_from_moments, _t  # noqa: F401
 
 
@@ -82,58 +81,11 @@ def q5_region_nation_revenue(spark, sf_dir):
     )
 
 
-def q6_revenue_delta(spark, sf_dir):
-    """TPC-H Q6 shape: pure filter+agg — the pushdown showcase; every
-    predicate reaches the parquet scan, zero joins, one-row result."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.to_timestamp(F.lit("1996-01-01")))
-        & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-01-01")))
-        & (F.col("l_discount") >= 0.02) & (F.col("l_discount") <= 0.06)
-        & (F.col("l_quantity") < 24))
-    return li.agg(_dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
-                  F.count("*").alias("n_items"))
-
-
-def agg_orders_stats(spark, sf_dir):
-    """Grouped multi-aggregate surface (Spark-native, SURVEY §2.5 'not
-    present in reference, exposed by engine')."""
-    o = _t(spark, sf_dir, "orders")
-    n = F.count("*")
-    return (
-        o.groupBy("o_orderstatus", "o_orderpriority")
-        .agg(n.alias("n_orders"),
-             _dsum(F.col("o_totalprice"), "sum_total"),
-             F.min("o_totalprice").alias("min_total"),
-             F.max("o_totalprice").alias("max_total"),
-             _davg(F.col("o_totalprice"), n, "avg_total"))
-    )
-
-
-def agg_rollup(spark, sf_dir):
-    """ROLLUP grouping sets (status, priority) → subtotals + grand total."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("n_orders"), _dsum(F.col("o_totalprice"), "sum_total"))
-    )
-
-
-def distinct_count_exact(spark, sf_dir):
-    """Exact distinct counts per group (expand + two-phase agg)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(F.countDistinct("l_partkey").alias("n_parts"),
-             F.countDistinct("l_suppkey").alias("n_supps"),
-             F.count("*").alias("n_rows"))
-    )
-
-
 def approx_distinct_sketch(spark, sf_dir):
     """Sketch surface (HLL approx-distinct + t-digest approx
     percentiles) — rows-only check: sketch estimates are
     engine-specific by construction (the exact twins are
-    distinct_count_exact and value_percentiles)."""
+    orders_dq_profile's distinct counts and value_percentiles)."""
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -145,28 +97,6 @@ def approx_distinct_sketch(spark, sf_dir):
 
 
 # ------------------------------------------- windows / sort / limit / set §2.6
-
-def window_topk_per_group(spark, sf_dir):
-    """Top-3 orders per customer — rank pushdown keeps the window cheap."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
-
-
-def order_limit_topk(spark, sf_dir):
-    """Global deterministic top-20 (orderBy+limit → TakeOrderedAndProject,
-    no full sort)."""
-    p = _t(spark, sf_dir, "part")
-    return (
-        p.orderBy(F.col("p_retailprice").desc(), F.col("p_partkey"))
-        .limit(20)
-        .select("p_partkey", "p_name", "p_retailprice")
-    )
-
 
 def set_ops_status_migration(spark, sf_dir):
     """UNION/EXCEPT/INTERSECT surface: customers with only-open vs
@@ -194,10 +124,14 @@ def set_ops_all_variants(spark, sf_dir):
 
 
 def unpivot_event_matrix(spark, sf_dir):
-    """Unpivot/melt: the per-user event-type count matrix back to long
+    """Pivot, then unpivot/melt: the per-user event-type count matrix
+    (explicit pivot values → no extra distinct-scan pass) back to long
     form — (user_id, event_type, n) rows, zero counts dropped."""
+    e = _events(spark, sf_dir)
     kinds = ["click", "view", "purchase", "signup", "error"]
-    wide = pivot_event_matrix(spark, sf_dir)
+    wide = e.groupBy("user_id").pivot("event_type", kinds).count().select(
+        "user_id",
+        *[F.coalesce(F.col(k), F.lit(0)).alias(f"n_{k}") for k in kinds])
     long = wide.unpivot(
         "user_id", [f"n_{k}" for k in kinds], "kind", "n")
     return (
@@ -223,16 +157,6 @@ def window_rank_stats(spark, sf_dir):
     )
 
 
-def pivot_event_matrix(spark, sf_dir):
-    """Pivot: per-user event-type count matrix (explicit pivot values →
-    no extra distinct-scan pass)."""
-    e = _events(spark, sf_dir)
-    kinds = ["click", "view", "purchase", "signup", "error"]
-    piv = e.groupBy("user_id").pivot("event_type", kinds).count()
-    return piv.select(
-        "user_id", *[F.coalesce(F.col(k), F.lit(0)).alias(f"n_{k}") for k in kinds])
-
-
 def agg_cube_year_status(spark, sf_dir):
     """CUBE grouping sets over (order year, status)."""
     o = _t(spark, sf_dir, "orders").withColumn(
@@ -241,20 +165,6 @@ def agg_cube_year_status(spark, sf_dir):
         o.cube("order_year", "o_orderstatus")
         .agg(F.count("*").alias("n_orders"), _dsum(F.col("o_totalprice"), "sum_total"))
     )
-
-
-def window_running_total(spark, sf_dir):
-    """Running (cumulative) revenue per customer over order date —
-    ROWS frame with a unique ordering so the prefix sums are exact."""
-    o = _t(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_custkey")
-         .orderBy("o_orderdate", "o_orderkey")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    running = F.sum(F.col("o_totalprice").cast("decimal(27,6)")).over(w)
-    return o.select(
-        "o_custkey", "o_orderkey",
-        F.unix_millis(F.col("o_orderdate").cast("timestamp")).alias("o_orderdate_ms"),
-        running.cast("double").alias("running_total"))
 
 
 def orders_by_year(spark, sf_dir):
@@ -280,21 +190,6 @@ def q18_large_orders(spark, sf_dir):
         .select("o_orderkey", "o_custkey",
                 F.unix_millis(F.col("o_orderdate").cast("timestamp")).alias("o_orderdate_ms"),
                 F.col("qty").cast("double").alias("total_qty"))
-    )
-
-
-def q2_min_cost_supplier(spark, sf_dir):
-    """TPC-H Q2 shape: correlated-min — suppliers whose account balance
-    equals the minimum within their nation (min computed once per
-    group, broadcast back; no correlated re-scan)."""
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    mins = s.groupBy("s_nationkey").agg(F.min("s_acctbal").alias("min_bal"))
-    return (
-        s.join(F.broadcast(mins), "s_nationkey")
-        .filter(F.col("s_acctbal") == F.col("min_bal"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", "s_name", "n_name", "s_acctbal")
     )
 
 
@@ -365,42 +260,6 @@ def sql_api_pricing_summary(spark, sf_dir):
     """)
 
 
-def q8_nation_market_share(spark, sf_dir):
-    """TPC-H Q8 shape: a nation's share of revenue per order year —
-    conditional decimal sum over total decimal sum, divided in double."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(27,6)")
-    target = F.col("n_name") == "NATION_1"
-    return (
-        li.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.year("o_orderdate").alias("order_year"))
-        .agg((F.sum(F.when(target, rev).otherwise(F.lit(0).cast("decimal(27,6)"))).cast("double")
-              / F.sum(rev).cast("double")).alias("nation1_share"),
-             F.count("*").alias("n_items"))
-    )
-
-
-def q12_late_shipment_priority(spark, sf_dir):
-    """TPC-H Q12 shape: conditional CASE counts per group — how many
-    critical (1-URGENT/2-HIGH) vs other orders shipped late per year."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    critical = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .filter(late)
-        .groupBy(F.year("o_orderdate").alias("order_year"))
-        .agg(F.count(F.when(critical, 1)).alias("late_critical"),
-             F.count(F.when(~critical, 1)).alias("late_other"))
-    )
-
-
 def q14_promo_revenue_share(spark, sf_dir):
     """TPC-H Q14 shape: ratio of conditional decimal sums (promo parts'
     share of revenue) — both sums exact, the division in double."""
@@ -415,20 +274,6 @@ def q14_promo_revenue_share(spark, sf_dir):
         (F.sum(F.when(promo, rev).otherwise(F.lit(0).cast("decimal(27,6)"))).cast("double")
          / F.sum(rev).cast("double") * 100.0).alias("promo_share_pct"),
         F.count("*").alias("n_items"))
-
-
-def q19_disjunctive_filter(spark, sf_dir):
-    """TPC-H Q19 shape: OR-of-ANDs predicate — the pushdown stress
-    test (each disjunct combines brand/size/quantity ranges)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    joined = li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-    d1 = (F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 15) & (F.col("l_quantity") >= 10)
-    d2 = (F.col("p_brand") == "Brand#2") & (F.col("p_size") <= 30) & (F.col("l_quantity") >= 20)
-    d3 = (F.col("p_brand") == "Brand#3") & (F.col("p_size") <= 45) & (F.col("l_quantity") >= 30)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return joined.filter(d1 | d2 | d3).agg(
-        _dsum(rev, "revenue"), F.count("*").alias("n_items"))
 
 
 def q22_idle_customers(spark, sf_dir):
@@ -593,8 +438,7 @@ def distinct_rollup_hll(spark, sf_dir):
     sketches of l_partkey per returnflag, unioned to per-flag
     estimates — the store-the-sketch pattern that answers rollups at
     100 TB without rescanning the fact table. Rows-only (estimates
-    are Datasketches-specific); the exact twin is
-    distinct_count_exact, and the register-identity of
+    are Datasketches-specific); the register-identity of
     union-of-partials vs direct build is asserted in test_operators."""
     from ..operators.sketch import (distinct_sketch_partials,
                                     distinct_sketch_rollup)
@@ -605,32 +449,6 @@ def distinct_rollup_hll(spark, sf_dir):
     return (distinct_sketch_rollup(partials, ["l_returnflag"])
             .withColumn("approx_distinct",
                         F.col("approx_distinct").cast("bigint")))
-
-
-def lineitem_price_qty_corr(spark, sf_dir):
-    """Pearson correlation per returnflag between quantity and
-    extended price, via EXACT integer-decimal moment sums (the
-    bivariate member of the exact-moments family begun by
-    events_zscore_outliers): S_x S_y S_xx S_yy S_xy accumulate as
-    exact decimals (order-independent), big sums cross to double
-    through STRING casts (decimal→double direct casts differ 1 ULP
-    between engines — verify-skill lesson), then one fixed sequence
-    of correctly-rounded ops. Built-in corr() is the non-reproducible
-    twin (FP accumulation order varies with partitioning)."""
-    li = _t(spark, sf_dir, "lineitem")
-    x = F.round(F.col("l_quantity") * 100.0).cast("decimal(10,0)")
-    y = F.round(F.col("l_extendedprice") * 100.0).cast("decimal(12,0)")
-    rows = li.select("l_returnflag", x.alias("x"), y.alias("y"))
-    g = (rows.groupBy("l_returnflag")
-         .agg(F.count("*").alias("n"),
-              F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-              F.sum(F.col("x") * F.col("x")).alias("sxx"),
-              F.sum(F.col("y") * F.col("y")).alias("syy"),
-              F.sum(F.col("x") * F.col("y")).alias("sxy")))
-    return g.select("l_returnflag", "n",
-                    _pearson_from_moments("sx", "sy", "sxx", "syy",
-                                          "sxy", "n")
-                    .alias("corr_qty_price"))
 
 
 def q15_top_supplier(spark, sf_dir):
@@ -771,46 +589,6 @@ def q10_returned_items(spark, sf_dir):
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
     )
-
-
-def q13_customer_distribution(spark, sf_dir):
-    """TPC-H Q13 shape: LEFT OUTER join preserving zero-order
-    customers, per-customer count, then a count-of-counts histogram —
-    two aggregates, the second over |distinct counts| rows."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-    )
-
-
-def q17_small_qty_revenue(spark, sf_dir):
-    """TPC-H Q17 shape: per-part average threshold (the correlated
-    scalar subquery) as an aggregate-then-join — the avg table is one
-    row per part and broadcasts; lineitem never shuffles twice."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
-    thresholds = (
-        li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
-        .groupBy("l_partkey")
-        .agg((F.lit(0.2) * (F.sum(F.col("l_quantity").cast("decimal(27,6)"))
-                            .cast("double") / F.count("*"))).alias("qty_threshold"))
-        .select(F.col("l_partkey").alias("t_partkey"), "qty_threshold")
-    )
-    small = (
-        li.join(F.broadcast(thresholds), li.l_partkey == F.col("t_partkey"))
-        .filter(F.col("l_quantity") < F.col("qty_threshold"))
-    )
-    return small.agg(
-        (F.sum(F.col("l_extendedprice").cast("decimal(27,6)"))
-         .cast("double") / F.lit(7.0)).alias("avg_yearly"),
-        F.count("*").alias("n_lines"))
 
 
 def orders_dq_profile(spark, sf_dir):
@@ -1442,7 +1220,7 @@ def orders_fulfillment_lag_approx(spark, sf_dir):
     partials) instead of the exact per-priority rank window, so the
     readout is ONE plain aggregate over the lag rows — no keyed sort
     serializing a priority through one task. Rows-only BY DESIGN
-    (the sketch is engine-internal; the exact in-rotation
+    (the sketch is engine-internal; the exact in-window
     orders_fulfillment_lag is the oracle-checkable ground truth);
     n_orders and the exact-decimal mean MATCH the exact form
     bit-for-bit, quantile accuracy pinned by

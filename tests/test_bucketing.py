@@ -561,8 +561,8 @@ def test_filtered_ann_from_index(spark):
     over the index's passthrough columns applies inside the index
     scan (composing with bucket pruning), results only ever come from
     the filtered subset, k stays filled from that subset, and recall
-    vs the exact filtered ground truth (knn_filtered_bruteforce's
-    semantics) holds its measured deterministic value (0.88) at
+    vs the exact filtered ground truth (knn_bruteforce over the
+    filtered corpus) holds its measured deterministic value (0.88) at
     multiprobe 4 — filtered queries need wider probing because the
     predicate thins every bucket (selectivity ~10% here): recall was
     0.54/0.78/0.88 at multiprobe 2/3/4."""

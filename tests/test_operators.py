@@ -1266,6 +1266,44 @@ def test_pq_index_serve_equals_encode_and_scan(spark):
     assert indexed == direct
 
 
+def test_pq_encode_builds_from_one_job(spark):
+    """Building the encode plan runs exactly ONE driver job — the
+    codebook collect, which also yields m and the sub-dim — against a
+    codebook given as rows, the way StreamingPQIndex rebuilds it every
+    epoch."""
+    import time
+
+    from market_data_ingestor_go_spark.operators.similarity import (
+        pq_encode, train_pq_codebooks)
+
+    emb = load_table(spark, SF, "embeddings")
+    rows = train_pq_codebooks(emb, m=4, k=4, n_iters=1).collect()
+    books = spark.createDataFrame(
+        rows, "subspace INT, cell INT, cv ARRAY<DOUBLE>")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"pq-encode-build-{time.monotonic_ns()}"
+    marker = f"{group}-marker"
+    sc.setJobGroup(group, group)
+    try:
+        enc = pq_encode(emb.filter("vec_id < 8"), books)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the tracker in submission order: once a later
+    # marker job shows up, every construction job is counted
+    sc.setJobGroup(marker, marker)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 10
+    while time.time() < deadline and not tracker.getJobIdsForGroup(marker):
+        time.sleep(0.1)
+    assert list(tracker.getJobIdsForGroup(marker))
+    assert len(tracker.getJobIdsForGroup(group)) == 1
+    assert enc.count() == 8
+
+
 def test_multimodal_resize_plumbing(spark):
     """Resize kernel, non-PNG fallback path: real Arrow plumbing,
     deterministic digest-tiled output of exactly target_w*target_h*3
@@ -1282,28 +1320,6 @@ def test_multimodal_resize_plumbing(spark):
     again = {r["content_sha256"]: r["resized"]
              for r in resize_images(df, target_w=8, target_h=8).collect()}
     assert all(again[r["content_sha256"]] == r["resized"] for r in out)
-
-
-def test_ivf_pq_composed_recall(spark):
-    """Composed IVF+PQ (the FAISS-IVFPQ layout): trained coarse
-    quantizer (3/4 cells probed) bounds candidates via a cell
-    equi-join, PQ codes ADC-score them, exact re-rank on the
-    shortlist. Deterministic recall 0.88 on the fixture — floor 0.8."""
-    from market_data_ingestor_go_spark.operators.cache import release_pinned
-    from market_data_ingestor_go_spark.operators.similarity import (
-        ivf_pq_ann, train_kmeans_codebook, train_pq_codebooks)
-    emb = load_table(spark, SF, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = {(r["q_id"], r["n_id"]) for r in knn_bruteforce(emb, q, k=5).collect()}
-    books = train_pq_codebooks(emb, m=16, k=16, n_iters=3)
-    books.persist(); books.count()
-    coarse = train_kmeans_codebook(emb, k=4, n_iters=4)
-    got = {(r["q_id"], r["n_id"]) for r in
-           ivf_pq_ann(emb, q, books, k=5, n_cells=4, n_probe_cells=3,
-                      shortlist=8, centroids=coarse).collect()}
-    release_pinned(); books.unpersist()
-    recall = len(got & exact) / len(exact)
-    assert recall >= 0.8, f"IVF-PQ recall too low: {recall}"
 
 
 def test_gap_fill_locf_semantics(spark):

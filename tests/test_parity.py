@@ -114,124 +114,57 @@ def test_all_queries_have_schema_and_run(spark):
 
 def test_driver_window_is_at_most_50():
     """The driver's CORRECTNESS gate checks only the first 50 entries of
-    queries(); every declared query (and its oracle) must fit inside."""
+    queries(); every declared query must fit inside and carry its
+    oracle, so the whole window is hash-checked."""
     assert len(QUERIES) <= 50
-    oracle_only = set(ORACLES) - set(QUERIES)
-    assert not oracle_only, f"oracles outside the declared window: {oracle_only}"
+    missing = set(QUERIES) - set(ORACLES)
+    assert not missing, f"window queries without an oracle: {missing}"
 
 
-# (The r6–r11 window-membership tests were retired as their rotated-in
-# names earned their green external rows and later demoted to
-# EXTRA_QUERIES with in-window twins — r9's dup_span_extents,
-# events_mad_outliers, doc_bm25_topk, and source_ks_drift demoted in
-# the round-12 rotation after three green rounds each; r10's
-# doc_pmi_collocations and r11's whole seven-query batch demoted in
-# the round-14 rotation after 4 and 3 green rounds respectively.
-# Every such name stays parity-tested via test_parity above.)
+def test_registry_has_no_ledger_or_orphans():
+    """Static registry hygiene, no Spark session: no rotation ledger
+    in plans/queries.py, every public query function in
+    plans/queries_*.py registered, every oracle keyed to a registered
+    query, and every bench.py headline name registered."""
+    import ast
+    import glob
 
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    plans = os.path.join(root, "market_data_ingestor_go_spark", "plans")
 
-def test_round12_rotated_operators_sit_in_declared_window():
-    """The round-12 rotation's whole point: all twelve
-    ROTATION_CANDIDATES_R11 (the round-11 build — leak/dup-span
-    scrubs, crawl-delta apply, winnowing near-dup, χ² drift, Gopher
-    quality + repetition signals, cohort retention, Markov
-    transitions, CUSUM changepoint, embedding covariance +
-    correlation) must sit inside the first-50 window the driver
-    externally verifies, each exposing its oracle through
-    oracle_sql() (= ORACLES) — the rotated window has zero rows-only
-    entries."""
-    from market_data_ingestor_go_spark.plans.queries import ROTATED_IN_R12
+    def top_names(path):
+        tree = ast.parse(open(path).read())
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                yield node.name
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                yield from (t.id for t in targets if isinstance(t, ast.Name))
 
-    window = set(list(QUERIES)[:50])
-    assert set(ROTATED_IN_R12) <= window, set(ROTATED_IN_R12) - window
-    assert set(ROTATED_IN_R12) <= set(ORACLES)
-    assert set(QUERIES) <= set(ORACLES), (
-        "window must be 100% hash-checked after the r12 rotation")
+    ledger = [n for n in top_names(os.path.join(plans, "queries.py"))
+              if n.startswith(("ROTAT", "ORACLE_BACKED_AT"))]
+    assert not ledger, f"rotation ledger constants: {ledger}"
 
+    registered = {fn.__name__ for fn in ALL_QUERIES.values()}
+    orphans = sorted(
+        f"{os.path.basename(path)}::{name}"
+        for path in glob.glob(os.path.join(plans, "queries_*.py"))
+        for name in top_names(path)
+        if not name.startswith("_") and name not in registered)
+    assert not orphans, f"unregistered query functions: {orphans}"
 
-def test_round13_rotated_operators_sit_in_declared_window():
-    """The round-13 rotation's whole point: all nine
-    ROTATION_CANDIDATES_R12 (the round-12 build — perceptual image
-    dHash near-dup + CC keepers, video frame near-dup, bucket-grain
-    CUSUM, RFM segmentation, triangle counting, the interval×interval
-    overlap join, per-source quality floors, the per-column DQ
-    profile) must sit inside the first-50 window the driver externally
-    verifies, each exposing its oracle through oracle_sql() (= ORACLES)
-    — the rotated window has zero rows-only entries."""
-    from market_data_ingestor_go_spark.plans.queries import ROTATED_IN_R13
+    from market_data_ingestor_go_spark.plans.oracles import ALL_SQL
+    stray = set(ALL_SQL) - set(ALL_QUERIES)
+    assert not stray, f"oracles without a registered query: {stray}"
 
-    window = set(list(QUERIES)[:50])
-    assert set(ROTATED_IN_R13) <= window, set(ROTATED_IN_R13) - window
-    assert set(ROTATED_IN_R13) <= set(ORACLES)
-    assert set(QUERIES) <= set(ORACLES), (
-        "window must be 100% hash-checked after the r13 rotation")
-
-
-def test_round14_rotated_operators_sit_in_declared_window():
-    """The round-14 rotation's whole point: all eight
-    ROTATION_CANDIDATES_R13 (the round-13 analytics build — Benford
-    first-digit conformance, session path mining, per-source Gini
-    concentration, user-grain co-occurrence lift, χ² lang×source
-    independence, per-group embedding outlier screen, rolling 7-day
-    distinct actives, one-way ANOVA over brands) must sit inside the
-    first-50 window the driver externally verifies, each exposing its
-    oracle through oracle_sql() (= ORACLES) — the rotated window has
-    zero rows-only entries."""
-    from market_data_ingestor_go_spark.plans.queries import ROTATED_IN_R14
-
-    window = set(list(QUERIES)[:50])
-    assert set(ROTATED_IN_R14) <= window, set(ROTATED_IN_R14) - window
-    assert set(ROTATED_IN_R14) <= set(ORACLES)
-    assert set(QUERIES) <= set(ORACLES), (
-        "window must be 100% hash-checked after the r14 rotation")
-
-
-def test_round15_rotated_operators_sit_in_declared_window():
-    """The round-15 rotation's whole point: all ten
-    ROTATION_CANDIDATES_R14 (the round-14 analytics build — FK orphan
-    audit, order fulfillment lag, Wilson return-rate ranking, weighted
-    systematic sampling, exact skew/kurtosis, growth accounting,
-    Pareto revenue concentration, conversion latency, Mann–Whitney U,
-    Gini–Simpson lang diversity) must sit inside the first-50 window
-    the driver externally verifies, each exposing its oracle through
-    oracle_sql() (= ORACLES) — the rotated window has zero rows-only
-    entries."""
-    from market_data_ingestor_go_spark.plans.queries import ROTATED_IN_R15
-
-    window = set(list(QUERIES)[:50])
-    assert set(ROTATED_IN_R15) <= window, set(ROTATED_IN_R15) - window
-    assert set(ROTATED_IN_R15) <= set(ORACLES)
-    assert set(QUERIES) <= set(ORACLES), (
-        "window must be 100% hash-checked after the r15 rotation")
-
-
-def test_rotation_candidates_are_rotatable():
-    """The next-rotation list must stay mechanically valid: every
-    candidate exists, sits OUTSIDE the declared window (else it needs
-    no rotation), and has an oracle so rotating it in yields a full
-    row+schema+hash check. The never-verified scan then enforces the
-    listing policy: every oracle-backed query added AFTER the round-14
-    close (i.e. not in the frozen ORACLE_BACKED_AT_R14_CLOSE set) must
-    either sit in the declared window already or be listed as a
-    rotation candidate — new work cannot accumulate unverified."""
-    from market_data_ingestor_go_spark.plans.queries import (
-        ORACLE_BACKED_AT_R14_CLOSE, QUERIES, ROTATION_CANDIDATES_R15)
-
-    for name in ROTATION_CANDIDATES_R15:
-        assert name in ALL_QUERIES, name
-        assert name not in QUERIES, f"{name} already in the window"
-        assert name in ALL_ORACLES, f"{name} lacks an oracle"
-
-    never_verified = (
-        set(ALL_ORACLES)
-        - ORACLE_BACKED_AT_R14_CLOSE  # held a green row in r1-r14 or
-                                      # collecting it in the r15 window
-        - set(QUERIES)                # in-window: verified this round
-        - set(ROTATION_CANDIDATES_R15)  # queued for the next rotation
-    )
-    assert not never_verified, (
-        f"oracle-backed queries neither verified, in-window, nor "
-        f"queued for rotation: {sorted(never_verified)}")
+    bench = ast.parse(open(os.path.join(root, "bench.py")).read())
+    headline = next(
+        ast.literal_eval(node.value) for node in bench.body
+        if isinstance(node, ast.Assign)
+        and getattr(node.targets[0], "id", None) == "HEADLINE")
+    unknown = set(headline) - set(ALL_QUERIES)
+    assert not unknown, f"bench.py headline names not registered: {unknown}"
 
 
 # --- Arrow-level type parity -------------------------------------------

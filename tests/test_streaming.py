@@ -3617,6 +3617,8 @@ def test_streaming_conversion_latency_equals_batch(spark, tmp_path):
     rows equal the batch first-view/first-qualifying-purchase base,
     and the exact quantile readout over the emissions matches the
     batch events_conversion_latency row."""
+    import time
+
     from pyspark.sql import Window
     from market_data_ingestor_go_spark.plans.queries import (
         ALL_QUERIES, _events)
@@ -3631,14 +3633,20 @@ def test_streaming_conversion_latency_equals_batch(spark, tmp_path):
     src = str(tmp_path / "clsrc")
     os.makedirs(src)
     third = (len(rows) + 2) // 3
+    # the file source admits files in modification-time order, and
+    # chunks written back to back can share an mtime (then a later
+    # chunk may arrive first): stamp strictly increasing mtimes
+    mtime0 = int(time.time()) - 10
     for i, chunk in enumerate((rows[:third], rows[third:2 * third],
                                rows[2 * third:])):
-        with open(os.path.join(src, f"b{i}.json"), "w") as fh:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as fh:
             for r in chunk:
                 fh.write(json.dumps({"user_id": r.user_id,
                                      "ts_ms": r.ts_ms,
                                      "event_id": str(r.event_id),
                                      "event_type": r.event_type}) + "\n")
+        os.utime(path, (mtime0 + i, mtime0 + i))
 
     stream = (spark.readStream
               .schema("user_id BIGINT, ts_ms BIGINT, "
