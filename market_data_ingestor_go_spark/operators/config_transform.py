@@ -184,6 +184,16 @@ def apply_client_config_map(df: DataFrame, client_cfg: dict[str, SymbolConfig],
     Envelope overrides (``timestamp: "current"``) apply to the envelope
     column; field-level stages apply inside the map.
     """
+    fields, ts = config_map_columns(client_cfg, fields_col, symbol_col)
+    return df.withColumns({fields_col: fields, "timestamp": ts})
+
+
+def config_map_columns(client_cfg: dict[str, SymbolConfig],
+                       fields_col: str = "fields",
+                       symbol_col: str = "symbol"):
+    """The compiled form of ``apply_client_config_map`` as two Columns,
+    (fields, timestamp), for callers that place them in their own
+    projection."""
     fields = F.col(fields_col)
     result = None
     ts_override = None
@@ -235,86 +245,99 @@ def apply_client_config_map(df: DataFrame, client_cfg: dict[str, SymbolConfig],
         if cfg.remove_fields:
             expr = F.map_filter(expr, _not_in_fn(list(cfg.remove_fields)))
         # 4. overrides (numeric payload overrides only on the map path)
-        num_over = {k: v for k, v in cfg.override_fields.items()
-                    if isinstance(v, (int, float)) and not isinstance(v, bool)}
+        num_over = _numeric_overrides(cfg)
         if num_over:
             expr = F.map_concat(
                 F.map_filter(expr, _not_in_fn(list(num_over))),
                 F.create_map(*[x for k in sorted(num_over)
-                               for x in (F.lit(k), F.lit(float(num_over[k])).cast("double"))]))
+                               for x in (F.lit(k), F.lit(num_over[k]).cast("double"))]))
         gate = F.col(symbol_col) == F.lit(symbol)
         result = F.when(gate, expr) if result is None else result.when(gate, expr)
         if cfg.override_fields.get("timestamp") == "current":
             cur = F.unix_millis(F.current_timestamp())
             ts_override = F.when(gate, cur) if ts_override is None else ts_override.when(gate, cur)
-    out = df.withColumn(fields_col, result.otherwise(fields) if result is not None else fields)
-    if ts_override is not None:
-        out = out.withColumn("timestamp", ts_override.otherwise(F.col("timestamp")))
-    return out
+    ts = F.col("timestamp")
+    return (fields if result is None else result.otherwise(fields),
+            ts if ts_override is None else ts_override.otherwise(ts))
+
+
+def _numeric_overrides(cfg: SymbolConfig) -> dict[str, float]:
+    return {k: float(v) for k, v in cfg.override_fields.items()
+            if isinstance(v, (int, float)) and not isinstance(v, bool)}
 
 
 # ---------------------------------------------------------------------------
-# Config-as-DATA path: the same §2.8 semantics with the config joined in
-# as a broadcast table instead of compiled into the expression tree.
-# apply_client_config_map's chained per-symbol CASE is ideal for the
-# reference's few-symbol configs (everything inlines into codegen), but
-# its expression tree — and therefore per-tick analysis cost and
-# per-row eval depth — grows O(configured symbols). For wide configs
-# (hundreds of symbols) the join form keeps the expression CONSTANT
-# size: per-symbol rules arrive as map/array columns from a broadcast
-# join, and one fixed expression interprets them.
+# Config-as-DATA form: the same §2.8 semantics with the config folded into
+# one constant map symbol → rule entry instead of compiled into the
+# expression tree. The chained per-symbol CASE above is ideal for the
+# reference's few-symbol configs, but its expression tree grows
+# O(configured symbols), and so do its analysis cost and per-row eval
+# depth. The lookup form keeps the transform CONSTANT size: the row's
+# entry is looked up by symbol, and one fixed expression interprets it.
 
-def config_join_table(spark, client_cfg: dict[str, SymbolConfig]):
-    """Explode one client's config into a per-symbol rule table, or
-    return None when the config isn't join-safe: the join form applies
-    renames simultaneously, which matches the sequential sorted(old)
-    semantics only when targets are unique and no target is itself a
-    source (no chained renames). Unsafe configs fall back to the
-    compiled path.
-    """
-    rows = []
+CONFIG_ENTRY_TYPE = (
+    "STRUCT<rules: MAP<STRING, STRUCT<op: STRING, value: DOUBLE>>, "
+    "renames: MAP<STRING, STRING>, rename_src: MAP<STRING, STRING>, "
+    "removes: ARRAY<STRING>, overrides: MAP<STRING, DOUBLE>, "
+    "ts_current: BOOLEAN>")
+
+
+def config_lookup(client_cfg: dict[str, SymbolConfig]):
+    """The row's config entry (``CONFIG_ENTRY_TYPE``, null for an
+    unconfigured symbol) looked up in a constant map, or None when the
+    config isn't lookup-safe: the lookup form applies renames
+    simultaneously, which matches the sequential sorted(old) semantics
+    only when targets are unique and no target is itself a source (no
+    chained renames). Unsafe configs keep the compiled form.
+
+    The map is one JSON literal parsed by ``from_json``, so the
+    optimizer folds it to a constant and the analyzer sees one string
+    rather than a tree of O(symbols) map and struct constructors.
+    Callers project the lookup into its own column before
+    ``config_lookup_columns`` reads it, so each row searches the map
+    once rather than once per stage that reads the entry.
+    ``try_element_at`` rather than ``map[symbol]`` keeps that
+    projection: the optimizer counts an extractor as cheap and
+    collapses it into its readers (28 copies of the lookup in one
+    projection, against one lookup kept in its own)."""
+    import json
+
+    entries = {}
     for sym in sorted(client_cfg):
         cfg = client_cfg[sym]
         renames = {o: n for o, n in cfg.rename_fields.items() if o != n}
         targets = list(renames.values())
         if len(set(targets)) != len(targets) or any(t in renames for t in targets):
             return None
-        num_over = {k: float(v) for k, v in cfg.override_fields.items()
-                    if isinstance(v, (int, float)) and not isinstance(v, bool)}
-        rows.append((
-            sym,
-            {k: (r.op, float(r.value)) for k, r in cfg.value_rules.items()} or None,
-            renames or None,
-            {n: o for o, n in renames.items()} or None,
-            list(cfg.remove_fields) or None,
-            num_over or None,
-            cfg.override_fields.get("timestamp") == "current",
-        ))
-    schema = ("cfg_symbol STRING, "
-              "rules MAP<STRING, STRUCT<op: STRING, value: DOUBLE>>, "
-              "renames MAP<STRING, STRING>, rename_src MAP<STRING, STRING>, "
-              "removes ARRAY<STRING>, overrides MAP<STRING, DOUBLE>, "
-              "ts_current BOOLEAN")
-    return spark.createDataFrame(rows, schema)
+        entries[sym] = {
+            "rules": {k: {"op": r.op, "value": float(r.value)}
+                      for k, r in cfg.value_rules.items()} or None,
+            "renames": renames or None,
+            "rename_src": {n: o for o, n in renames.items()} or None,
+            "removes": list(cfg.remove_fields) or None,
+            "overrides": _numeric_overrides(cfg) or None,
+            "ts_current": cfg.override_fields.get("timestamp") == "current",
+        }
+    table = F.from_json(F.lit(json.dumps(entries, sort_keys=True)),
+                        f"MAP<STRING, {CONFIG_ENTRY_TYPE}>")
+    return F.try_element_at(table, F.col("symbol"))
 
 
-def apply_client_config_join(df: DataFrame, cfg_table: DataFrame,
-                             fields_col: str = "fields",
-                             symbol_col: str = "symbol") -> DataFrame:
-    """§2.8 on the dynamic payload shape via broadcast join — see
-    ``config_join_table``. Stage order and edge semantics match
-    ``apply_client_config_map`` exactly (agreement-tested): rules on
-    pre-rename names with ÷0→identity, renames only where the source
+def config_lookup_columns(entry):
+    """§2.8 driven by a looked-up config entry (see ``config_lookup``)
+    as two Columns, (fields, timestamp). Stage order and edge semantics
+    match ``apply_client_config_map`` exactly (agreement-tested): rules
+    on pre-rename names with ÷0→identity, renames only where the source
     key exists (dropping an overwritten target), removes post-rename,
-    numeric overrides may resurrect removed keys, and unconfigured
-    symbols pass through untouched (P8 gate = null config columns
-    from the left join)."""
-    j = df.join(F.broadcast(cfg_table),
-                F.col(symbol_col) == F.col("cfg_symbol"), "left")
-    m = F.col(fields_col)
-    rules, renames = F.col("rules"), F.col("renames")
-    rsrc, removes, overrides = (F.col("rename_src"), F.col("removes"),
-                                F.col("overrides"))
+    numeric overrides may resurrect removed keys, and a null entry (an
+    unconfigured symbol, the P8 gate) passes the row through."""
+    m = F.col("fields")
+    rules, renames = entry["rules"], entry["renames"]
+    rsrc, removes, overrides = (entry["rename_src"], entry["removes"],
+                                entry["overrides"])
+    # A stage the entry leaves null is the identity: null lookups keep
+    # every key and value, so no stage needs its own null guard (which
+    # would copy the previous stage's tree into both branches).
 
     def _rule_fn(k, v):
         r = rules[k]
@@ -326,7 +349,7 @@ def apply_client_config_join(df: DataFrame, cfg_table: DataFrame,
             .when((r["op"] == "divide") & (r["value"] != F.lit(0.0)), v / r["value"])
             .otherwise(v))
 
-    m1 = F.when(rules.isNull(), m).otherwise(F.transform_values(m, _rule_fn))
+    m1 = F.transform_values(m, _rule_fn)
 
     def _drop_overwritten(k, v):
         src = rsrc[k]
@@ -336,26 +359,22 @@ def apply_client_config_join(df: DataFrame, cfg_table: DataFrame,
         return F.struct(F.coalesce(renames[e.key], e.key).alias("key"),
                         e.value.alias("value"))
 
-    m2 = F.when(renames.isNull(), m1).otherwise(
-        F.map_from_entries(F.transform(
-            F.map_entries(F.map_filter(m1, _drop_overwritten)), _relabel)))
+    m2 = F.map_from_entries(F.transform(
+        F.map_entries(F.map_filter(m1, _drop_overwritten)), _relabel))
 
     def _not_removed(k, v):
-        return ~F.array_contains(removes, k)
+        return ~F.coalesce(F.array_contains(removes, k), F.lit(False))
 
-    m3 = F.when(removes.isNull(), m2).otherwise(F.map_filter(m2, _not_removed))
+    m3 = F.map_filter(m2, _not_removed)
 
     def _not_overridden(k, v):
-        return ~F.map_contains_key(overrides, k)
+        return ~F.coalesce(F.map_contains_key(overrides, k), F.lit(False))
 
-    m4 = F.when(overrides.isNull(), m3).otherwise(
-        F.map_concat(F.map_filter(m3, _not_overridden), overrides))
-
-    out = j.withColumn(fields_col, m4)
-    out = out.withColumn(
-        "timestamp",
-        F.when(F.coalesce(F.col("ts_current"), F.lit(False)),
-               F.unix_millis(F.current_timestamp()))
-        .otherwise(F.col("timestamp")))
-    return out.drop("cfg_symbol", "rules", "renames", "rename_src",
-                    "removes", "overrides", "ts_current")
+    m4 = F.map_concat(
+        F.map_filter(m3, _not_overridden),
+        F.coalesce(overrides, F.create_map().cast("MAP<STRING, DOUBLE>")))
+    ts = F.when(F.coalesce(entry["ts_current"], F.lit(False)),
+                F.unix_millis(F.current_timestamp())
+                ).otherwise(F.col("timestamp"))
+    # unconfigured symbols skip the stages altogether
+    return F.when(entry.isNull(), m).otherwise(m4), ts

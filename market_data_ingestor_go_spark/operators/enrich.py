@@ -8,7 +8,8 @@ The reference has no general join executor — only three lookup shapes:
 - J2/S3: auth point semi-join (``WHERE key_hash=? AND is_active``,
   postgres.go:138-163) with sha256 hashing (utils/helper.go:8-11).
 - J3: per-client config join (server.go:112-115) — realized in
-  streaming/serve.py via an exploded config table.
+  streaming/serve.py as a CASE over the symbol, or for wide configs a
+  lookup of the symbol in a constant config map.
 
 Scale posture: every shape here broadcasts the dimension side
 explicitly (``F.broadcast``) so the fact stream never shuffles for
@@ -61,11 +62,12 @@ def authenticate_many(api_keys: DataFrame, presented_keys: list[str]) -> DataFra
     """Batched S3/J2: resolve MANY presented keys in ONE broadcast join.
 
     The reference authenticates each connection with its own point
-    query (postgres.go:142-147) — fine per connect, but the serve tick
-    re-checks every live connection, so per-key lookups become N round
-    trips per second. One inner join of the active key dimension
-    against the (tiny, deduplicated) presented-key set costs the same
-    as a single lookup and scales to thousands of connections.
+    query (postgres.go:142-147) when it connects. The serve tick admits
+    every connection that registered since the previous tick in one
+    call, so a burst of N connects costs one lookup, not N round trips.
+    One inner join of the active key dimension against the (tiny,
+    deduplicated) presented-key set costs the same as a single lookup
+    and scales to thousands of connections.
 
     Returns (key_hash, client_id) for every presented key that matches
     an active credential.

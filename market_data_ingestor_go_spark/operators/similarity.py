@@ -714,12 +714,12 @@ def _pq_cb_row(codebooks: DataFrame):
             F.struct("subspace", "cents"))).alias("cb")))
 
 
-def _pq_meta(codebooks: DataFrame):
-    """(m, sub_dim, broadcast cb row) for the serve scan: two driver
-    actions on the codebooks lineage plus a broadcast."""
-    m = codebooks.select(F.max("subspace")).first()[0] + 1
-    sub_dim = len(codebooks.select("cv").first()["cv"])
-    return m, sub_dim, _pq_cb_row(codebooks)
+def _pq_codebook_rows(codebooks: DataFrame):
+    """(rows sorted by (subspace, cell), m, sub_dim): the codebook
+    rows and the shape they imply, from ONE driver job."""
+    rows = sorted(codebooks.select("subspace", "cell", "cv").collect(),
+                  key=lambda r: (r["subspace"], r["cell"]))
+    return rows, rows[-1]["subspace"] + 1, len(rows[0]["cv"])
 
 
 def pq_encode(df: DataFrame, codebooks: DataFrame,
@@ -760,10 +760,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame,
             acc = acc + A[:, i] * B[:, i]
         return acc
 
-    rows = sorted(codebooks.select("subspace", "cell", "cv").collect(),
-                  key=lambda r: (r["subspace"], r["cell"]))
-    m = rows[-1]["subspace"] + 1
-    sub_dim = len(rows[0]["cv"])
+    rows, m, sub_dim = _pq_codebook_rows(codebooks)
     k = len(rows) // m
     cells = np.array([r["cell"] for r in rows],
                      dtype=np.int64).reshape(m, k)
@@ -821,10 +818,12 @@ def pq_ann_from_index(enc: DataFrame, queries: DataFrame,
     exact cosine re-rank, identical results to ``pq_ann`` over the
     same corpus (tested) with zero encode work per query batch —
     the FAISS deployment split (train offline, encode on ingest,
-    scan at serve)."""
+    scan at serve). Construction runs ONE driver job: the codebook
+    collect that yields m and the sub-dim."""
     from pyspark.sql.window import Window
 
-    m, sub_dim, cb_row = _pq_meta(codebooks)
+    _, m, sub_dim = _pq_codebook_rows(codebooks)
+    cb_row = _pq_cb_row(codebooks)
 
     # query side: per-subspace IP tables q_s · c (array of k doubles)
     q = _query_side(queries, id_col, vec_col)

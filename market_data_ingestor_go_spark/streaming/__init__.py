@@ -1,4 +1,3 @@
 from .pipeline import IngestPipeline, build_ingest_stream
-from .serve import build_serve_snapshot
 
-__all__ = ["IngestPipeline", "build_ingest_stream", "build_serve_snapshot"]
+__all__ = ["IngestPipeline", "build_ingest_stream"]

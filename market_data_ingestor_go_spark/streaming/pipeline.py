@@ -56,6 +56,16 @@ log = logging.getLogger(__name__)
 
 DEFAULT_TTL_MILLIS = 24 * 3600 * 1000  # REDIS_TTL default 24h, config.go:37
 
+# The latest-state table's columns (the enriched ingest record). Both
+# its writer and its readers pin it: an unpinned parquet read runs a
+# footer-inference job on every call.
+LATEST_SCHEMA = T.StructType([
+    T.StructField("name", T.StringType()),
+    T.StructField("timestamp", T.LongType()),
+    T.StructField("data", T.StringType()),
+    T.StructField("exchange", T.StringType()),
+])
+
 
 def decode_raw_frames(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """S2: raw JSON frames → typed envelope; undecodable frames dropped
@@ -264,11 +274,10 @@ class IngestPipeline:
                 self.redis_failures += 1
                 log.warning("Redis latest mirror dropped a batch",
                             exc_info=True)
-        # the state table has the batch's columns: pinning the schema
-        # skips the footer-inference job; one aggregate over old ∪ new
-        # keeps the map-side partial aggregate on both inputs
+        # the batch has the state table's columns; one aggregate over
+        # old ∪ new keeps the map-side partial aggregate on both inputs
         old = fs.read_with_backup(batch.sparkSession, self.latest_path,
-                                  schema=batch.schema)
+                                  schema=LATEST_SCHEMA)
         merged = latest_per_key(
             batch if old is None else old.unionByName(batch),
             "name", "timestamp")
@@ -306,10 +315,12 @@ class IngestPipeline:
                 "ingest_pg_dropped_batches": self.pg_failures}
 
     def latest_snapshot(self) -> DataFrame:
-        """S5: the cache full-scan read (cache_service.go:67-93).
-        Falls back to the ``.old`` backup if a crash mid-swap left the
-        live path missing (sources/fs.py::atomic_swap contract)."""
-        df = fs.read_with_backup(self.spark, self.latest_path)
+        """S5: the cache full-scan read (cache_service.go:67-93), with
+        the schema pinned (``LATEST_SCHEMA``), so building it runs no
+        job. Falls back to the ``.old`` backup if a crash mid-swap left
+        the live path missing (sources/fs.py::atomic_swap contract)."""
+        df = fs.read_with_backup(self.spark, self.latest_path,
+                                 schema=LATEST_SCHEMA)
         if df is None:  # no write yet — surface the normal reader error
             return self.spark.read.parquet(self.latest_path)
         return df

@@ -1,44 +1,60 @@
 """E2 — the serve/broadcast path (SURVEY.md §3 E2).
 
-Reference: every second, snapshot the cache, and for *every client ×
-conn × record* flatten + apply the per-client transform + WriteJSON
-(server.go:88-130). That is O(clients × symbols) recompute per tick
-with zero sharing — the reference's own documented weakness.
+Reference: a connection's key is validated and its config fetched once,
+at connect time (server.go:63-69); then every second the server
+snapshots the cache and, for *every client × conn × record*, flattens,
+applies the per-client transform and WriteJSONs (server.go:88-130).
+That is O(clients × symbols) recompute per tick with zero sharing — the
+reference's own documented weakness.
 
-Engine realization: one shared flatten per trigger, then per-client
-compiled transform pipelines over the same scan, published by a
-foreachBatch sink. Auth (S3/J2) and config fetch (S4) are dimension
-lookups; the conditional gate (P8) and the §2.8 stage order live in
-operators/config_transform.py.
+Engine realization, split the way Structured Streaming splits a plan
+from its executions — declare once, re-run only the data:
 
-Scale posture: the snapshot is ~|symbols| rows (tiny); the cost driver
-is clients. Per-client work is a Column-expression pipeline over the
-shared snapshot — no extra scans, no shuffles, no Python. A thousand
-clients = a thousand cheap projections of one cached DataFrame.
+- **Once per connection** (``streaming/publisher.py`` calls these on
+  the first tick after a connection registers): ``resolve_connections``
+  authenticates every new connection in one batched lookup (S3/J2),
+  ``fetch_configs`` collects their config rows in one filtered read
+  (S4), and ``compile_wire_view`` compiles each distinct config text,
+  once, into the Column that renders one ``(vk, wire)`` struct per
+  snapshot row (P4-P8 + P11, operators/config_transform.py).
+- **Every tick**: ``distinct_wire_views`` puts those compiled structs
+  over one flattened scan of the snapshot (P3) as a single
+  ``select(inline(array(...)))``, so a tick is one schema-pinned read
+  and one action however many configs are live.
+
+Scale posture: the snapshot is ~|symbols| rows (tiny); a tick's cost is
+one scan emitting |symbols| × |distinct configs| rows, independent of
+the connection count.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.market import PAYLOAD_SCHEMA
-from ..operators.cache import pin
 from ..operators.config_transform import (
-    SymbolConfig,
-    apply_client_config_join,
-    apply_client_config_map,
-    config_join_table,
+    config_lookup,
+    config_lookup_columns,
+    config_map_columns,
     parse_client_config,
 )
-from ..operators.enrich import (authenticate_many, audit_key_usage_inline,
-                                _sha256_hex)
+from ..operators.enrich import authenticate_many, _sha256_hex
+
+# Above this many configured symbols, the compiled CASE form's
+# expression tree (O(symbols) chained CASEs) costs more to build and
+# evaluate than a constant-size transform over the row's entry looked
+# up in a constant config map. Below it, inlined literals win (and
+# small configs are the reference's actual shape).
+JOIN_CONFIG_THRESHOLD = 16
 
 
 def flatten_snapshot(latest: DataFrame, n_parts: int = 2) -> DataFrame:
-    """P3 once per trigger (shared scan): decode the double-nested wire
+    """P3 once per tick (shared scan): decode the double-nested wire
     payload (`data.data`, server.go:180) into a MAP fields column +
     envelope columns — the flat record D5.
 
@@ -54,49 +70,12 @@ def flatten_snapshot(latest: DataFrame, n_parts: int = 2) -> DataFrame:
     ).coalesce(n_parts)
 
 
-def load_client_configs(configs_df: DataFrame) -> dict[str, dict[str, SymbolConfig]]:
-    """S4: clients_configs(id, config JSONB) → compiled per-client maps.
-
-    Config tables are tiny (one row per client) — collected once and
-    compiled to Column pipelines, mirroring the reference's
-    fetch-at-connect-time (server.go:69).
-    """
-    out = {}
-    for row in configs_df.select("id", "config").collect():
-        try:
-            cfg = json.loads(row["config"]) if row["config"] else {}
-        except (TypeError, ValueError):
-            cfg = {}
-        out[row["id"]] = parse_client_config(cfg)
-    return out
-
-
-def per_client_views(flat: DataFrame,
-                     client_cfgs: dict[str, dict[str, SymbolConfig]]) -> dict[str, DataFrame]:
-    """One transformed view per client over the shared flat snapshot.
-
-    Clients without a config (or with empty config) get the identity
-    pass-through — the reference's missing-config default
-    (postgres.go:180-182 returns nil → no transform)."""
-    views = {}
-    for client_id, cfg in client_cfgs.items():
-        views[client_id] = apply_client_config_map(flat, cfg) if cfg else flat
-    return views
-
-
-def wire_payload(df: DataFrame) -> DataFrame:
-    """P11: flat record → JSON wire string per record (server.go:117)."""
-    return df.select(
-        F.col("symbol"),
-        F.to_json(F.struct("symbol", "timestamp", "exchange", "fields")).alias("wire"))
-
-
 def resolve_connections(api_keys: DataFrame,
                         presented_keys: dict[str, str]) -> dict[str, str]:
-    """Auth every live connection in ONE broadcast join per tick
-    (server.go:63-67 semantics, batched): {conn_id: client_id} for
-    connections whose key matched an active credential; invalid /
-    inactive keys are simply absent."""
+    """Auth many connections in ONE batched lookup (server.go:63-67
+    semantics, batched): {conn_id: client_id} for connections whose
+    key matched an active credential; invalid / inactive keys are
+    simply absent."""
     hash2client = {r["key_hash"]: r["client_id"]
                    for r in authenticate_many(
                        api_keys, list(presented_keys.values())).collect()}
@@ -105,102 +84,70 @@ def resolve_connections(api_keys: DataFrame,
             if _sha256_hex(key) in hash2client}
 
 
-def distinct_wire_views(latest: DataFrame, configs_df: DataFrame,
-                        client_ids: set[str]
-                        ) -> dict[str, tuple[DataFrame, list[str]]]:
-    """Per-DISTINCT-CONFIG wire views over one shared flattened
-    snapshot: clients group by their canonical config text, each
-    distinct config compiles to ONE Column pipeline, and the returned
-    key is the config text's md5 — STABLE across ticks, so downstream
-    plans built from it (tags, unions) hash identically tick-to-tick
-    and Spark's analysis/codegen caches hit. The reference recomputes
-    per connection (server.go:88-130) — its own documented weakness;
-    here tick compute is O(distinct configs).
-
-    Returns {cfg_key: (wire view, [client_ids sharing it])}. The
-    shared flat snapshot is pinned via the cache registry; callers
-    running many ticks release it with ``release_pinned()`` after
-    pushing the tick."""
-    import hashlib as _hashlib
-
-    flat = pin(flatten_snapshot(latest))
-    raw = {}
-    for row in configs_df.select("id", "config").collect():
-        raw[row["id"]] = row["config"] or ""
-    by_cfg: dict[str, list[str]] = {}
-    for client_id in client_ids:
-        by_cfg.setdefault(raw.get(client_id, ""), []).append(client_id)
-    spark = latest.sparkSession
-    out = {}
-    for cfg_text, cids in by_cfg.items():
-        try:
-            cfg = parse_client_config(json.loads(cfg_text)) if cfg_text else {}
-        except (TypeError, ValueError):
-            cfg = {}
-        view = wire_payload(_apply_config(spark, flat, cfg))
-        out[_hashlib.md5(cfg_text.encode()).hexdigest()] = (view, cids)
+def fetch_configs(configs_df: DataFrame, client_ids: set[str]) -> dict[str, str]:
+    """S4: {client_id: config JSON text} for ``client_ids`` in one
+    filtered collect of clients_configs(id, config) (server.go:69). A
+    client without a row, or with a null config, maps to ""."""
+    rows = (configs_df.filter(F.col("id").isin(sorted(client_ids)))
+            .select("id", "config").collect())
+    out = dict.fromkeys(client_ids, "")
+    out.update({r["id"]: r["config"] or "" for r in rows})
     return out
 
 
-# Above this many configured symbols, the compiled-Column form's
-# expression tree (O(symbols) chained CASEs) costs more in per-tick
-# analysis + per-row eval than a broadcast join of the config as data
-# (constant-size expression). Below it, inlined literals win (and
-# small configs are the reference's actual shape).
-JOIN_CONFIG_THRESHOLD = 16
+@dataclass(frozen=True)
+class WireView:
+    """One distinct config text, compiled once.
+
+    ``struct`` renders a flat snapshot row as ``(vk, wire)``: the view
+    key and the row's transformed JSON frame. ``lookups`` are the
+    (column name, Column) pairs it reads, to be projected before it."""
+    key: str
+    struct: Column
+    lookups: tuple[tuple[str, Column], ...] = ()
 
 
-def _apply_config(spark, flat: DataFrame, cfg) -> DataFrame:
-    if not cfg:
-        return flat
-    if len(cfg) > JOIN_CONFIG_THRESHOLD:
-        tbl = config_join_table(spark, cfg)
-        if tbl is not None:  # join-safe (no chained/conflicting renames)
-            return apply_client_config_join(flat, tbl)
-    return apply_client_config_map(flat, cfg)
+def view_key(cfg_text: str) -> str:
+    """A config text's view key: its md5, stable across ticks and
+    connections."""
+    return hashlib.md5(cfg_text.encode()).hexdigest()
 
 
-def client_wire_views(latest: DataFrame, configs_df: DataFrame,
-                      client_ids: set[str]) -> dict[str, DataFrame]:
-    """{client_id: wire view}; same-config clients share one view
-    object (see distinct_wire_views)."""
-    views = {}
-    for _, (view, cids) in distinct_wire_views(
-            latest, configs_df, client_ids).items():
-        for client_id in cids:
-            views[client_id] = view
-    return views
+def compile_wire_view(cfg_text: str) -> WireView:
+    """Compile a client config text into its ``WireView``. A missing or
+    unparsable config is the identity (postgres.go:180-182 returns nil
+    → no transform).
+
+    Configs of up to ``JOIN_CONFIG_THRESHOLD`` symbols, and wider ones
+    that are not lookup-safe, compile to the chained CASE form; wider
+    lookup-safe ones read their entry from a constant config map,
+    looked up once per row in its own column."""
+    key = view_key(cfg_text)
+    try:
+        cfg = parse_client_config(json.loads(cfg_text)) if cfg_text else {}
+    except (TypeError, ValueError):
+        cfg = {}
+    lookups: tuple[tuple[str, Column], ...] = ()
+    lookup = config_lookup(cfg) if len(cfg) > JOIN_CONFIG_THRESHOLD else None
+    if lookup is not None:
+        name = f"_cfg_{key}"
+        lookups = ((name, lookup),)
+        fields, ts = config_lookup_columns(F.col(name))
+    else:
+        fields, ts = config_map_columns(cfg)
+    wire = F.to_json(F.struct(F.col("symbol"), ts.alias("timestamp"),
+                              F.col("exchange"), fields.alias("fields")))
+    return WireView(key, F.struct(F.lit(key).alias("vk"), wire.alias("wire")),
+                    lookups)
 
 
-def serve_tick(spark: SparkSession, latest: DataFrame, configs_df: DataFrame,
-               api_keys: DataFrame, presented_keys: dict[str, str],
-               audit_sink=None) -> dict[str, DataFrame]:
-    """One broadcast tick: auth ALL presented keys with one batched
-    join (S3), fetch configs (S4), flatten once (P3), emit per-client
-    wire views (P4-P8 + P11) shared across same-client connections.
-
-    ``audit_sink`` (optional) receives the K5 last_used_at-touched
-    api_keys DataFrame for the keys that authenticated — best-effort,
-    exceptions swallowed (postgres.go:156-160 fires a goroutine and
-    ignores the result).
-
-    Returns {conn_id: wire DataFrame}; the caller (WebSocket layer /
-    foreachBatch publisher) pushes each to its connection.
-    """
-    conn2client = resolve_connections(api_keys, presented_keys)
-    if audit_sink is not None and conn2client:
-        used = sorted({_sha256_hex(presented_keys[cid]) for cid in conn2client})
-        try:
-            audit_sink(audit_key_usage_inline(api_keys, used))
-        except Exception:
-            pass
-    views = client_wire_views(latest, configs_df,
-                              set(conn2client.values()))
-    return {conn_id: views[client_id]
-            for conn_id, client_id in conn2client.items()}
-
-
-def build_serve_snapshot(latest: DataFrame, configs_df: DataFrame) -> dict[str, DataFrame]:
-    """Convenience: flatten + all per-client views (no auth layer)."""
+def distinct_wire_views(latest: DataFrame, views: list[WireView]) -> DataFrame:
+    """The tick's plan: (vk, wire) rows of every view in ``views`` over
+    ONE flattened scan of ``latest`` — the lookups in one projection,
+    then a single ``inline(array(<one struct per view>))``. Collecting
+    it is the tick's one Spark job."""
     flat = flatten_snapshot(latest)
-    return per_client_views(flat, load_client_configs(configs_df))
+    lookups = [col.alias(name) for v in views for name, col in v.lookups]
+    if lookups:
+        flat = flat.select("*", *lookups)
+    return flat.select(F.inline(F.array(*[v.struct for v in views])))

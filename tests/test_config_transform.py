@@ -158,18 +158,31 @@ def test_map_path_rename_missing_source_keeps_target(spark):
     assert out[3] == {"bid": 12.0}                 # untouched
 
 
+def _apply_lookup(df, client_cfg):
+    """The lookup form the serve path uses for wide configs: the entry
+    projected into its own column, then the constant-size transform."""
+    from pyspark.sql import functions as F
+    from market_data_ingestor_go_spark.operators.config_transform import (
+        config_lookup, config_lookup_columns)
+
+    lookup = config_lookup(client_cfg)
+    assert lookup is not None
+    fields, ts = config_lookup_columns(F.col("_cfg"))
+    return (df.withColumn("_cfg", lookup)
+            .withColumns({"fields": fields, "timestamp": ts}).drop("_cfg"))
+
+
 def test_config_join_path_agrees_with_compiled(spark):
-    """apply_client_config_join (config-as-data broadcast join) must
-    produce exactly what apply_client_config_map (compiled Columns)
-    produces, across the edge cases: sparse payloads missing the
-    rename source, pre-existing rename targets, divide-by-zero rules,
-    overrides resurrecting removed keys, ts 'current' override, and
-    unconfigured symbols (P8 pass-through)."""
+    """The constant config-map lookup form must produce exactly what
+    apply_client_config_map (compiled Columns) produces, across the
+    edge cases: sparse payloads missing the rename source, pre-existing
+    rename targets, divide-by-zero rules, overrides resurrecting
+    removed keys, ts 'current' override, and unconfigured symbols (P8
+    pass-through)."""
     import json as _json
     from pyspark.sql import Row
     from market_data_ingestor_go_spark.operators.config_transform import (
-        apply_client_config_join, apply_client_config_map,
-        config_join_table, parse_client_config)
+        apply_client_config_map, config_lookup, parse_client_config)
 
     flat = spark.createDataFrame([
         Row(fields={"bid": 10.0, "ask": 11.0}, symbol="A", timestamp=1000, exchange="x"),
@@ -186,8 +199,6 @@ def test_config_join_path_agrees_with_compiled(spark):
               "remove_fields": ["bid"],
               "override_fields": {"bid": 42, "timestamp": "current"}},
     }})))
-    tbl = config_join_table(spark, cfg)
-    assert tbl is not None
 
     def canon(df):
         rows = sorted(df.collect(), key=lambda r: (r["symbol"], r["timestamp"]))
@@ -195,28 +206,26 @@ def test_config_join_path_agrees_with_compiled(spark):
         return [(r["symbol"], dict(r["fields"]),
                  r["timestamp"] > 1_000_000 or r["timestamp"]) for r in rows]
 
-    got_join = canon(apply_client_config_join(flat, tbl))
+    got_lookup = canon(_apply_lookup(flat, cfg))
     got_map = canon(apply_client_config_map(flat, cfg))
-    assert got_join == got_map
+    assert got_lookup == got_map
     # spot-check the semantics themselves
-    by_key = {(s, ts if isinstance(ts, int) else "now"): f for s, f, ts in got_join}
+    by_key = {(s, ts if isinstance(ts, int) else "now"): f for s, f, ts in got_lookup}
     assert by_key[("A", 1000)] == {"price": 20.0, "ask": 11.0}  # rule, then rename
     assert by_key[("Z", 1004)] == {"bid": 1.0}             # pass-through
 
-    # chained renames are NOT join-safe → table builder refuses
+    # chained renames are NOT lookup-safe → the lookup builder refuses
     chained = parse_client_config({"symbols": {
         "A": {"rename_fields": {"a": "b", "b": "c"}}}})
-    assert config_join_table(spark, chained) is None
+    assert config_lookup(chained) is None
 
 
 def test_join_path_random_agreement_batched(spark):
     """Randomized agreement sweep (fixed seed): 20 symbols with random
-    join-safe configs × sparse random payloads, compiled path vs
-    config-as-data join path compared in one batch."""
+    lookup-safe configs × sparse random payloads, compiled path vs
+    config-map lookup path compared in one batch."""
     import random
     from pyspark.sql import Row
-    from market_data_ingestor_go_spark.operators.config_transform import (
-        apply_client_config_join, apply_client_config_map, config_join_table)
 
     rng = random.Random(7)
     fields = ["bid", "ask", "last", "vol"]
@@ -237,9 +246,6 @@ def test_join_path_random_agreement_batched(spark):
         cfg[f"S{i}"] = SymbolConfig(rename_fields=renames, value_rules=rules,
                                     override_fields=overrides,
                                     remove_fields=removes)
-    tbl = config_join_table(spark, cfg)
-    assert tbl is not None
-
     rows = []
     ts = 0
     for i in range(20):
@@ -258,5 +264,5 @@ def test_join_path_random_agreement_batched(spark):
                 for r in df.collect()}
 
     a = canon(apply_client_config_map(flat, cfg))
-    b = canon(apply_client_config_join(flat, tbl))
+    b = canon(_apply_lookup(flat, cfg))
     assert a == b

@@ -1266,27 +1266,17 @@ def test_pq_index_serve_equals_encode_and_scan(spark):
     assert indexed == direct
 
 
-def test_pq_encode_builds_from_one_job(spark):
-    """Building the encode plan runs exactly ONE driver job — the
-    codebook collect, which also yields m and the sub-dim — against a
-    codebook given as rows, the way StreamingPQIndex rebuilds it every
-    epoch."""
+def _construction_jobs(spark, build):
+    """(jobs run while ``build()`` constructs its plan, the plan)."""
     import time
 
-    from market_data_ingestor_go_spark.operators.similarity import (
-        pq_encode, train_pq_codebooks)
-
-    emb = load_table(spark, SF, "embeddings")
-    rows = train_pq_codebooks(emb, m=4, k=4, n_iters=1).collect()
-    books = spark.createDataFrame(
-        rows, "subspace INT, cell INT, cv ARRAY<DOUBLE>")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    group = f"pq-encode-build-{time.monotonic_ns()}"
+    group = f"construction-{time.monotonic_ns()}"
     marker = f"{group}-marker"
     sc.setJobGroup(group, group)
     try:
-        enc = pq_encode(emb.filter("vec_id < 8"), books)
+        out = build()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # job events reach the tracker in submission order: once a later
@@ -1300,8 +1290,51 @@ def test_pq_encode_builds_from_one_job(spark):
     while time.time() < deadline and not tracker.getJobIdsForGroup(marker):
         time.sleep(0.1)
     assert list(tracker.getJobIdsForGroup(marker))
-    assert len(tracker.getJobIdsForGroup(group)) == 1
+    return len(tracker.getJobIdsForGroup(group)), out
+
+
+def _pq_books_as_rows(spark, emb):
+    """Trained codebooks given as rows, the way StreamingPQIndex holds
+    them between epochs."""
+    from market_data_ingestor_go_spark.operators.similarity import (
+        train_pq_codebooks)
+
+    rows = train_pq_codebooks(emb, m=4, k=4, n_iters=1).collect()
+    return spark.createDataFrame(
+        rows, "subspace INT, cell INT, cv ARRAY<DOUBLE>")
+
+
+def test_pq_encode_builds_from_one_job(spark):
+    """Building the encode plan runs exactly ONE driver job — the
+    codebook collect, which also yields m and the sub-dim — against a
+    codebook given as rows, the way StreamingPQIndex rebuilds it every
+    epoch."""
+    from market_data_ingestor_go_spark.operators.similarity import pq_encode
+
+    emb = load_table(spark, SF, "embeddings")
+    books = _pq_books_as_rows(spark, emb)
+    jobs, enc = _construction_jobs(
+        spark, lambda: pq_encode(emb.filter("vec_id < 8"), books))
+    assert jobs == 1
     assert enc.count() == 8
+
+
+def test_pq_ann_from_index_builds_from_one_job(spark):
+    """Building the index-serve plan (every StreamingPQIndex.probe and
+    every knn_ann_pq build) runs exactly ONE driver job: the codebook
+    collect that yields m and the sub-dim."""
+    from market_data_ingestor_go_spark.operators.similarity import (
+        pq_ann_from_index, pq_encode)
+
+    emb = load_table(spark, SF, "embeddings")
+    books = _pq_books_as_rows(spark, emb)
+    enc = pq_encode(emb.filter("vec_id < 40"), books).localCheckpoint(eager=True)
+    q = emb.filter("vec_id < 3")
+    jobs, hits = _construction_jobs(
+        spark, lambda: pq_ann_from_index(enc, q, books, k=2, shortlist=2))
+    assert jobs == 1
+    assert hits.count() == 6  # k neighbours per query
+    enc.unpersist()
 
 
 def test_multimodal_resize_plumbing(spark):
@@ -2901,9 +2934,10 @@ def _pq_encode_expr(df, codebooks, id_col="vec_id", vec_col="embedding"):
     struct(csd − 2.0·dot, cell) (ties to the smaller cell); nsd_hat
     the left fold of csd[code_s] over subspaces in cb order."""
     from market_data_ingestor_go_spark.operators.similarity import (
-        _pq_meta, as_double, dot)
+        _pq_cb_row, _pq_codebook_rows, as_double, dot)
 
-    m, sub_dim, cb_row = _pq_meta(codebooks)
+    _, m, sub_dim = _pq_codebook_rows(codebooks)
+    cb_row = _pq_cb_row(codebooks)
     c = df.select(F.col(id_col).alias("n_id"), as_double(vec_col).alias("nv"))
     subs = F.array(*[F.slice(F.col("nv"), s * sub_dim + 1, sub_dim)
                      for s in range(m)])

@@ -13,8 +13,6 @@ from pyspark.sql import Row, functions as F
 from market_data_ingestor_go_spark.functions.market import MARKET_DATA_SCHEMA
 from market_data_ingestor_go_spark.streaming.pipeline import (
     IngestPipeline, build_ingest_stream)
-from market_data_ingestor_go_spark.streaming.serve import (
-    build_serve_snapshot, flatten_snapshot, serve_tick, wire_payload)
 from market_data_ingestor_go_spark.streaming import sources as ws_sources
 
 
@@ -162,8 +160,31 @@ def test_history_epoch_replay_idempotent(spark, symbols_dim, tmp_path):
     assert pipe.latest_snapshot().count() == 2  # ts-max merge unchanged
 
 
+def _serve_clients(pub, keys):
+    """Connect one WS client per key and wait until all registered."""
+    import time
+    from market_data_ingestor_go_spark.streaming import ws_minimal as wm
+
+    conns = [wm.connect(pub.url, headers={"x-api-key": k}) for k in keys]
+    deadline = time.monotonic() + 5
+    while len(pub.presented_keys()) < len(keys) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert len(pub.presented_keys()) == len(keys)
+    return conns
+
+
+def _recv_frames(conn, n):
+    """{symbol: frame} of the next ``n`` frames on ``conn``."""
+    frames = [json.loads(conn.recv(timeout=5.0)) for _ in range(n)]
+    return {f["symbol"]: f for f in frames}
+
+
 def test_serve_path_flatten_and_client_views(spark, tmp_path):
-    """E2: shared flatten + per-client compiled transforms + wire JSON."""
+    """E2 through the publisher: shared flatten + per-client compiled
+    transforms + wire JSON."""
+    import hashlib
+    from market_data_ingestor_go_spark.streaming.publisher import ServePublisher
+
     latest = spark.createDataFrame([
         Row(name="AAPL", timestamp=2000, exchange="usstock",
             data=json.dumps({"data": {"bid": 10.0, "ask": 11.0}})),
@@ -176,20 +197,29 @@ def test_serve_path_flatten_and_client_views(spark, tmp_path):
             "remove_fields": ["ask"]}}})),
         Row(id="c2", config=None),
     ])
-    views = build_serve_snapshot(latest, configs)
-    c1 = {r["symbol"]: dict(r["fields"]) for r in views["c1"].collect()}
-    assert c1["AAPL"] == {"bid": 11.0}          # transformed
-    assert c1["BTCUSD"] == {"bid": 9.0, "ask": 9.5}  # P8 passthrough
-    c2 = {r["symbol"]: dict(r["fields"]) for r in views["c2"].collect()}
-    assert c2["AAPL"] == {"bid": 10.0, "ask": 11.0}  # no config → identity
-
-    wire = wire_payload(views["c1"]).collect()
-    parsed = {r["symbol"]: json.loads(r["wire"]) for r in wire}
-    assert parsed["AAPL"]["fields"] == {"bid": 11.0}
+    keys = spark.createDataFrame([
+        Row(client_id=c, key_hash=hashlib.sha256(c.encode()).hexdigest(),
+            is_active=True) for c in ("c1", "c2")])
+    pub = ServePublisher(spark, keys, configs).start()
+    try:
+        c1, c2 = _serve_clients(pub, ["c1", "c2"])
+        assert pub.tick(latest) == 4
+        got1, got2 = _recv_frames(c1, 2), _recv_frames(c2, 2)
+        assert got1["AAPL"]["fields"] == {"bid": 11.0}          # transformed
+        assert got1["BTCUSD"]["fields"] == {"bid": 9.0, "ask": 9.5}  # P8 passthrough
+        assert got2["AAPL"]["fields"] == {"bid": 10.0, "ask": 11.0}  # no config → identity
+        assert got1["AAPL"] == {"symbol": "AAPL", "timestamp": 2000,
+                                "exchange": "usstock", "fields": {"bid": 11.0}}
+        for c in (c1, c2):
+            c.close()
+    finally:
+        pub.stop()
 
 
 def test_serve_tick_auth_gate(spark):
     import hashlib
+    from market_data_ingestor_go_spark.streaming.publisher import ServePublisher
+
     latest = spark.createDataFrame([
         Row(name="AAPL", timestamp=1, exchange="usstock",
             data=json.dumps({"data": {"bid": 1.0}}))])
@@ -201,9 +231,18 @@ def test_serve_tick_auth_gate(spark):
         Row(client_id="c2", key_hash=hashlib.sha256(b"dead").hexdigest(),
             is_active=False),
     ])
-    views = serve_tick(spark, latest, configs, keys,
-                       {"conn1": "good", "conn2": "dead", "conn3": "nope"})
-    assert set(views) == {"conn1"}  # inactive + unknown keys rejected
+    pub = ServePublisher(spark, keys, configs).start()
+    try:
+        good, dead, nope = _serve_clients(pub, ["good", "dead", "nope"])
+        assert pub.tick(latest) == 1
+        assert set(_recv_frames(good, 1)) == {"AAPL"}
+        for c in (dead, nope):  # inactive + unknown keys rejected
+            with pytest.raises(TimeoutError):
+                c.recv(timeout=0.3)
+        for c in (good, dead, nope):
+            c.close()
+    finally:
+        pub.stop()
 
 
 def test_ws_source_contract(spark):
@@ -3448,12 +3487,16 @@ def test_streaming_session_paths_prefix_complete(spark, tmp_path):
     chunks.append([{"user_id": -1, "ts_ms": far + 1,
                     "event_id": "zz2", "event_type": "noop"}])
     for i, chunk in enumerate(chunks):
-        with open(os.path.join(src, f"b{i}.json"), "w") as fh:
+        fp = os.path.join(src, f"b{i}.json")
+        with open(fp, "w") as fh:
             for r in chunk:
                 d = r if isinstance(r, dict) else {
                     "user_id": r.user_id, "ts_ms": r.ts_ms,
                     "event_id": r.event_id, "event_type": r.event_type}
                 fh.write(json.dumps(d) + "\n")
+        # file-source batch order follows modification time: files
+        # written within one clock tick would replay in any order
+        os.utime(fp, (1700000000 + i, 1700000000 + i))
 
     stream = (spark.readStream
               .schema("user_id BIGINT, ts_ms BIGINT, "
