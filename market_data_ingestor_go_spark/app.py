@@ -22,11 +22,14 @@ Documented divergences:
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 _DUR_RE = re.compile(r"(\d+(?:\.\d+)?)(ms|s|m|h)")
 _DUR_MS = {"ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000}
@@ -136,7 +139,7 @@ class AppHandle:
             self.query.stop()
             self.query.awaitTermination(15)
         except Exception:
-            pass
+            log.warning("ingest query did not stop cleanly", exc_info=True)
         if self.metrics_server is not None:
             self.metrics_server.stop()
         # remove the session-wide listener: a leaked one keeps bumping
@@ -145,7 +148,7 @@ class AppHandle:
             try:
                 self.spark.streams.removeListener(self.listener)
             except Exception:
-                pass
+                log.warning("metrics listener removal failed", exc_info=True)
 
 
 def _parse_database_url(url: str) -> tuple[str, int, str, str] | None:

@@ -219,6 +219,20 @@ def config_map_columns(client_cfg: dict[str, SymbolConfig],
                 F.when(e.key == F.lit(old), F.lit(new)).otherwise(e.key).alias("key"),
                 e.value.alias("value"))
 
+        def _rename_fn(old, new):
+            # Only maps that actually carry the source key are touched
+            # (server.go:199-205 checks existence first): drop any
+            # existing target key, then relabel old → new. Maps
+            # without the source key — including a pre-existing
+            # target key — pass through untouched.
+            def fn(m):
+                renamed = F.map_from_entries(F.transform(
+                    F.map_entries(F.map_filter(m, _drop_key_fn(new))),
+                    _relabel_fn(old, new)))
+                return F.when(F.map_contains_key(m, F.lit(old)), renamed) \
+                    .otherwise(m)
+            return fn
+
         expr = fields
         # 1. value rules inside the map
         if cfg.value_rules:
@@ -228,16 +242,10 @@ def config_map_columns(client_cfg: dict[str, SymbolConfig],
             new = cfg.rename_fields[old]
             if old == new:
                 continue
-            # Only rows that actually carry the source key are touched
-            # (server.go:199-205 checks existence first): drop any
-            # existing target key, then relabel old → new. Rows
-            # without the source key keep their map — including a
-            # pre-existing target key — untouched.
-            renamed = F.map_filter(expr, _drop_key_fn(new))
-            renamed = F.map_from_entries(
-                F.transform(F.map_entries(renamed), _relabel_fn(old, new)))
-            expr = F.when(F.map_contains_key(expr, F.lit(old)), renamed) \
-                .otherwise(expr)
+            # The stage reads its input map three times; binding it
+            # once to a lambda variable (a one-element array) keeps the
+            # tree linear in the number of renames, not 3^r.
+            expr = F.transform(F.array(expr), _rename_fn(old, new))[0]
         def _not_in_fn(names):
             return lambda k, v: ~k.isin(*names)
 

@@ -1,8 +1,9 @@
 """Storage-agnostic filesystem operations via the Hadoop FileSystem API.
 
-The streaming sinks (streaming/pipeline.py) need three primitives the
+The streaming sinks (streaming/pipeline.py) need four primitives the
 DataFrame API does not expose: existence checks, recursive listing
-with sizes, and a rename-based table swap. Round 1 implemented them
+with sizes, a directory written from driver-side bytes, and a
+rename-based table swap. An earlier version implemented them
 with ``pathlib`` / ``os.rename`` — local-filesystem-only semantics
 that silently break on HDFS and object stores. This module routes
 them through ``org.apache.hadoop.fs.FileSystem`` (reached over the
@@ -57,6 +58,20 @@ def list_files(spark: SparkSession, path: str,
 def total_size(spark: SparkSession, path: str,
                suffix: str = ".parquet") -> int:
     return sum(size for _, size in list_files(spark, path, suffix))
+
+
+def write_dir(spark: SparkSession, path: str, files: dict[str, bytes]) -> None:
+    """Replace directory ``path`` with one holding exactly ``files``
+    ({name: content}), each written by one ``FileSystem.create``: the
+    staging half of an ``atomic_swap`` for a table built off Spark."""
+    fs, hpath, jvm = _fs_and_path(spark, path)
+    fs.delete(hpath, True)
+    for name, data in files.items():
+        out = fs.create(jvm.org.apache.hadoop.fs.Path(hpath, name), False)
+        try:
+            out.write(data)
+        finally:
+            out.close()
 
 
 def atomic_swap(spark: SparkSession, staging: str, live: str) -> None:

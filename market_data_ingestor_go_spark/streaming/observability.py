@@ -21,6 +21,7 @@ numbers fall out of the declarative plan.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 try:
@@ -29,6 +30,8 @@ try:
 except ImportError:  # pragma: no cover
     StreamingQueryListener = object
     _HAS_LISTENER = False
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -51,7 +54,7 @@ class MetricsRegistry:
             try:
                 out.update(src())
             except Exception:  # a dead source must not kill /metrics
-                pass
+                log.warning("gauge source %r failed", src, exc_info=True)
         return out
 
 

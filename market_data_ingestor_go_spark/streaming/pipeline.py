@@ -27,25 +27,41 @@ output, so the two run concurrently on the persisted micro-batch: an
 epoch's latency is the slower sink, not the sum. A failure in either
 fails the epoch after both have stopped, and the replay rewrites both.
 
+The latest state is small keyed state held in process, the
+Structured Streaming split of in-memory state plus a durable snapshot
+(SIGMOD 2018): ``IngestPipeline`` owns it as an Arrow table of at most
+``MAX_LATEST_KEYS`` rows (the reference's Redis keyspace is ~500
+symbols). Each epoch collects its batch's four columns to the driver
+in one Spark job, merges them into the table (``merge_latest``), and
+replaces the one-file parquet snapshot ``latest`` through
+``fs.atomic_swap`` before the epoch commits. The snapshot is what
+serve reads and what a restarted process loads back.
+
 Scale posture: the only stateful piece is latest-per-key over ~O(500)
 symbol keys — trivial state. History append is partition-parallel
 parquet. At 100 TB/day the knobs are source admission
 (maxFilesPerTrigger / maxOffsetsPerTrigger ≈ the reference's 10k
 channel buffer, main.go:61) and sink file sizing — not operator
-changes.
+changes. Admission also bounds the latest sink's per-epoch collect:
+it brings at most one trigger's admitted rows to the driver.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.market import MARKET_DATA_SCHEMA, validate
 from ..operators.enrich import enrich_exchange
@@ -65,6 +81,38 @@ LATEST_SCHEMA = T.StructType([
     T.StructField("data", T.StringType()),
     T.StructField("exchange", T.StringType()),
 ])
+LATEST_ARROW_SCHEMA = to_arrow_schema(LATEST_SCHEMA)
+
+# The latest state lives in driver memory; past a million keys (a few
+# hundred MB of records) it needs a keyed state store, so the epoch fails.
+MAX_LATEST_KEYS = 1_000_000
+
+
+def merge_latest(state: pa.Table, batch: pa.Table, horizon_ms: int) -> pa.Table:
+    """The newest record per ``name`` over ``state`` ∪ ``batch`` (both
+    ``LATEST_ARROW_SCHEMA``, names non-null as ``validate`` leaves
+    them), then the TTL: records with ``timestamp`` below
+    ``horizon_ms`` leave. Equal timestamps go to the larger
+    ``data``, then the larger ``exchange`` (null lowest): a total order
+    on the record, so the merge is a max over a set of rows, and
+    merging the same batch again leaves the same table. The result is
+    sorted by name."""
+    rows = pa.concat_tables([state, batch])
+    rows = rows.take(pc.sort_indices(rows, sort_keys=[
+        ("name", "ascending"), ("timestamp", "descending"),
+        ("data", "descending"), ("exchange", "descending")],
+        null_placement="at_end"))
+    if rows.num_rows:  # keep the first row of each run of one name
+        names = rows.column("name").combine_chunks()
+        rows = rows.filter(pa.concat_arrays(
+            [pa.array([True]), pc.not_equal(names[1:], names[:-1])]))
+    return rows.filter(pc.greater_equal(rows.column("timestamp"), horizon_ms))
+
+
+def _to_latest_arrow(df: DataFrame) -> pa.Table:
+    """One Spark job: ``df``'s latest-state columns as an Arrow table."""
+    return df.select(*LATEST_SCHEMA.fieldNames()).toArrow() \
+        .cast(LATEST_ARROW_SCHEMA)
 
 
 def decode_raw_frames(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -139,11 +187,17 @@ class IngestPipeline:
       directory written with mode=overwrite, so replaying an epoch
       after a crash rewrites the same directory instead of appending
       duplicates — idempotent, hence exactly-once end to end.
-    - latest : per-symbol latest-value state table (the Redis cache,
-      cache_service.go:37-61), TTL-evicted like `EX ttl`. The merge
-      itself is idempotent (timestamp-max), and the table is replaced
-      via an atomic rename swap with a ``.old`` backup
-      (sources/fs.py) — a crash mid-swap never loses the table.
+    - latest : per-symbol latest-value state (the Redis cache,
+      cache_service.go:37-61), TTL-evicted like `EX ttl`. The state is
+      an Arrow table held by this object; each epoch merges its batch
+      in (``merge_latest``: timestamp-max, idempotent) and writes the
+      result as a one-file parquet snapshot at ``latest``, replaced via
+      an atomic rename swap with a ``.old`` backup (sources/fs.py) — a
+      crash mid-swap never loses the table. The in-memory table
+      changes only after the swap, so a failed epoch leaves both as
+      they were. A fresh object loads the snapshot on its first epoch;
+      a replayed epoch then merges to the same table. Past
+      ``MAX_LATEST_KEYS`` the epoch raises before the snapshot.
 
     The two writes share one persisted micro-batch (one scan) and run
     concurrently on two threads. That is safe because each sink is
@@ -171,12 +225,6 @@ class IngestPipeline:
     # batch touched). Off by default: tiny local tables don't need the
     # extra directory fan-out.
     partition_by_date: bool = False
-    # Latest-state write parallelism. 1 (default) = single file, right
-    # for the reference's ~500-key symbol space; a large key space
-    # (10⁸ keys) sets this higher so the state write isn't one task —
-    # >1 repartitions BY KEY, so a future bucketed/merge-on-key sink
-    # reads co-located state.
-    state_partitions: int = 1
     # Optional LIVE Redis mirror for the latest-value cache (K2,
     # cache_service.go:37-61): when set to (host, port), each
     # micro-batch's latest rows are pipelined SET..PX over the RESP
@@ -201,6 +249,9 @@ class IngestPipeline:
     queries: list = field(default_factory=list)
     redis_failures: int = 0  # observability: dropped cache writes
     pg_failures: int = 0     # observability: dropped PG batch inserts
+
+    def __post_init__(self):
+        self._latest: pa.Table | None = None  # loaded on the first epoch
 
     @property
     def history_path(self) -> str:
@@ -255,10 +306,15 @@ class IngestPipeline:
                             exc_info=True)
 
     def _write_latest(self, batch: DataFrame) -> None:
-        """K2/A1: merge latest-per-key into the state table and swap it
-        in. Only a missing table (first epoch, or crash mid-swap →
-        backup) is tolerated; real IO errors propagate and fail the
-        epoch rather than silently dropping old keys."""
+        """K2/A1: merge the batch into the in-memory latest state and
+        replace the snapshot. One Spark job collects the batch's four
+        columns; source admission (``maxFramesPerTrigger``, the
+        reference's 10k channel, main.go:61) bounds what it brings to
+        the driver. The merge and the one-file snapshot run without
+        Spark. Only a missing snapshot (first run, or crash mid-swap →
+        backup) is tolerated on the cold-start load; real IO errors
+        propagate and fail the epoch rather than silently dropping old
+        keys."""
         if self.redis_latest is not None:
             # best-effort like the reference's cache write (a
             # processor.go retry exhausting is LOGGED AND DROPPED,
@@ -274,25 +330,29 @@ class IngestPipeline:
                 self.redis_failures += 1
                 log.warning("Redis latest mirror dropped a batch",
                             exc_info=True)
-        # the batch has the state table's columns; one aggregate over
-        # old ∪ new keeps the map-side partial aggregate on both inputs
-        old = fs.read_with_backup(batch.sparkSession, self.latest_path,
-                                  schema=LATEST_SCHEMA)
-        merged = latest_per_key(
-            batch if old is None else old.unionByName(batch),
-            "name", "timestamp")
+        spark = batch.sparkSession
+        if self._latest is None:  # cold start: once per process
+            old = fs.read_with_backup(spark, self.latest_path,
+                                      schema=LATEST_SCHEMA)
+            self._latest = (LATEST_ARROW_SCHEMA.empty_table() if old is None
+                            else _to_latest_arrow(old))
+        fresh = _to_latest_arrow(batch)
         # TTL eviction ≈ Redis EX (cache_service.go:45-52)
-        horizon = F.unix_millis(F.current_timestamp()) - F.lit(self.ttl_millis)
-        merged = merged.filter(F.col("timestamp") >= horizon)
+        horizon = int(time.time() * 1000) - self.ttl_millis
+        merged = merge_latest(self._latest, fresh, horizon)
+        if merged.num_rows > MAX_LATEST_KEYS:
+            raise RuntimeError(
+                f"latest state holds {merged.num_rows} keys, over "
+                f"MAX_LATEST_KEYS={MAX_LATEST_KEYS}")
+        snapshot = pa.BufferOutputStream()
+        pq.write_table(merged, snapshot)
         # micro-batches are sequential → one reusable staging dir
-        if self.state_partitions <= 1:
-            merged = merged.coalesce(1)  # ~500-key reference shape
-        else:
-            merged = merged.repartition(self.state_partitions,
-                                        F.col("name"))
         staging = self.latest_path + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        fs.atomic_swap(batch.sparkSession, staging, self.latest_path)
+        fs.write_dir(spark, staging, {
+            "part-00000.parquet": snapshot.getvalue().to_pybytes(),
+            "_SUCCESS": b""})
+        fs.atomic_swap(spark, staging, self.latest_path)
+        self._latest = merged
 
     def start(self, frames: DataFrame):
         enriched = build_ingest_stream(frames, self.symbols_dim)
@@ -314,16 +374,14 @@ class IngestPipeline:
         return {"ingest_redis_dropped_writes": self.redis_failures,
                 "ingest_pg_dropped_batches": self.pg_failures}
 
-    def latest_snapshot(self) -> DataFrame:
+    def latest_snapshot(self) -> DataFrame | None:
         """S5: the cache full-scan read (cache_service.go:67-93), with
         the schema pinned (``LATEST_SCHEMA``), so building it runs no
         job. Falls back to the ``.old`` backup if a crash mid-swap left
-        the live path missing (sources/fs.py::atomic_swap contract)."""
-        df = fs.read_with_backup(self.spark, self.latest_path,
-                                 schema=LATEST_SCHEMA)
-        if df is None:  # no write yet — surface the normal reader error
-            return self.spark.read.parquet(self.latest_path)
-        return df
+        the live path missing (sources/fs.py::atomic_swap contract).
+        None before the first epoch has written the table."""
+        return fs.read_with_backup(self.spark, self.latest_path,
+                                   schema=LATEST_SCHEMA)
 
     def history(self) -> DataFrame:
         """The append-only history table without the epoch partition

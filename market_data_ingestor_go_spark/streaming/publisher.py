@@ -114,6 +114,7 @@ class ServePublisher:
         self.evictions = 0      # idle/oversize drops (read pump)
         self.ticks_overrun = 0  # ticker slots skipped: the tick ran long
         self.tick_errors = 0    # ticks that raised
+        self.ticks_no_data = 0  # ticks skipped: no latest table yet
         self.audit_failures = 0  # failed last_used_at touches
         self.server = WSServer(host, port, on_connect=self._on_connect,
                                max_frame_bytes=read_limit_bytes)
@@ -259,6 +260,7 @@ class ServePublisher:
                 "serve_connections": live,
                 "serve_ticks_overrun": self.ticks_overrun,
                 "serve_tick_errors": self.tick_errors,
+                "serve_ticks_no_data": self.ticks_no_data,
                 "serve_audit_failures": self.audit_failures}
 
     def export_metrics(self, registry) -> None:
@@ -272,9 +274,10 @@ class ServePublisher:
 
     def start(self, latest_provider=None, interval_s: float = 1.0) -> "ServePublisher":
         """Start accepting connections; with ``latest_provider`` (a
-        zero-arg callable returning the latest-state DataFrame — e.g.
-        ``pipeline.latest_snapshot``) also start the fixed-rate tick
-        loop (server.go:88, the reference's 1 s ticker)."""
+        zero-arg callable returning the latest-state DataFrame, or None
+        while there is none yet — e.g. ``pipeline.latest_snapshot``)
+        also start the fixed-rate tick loop (server.go:88, the
+        reference's 1 s ticker)."""
         self.server.start()
         if latest_provider is not None:
             self._ticker = threading.Thread(
@@ -287,13 +290,19 @@ class ServePublisher:
         """Tick k starts at start + k·interval, like Go's time.Ticker:
         a slot that passed while the previous tick ran is skipped and
         counted in ``ticks_overrun``, never queued, so a slow tick is
-        not followed by a catch-up burst."""
+        not followed by a catch-up burst. A slot with no latest table
+        yet (the first epoch has not landed) is skipped and counted in
+        ``ticks_no_data``: no data is not a failure."""
         start = time.monotonic()
         slot = 1
         while not self._stopping.wait(
                 max(0.0, start + slot * interval_s - time.monotonic())):
             try:
-                self.tick(latest_provider())
+                latest = latest_provider()
+                if latest is None:
+                    self.ticks_no_data += 1
+                else:
+                    self.tick(latest)
             except Exception:
                 log.exception("serve tick %d failed", slot)
                 self.tick_errors += 1

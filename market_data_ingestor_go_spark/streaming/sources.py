@@ -22,6 +22,7 @@ streaming/pipeline.py::decode_raw_frames.
 from __future__ import annotations
 
 import json
+import logging
 
 try:
     from pyspark.sql.datasource import (
@@ -40,6 +41,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+log = logging.getLogger(__name__)
 
 WIRE_SCHEMA = StructType([
     StructField("name", StringType()),
@@ -129,6 +132,8 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
             except TimeoutError:
                 break  # idle connection — serve what we have
             except Exception:
+                log.warning("WS source %s: connection lost, reconnecting",
+                            self.url, exc_info=True)
                 try:
                     if self._ws is not None:
                         self._ws.close()

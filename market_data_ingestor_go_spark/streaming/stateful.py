@@ -1,18 +1,24 @@
-"""Custom stateful streaming operator — latest-per-key with TTL as
-``applyInPandasWithState`` (SURVEY.md §2.10: the engine's arbitrary-
-stateful surface; the declarative twin lives in operators/latest.py).
+"""Custom stateful streaming operators as ``applyInPandasWithState``
+(SURVEY.md §2.10: the engine's arbitrary-stateful surface): per-key
+gap fill, EWMA, drawdown, TWAP, motif alerts, session paths and
+conversion latency. Each keeps a few scalars (or a bounded window) of
+state per key in the state store, partitioned by the grouping key.
 
-This is the continuous version of the Redis latest-value cache
-(cache_service.go:37-61): per symbol, keep the max-timestamp record,
-emit an update whenever it changes, and let the state die after the
-TTL with no fresh writes (Redis ``EX``; ProcessingTimeTimeout here).
+The per-key functions are built as CLOSURES (``_make_*``) so
+cloudpickle serializes them by value: Spark's Python workers don't
+have this package on their import path when the driver runs from
+another cwd, and a module-level function would pickle by reference and
+fail with ModuleNotFoundError on the worker.
 
-When to prefer which:
-- ``latest_per_key`` (max_by agg) — bounded key spaces, snapshot
-  semantics per micro-batch; cheapest, fully declarative.
-- this operator — per-key *update stream* semantics (emit only on
-  change) or custom eviction logic; state lives in the state store,
-  scales with distinct keys, partitioned by the grouping key.
+NOTE on eviction: this build of Spark (4.1.2 local) deadlocks any
+``applyInPandasWithState`` query using ``ProcessingTimeTimeout`` (the
+timeout-processing pass hangs the state commit; reproduced with a
+trivial no-op function — upstream bug, not these operators), so no
+operator here evicts idle keys on a processing-time timer; their
+state stays bounded by distinct keys. On a cluster build where the
+timeout path works, an operator that needs idle-key eviction switches
+``timeoutConf`` to it and drops state via ``state.remove()`` on
+``hasTimedOut``.
 """
 
 from __future__ import annotations
@@ -25,95 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-STATE_SCHEMA = T.StructType([
-    T.StructField("timestamp", T.LongType()),
-    T.StructField("exchange", T.StringType()),
-    T.StructField("data", T.StringType()),
-])
-
-OUTPUT_SCHEMA = T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("timestamp", T.LongType()),
-    T.StructField("exchange", T.StringType()),
-    T.StructField("data", T.StringType()),
-])
-
-DEFAULT_TTL_MILLIS = 24 * 3600 * 1000
-
-
-def _make_update_latest():
-    """Build the per-key update function as a CLOSURE so cloudpickle
-    serializes it by value — Spark's python workers don't have this
-    package on their import path when the driver runs from another cwd
-    (a module-level function would pickle by reference and fail with
-    ModuleNotFoundError on the worker).
-
-    Semantics: timestamp-max last-write-wins; emits a row only when
-    the stored latest record changes. The merge itself is purely
-    event-time deterministic — a crash-replayed micro-batch emits
-    exactly what the original attempt did (the idempotent-replay
-    contract the rest of the streaming layer keeps — ADVICE r5; the
-    earlier wall-clock lazy eviction here broke that, and its
-    event-time rewrite was provably a no-op: any batch row newer than
-    the TTL cutoff also beats the stored record in the ts-max merge,
-    review catch r6). TTL is therefore enforced where it can be
-    deterministic: READERS apply the TTL predicate (serve-path
-    snapshots already do), and state-store eviction of idle keys
-    belongs to the timeout path (see streaming_latest_state's note on
-    this build's ProcessingTimeTimeout bug). State is bounded by
-    distinct keys (~500/24 h in the reference envelope).
-    """
-
-    def update_latest(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-                      ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        name = key[0]
-        best_ts, best_ex, best_data = state.get if state.exists else (0, None, None)
-        changed = False
-        for pdf in pdfs:
-            for _, row in pdf.iterrows():
-                ts = int(row["timestamp"])
-                if ts == 0:  # P2 sink guard (cache_service.go:41-43)
-                    continue
-                if ts > best_ts:
-                    best_ts, best_ex, best_data = ts, row["exchange"], row["data"]
-                    changed = True
-        if changed:
-            state.update((best_ts, best_ex, best_data))
-            yield _pd.DataFrame([{"name": name, "timestamp": best_ts,
-                                  "exchange": best_ex, "data": best_data}])
-
-    return update_latest
-
-
-def streaming_latest_state(stream: DataFrame) -> DataFrame:
-    """stream(name,timestamp,exchange,data) → change-stream of latest
-    records per symbol.
-
-    NOTE on eviction: this build of Spark (4.1.2 local) deadlocks any
-    ``applyInPandasWithState`` query using ``ProcessingTimeTimeout``
-    (the timeout-processing pass hangs the state commit; reproduced
-    with a trivial no-op function — upstream bug, not this operator),
-    so the operator runs with ``NoTimeout``; the 24 h TTL is applied
-    by READERS of the change stream (deterministic — see
-    _make_update_latest), and state stays bounded by distinct keys.
-    On a cluster build where the timeout path works, switch
-    ``timeoutConf`` back and drop state via ``state.remove()`` on
-    ``hasTimedOut``.
-    """
-    return (
-        stream.groupBy("name")
-        .applyInPandasWithState(
-            _make_update_latest(),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
-    )
-
 
 GAPFILL_STATE_SCHEMA = T.StructType([
     T.StructField("last_bucket", T.LongType()),
@@ -129,8 +46,7 @@ GAPFILL_OUTPUT_SCHEMA = T.StructType([
 
 
 def _make_gap_fill(step_ms: int, mode: str):
-    """Per-key streaming gap fill (closure — see _make_update_latest
-    for why worker-side fns must pickle by value).
+    """Per-key streaming gap fill (a closure, see the module docstring).
 
     State per key: (last emitted bucket, its value). Each batch emits
     the dense grid from the bucket after the state up to the batch's
@@ -148,8 +64,8 @@ def _make_gap_fill(step_ms: int, mode: str):
     DROPPED (the append-mode analog of a watermark: emitted grid rows
     are immutable). Gaps after the newest observation stay unemitted
     until a later observation closes them — idle-key fill-to-now needs
-    the timer path, which this Spark build's deadlock rules out (see
-    streaming_latest_state NOTE).
+    the timer path, which this Spark build's deadlock rules out (the
+    module's NOTE on eviction).
     """
 
     def gap_fill(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
@@ -243,8 +159,7 @@ EWMA_OUTPUT_SCHEMA = T.StructType([
 
 
 def _make_ewma(alpha: float):
-    """Per-key streaming EWMA (closure — see _make_update_latest for
-    why worker-side fns must pickle by value).
+    """Per-key streaming EWMA (a closure, see the module docstring).
 
     The EXACT recursion y_t = alpha*x_t + (1-alpha)*y_{t-1} with two
     scalars of state per key — the unbounded-series path the batch
@@ -323,8 +238,8 @@ DRAWDOWN_OUTPUT_SCHEMA = T.StructType([
 
 
 def _make_drawdown():
-    """Per-key streaming running-peak drawdown (closure — see
-    _make_update_latest). State is TWO scalars: the last consumed
+    """Per-key streaming running-peak drawdown (a closure, see
+    the module docstring). State is TWO scalars: the last consumed
     timestamp and the running peak. max() and subtraction are exact,
     so the streamed (peak, dd) rows are BIT-IDENTICAL to the batch
     cumulative-max window (events_drawdown) for in-order arrival —
@@ -398,7 +313,7 @@ TWAP_OUTPUT_SCHEMA = T.StructType([
 
 
 def _make_twap(bucket_ms: int):
-    """Per-key streaming TWAP (closure — see _make_update_latest).
+    """Per-key streaming TWAP (a closure, see the module docstring).
 
     Each observation HOLDS until the next one (the batch events_twap
     convention); segments split at bucket boundaries and accumulate
@@ -498,8 +413,8 @@ MOTIF_OUTPUT_SCHEMA = T.StructType([
 
 
 def _make_motif_alerts(pattern: list, threshold: float):
-    """Per-key streaming motif detector (closure — see
-    _make_update_latest). State: the last m-1 (ts, value) pairs —
+    """Per-key streaming motif detector (a closure, see
+    the module docstring). State: the last m-1 (ts, value) pairs —
     bounded regardless of stream length. Each arriving tick completes
     the window ending at it; windows z-normalize and score against
     the z-normalized pattern exactly like the batch operator
@@ -593,8 +508,8 @@ SESSION_PATH_OUTPUT_SCHEMA = T.StructType([
 
 
 def _make_session_paths(gap_ms: int):
-    """Per-user streaming session-path miner (closure — see
-    _make_update_latest). State is the OPEN session only: its last
+    """Per-user streaming session-path miner (a closure, see
+    the module docstring). State is the OPEN session only: its last
     event timestamp, its row count, and its first three event types.
     A session CLOSES two ways, each emitting its opening path exactly
     once:
@@ -740,8 +655,8 @@ CONVERSION_OUTPUT_SCHEMA = T.StructType([
 
 
 def _make_conversion_tracker():
-    """Per-user streaming conversion tracker (closure — see
-    _make_update_latest). State is THREE scalars: the user's first
+    """Per-user streaming conversion tracker (a closure, see
+    the module docstring). State is THREE scalars: the user's first
     'view' timestamp, a converted flag, and the latest purchase ts
     seen before any view (pend_p). When the first 'purchase'
     at-or-after the first view arrives, emit (user, v_ts, p_ts,

@@ -1,10 +1,11 @@
-"""A2 observability + §2.10 stateful operator tests: observed metrics
-through a real streaming query with the listener attached, and the
-applyInPandasWithState latest-state change stream."""
+"""A2 observability tests: observed metrics through a real streaming
+query with the listener attached, and gauge sources read at render
+time."""
 
 from __future__ import annotations
 
 import json
+import logging
 import time
 
 from pyspark.sql import Row, functions as F
@@ -14,7 +15,6 @@ from market_data_ingestor_go_spark.streaming.endpoints import MetricsServer
 from market_data_ingestor_go_spark.streaming.observability import (
     MetricsListener, MetricsRegistry)
 from market_data_ingestor_go_spark.streaming.pipeline import decode_raw_frames
-from market_data_ingestor_go_spark.streaming.stateful import streaming_latest_state
 
 
 def test_listener_collects_observed_metrics(spark, tmp_path):
@@ -70,51 +70,25 @@ def test_listener_collects_observed_metrics(spark, tmp_path):
     assert "last_batch_id" in metrics
 
 
-def test_streaming_latest_state_change_stream(spark, tmp_path):
-    """applyInPandasWithState: emits per-key updates, keeps the max
-    timestamp, ignores ts==0, and only emits on change."""
-    import os
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    now = int(time.time() * 1000)  # recent → not lazily TTL-evicted
-    rows = [
-        {"name": "AAPL", "timestamp": now + 100, "exchange": "usstock", "data": "{\"bid\":1}"},
-        {"name": "AAPL", "timestamp": now + 90, "exchange": "usstock", "data": "{\"bid\":0}"},
-        {"name": "BTC", "timestamp": now + 50, "exchange": "crypto", "data": "{}"},
-        {"name": "BTC", "timestamp": 0, "exchange": "crypto", "data": "{}"},
-    ]
-    with open(src + "/a.json", "w") as fh:
-        for r in rows:
-            fh.write(json.dumps(r) + "\n")
+def test_raising_gauge_source_is_logged_and_metrics_still_render(caplog):
+    """A gauge source that raises is logged with its cause; the other
+    sources' gauges still render on /metrics."""
+    from market_data_ingestor_go_spark.streaming import observability
+    from market_data_ingestor_go_spark.streaming.endpoints import (
+        render_prometheus)
 
-    stream = (spark.readStream
-              .schema("name STRING, timestamp LONG, exchange STRING, data STRING")
-              .json(src))
-    out = streaming_latest_state(stream)
-    q = (out.writeStream.outputMode("update").format("memory")
-         .queryName("latest_updates")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .start())
-    q.processAllAvailable()
+    def broken():
+        raise RuntimeError("gauge backend gone")
 
-    first = {r["name"]: r["timestamp"]
-             for r in spark.sql("SELECT * FROM latest_updates").collect()}
-    assert first == {"AAPL": now + 100, "BTC": now + 50}
-
-    # second batch: one real update, one stale record (no emit)
-    with open(src + "/b.json", "w") as fh:
-        fh.write(json.dumps({"name": "AAPL", "timestamp": now + 200,
-                             "exchange": "usstock", "data": "{}"}) + "\n")
-        fh.write(json.dumps({"name": "BTC", "timestamp": now + 10,
-                             "exchange": "crypto", "data": "{}"}) + "\n")
-    q.processAllAvailable()
-    q.stop()
-
-    all_updates = spark.sql("SELECT * FROM latest_updates").collect()
-    aapl = [r["timestamp"] for r in all_updates if r["name"] == "AAPL"]
-    btc = [r["timestamp"] for r in all_updates if r["name"] == "BTC"]
-    assert sorted(aapl) == [now + 100, now + 200]  # emitted twice (changed twice)
-    assert btc == [now + 50]            # stale row produced no update
+    reg = MetricsRegistry()
+    reg.bump("batch_inserts", 2)
+    reg.gauge_sources += [broken, lambda: {"serve_ticks": 7}]
+    with caplog.at_level(logging.WARNING, logger=observability.__name__):
+        text = render_prometheus(reg)
+    assert "batch_inserts 2" in text and "serve_ticks 7" in text
+    logged = [r for r in caplog.records if r.exc_info]
+    assert len(logged) == 1
+    assert "gauge backend gone" in str(logged[0].exc_info[1])
 
 
 def test_unmarshal_error_counter(spark, tmp_path):

@@ -1,7 +1,8 @@
 """The serve tick's connect-time contract (streaming/publisher.py): auth
 and config fixed when a connection is admitted, one Spark job per steady
-tick, nothing cached on the snapshot, and the fixed-rate ticker with its
-failure counters."""
+tick, nothing cached on the snapshot, the fixed-rate ticker with its
+failure and no-data counters, and a compiled config whose plan grows
+linearly with its renames."""
 
 from __future__ import annotations
 
@@ -14,7 +15,8 @@ import time
 import pytest
 
 from market_data_ingestor_go_spark.operators.config_transform import (
-    interpret_flat_record, parse_client_config)
+    apply_client_config_map, interpret_flat_record, parse_client_config)
+from market_data_ingestor_go_spark.sources import fs
 from market_data_ingestor_go_spark.streaming import publisher
 from market_data_ingestor_go_spark.streaming import ws_minimal as wm
 from market_data_ingestor_go_spark.streaming.pipeline import (
@@ -252,6 +254,7 @@ def test_ticker_holds_its_rate_and_skips_overrun_slots():
     def slow_provider():
         starts.append(time.monotonic())
         time.sleep(1.5 * interval)
+        return "snapshot"
 
     pub = ServePublisher(None, None, None)
     done = _fake_ticks(pub)
@@ -287,6 +290,7 @@ def test_tick_failure_is_logged_counted_and_exported(caplog):
         calls.append(1)
         if len(calls) == 1:
             raise RuntimeError("latest table unreadable")
+        return "snapshot"
 
     pub = ServePublisher(None, None, None)
     done = _fake_ticks(pub)
@@ -340,3 +344,54 @@ def test_audit_failure_is_logged_and_counted(spark, tmp_path, pipe, caplog):
         c1.close()
     finally:
         pub.stop()
+
+
+def test_ticks_before_the_first_epoch_count_as_no_data(spark, tmp_path, pipe):
+    """A started publisher over a pipeline that has not written its
+    latest table yet skips those ticks as no data, not as errors, and
+    serves from the first tick after the table lands."""
+    pub = ServePublisher(spark, _keys(spark, tmp_path / "keys", {"k1": True}),
+                         _configs(spark, tmp_path / "cfg", {"c-k1": None}))
+    pub.start(latest_provider=pipe.latest_snapshot, interval_s=0.2)
+    try:
+        c1 = _connect(pub, "k1", 1)
+        deadline = time.monotonic() + 10
+        while pub.ticks_no_data < 2 and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert pub.metrics()["serve_ticks_no_data"] >= 2
+        assert pub.ticks == 0
+        # the table lands whole, by one rename, as an epoch's swap does
+        staged = IngestPipeline(spark, str(tmp_path / "staged"), pipe.symbols_dim)
+        payloads = _write_latest(spark, staged, 10.0)
+        (tmp_path / "ingest").mkdir(exist_ok=True)
+        assert fs.rename_path(spark, staged.latest_path, pipe.latest_path)
+        assert _fields(c1) == payloads
+        c1.close()
+    finally:
+        pub.stop()
+    assert pub.metrics()["serve_tick_errors"] == 0
+    assert pub.ticks >= 1
+
+
+def test_rename_plan_grows_linearly(spark):
+    """Each rename binds its input map once, so a config's optimized
+    plan grows linearly with its renames: 12 renames stay within a line
+    through the 1- and 2-rename sizes (3^r copies would not), and the
+    output still equals the reference interpreter."""
+    record = {f"f{i:02d}": float(i) for i in range(14)}
+    df = spark.createDataFrame([("AAPL", 1, record)],
+                               "symbol string, timestamp long, "
+                               "fields map<string, double>")
+
+    def compiled(r: int):
+        cfg = parse_client_config({"symbols": {"AAPL": {"rename_fields": {
+            f"f{i:02d}": f"g{i:02d}" for i in range(r)}}}})
+        out = apply_client_config_map(df, cfg)
+        return len(out._jdf.queryExecution().optimizedPlan().toString()), \
+            out, cfg
+
+    one, two = compiled(1)[0], compiled(2)[0]
+    size, out, cfg = compiled(12)
+    assert size <= one + 11 * 2 * (two - one), (one, two, size)
+    assert out.collect()[0]["fields"] == \
+        interpret_flat_record(cfg["AAPL"], record)

@@ -858,24 +858,6 @@ def test_ws_replay_gap_raises():
         reader.readBetweenOffsets({"count": 5}, {"count": 10})
 
 
-def test_latest_state_partitions_knob(spark, symbols_dim, tmp_path):
-    """state_partitions>1 writes the latest table as multiple key-hash
-    files (the 10^8-key posture) instead of the hardcoded coalesce(1)."""
-    import pathlib
-    frames = [_frame(f"SYM{i}", 1000 + i, bid=float(i)) for i in range(200)]
-    batch = spark.createDataFrame(
-        [Row(**f) for f in frames],
-        schema="name string, timestamp long, exchange string, data string")
-    batch = batch.withColumn("data", F.to_json(F.struct(F.struct(
-        F.lit(1.0).alias("bid")).alias("data"))))
-    pipe = IngestPipeline(spark, str(tmp_path / "out"), symbols_dim,
-                          ttl_millis=1 << 60, state_partitions=4)
-    pipe._write_batch(batch, 0)
-    files = [p for p in pathlib.Path(pipe.latest_path).glob("part-*.parquet")]
-    assert len(files) == 4, files
-    assert pipe.latest_snapshot().count() == 200
-
-
 def test_streaming_dedup_within_watermark(spark, symbols_dim, tmp_path):
     """Effectively-once stage: duplicate (name, timestamp) frames —
     the at-least-once WS replay shape — reach history exactly once
