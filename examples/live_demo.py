@@ -83,8 +83,7 @@ def main() -> None:
            .option("url", feed.url)
            .option("symbols", json.dumps(["AAPL", "MSFT", "BTCUSD"]))
            .option("pollBudgetSecs", "1.0")
-           .load()
-           .selectExpr("to_json(struct(name, timestamp, exchange, data)) AS value"))
+           .load())
     pipe = IngestPipeline(spark, out, symbols_dim, trigger_seconds=2,
                           dedup_horizon="10 minutes",
                           redis_latest=(cache.host, cache.port))

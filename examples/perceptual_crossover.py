@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Pigeonhole Hamming join vs brute-force pair scan (r12): put an
 empirical curve under the perceptual dedup family's candidate-join
-claim the way examples/cc_crossover.py did for the CC engines.
+claim.
 
 The claim (operators/dedup.py::hamming_pairs): splitting a 64-bit
 fingerprint into 4 blocks turns near-dup search from an O(n²)

@@ -230,8 +230,7 @@ def run_app(spark: SparkSession, cfg: EngineConfig, base_dir: str,
            .option("api_key", cfg.api_key)
            .option("symbols", json.dumps(cfg.subscription_symbols))
            .option("maxFramesPerTrigger", "10000")  # main.go:61 channel cap
-           .load()
-           .selectExpr("to_json(struct(name, timestamp, exchange, data)) AS value"))
+           .load())
     query = pipe.start(raw)
 
     publisher = None

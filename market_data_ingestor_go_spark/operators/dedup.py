@@ -4,7 +4,7 @@ Extension operators (driver mandate; the reference — a market-data
 ingestor — has no document processing). Five dedup strategies, ordered
 by cost/recall:
 
-- exact_dedup           : hash-groupBy on raw text — one shuffle.
+- exact_dedup_groups    : hash-groupBy on raw text — one shuffle.
 - fingerprint_dedup     : md5 of normalized text — catches
                           case/whitespace variants, same cost.
 - ngram_jaccard_pairs   : exact all-pairs n-gram Jaccard — the ground
@@ -33,14 +33,6 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, shingles
 from .cache import pin
 from .partitioning import spread
-
-
-def exact_dedup(df: DataFrame, cols: list[str] | str) -> DataFrame:
-    """Exact dedup: first row per distinct value of ``cols`` dropped
-    arbitrarily — use ``exact_dedup_groups`` for deterministic keepers."""
-    if isinstance(cols, str):
-        cols = [cols]
-    return df.dropDuplicates(cols)
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text",
@@ -309,171 +301,42 @@ def cross_corpus_near_dup(df_a: DataFrame, df_b: DataFrame,
         .filter(F.col("jacc") >= F.lit(threshold)))
 
 
-def neardup_clusters_alternating(pairs: DataFrame, id_a: str = "doc_a",
-                                 id_b: str = "doc_b",
-                                 max_iters: int = 25,
-                                 _pairs_pinned: bool = False) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    edge contraction (Kiveris et al. 2014, "Connected Components in
-    MapReduce and Beyond") — the 100 TB-scale twin of
-    ``neardup_clusters``, IDENTICAL labels (equality pinned by
-    ``test_cc_alternating_equals_labelprop`` on chains, cliques,
-    stars, forests and the fixture pair graph).
-
-    Each round rewrites the edge set: large-star connects every
-    strictly-larger neighbor of a node to the minimum of its closed
-    neighborhood; small-star does the same for the ≤-neighbors.
-    Alternating the two provably converges to star graphs centered at
-    each component's minimum id in O(log² n) rounds (≈5 measured on
-    the fixture graph vs 11 label-propagation rounds).
-
-    When to use which (measured, SCALING.md "Connected-components
-    round study"): label propagation shuffles the FULL edge set every
-    round but each round is 2 cheap stages — it wins while rounds are
-    LATENCY-bound (fixture scale: 11×0.6 s vs 5×1.4 s here). This
-    shape shuffles less TOTAL data (the edge set shrinks toward one
-    edge per non-center node) across fewer rounds — it wins when
-    rounds are SHUFFLE-bound, i.e. edge sets that dwarf cluster
-    memory. Both keep per-round state strictly in DataFrames; swap
-    ``localCheckpoint`` for reliable ``checkpoint`` on a cluster.
-    Callers normally reach this through ``neardup_clusters(engine=
-    "auto")``, which dispatches here past AUTO_CC_EDGE_THRESHOLD.
-    """
-    def canon(ed):
-        return (ed.filter(F.col("u") != F.col("v"))
-                .select(F.least("u", "v").alias("u"),
-                        F.greatest("u", "v").alias("v"))
-                .dropDuplicates())
-
-    def star(ed, large: bool):
-        adj = ed.select("u", "v").unionByName(
-            ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = adj.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        adj2 = adj.join(m, "u")
-        side = (F.col("v") > F.col("u")) if large else \
-            (F.col("v") <= F.col("u"))
-        out = adj2.filter(side).select(
-            F.col("v").alias("u"), F.col("m").alias("v"))
-        # keep each node's own link to its neighborhood-min so no
-        # node detaches from its component while edges rewrite
-        return canon(out.unionByName(
-            adj2.select("u", F.col("m").alias("v"))))
-
-    # _pairs_pinned: the neardup_clusters dispatcher already
-    # checkpointed the pair list (it needed the materialization for
-    # its edge count) — re-pinning a multi-billion-row edge set would
-    # copy every block a second time, exactly on the large-scale path
-    # this engine exists for (review catch r9)
-    if not _pairs_pinned:
-        pairs = pairs.localCheckpoint(eager=True)
-    edges = canon(pairs.select(F.col(id_a).alias("u"),
-                               F.col(id_b).alias("v"))) \
-        .localCheckpoint(eager=True)
-    n_edges = edges.count()
-    for _ in range(max_iters):
-        new_edges = star(star(edges, large=True), large=False) \
-            .localCheckpoint(eager=True)
-        n_new = new_edges.count()
-        # edge count stable AND no new edge outside the old set ⇒ the
-        # rewrite is a fixpoint (stars). Count first: it is free on
-        # the just-materialized frame and usually short-circuits the
-        # exceptAll.
-        if n_new == n_edges and \
-                new_edges.exceptAll(edges).limit(1).count() == 0:
-            edges = new_edges
-            break
-        edges, n_edges = new_edges, n_new
-    adj = edges.select("u", "v").unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return (adj.groupBy("u").agg(F.min("v").alias("nbr_min"))
-            .select(F.col("u").alias("doc_id"),
-                    F.least("u", "nbr_min").alias("cluster_id")))
-
-
-# Auto-dispatch threshold for neardup_clusters(engine="auto"):
-# below this many pairs, CC rounds are LATENCY-bound and label
-# propagation's 2-cheap-stage rounds win; above it, rounds are
-# SHUFFLE-bound and the alternating large-star/small-star shape wins
-# because its edge set SHRINKS every round instead of reshuffling in
-# full. MEASURED (examples/cc_crossover.py, SCALING.md "CC engine
-# crossover", r9): on avg-degree-8 random graphs — the shape a
-# near-dup pair graph takes — alternating/labelprop time ratios run
-# 1.63× (10k edges), 1.92× (100k), 1.82× (500k), then CROSS to
-# 0.90× at 2M (34.2 s vs 37.9 s on local[32]); identical labels at
-# every size. 5e6 is deliberately conservative past the measured
-# ~1-2M crossover because topology matters: on a 20k-node PATH,
-# label propagation's pointer jumping wins 3.3× (9.9 s vs 32.6 s) —
-# long-diameter graphs pay alternating extra contraction rounds, so
-# the switch waits until the volume win is decisive. At 100 TB the
-# edge set is billions of rows and either side of 5e6 is obvious.
-AUTO_CC_EDGE_THRESHOLD = 5_000_000
-
-
 def neardup_clusters(pairs: DataFrame, id_a: str = "doc_a",
-                     id_b: str = "doc_b", max_iters: int = 25,
-                     engine: str = "auto") -> DataFrame:
+                     id_b: str = "doc_b", max_iters: int = 25) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id).
-
-    ``engine`` selects the physical strategy — labels are IDENTICAL
-    across all three (equality pinned through the public entry points
-    by ``test_cc_engines_identical_through_public_entry_points``):
-
-    - ``"labelprop"``: min-label propagation with pointer jumping —
-      wins while rounds are latency-bound (edge sets that fit
-      comfortably in cluster memory).
-    - ``"alternating"``: Kiveris et al. alternating large-star /
-      small-star contraction (``neardup_clusters_alternating``) —
-      wins when rounds are shuffle-bound (the 100 TB shape: its edge
-      set shrinks toward one edge per non-center node).
-    - ``"auto"`` (default): one count on the checkpointed pair list
-      picks a side at AUTO_CC_EDGE_THRESHOLD — the scale path is
-      reachable without code edits.
 
     The step every dedup pipeline needs AFTER pair generation: near-dup
     similarity is not transitive, so pairs (a,b) and (b,c) must merge
     into one keep-group before choosing canonical keepers. cluster_id
     is the minimum doc id reachable through the pair graph — a
-    deterministic, engine-independent labeling (the DuckDB oracle
-    computes the same fixpoint with a recursive CTE).
+    deterministic labeling (the DuckDB oracle computes the same
+    fixpoint with a recursive CTE; a Python union-find checks it in
+    ``test_neardup_clusters_match_union_find``).
 
-    Engine shape: min-label propagation with POINTER JUMPING — per
-    round each node takes the min over {its label, its neighbors'
-    labels, its label's label}. The neighbor step moves information
-    one hop; the pointer-jump step halves chain depth, so rounds are
-    O(log diameter) instead of O(diameter) — the standard large-scale
-    CC recipe. r16: the jump is FUSED into the neighbor join by
-    adding each node's (id → label) pointer to the edge list, so a
-    round is ONE equi-join + partial-min aggregate + the label
-    attach (shuffle linear in edges + nodes, no driver-side graph
-    state, no second self-join). Labels persist between rounds and
-    the convergence check is one scalar count per round.
+    Shape: min-label propagation with POINTER JUMPING — per round each
+    node takes the min over {its label, its neighbors' labels, its
+    label's label}. The neighbor step moves information one hop; the
+    pointer-jump step halves chain depth, so rounds are O(log
+    diameter) instead of O(diameter) — the standard large-scale CC
+    recipe. The jump is FUSED into the neighbor join by adding each
+    node's (id → label) pointer to the edge list, so a round is ONE
+    equi-join + partial-min aggregate + the label attach (shuffle
+    linear in edges + nodes, no driver-side graph state, no second
+    self-join). Labels persist between rounds and the convergence
+    check is one scalar count per round.
 
     Iterative lineage MUST be truncated each round: a persisted
     DataFrame still carries its full logical plan, and a loop that
     references the previous round's frame twice doubles the plan tree
     per round — exponential analysis cost (observed: OOM stringifying
-    the plan by round ~10). ``localCheckpoint(eager=True)``
-    materializes AND truncates; on a fault-tolerant cluster swap in
-    reliable ``checkpoint``.
+    the plan by round ~10). ``localCheckpoint`` truncates; on a
+    fault-tolerant cluster swap in reliable ``checkpoint``.
     """
     # checkpoint the pair source BEFORE mirroring: the union
     # references ``pairs`` twice, so without this the (potentially
     # O(n²)) pair subtree executes twice inside sym's
-    # materialization (review catch r6 — same fix as neardup_pagerank)
-    if engine not in ("auto", "alternating", "labelprop"):
-        # validate BEFORE the eager checkpoint: a typo'd engine name
-        # must not cost a full pair-list materialization first
-        raise ValueError(f"unknown CC engine {engine!r}; expected "
-                         "'labelprop', 'alternating' or 'auto'")
+    # materialization (same fix as neardup_pagerank)
     pairs = pairs.localCheckpoint(eager=True)
-    if engine == "auto":
-        engine = ("alternating" if pairs.count() > AUTO_CC_EDGE_THRESHOLD
-                  else "labelprop")
-    if engine == "alternating":
-        return neardup_clusters_alternating(pairs, id_a=id_a, id_b=id_b,
-                                            max_iters=max_iters,
-                                            _pairs_pinned=True)
     sym = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")) \
         .unionByName(pairs.select(F.col(id_b).alias("src"),
                                   F.col(id_a).alias("dst")))
@@ -481,21 +344,19 @@ def neardup_clusters(pairs: DataFrame, id_a: str = "doc_a",
     labels = (sym.select(F.col("src").alias("id")).distinct()
               .withColumn("lbl", F.col("id")).localCheckpoint(eager=True))
     for _ in range(max_iters):
-        # FUSED round (r16 optimization, guide §2.4): the pointer-jump
-        # step used to be a SECOND self-join after the neighbor step
-        # (two more stages + a broadcast build per round — pure fixed
-        # latency on a latency-bound loop). Folding each node's
-        # pointer (id → lbl) into the edge list makes one join+agg
-        # compute min(neighbor labels, label's label) together:
-        # lbl_i ← min(lbl_i, min_{j∈N(i)} lbl_j, lbl_{lbl_i}).
-        # The jump now reads the round-START labels instead of the
-        # post-neighbor-step ones — still monotone toward, and
-        # terminating at, exactly the same fixpoint (at convergence no
-        # neighbor offers a smaller label, which alone forces the
-        # component-min labeling; equality pinned by the engine-
-        # equality test), with the same O(log) chain-halving. Every
-        # node has a pointer edge, so nbr_min covers every id and the
-        # attach join is INNER (no null branch).
+        # FUSED round: a separate pointer-jump self-join after the
+        # neighbor step would cost two more stages + a broadcast build
+        # per round — pure fixed latency on a latency-bound loop.
+        # Folding each node's pointer (id → lbl) into the edge list
+        # makes one join+agg compute min(neighbor labels, label's
+        # label) together: lbl_i ← min(lbl_i, min_{j∈N(i)} lbl_j,
+        # lbl_{lbl_i}). The jump reads the round-START labels — still
+        # monotone toward, and terminating at, exactly the same
+        # fixpoint (at convergence no neighbor offers a smaller label,
+        # which alone forces the component-min labeling), with the
+        # same O(log) chain-halving. Every node has a pointer edge, so
+        # nbr_min covers every id and the attach join is INNER (no
+        # null branch).
         ptr_edges = labels.select(F.col("id").alias("src"),
                                   F.col("lbl").alias("dst"))
         nbr_min = (
@@ -507,11 +368,11 @@ def neardup_clusters(pairs: DataFrame, id_a: str = "doc_a",
             .select(labels.id.alias("id"),
                     F.col("lbl").alias("prev"),
                     F.least(F.col("lbl"), F.col("nl")).alias("lbl"))
-            # LAZY checkpoint (r15 optimization): the logical plan is
-            # truncated immediately (the exponential-lineage guard the
-            # eager form existed for), but materialization rides the
-            # convergence count below — ONE job per round instead of
-            # two (measured ~5% per CC query; labels identical)
+            # LAZY checkpoint: the logical plan is truncated
+            # immediately (the exponential-lineage guard), but
+            # materialization rides the convergence count below — ONE
+            # job per round instead of two (measured ~5% per CC query;
+            # labels identical)
             .localCheckpoint(eager=False))
         # convergence: the round's start label rode along, so this is a
         # filter-count that BOTH materializes the lazy checkpoint and
@@ -527,14 +388,11 @@ def neardup_clusters(pairs: DataFrame, id_a: str = "doc_a",
 
 def neardup_cluster_keepers(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", n: int = 3,
-                            threshold: float = 0.6,
-                            engine: str = "auto") -> DataFrame:
+                            threshold: float = 0.6) -> DataFrame:
     """End-to-end near-dup dedup: MinHash pairs → components → one row
-    per cluster with the canonical keeper (min id) and member count.
-    ``engine`` passes through to ``neardup_clusters`` (labelprop /
-    alternating / auto — identical labels, different scale posture)."""
+    per cluster with the canonical keeper (min id) and member count."""
     pairs = minhash_near_dup_pairs(df, text_col, id_col, n, threshold)
-    clusters = neardup_clusters(pairs, engine=engine)
+    clusters = neardup_clusters(pairs)
     return (clusters.groupBy("cluster_id")
             .agg(F.count("*").alias("n_members"))
             .select(F.col("cluster_id").alias("keeper_id"), "n_members"))

@@ -1739,9 +1739,8 @@ def embedding_pca_variance(vectors: DataFrame,
 def embedding_covariance_arrow(vectors: DataFrame,
                                vec_col: str = "embedding") -> DataFrame:
     """Arrow-kernel twin of ``embedding_covariance`` — the measured
-    fast path (the ``engine="auto"`` dispatch precedent): each Arrow
-    batch computes its Gram matrix with ONE numpy float64 matmul
-    (BLAS), emitting d(d+1)/2 partial sums + the per-dim sums + the
+    fast path: each Arrow batch computes its Gram matrix with ONE
+    numpy float64 matmul (BLAS), emitting d(d+1)/2 partial sums + the per-dim sums + the
     batch count; partials reduce in a tiny d²-row aggregate. Same
     output schema and the same final (Sxy − Sx·Sy/n)/(n−1).
 

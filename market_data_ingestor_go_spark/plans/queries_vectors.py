@@ -377,15 +377,15 @@ def image_dedup_keepers(spark, sf_dir):
     — the step a media dedup pipeline runs after image_dhash_neardup:
     Hamming similarity is not transitive, so variant pairs merge into
     keep-groups via connected components (operators/dedup.py::
-    neardup_clusters — min-label propagation / alternating star, the
+    neardup_clusters — min-label propagation with pointer jumping, the
     dedup_cluster_keepers machinery over perceptual edges) and each
     cluster reports its lexicographically-smallest keeper id + member
     count. Oracle: the SAME recursive-CTE reachability fixpoint over
     the nibble-derived dHash pairs. Cluster labels are MIN over STRING
     ids — binary (byte-wise) comparison on both engines ⇒ bit-exact.
     Scale: everything after the (already-linear) pair join is the CC
-    engine's per-round two equi-joins + partial-min — the 100 TB CC
-    recipe shared with the text path."""
+    engine's per-round equi-join + partial-min — the 100 TB CC recipe
+    shared with the text path."""
     from ..operators import multimodal as MM
     from ..operators.dedup import neardup_clusters
     d = _t(spark, sf_dir, "documents")

@@ -14,9 +14,10 @@ pure-contract tests). A WS feed has no replay, so the source offers
 at-least-once from the connection buffer (documented; the reference
 is at-most-once, ingestor.go/processor.go).
 
-File sources (tests, backfill) are plain ``spark.readStream.text``
-streams of the same JSON wire frames, decoded by
-streaming/pipeline.py::decode_raw_frames.
+The source yields each frame's raw text as one ``value STRING`` row,
+the same shape as a file source (``spark.readStream.text``; tests,
+backfill), so streaming/pipeline.py::decode_raw_frames is the only
+parser and counts malformed frames from either source.
 """
 
 from __future__ import annotations
@@ -35,21 +36,7 @@ except ImportError:  # pragma: no cover - older pyspark
     SimpleDataSourceStreamReader = object
     _HAS_DS_API = False
 
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
 log = logging.getLogger(__name__)
-
-WIRE_SCHEMA = StructType([
-    StructField("name", StringType()),
-    StructField("timestamp", LongType()),
-    StructField("exchange", StringType()),
-    StructField("data", StringType()),
-])
 
 RECONNECT_INITIAL_S = 1.0   # ingestor.go:37
 RECONNECT_CAP_S = 30.0      # ingestor.go:52-56
@@ -103,12 +90,9 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         conn.send(json.dumps({"event": "subscribe", "symbols": self.symbols}))
         return conn
 
-    def prefetched_frames(self, frames: list[dict]) -> None:
-        """Test hook: enqueue decoded frames as if read off the wire."""
-        for f in frames:
-            self._buffer.append((
-                f.get("name"), f.get("timestamp"), f.get("exchange"),
-                json.dumps(f.get("data")) if f.get("data") is not None else None))
+    def prefetched_frames(self, frames: list[str]) -> None:
+        """Test hook: enqueue raw frame texts as if read off the wire."""
+        self._buffer.extend((f,) for f in frames)
 
     def _poll(self):
         """Drain the connection into the buffer for up to
@@ -144,13 +128,9 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
                 time.sleep(min(backoff, max(0.0, deadline - time.monotonic())))
                 backoff = min(backoff * 2, RECONNECT_CAP_S)  # ingestor.go:52-56
                 continue
-            try:
-                msg = json.loads(raw)
-            except ValueError:
-                continue  # unmarshal error → drop (ingestor.go:105-110)
-            self._buffer.append((
-                msg.get("name"), msg.get("timestamp"), msg.get("exchange"),
-                json.dumps(msg.get("data")) if msg.get("data") is not None else None))
+            # raw text: decode_raw_frames parses it and drops + counts
+            # unmarshal errors (ingestor.go:105-110)
+            self._buffer.append((raw,))
 
     def _slice(self, start: int, end: int) -> list[tuple]:
         lo = max(0, start - self._base)
@@ -202,7 +182,7 @@ class WebSocketDataSource(DataSource):
         return "ws_market_data"
 
     def schema(self):
-        return WIRE_SCHEMA
+        return "value STRING"
 
     def simpleStreamReader(self, schema):
         return WebSocketStreamReader(self.options)

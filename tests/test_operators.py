@@ -1181,19 +1181,41 @@ def test_rolling_hashes_match_python_reference(spark):
 
 
 def test_neardup_clusters_match_union_find(spark):
-    """Min-label propagation matches a Python union-find on seeded
-    random graphs (including multi-hop chains the fixture lacks)."""
+    """Min-label propagation matches a Python union-find on the shapes
+    that stress it: a seeded chain with random extra edges, a long
+    chain (worst case for propagation), a clique, a star centered at
+    the max id, two-node islands, a deterministic random forest, and
+    the fixture's cosine pair graph."""
     import random
     from market_data_ingestor_go_spark.operators.cache import release_pinned
     from market_data_ingestor_go_spark.operators.dedup import neardup_clusters
+    from market_data_ingestor_go_spark.operators.similarity import (
+        cosine_pairs_blocked)
 
-    for seed in (1,):
-        rng = random.Random(seed)
-        # a long chain (worst-case diameter) + random extra edges
-        edges = {(i, i + 1) for i in range(10, 22)}
-        edges |= {tuple(sorted(rng.sample(range(30), 2)))
-                  for _ in range(12)}
-        edges = sorted(edges)
+    rng = random.Random(1)
+    forest_rng = random.Random(8)
+    emb = load_table(spark, SF, "embeddings")
+    graphs = {
+        # a short chain (multi-hop, which the fixture lacks) + random
+        # extra edges
+        "seeded": sorted({(i, i + 1) for i in range(10, 22)}
+                         | {tuple(sorted(rng.sample(range(30), 2)))
+                            for _ in range(12)}),
+        "chain": [(i, i + 1) for i in range(100, 160)],
+        "clique": [(a, b) for a in range(7) for b in range(a + 1, 7)],
+        "star_max_center": [(i, 999) for i in range(5)],
+        "islands": [(1, 2), (10, 11), (20, 21)],
+        "random_forest": sorted({(min(a, b), max(a, b)) for a, b in
+                                 ((forest_rng.randrange(400),
+                                   forest_rng.randrange(400))
+                                  for _ in range(300))
+                                 if a != b}),
+        "cosine_pairs": [(r["a_id"], r["b_id"]) for r in
+                         cosine_pairs_blocked(emb, threshold=0.4)
+                         .collect()],
+    }
+    assert graphs["cosine_pairs"], "fixture must contain cosine pairs"
+    for name, edges in graphs.items():
         parent = {}
 
         def find(x):
@@ -1209,11 +1231,11 @@ def test_neardup_clusters_match_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         expected = {n: find(n) for n in parent}
 
-        df = spark.createDataFrame(edges, "doc_a int, doc_b int")
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
         got = {r["doc_id"]: r["cluster_id"]
                for r in neardup_clusters(df).collect()}
         release_pinned()
-        assert got == expected, seed
+        assert got == expected, name
 
 
 def test_pq_ann_recall_and_rerank(spark):
@@ -2978,22 +3000,24 @@ def _semdedup_reference(df, centroids, threshold, n_probes=1):
     return {(i, c, i not in dropped) for i, c in cell.items()}
 
 
-def test_similarity_operators_have_one_engine():
-    """Layout guard (no Spark session): every similarity operator keeps
-    exactly one product path — no function in operators/similarity.py
-    takes an ``engine`` or ``pair_engine`` selector. Reference forms
-    live in this file."""
+def test_operators_have_one_engine():
+    """Layout guard (no Spark session): every operator keeps exactly
+    one product path — no function anywhere in the package takes an
+    ``engine`` or ``pair_engine`` selector. Reference forms live in
+    the tests."""
     import ast
     import pathlib
 
-    from market_data_ingestor_go_spark.operators import similarity
+    import market_data_ingestor_go_spark as pkg
 
-    tree = ast.parse(pathlib.Path(similarity.__file__).read_text())
-    knobs = [(fn.name, a.arg) for fn in ast.walk(tree)
-             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
-             for a in (fn.args.posonlyargs + fn.args.args
-                       + fn.args.kwonlyargs)
-             if a.arg in ("engine", "pair_engine")]
+    knobs = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        knobs += [(path.name, fn.name, a.arg) for fn in ast.walk(tree)
+                  if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                  for a in (fn.args.posonlyargs + fn.args.args
+                            + fn.args.kwonlyargs)
+                  if a.arg in ("engine", "pair_engine")]
     assert knobs == []
 
 
@@ -3245,80 +3269,6 @@ def test_kernel_equality_under_exact_ties(spark):
                 semdedup(df, centroids=cents, threshold=0.999).collect())
     assert sa == sorted(_semdedup_reference(df, cents, 0.999))
     assert not all(kept for _, _, kept in sa)
-
-
-def test_cc_alternating_equals_labelprop(spark):
-    """The alternating large-star/small-star CC must produce labels
-    IDENTICAL to the label-propagation fixpoint (min reachable id) on
-    the shapes that stress each algorithm: a long chain (worst case
-    for propagation), a clique, a star centered at the max id
-    (worst case for star-contraction's direction), two-node islands,
-    a deterministic random forest, and the real fixture pair graph."""
-    import random
-
-    from market_data_ingestor_go_spark.operators.dedup import (
-        neardup_clusters, neardup_clusters_alternating)
-    from market_data_ingestor_go_spark.operators.similarity import (
-        cosine_pairs_blocked)
-    from market_data_ingestor_go_spark.sources.tables import load_table
-
-    rng = random.Random(8)
-    graphs = {
-        "chain": [(i, i + 1) for i in range(100, 160)],
-        "clique": [(a, b) for a in range(7) for b in range(a + 1, 7)],
-        "star_max_center": [(i, 999) for i in range(5)],
-        "islands": [(1, 2), (10, 11), (20, 21)],
-        "random_forest": sorted({(min(a, b), max(a, b)) for a, b in
-                                 ((rng.randrange(400), rng.randrange(400))
-                                  for _ in range(300))
-                                 if a != b}),
-    }
-    for name, edges in graphs.items():
-        pairs = spark.createDataFrame(edges, "doc_a LONG, doc_b LONG")
-        a = {(r["doc_id"], r["cluster_id"]) for r in
-             neardup_clusters(pairs).collect()}
-        b = {(r["doc_id"], r["cluster_id"]) for r in
-             neardup_clusters_alternating(pairs).collect()}
-        assert a == b, name
-
-    e = load_table(spark, SF, "embeddings")
-    pairs = cosine_pairs_blocked(e, threshold=0.4) \
-        .select(F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b"))
-    a = {(r["doc_id"], r["cluster_id"]) for r in
-         neardup_clusters(pairs).collect()}
-    b = {(r["doc_id"], r["cluster_id"]) for r in
-         neardup_clusters_alternating(pairs).collect()}
-    assert a == b
-
-
-def test_cc_engines_identical_through_public_entry_points(spark, monkeypatch):
-    """The r9 engine dispatcher: neardup_cluster_keepers(engine=...)
-    must yield identical keeper tables for labelprop, alternating,
-    and BOTH sides of the auto heuristic (threshold forced below and
-    above the fixture's pair count), so the 100 TB shuffle-bound path
-    is reachable through the public entry point without code edits."""
-    from market_data_ingestor_go_spark.operators import dedup as DD
-    from market_data_ingestor_go_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF, "documents").limit(300)
-
-    def keepers(**kw):
-        return sorted(
-            (r["keeper_id"], r["n_members"])
-            for r in DD.neardup_cluster_keepers(docs, **kw).collect())
-
-    base = keepers(engine="labelprop")
-    assert base, "fixture must contain near-dup clusters"
-    assert keepers(engine="alternating") == base
-    # auto below the threshold -> labelprop arm
-    assert keepers(engine="auto") == base
-    # auto above the threshold -> alternating arm
-    monkeypatch.setattr(DD, "AUTO_CC_EDGE_THRESHOLD", 0)
-    assert keepers(engine="auto") == base
-    with pytest.raises(ValueError):
-        DD.neardup_clusters(
-            spark.createDataFrame([(1, 2)], "doc_a LONG, doc_b LONG"),
-            engine="bogus")
 
 
 def test_apply_crawl_delta_hand_case(spark):

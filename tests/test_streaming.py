@@ -247,25 +247,23 @@ def test_serve_tick_auth_gate(spark):
 
 def test_ws_source_contract(spark):
     """WS source offset/read/commit contract with injected frames
-    (pure-contract path, no socket)."""
+    (pure-contract path, no socket): rows are the raw frame texts."""
     reader = ws_sources.WebSocketStreamReader(
         {"symbols": json.dumps(["AAPL"]), "maxFramesPerTrigger": "100"})
     assert reader.initialOffset() == {"count": 0}
-    reader.prefetched_frames([
-        {"name": "AAPL", "timestamp": 1, "data": {"data": {"bid": 1.0}}},
-        {"name": "MSFT", "timestamp": 2, "data": {"data": {"bid": 2.0}}},
-    ])
+    first = [json.dumps(_frame("AAPL", 1, bid=1.0)),
+             json.dumps(_frame("MSFT", 2, bid=2.0))]
+    reader.prefetched_frames(first)
     it, end = reader.read({"count": 0})
     rows = list(it)
     assert end == {"count": 2}
-    assert len(rows) == 2 and rows[0][0] == "AAPL"
+    assert rows == [(f,) for f in first]
     # in-flight replay before commit sees the same slice
     assert len(list(reader.readBetweenOffsets({"count": 0}, end))) == 2
     reader.commit(end)
     assert reader._base == 2 and reader._buffer == []  # buffer trimmed
     # next read starts where we left off
-    reader.prefetched_frames([
-        {"name": "AAPL", "timestamp": 3, "data": {"data": {"bid": 3.0}}}])
+    reader.prefetched_frames([json.dumps(_frame("AAPL", 3, bid=3.0))])
     it2, end2 = reader.read(end)
     assert end2 == {"count": 3} and len(list(it2)) == 1
     assert ws_sources.register(spark) in (True, False)
@@ -383,27 +381,25 @@ def _frame_feed_server(wm, frames_per_conn):
 
 
 def test_ws_reader_live_poll_and_reconnect(monkeypatch):
-    """S1/X7 e2e over a real socket: subscribe handshake, frame decode,
-    drop-on-unmarshal-error, idle-vs-disconnect distinction, reconnect
-    with backoff after the server drops the connection
-    (ingestor.go:31-127)."""
+    """S1/X7 e2e over a real socket: subscribe handshake, raw frame
+    texts (a malformed frame is kept for decode_raw_frames to count),
+    idle-vs-disconnect distinction, reconnect with backoff after the
+    server drops the connection (ingestor.go:31-127)."""
     from market_data_ingestor_go_spark.streaming import ws_minimal as wm
     monkeypatch.setattr(ws_sources, "RECONNECT_INITIAL_S", 0.05)
 
-    batches = [
-        [_frame("AAPL", 1, bid=1.0), "not json {{{", _frame("MSFT", 2, bid=2.0)],
-        [_frame("AAPL", 3, bid=3.0)],
-    ]
-    server, handshakes = _frame_feed_server(wm, batches)
+    first = [json.dumps(_frame("AAPL", 1, bid=1.0)), "not json {{{",
+             json.dumps(_frame("MSFT", 2, bid=2.0))]
+    second = [json.dumps(_frame("AAPL", 3, bid=3.0))]
+    server, handshakes = _frame_feed_server(wm, [list(first), list(second)])
     try:
         reader = ws_sources.WebSocketStreamReader({
             "url": server.url, "api_key": "k1",
             "symbols": json.dumps(["AAPL", "MSFT"]),
             "pollBudgetSecs": "3.0"})
         it, end = reader.read(reader.initialOffset())
-        rows = list(it)
-        assert [r[0] for r in rows] == ["AAPL", "MSFT"]  # bad JSON dropped
-        assert end == {"count": 2}
+        assert [r[0] for r in it] == first
+        assert end == {"count": 3}
         assert handshakes[0] == {"event": "subscribe",
                                  "symbols": ["AAPL", "MSFT"]}
         reader.commit(end)
@@ -413,9 +409,8 @@ def test_ws_reader_live_poll_and_reconnect(monkeypatch):
         for c in server.connections():
             c.close()
         it2, end2 = reader.read(end)
-        rows2 = list(it2)
-        assert [r[0] for r in rows2] == ["AAPL"] and rows2[0][1] == 3
-        assert end2 == {"count": 3}
+        assert [r[0] for r in it2] == second
+        assert end2 == {"count": 4}
         assert reader.reconnects >= 1
         assert len(handshakes) == 2  # re-subscribe on reconnect
     finally:
@@ -482,12 +477,56 @@ def test_ws_source_readstream_e2e(spark, tmp_path):
             time.sleep(0.5)
         q.stop()
         assert n == len(frames)
-        got = spark.sql(
-            "SELECT name, timestamp FROM ws_e2e ORDER BY timestamp").collect()
-        assert [r["timestamp"] for r in got] == list(range(1, 21))
-        assert got[0]["name"] == "AAPL"
+        got = sorted((json.loads(r["value"]) for r in
+                      spark.sql("SELECT value FROM ws_e2e").collect()),
+                     key=lambda f: f["timestamp"])
+        assert got == frames  # the raw frame texts, unparsed by the source
     finally:
         server.stop()
+
+
+def test_ws_malformed_frames_are_counted_and_ingest_continues(
+        spark, symbols_dim, tmp_path):
+    """Frames the WS source cannot decode — not JSON, or valid JSON
+    that is not an object — reach decode_raw_frames as raw text: they
+    count as ``decode.errors_unmarshal`` on the live path, the query
+    stays up, and the good frame lands in history."""
+    import time
+    from market_data_ingestor_go_spark.streaming import ws_minimal as wm
+    from market_data_ingestor_go_spark.streaming.observability import (
+        MetricsListener, MetricsRegistry)
+
+    if not ws_sources.register(spark):  # pragma: no cover
+        pytest.skip("pyspark build lacks the Python DataSource API")
+
+    good = _frame("AAPL", int(time.time() * 1000), bid=1.0)
+    server, _ = _frame_feed_server(wm, [["not json", "[1,2]", good]])
+    registry = MetricsRegistry()
+    listener = MetricsListener(registry)
+    spark.streams.addListener(listener)
+    try:
+        raw = (spark.readStream.format("ws_market_data")
+               .option("url", server.url)
+               .option("symbols", json.dumps(["AAPL"]))
+               .load())
+        pipe = IngestPipeline(spark, str(tmp_path / "out"), symbols_dim,
+                              trigger_seconds=1)
+        q = pipe.start(raw)
+        deadline = time.monotonic() + 60
+        while (time.monotonic() < deadline and q.isActive
+               and registry.counters.get("decode.frames_received", 0) < 3):
+            time.sleep(0.2)
+        active, error = q.isActive, q.exception()
+        q.stop()
+    finally:
+        spark.streams.removeListener(listener)
+        server.stop()
+    assert active and error is None
+    assert registry.counters.get("decode.frames_received") == 3
+    assert registry.counters.get("decode.errors_unmarshal") == 2
+    hist = pipe.history().collect()
+    assert [(r["name"], r["timestamp"]) for r in hist] \
+        == [("AAPL", good["timestamp"])]
 
 
 def test_stream_stream_join_with_watermarks(spark, tmp_path):
